@@ -286,9 +286,7 @@ class FeatureStoreManager:
         raises, saves already IN FLIGHT on other threads run to
         completion (their tables and metadata land) before the exception
         propagates — callers must treat a raised ``save_many`` as
-        partially applied, exactly like a crash mid-sequential-loop.
-        ``SPARK_GRAFT_SAVE_MANY_WORKERS`` overrides the pool size only
-        when ``max_workers`` is left at its default."""
+        partially applied, exactly like a crash mid-sequential-loop."""
         from concurrent.futures import ThreadPoolExecutor
 
         items = list(items)
@@ -301,10 +299,6 @@ class FeatureStoreManager:
             df, spec = item
             return spec.name, self.save(df, spec, mode=mode, policy=policy)
 
-        if max_workers == 3:  # default left alone: env may tune it
-            max_workers = int(
-                os.environ.get("SPARK_GRAFT_SAVE_MANY_WORKERS", str(max_workers))
-            )
         if len(items) <= 1 or max_workers <= 1:
             return dict(map(_one, items))
         with ThreadPoolExecutor(max_workers=min(max_workers, len(items))) as pool:

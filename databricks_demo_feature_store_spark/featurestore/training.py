@@ -4,7 +4,7 @@ label/spine DataFrame.
 This is the Feature Store capability the reference delegates to the
 Databricks client (``fs.register_table`` / ``create_training_set``; see
 ``notebooks/utils.py:1778-1836``) — here re-expressed on the engine's own
-scalable as-of join (:func:`point_in_time_join`,
+scalable as-of join (:func:`point_in_time_multi_join`,
 ``databricks_demo_feature_store_spark.operators.joins``), which is the union+last_value
 linear-shuffle form rather than the reference's quadratic ``>=`` theta join
 (``src/packages/preprocessing/merge_tables/joins.py:115-238``).
@@ -19,7 +19,6 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from databricks_demo_feature_store_spark.featurestore.manager import FeatureStoreManager
 from databricks_demo_feature_store_spark.operators.joins import (
-    point_in_time_join,
     point_in_time_multi_join,
 )
 
@@ -66,7 +65,6 @@ def create_training_set(
     spine: DataFrame,
     lookups: Sequence[FeatureLookup | WindowLookup],
     spine_time: str,
-    strategy: str = "auto",
 ) -> DataFrame:
     """Left-join each feature table onto the spine as-of ``spine_time``;
     :class:`WindowLookup` entries additionally attach trailing-window
@@ -79,28 +77,18 @@ def create_training_set(
     before the spine timestamp wins; spine rows with no history keep NULL
     features (reference PIT semantics, ``joins.py:229-236``).
 
-    ``strategy``:
-
-    - ``"auto"`` (default): when EVERY lookup shares the same
-      ``lookup_keys``, all tables join in ONE shuffle via
-      :func:`point_in_time_multi_join` — the spine moves through one
-      exchange instead of one per table (5× less spine shuffle I/O for
-      a 5-table training set). Mixed keys fall back to the sequential
-      chain per key.
-    - ``"sequential"``: always chain single-table PIT joins (one
-      shuffle per table) — useful to compare plans or to stage
-      per-table tolerances during debugging.
-    - ``"multi"``: require the one-shuffle form (raises on mixed keys).
+    Lookups are grouped by ``lookup_keys`` in order of first appearance
+    and each group joins in ONE shuffle via
+    :func:`point_in_time_multi_join` — the spine moves through one
+    exchange per key group, not one per table (5× less spine shuffle I/O
+    for a 5-table training set on one key). The output keeps the feature
+    columns in lookup order, after the spine's columns.
 
     Payload column names must be disjoint across lookups AND from the
-    spine's own columns under EVERY strategy — a collision is validated
-    up front and raises (the sequential chain would otherwise emit a
-    duplicate output column name, an ambiguous frame downstream, not a
-    usable result). Rename feature columns before assembling.
+    spine's own columns — a collision is validated up front and raises
+    (checked here across key groups and window lookups, which one kernel
+    call cannot see). Rename feature columns before assembling.
     """
-    if strategy not in ("auto", "sequential", "multi"):
-        raise ValueError(f"strategy must be auto|sequential|multi, got {strategy!r}")
-
     window_lookups = [lk for lk in lookups if isinstance(lk, WindowLookup)]
     lookups = [lk for lk in lookups if not isinstance(lk, WindowLookup)]
 
@@ -113,12 +101,6 @@ def create_training_set(
             )
         return manager.read(lk.table), ts_keys[0]
 
-    same_keys = len({tuple(lk.lookup_keys) for lk in lookups}) == 1
-    if strategy == "multi" and not same_keys:
-        raise ValueError(
-            "strategy='multi' requires every lookup to share the same lookup_keys"
-        )
-
     resolved = []
     for lk in lookups:
         features, ftime = resolve(lk)
@@ -127,10 +109,8 @@ def create_training_set(
         ]
         resolved.append((lk, features, ftime, fcols))
 
-    # validate payload-name disjointness up front for EVERY strategy: the
-    # sequential chain would otherwise emit duplicate output column names
-    # (both the spine-carried copy and the new feature copy), an ambiguous
-    # frame downstream — not a usable result
+    # validate payload-name disjointness up front: each kernel call sees
+    # only its own key group, and window lookups are joined after it
     seen: dict[str, str] = {c: "the spine" for c in spine.columns}
     for lk, _features, _ftime, fcols in resolved:
         for c in fcols:
@@ -176,37 +156,27 @@ def create_training_set(
     if not lookups:
         return apply_window_lookups(spine)
 
-    if same_keys and len(lookups) > 1 and strategy in ("auto", "multi"):
-        entries = [
+    groups: dict[tuple[str, ...], list[dict]] = {}
+    for lk, features, ftime, fcols in resolved:
+        groups.setdefault(tuple(lk.lookup_keys), []).append(
             {
                 "features": features,
                 "feature_time": ftime,
                 "feature_cols": fcols,
                 "tolerance_expr": lk.tolerance,
             }
-            for lk, features, ftime, fcols in resolved
-        ]
-        return apply_window_lookups(
-            point_in_time_multi_join(
-                spine,
-                entries,
-                keys=list(lookups[0].lookup_keys),
-                spine_time=spine_time,
-            )
         )
-
-    out = spine
-    for lk, features, ftime, fcols in resolved:
-        out = point_in_time_join(
-            out,
-            features,
-            keys=list(lk.lookup_keys),
-            spine_time=spine_time,
-            feature_time=ftime,
-            feature_cols=fcols,
-            tolerance_expr=lk.tolerance,
+    feature_names = [c for _lk, _f, _t, fcols in resolved for c in fcols]
+    out, lead = spine, None
+    for gkeys, entries in groups.items():
+        out = point_in_time_multi_join(
+            out, entries, keys=list(gkeys), spine_time=spine_time
         )
-    return apply_window_lookups(out)
+        if lead is None:
+            lead = [c for c in out.columns if c not in feature_names]
+    # a later group's call carries the earlier groups' features as spine
+    # payload; restore the lookup order (a no-op select for one group)
+    return apply_window_lookups(out.select(*lead, *feature_names))
 
 
 def latest_features(

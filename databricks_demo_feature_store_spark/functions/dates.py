@@ -135,14 +135,3 @@ def months_between_dates(
     if as_int:
         col = col.cast("int")
     return df.withColumn(new_column, col)
-
-
-def parse_quarter_date(df: DataFrame, column: str, new_column: str) -> DataFrame:
-    """``yyyy-MM-qq`` quarter-marker dates: q1 → day 01, q2 → day 16.
-
-    Reference ``src/packages/data_validation/schemas.py:46-52``.
-    """
-    fixed = F.regexp_replace(
-        F.regexp_replace(F.col(column), "q1", "01"), "q2", "16"
-    )
-    return df.withColumn(new_column, F.to_date(fixed, "yyyy-MM-dd"))

@@ -70,18 +70,6 @@ def rename_columns(df: DataFrame, renames: Mapping[str, str]) -> DataFrame:
     return df.withColumnsRenamed(dict(renames))
 
 
-def drop_duplicate_columns(df: DataFrame) -> DataFrame:
-    """Keep the first occurrence of each column name — ``clean_data.py:8-36``
-    re-expressed as a projection (no pandas transpose)."""
-    seen: dict[str, int] = {}
-    cols = []
-    for i, c in enumerate(df.columns):
-        if c not in seen:
-            seen[c] = i
-            cols.append(df[i])
-    return df.select(*cols) if len(cols) != len(df.columns) else df
-
-
 def prefix_columns(
     df: DataFrame, prefix: str, exclude: Sequence[str] = ()
 ) -> DataFrame:

@@ -50,16 +50,6 @@ def decimal_half_up_div(num: Column, den: Column) -> Column:
     return (F.signum(num).cast("decimal(2,0)") * q).cast("decimal(38,0)")
 
 
-def oracle_half_up_div(num: str, den: str) -> str:
-    """DuckDB twin of :func:`decimal_half_up_div` (HUGEINT floor
-    division; ``//`` floors toward −∞, hence the abs/sign form)."""
-    return (
-        f"(CASE WHEN ({num}) < 0 THEN -1 WHEN ({num}) > 0 THEN 1 ELSE 0 END)"
-        f" * ((2 * ABS(CAST(({num}) AS HUGEINT)) + CAST(({den}) AS HUGEINT))"
-        f" // (2 * CAST(({den}) AS HUGEINT)))"
-    )
-
-
 def floor_quantize(col: Column, scale: int = 6) -> Column:
     """Engine-STABLE quantization of a double to ``scale`` decimals:
     ``floor(x·10^scale + 0.5) / 10^scale`` — pure IEEE double ops that
@@ -78,12 +68,3 @@ def floor_quantize(col: Column, scale: int = 6) -> Column:
     return F.floor(c * F.lit(unit) + F.lit(0.5)).cast("long").cast(
         "double"
     ) / F.lit(unit)
-
-
-def oracle_floor_quantize(expr: str, scale: int = 6) -> str:
-    """DuckDB twin of :func:`floor_quantize`."""
-    unit = 10**scale
-    return (
-        f"(CAST(CAST(floor(({expr}) * {unit}.0 + 0.5) AS BIGINT) AS DOUBLE)"
-        f" / {unit}.0)"
-    )

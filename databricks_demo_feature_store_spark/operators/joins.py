@@ -76,116 +76,27 @@ def point_in_time_join(
     .orderBy(feature_time DESC)`` keeping ``row_num == 1 OR row_num IS
     NULL`` (:229-236) so unmatched spine rows survive with NULL features.
 
-    Scale note: the raw ``>=`` theta join is quadratic per key for long
-    histories. This implementation uses the **union + last-value** shape
-    instead: tag spine rows and feature rows, union them on the shared key
-    + time axis, and carry the latest feature values forward with a
-    ``last(ignorenulls=True)`` window. That is one shuffle on ``keys`` and
-    strictly linear in rows — it survives a 100× scale-up where the theta
-    join would explode. Ties (feature_time == spine_time) resolve to the
-    feature row, matching the reference's ``>=``.
-
-    ``tolerance_expr`` (e.g. ``"INTERVAL 90 DAYS"``) optionally discards
-    matches older than ``spine_time - tolerance``.
-
-    ``feature_tiebreak`` orders feature rows that share the same
-    ``feature_time`` (ascending; the LAST one wins the carry) — this
-    makes the result deterministic without a pre-dedup window pass when
-    the feature table can hold several rows per (key, time).
+    A one-lookup call of :func:`point_in_time_multi_join`, which replaces
+    the reference's quadratic ``>=`` theta join with a linear union +
+    carry. ``tolerance_expr`` (e.g. ``"INTERVAL 90 DAYS"``) discards
+    matches older than ``spine_time - tolerance``; ``feature_tiebreak``
+    orders feature rows that share one ``feature_time`` (the last wins).
+    A feature column named like a spine column raises ``ValueError``.
     """
-    keys = list(keys)
-    feature_tiebreak = list(feature_tiebreak)
-    if feature_cols is None:
-        feature_cols = [
-            c for c in df_features.columns if c not in keys and c != feature_time
-        ]
-    feature_cols = list(feature_cols)
-
-    spine_cols = [c for c in df_spine.columns if c not in keys and c != spine_time]
-
-    # Build a common shape: keys, event time, side tag, payloads from each side.
-    # The feature payload is carried as ONE struct so the latest feature ROW
-    # wins atomically — per-column last(ignorenulls) would stitch values from
-    # different rows whenever a newer feature value is legitimately NULL,
-    # diverging from the reference's whole-row row_number semantics.
-    right = df_features.select(
-        *keys,
-        F.col(feature_time).cast("timestamp").alias("__t"),
-        F.lit(0).alias("__is_spine"),
-        F.struct(
-            F.col(feature_time).cast("timestamp").alias("__ft"),
-            *[F.col(c) for c in feature_cols],
-        ).alias("__feat"),
-        *[F.col(c).alias(f"__tb{i}") for i, c in enumerate(feature_tiebreak)],
-    )
-    left = df_spine.select(
-        *keys,
-        F.col(spine_time).cast("timestamp").alias("__t"),
-        F.lit(1).alias("__is_spine"),
-        F.struct(*[F.col(c) for c in ([spine_time] + spine_cols)]).alias(
-            "__spine_payload"
-        ),
-        F.lit(None).cast(right.schema["__feat"].dataType).alias("__feat"),
-        *[
-            F.lit(None).cast(df_features.schema[c].dataType).alias(f"__tb{i}")
-            for i, c in enumerate(feature_tiebreak)
+    return point_in_time_multi_join(
+        df_spine,
+        [
+            {
+                "features": df_features,
+                "feature_time": feature_time,
+                "feature_cols": feature_cols,
+                "tolerance_expr": tolerance_expr,
+                "feature_tiebreak": feature_tiebreak,
+            }
         ],
+        keys=keys,
+        spine_time=spine_time,
     )
-    right = right.withColumn(
-        "__spine_payload",
-        F.lit(None).cast(left.schema["__spine_payload"].dataType),
-    )
-
-    unioned = left.unionByName(right)
-
-    # Feature rows sort before spine rows at equal time (__is_spine ASC) so a
-    # same-instant feature is visible to the spine row, reproducing `>=`;
-    # tiebreak columns order same-instant feature rows (last wins).
-    w = (
-        Window.partitionBy(*keys)
-        .orderBy(
-            F.col("__t").asc(),
-            F.col("__is_spine").asc(),
-            *[F.col(f"__tb{i}").asc_nulls_first() for i in range(len(feature_tiebreak))],
-        )
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    carried = unioned.select(
-        *keys,
-        "__is_spine",
-        "__spine_payload",
-        F.last("__feat", ignorenulls=True).over(w).alias("__feat"),
-    )
-    carried = carried.select(
-        *keys,
-        "__is_spine",
-        "__spine_payload",
-        F.col("__feat").getField("__ft").alias("__matched_ft"),
-        *[F.col("__feat").getField(c).alias(c) for c in feature_cols],
-    )
-
-    result = carried.filter(F.col("__is_spine") == 1)
-    if tolerance_expr is not None:
-        too_old = F.col("__matched_ft") < (
-            F.col("__spine_payload").getField(spine_time).cast("timestamp")
-            - F.expr(tolerance_expr)
-        )
-        result = result.select(
-            *keys,
-            "__spine_payload",
-            *[
-                F.when(too_old, F.lit(None)).otherwise(F.col(c)).alias(c)
-                for c in feature_cols
-            ],
-        )
-
-    out_cols = (
-        keys
-        + [F.col("__spine_payload").getField(spine_time).alias(spine_time)]
-        + [F.col("__spine_payload").getField(c).alias(c) for c in spine_cols]
-        + [F.col(c) for c in feature_cols]
-    )
-    return result.select(*out_cols)
 
 
 def point_in_time_multi_join(
@@ -193,10 +104,13 @@ def point_in_time_multi_join(
     lookups: Sequence[Mapping],
     keys: Sequence[str],
     spine_time: str,
+    direction: str = "backward",
 ) -> DataFrame:
-    """As-of join of MANY feature tables that share the same lookup
-    ``keys`` in ONE shuffle — the N-table generalization of
-    :func:`point_in_time_join`.
+    """The engine's one as-of join kernel: for every spine row and every
+    feature table in ``lookups``, the feature row nearest in time on the
+    ``direction`` side, all tables in ONE shuffle.
+    :func:`point_in_time_join`, :func:`asof_join`, :func:`scd2_dim_join`
+    and ``featurestore/training.py create_training_set`` are calls to it.
 
     Each entry of ``lookups`` is a mapping with:
 
@@ -204,26 +118,48 @@ def point_in_time_multi_join(
     - ``feature_time``: its as-of timestamp column
     - ``feature_cols`` (optional): payload columns (default: all non-key,
       non-time columns)
-    - ``tolerance_expr`` (optional): e.g. ``"INTERVAL 90 DAYS"`` — matches
-      older than ``spine_time - tolerance`` are NULLed for that lookup
+    - ``tolerance_expr`` (optional): e.g. ``"INTERVAL 90 DAYS"`` — a
+      match farther than this from the spine time is NULLed for that
+      lookup; applied to each side BEFORE the nearest choice, so an
+      out-of-tolerance backward match never shadows an in-tolerance
+      forward one
+    - ``feature_tiebreak`` (optional): columns ordering this table's rows
+      that share one ``(keys, feature_time)``, ascending — the LAST one
+      wins. Without it such ties make the carried row order-dependent.
+    - ``matched_time_col`` (optional): emit the matched feature
+      timestamp under this name (NULL when unmatched)
 
-    Scale shape: the sequential composition shuffles the (progressively
-    wider) spine once PER TABLE — N range exchanges + N windows over N
-    copies of the spine. Here every feature table is tagged into ONE
-    union on the shared ``(keys, time)`` axis, ONE window partitioned by
+    ``direction``, for the whole call:
+
+    - ``"backward"``: latest feature row at-or-before the spine time
+      (the reference's ``>=``, ``joins.py:213-215``)
+    - ``"forward"``: earliest feature row at-or-after the spine time
+    - ``"nearest"``: whichever of the two is closer in absolute time;
+      exact ties resolve to the backward match
+
+    Scale shape: spine rows and every table's rows are tagged into ONE
+    union on the shared ``(keys, time)`` axis; ONE window partitioned by
     ``keys`` carries each table's latest row forward as its own struct
     (``last(ignorenulls)`` per struct — whole-row atomicity per table,
     independent carries across tables), and spine rows project all N
-    matches out. The spine data moves through exactly ONE exchange
-    regardless of N — at 100 TB with a 5-table training set that is 5×
-    less spine shuffle I/O. Used by
-    ``featurestore/training.py create_training_set`` whenever all
-    lookups share identical lookup keys.
+    matches out. ``forward`` uses the mirror window (time DESCENDING);
+    ``nearest`` uses both, and the two sorts share one hash partitioning.
+    Linear in rows, and the spine moves through exactly ONE exchange
+    regardless of N. Feature rows sort before spine rows at equal time,
+    so a same-instant feature is visible in every direction. Each
+    table's tiebreak columns are NULL on every other row and sort
+    ``asc_nulls_first`` after ``(time, is_spine)``, so one table's
+    tiebreak never reorders another table's carry.
 
-    Ties (feature_time == spine_time) resolve to the feature row,
-    matching the reference's ``>=`` (``joins.py:213-215``). Payload
-    column names must be disjoint across lookups (validated).
+    Output: keys, ``spine_time``, the other spine columns, then each
+    lookup's feature columns (and matched time column) in lookup order.
+    Output names must be disjoint from the spine's columns and across
+    lookups (validated).
     """
+    if direction not in ("backward", "forward", "nearest"):
+        raise ValueError(
+            f"direction must be backward|forward|nearest, got {direction!r}"
+        )
     keys = list(keys)
     spine_cols = [c for c in df_spine.columns if c not in keys and c != spine_time]
     looks = []
@@ -237,34 +173,40 @@ def point_in_time_multi_join(
         fcols = lk.get("feature_cols")
         if fcols is None:
             fcols = [c for c in features.columns if c not in keys and c != ftime]
-        fcols = list(fcols)
-        dup = seen.intersection(fcols)
+        fields = [(c, c) for c in fcols]
+        if lk.get("matched_time_col") is not None:
+            fields.append(("__ft", lk["matched_time_col"]))
+        dup = set()
+        for _, name in fields:
+            if name in seen:
+                dup.add(name)
+            seen.add(name)
         if dup:
             raise ValueError(
-                f"point_in_time_multi_join: feature columns {sorted(dup)} "
-                "collide with the spine's columns/keys or another lookup — "
-                "rename before joining"
+                f"as-of join: output columns {sorted(dup)} collide with the "
+                "spine's columns/keys or another lookup — rename before joining"
             )
-        seen.update(fcols)
+        feat = F.struct(
+            F.col(ftime).cast("timestamp").alias("__ft"),
+            *[F.col(c) for c in fcols],
+        )
         looks.append(
             {
                 "features": features,
                 "ftime": ftime,
-                "fcols": fcols,
+                "feat": feat,
+                "feat_t": features.select(feat.alias("s")).schema["s"].dataType,
+                "fields": fields,
                 "tol": lk.get("tolerance_expr"),
                 "slot": f"__feat{i}",
+                "tb": [
+                    (f"__tb{i}_{j}", c, features.schema[c].dataType)
+                    for j, c in enumerate(lk.get("feature_tiebreak") or ())
+                ],
             }
         )
 
-    def feat_struct(lk) -> F.Column:
-        return F.struct(
-            F.col(lk["ftime"]).cast("timestamp").alias("__ft"),
-            *[F.col(c) for c in lk["fcols"]],
-        )
-
     # one tagged frame per side, unioned on the shared (keys, time) axis
-    sides = []
-    spine_payload_t = None
     left = df_spine.select(
         *keys,
         F.col(spine_time).cast("timestamp").alias("__t"),
@@ -274,63 +216,92 @@ def point_in_time_multi_join(
         ),
     )
     spine_payload_t = left.schema["__spine_payload"].dataType
-    slot_types = {}
-    for lk in looks:
-        probe = lk["features"].select(feat_struct(lk).alias(lk["slot"]))
-        slot_types[lk["slot"]] = probe.schema[lk["slot"]].dataType
     left = left.select(
         "*",
-        *[
-            F.lit(None).cast(slot_types[lk["slot"]]).alias(lk["slot"])
-            for lk in looks
-        ],
+        *[F.lit(None).cast(lk["feat_t"]).alias(lk["slot"]) for lk in looks],
+        *[F.lit(None).cast(t).alias(tb) for lk in looks for tb, _, t in lk["tb"]],
     )
-    sides.append(left)
+    unioned = left
     for lk in looks:
-        right = lk["features"].select(
-            *keys,
-            F.col(lk["ftime"]).cast("timestamp").alias("__t"),
-            F.lit(0).alias("__is_spine"),
-            F.lit(None).cast(spine_payload_t).alias("__spine_payload"),
-            *[
-                (feat_struct(lk) if other["slot"] == lk["slot"]
-                 else F.lit(None).cast(slot_types[other["slot"]]))
-                .alias(other["slot"])
-                for other in looks
-            ],
+        unioned = unioned.unionByName(
+            lk["features"].select(
+                *keys,
+                F.col(lk["ftime"]).cast("timestamp").alias("__t"),
+                F.lit(0).alias("__is_spine"),
+                F.lit(None).cast(spine_payload_t).alias("__spine_payload"),
+                *[
+                    (lk["feat"] if other is lk else F.lit(None).cast(other["feat_t"]))
+                    .alias(other["slot"])
+                    for other in looks
+                ],
+                *[
+                    (F.col(c) if other is lk else F.lit(None).cast(t)).alias(tb)
+                    for other in looks
+                    for tb, c, t in other["tb"]
+                ],
+            )
         )
-        sides.append(right)
-    unioned = sides[0]
-    for s in sides[1:]:
-        unioned = unioned.unionByName(s)
 
-    w = (
-        Window.partitionBy(*keys)
-        .orderBy(F.col("__t").asc(), F.col("__is_spine").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
+    tiebreaks = [F.col(tb).asc_nulls_first() for lk in looks for tb, _, _ in lk["tb"]]
+
+    def carry(time_order: F.Column):
+        return (
+            Window.partitionBy(*keys)
+            .orderBy(time_order, F.col("__is_spine").asc(), *tiebreaks)
+            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        )
+
+    carries = []
+    for lk in looks:
+        if direction != "forward":
+            carries.append(
+                F.last(lk["slot"], ignorenulls=True)
+                .over(carry(F.col("__t").asc()))
+                .alias(lk["slot"])
+            )
+        if direction != "backward":
+            carries.append(
+                F.last(lk["slot"], ignorenulls=True)
+                .over(carry(F.col("__t").desc()))
+                .alias(lk["slot"] + "_fwd")
+            )
     carried = unioned.select(
-        *keys,
-        "__is_spine",
-        "__spine_payload",
-        *[
-            F.last(lk["slot"], ignorenulls=True).over(w).alias(lk["slot"])
-            for lk in looks
-        ],
+        *keys, "__is_spine", "__spine_payload", *carries
     ).filter(F.col("__is_spine") == 1)
 
     st = F.col("__spine_payload").getField(spine_time).cast("timestamp")
+
+    def out_of_tol(side: F.Column, tol: str, is_back: bool) -> F.Column:
+        ft = side.getField("__ft")
+        return ft < (st - F.expr(tol)) if is_back else ft > (st + F.expr(tol))
+
+    def null_if(cond: F.Column, v: F.Column) -> F.Column:
+        return F.when(cond, F.lit(None)).otherwise(v)
+
     out_feature_cols = []
     for lk in looks:
-        slot = F.col(lk["slot"])
-        cond = None
-        if lk["tol"] is not None:
-            cond = slot.getField("__ft") < (st - F.expr(lk["tol"]))
-        for c in lk["fcols"]:
-            v = slot.getField(c)
+        back, fwd, cond = F.col(lk["slot"]), F.col(lk["slot"] + "_fwd"), None
+        if direction == "nearest":
+            if lk["tol"] is not None:
+                back = null_if(out_of_tol(back, lk["tol"], True), back)
+                fwd = null_if(out_of_tol(fwd, lk["tol"], False), fwd)
+            d_back = F.unix_micros(st) - F.unix_micros(back.getField("__ft"))
+            d_fwd = F.unix_micros(fwd.getField("__ft")) - F.unix_micros(st)
+            side = (
+                F.when(back.isNull(), fwd)
+                .when(fwd.isNull(), back)
+                .when(d_back <= d_fwd, back)  # exact tie -> backward
+                .otherwise(fwd)
+            )
+        else:
+            side = back if direction == "backward" else fwd
+            if lk["tol"] is not None:
+                cond = out_of_tol(side, lk["tol"], direction == "backward")
+        for field, name in lk["fields"]:
+            v = side.getField(field)
             if cond is not None:
-                v = F.when(cond, F.lit(None)).otherwise(v)
-            out_feature_cols.append(v.alias(c))
+                v = null_if(cond, v)
+            out_feature_cols.append(v.alias(name))
     return carried.select(
         *keys,
         F.col("__spine_payload").getField(spine_time).alias(spine_time),
@@ -513,22 +484,14 @@ def asof_join(
     tolerance_expr: str | None = None,
     matched_time_col: str | None = None,
 ) -> DataFrame:
-    """Direction-aware as-of join — the pandas ``merge_asof`` surface on
-    the engine's linear union+carry machinery.
+    """Direction-aware as-of join — the pandas ``merge_asof`` surface:
+    a one-lookup call of :func:`point_in_time_multi_join`.
 
-    ``direction``:
-
-    - ``"backward"``: latest feature row at-or-before the spine time
-      (delegates to :func:`point_in_time_join` — identical semantics).
-    - ``"forward"``: EARLIEST feature row at-or-after the spine time
-      (the mirror carry: same one-shuffle union, window ordered time-
-      DESCENDING so the next-following feature row flows backward to
-      each spine row).
-    - ``"nearest"``: whichever of the two is closer in absolute time;
-      exact ties resolve to the backward match (deterministic). Both
-      carries come out of ONE union and ONE exchange — the two window
-      sorts share the same hash partitioning, so the spine still moves
-      through a single shuffle.
+    ``direction`` is ``"backward"`` (latest feature row at-or-before the
+    spine time, identical to :func:`point_in_time_join`), ``"forward"``
+    (EARLIEST feature row at-or-after) or ``"nearest"`` (whichever is
+    closer in absolute time; exact ties resolve to the backward match).
+    Every direction moves the spine through a single shuffle.
 
     ``tolerance_expr`` (e.g. ``"INTERVAL 2 HOURS"``) bounds the match
     distance on EACH side before the nearest choice is made — an
@@ -541,122 +504,21 @@ def asof_join(
     carried row order-dependent) — same contract as ``merge_asof`` needs
     for reproducibility; pre-dedup with a tiebreak when in doubt.
     """
-    if direction not in ("backward", "forward", "nearest"):
-        raise ValueError(
-            f"direction must be backward|forward|nearest, got {direction!r}"
-        )
-    keys = list(keys)
-    if feature_cols is None:
-        feature_cols = [
-            c for c in df_features.columns if c not in keys and c != feature_time
-        ]
-    feature_cols = list(feature_cols)
-    spine_cols = [c for c in df_spine.columns if c not in keys and c != spine_time]
-    dup = set(feature_cols) & set(df_spine.columns)
-    if matched_time_col is not None and (
-        matched_time_col in df_spine.columns or matched_time_col in feature_cols
-    ):
-        dup.add(matched_time_col)
-    if dup:
-        raise ValueError(
-            f"asof_join: output columns {sorted(dup)} collide with the "
-            "spine's columns — rename before joining"
-        )
-    if direction == "backward" and matched_time_col is None:
-        return point_in_time_join(
-            df_spine,
-            df_features,
-            keys=keys,
-            spine_time=spine_time,
-            feature_time=feature_time,
-            feature_cols=feature_cols,
-            tolerance_expr=tolerance_expr,
-        )
-
-    right = df_features.select(
-        *keys,
-        F.col(feature_time).cast("timestamp").alias("__t"),
-        F.lit(0).alias("__is_spine"),
-        F.struct(
-            F.col(feature_time).cast("timestamp").alias("__ft"),
-            *[F.col(c) for c in feature_cols],
-        ).alias("__feat"),
+    return point_in_time_multi_join(
+        df_spine,
+        [
+            {
+                "features": df_features,
+                "feature_time": feature_time,
+                "feature_cols": feature_cols,
+                "tolerance_expr": tolerance_expr,
+                "matched_time_col": matched_time_col,
+            }
+        ],
+        keys=keys,
+        spine_time=spine_time,
+        direction=direction,
     )
-    left = df_spine.select(
-        *keys,
-        F.col(spine_time).cast("timestamp").alias("__t"),
-        F.lit(1).alias("__is_spine"),
-        F.struct(*[F.col(c) for c in ([spine_time] + spine_cols)]).alias(
-            "__spine_payload"
-        ),
-        F.lit(None).cast(right.schema["__feat"].dataType).alias("__feat"),
-    )
-    right = right.withColumn(
-        "__spine_payload",
-        F.lit(None).cast(left.schema["__spine_payload"].dataType),
-    )
-    unioned = left.unionByName(right)
-
-    # same-instant feature rows must be visible to the spine row in BOTH
-    # carries (>= / <= inclusive): features sort before spine at equal __t
-    w_back = (
-        Window.partitionBy(*keys)
-        .orderBy(F.col("__t").asc(), F.col("__is_spine").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_fwd = (
-        Window.partitionBy(*keys)
-        .orderBy(F.col("__t").desc(), F.col("__is_spine").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    carries = []
-    if direction in ("backward", "nearest"):
-        carries.append(F.last("__feat", ignorenulls=True).over(w_back).alias("__back"))
-    if direction in ("forward", "nearest"):
-        carries.append(F.last("__feat", ignorenulls=True).over(w_fwd).alias("__fwd"))
-    carried = (
-        unioned.select(*keys, "__is_spine", "__spine_payload", *carries)
-        .filter(F.col("__is_spine") == 1)
-    )
-
-    st = F.col("__spine_payload").getField(spine_time).cast("timestamp")
-
-    def _tol_null(side: F.Column, is_back: bool) -> F.Column:
-        if tolerance_expr is None:
-            return side
-        ft = side.getField("__ft")
-        out_of_tol = (
-            ft < (st - F.expr(tolerance_expr))
-            if is_back
-            else ft > (st + F.expr(tolerance_expr))
-        )
-        return F.when(side.isNull() | out_of_tol, F.lit(None)).otherwise(side)
-
-    if direction == "backward":
-        chosen = _tol_null(F.col("__back"), True)
-    elif direction == "forward":
-        chosen = _tol_null(F.col("__fwd"), False)
-    else:
-        back = _tol_null(F.col("__back"), True)
-        fwd = _tol_null(F.col("__fwd"), False)
-        d_back = F.unix_micros(st) - F.unix_micros(back.getField("__ft"))
-        d_fwd = F.unix_micros(fwd.getField("__ft")) - F.unix_micros(st)
-        chosen = (
-            F.when(back.isNull(), fwd)
-            .when(fwd.isNull(), back)
-            .when(d_back <= d_fwd, back)  # exact tie -> backward
-            .otherwise(fwd)
-        )
-    picked = carried.select(*keys, "__spine_payload", chosen.alias("__chosen"))
-    out_cols = (
-        keys
-        + [F.col("__spine_payload").getField(spine_time).alias(spine_time)]
-        + [F.col("__spine_payload").getField(c).alias(c) for c in spine_cols]
-        + [F.col("__chosen").getField(c).alias(c) for c in feature_cols]
-    )
-    if matched_time_col is not None:
-        out_cols.append(F.col("__chosen").getField("__ft").alias(matched_time_col))
-    return picked.select(*out_cols)
 
 
 def scd2_dim_join(
@@ -692,15 +554,8 @@ def scd2_dim_join(
             if c not in keys and c not in (valid_from, valid_to)
         ]
     dim_cols = list(dim_cols)
-    # valid_to is carried through the PIT join internally, so it
-    # collides with a same-named fact column exactly like a dim column
-    dup = (set(dim_cols) | {valid_to}) & set(df_facts.columns)
-    if dup:
-        raise ValueError(
-            f"scd2_dim_join: dimension columns {sorted(dup)} collide with "
-            "fact columns — rename before joining (duplicate output names "
-            "are ambiguous)"
-        )
+    # valid_to rides through the PIT join, so the kernel's collision
+    # check rejects a same-named fact column exactly like a dim column
     joined = point_in_time_join(
         df_facts,
         df_dim,

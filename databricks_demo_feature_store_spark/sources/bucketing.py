@@ -44,10 +44,6 @@ def save_bucketed(
     writer.saveAsTable(table)
 
 
-def read_table(spark: SparkSession, table: str) -> DataFrame:
-    return spark.read.table(table)
-
-
 def bucketed_join(
     spark: SparkSession,
     left_table: str,

@@ -498,28 +498,3 @@ def pagos_to_payment_events(pagos: DataFrame) -> DataFrame:
             (F.ascii(F.col("calificacion_sistema")) - F.lit(64)).cast("int").alias("rating_num"),
         )
     )
-
-
-def generate_all(
-    spark: SparkSession,
-    path_root: str,
-    n: int = TOTAL_CUSTOMERS,
-    months: int = MONTHS_HISTORY,
-    seed: int = DEFAULT_SEED,
-) -> dict[str, str]:
-    """Write the full five-table fixture set as parquet under
-    ``path_root`` (the reference saves each to ``demo_db.*``)."""
-    pagos = gen_pagos(spark, n, months, seed=seed)
-    tables = {
-        "clientes": gen_clientes(spark, n, seed),
-        "pagos": pagos,
-        "productos": gen_productos(spark, n, months, seed),
-        "buro_credito": gen_buro(pagos, seed),
-        "transacciones": gen_transacciones(spark, n, months, seed),
-    }
-    paths = {}
-    for name, df in tables.items():
-        p = f"{path_root.rstrip('/')}/{name}"
-        df.write.mode("overwrite").parquet(p)
-        paths[name] = p
-    return paths

@@ -115,18 +115,6 @@ def _files_df(spark: SparkSession, files: Sequence[str]) -> DataFrame:
     )
 
 
-def _partition_values(table_path: str, file_path: str) -> dict[str, str]:
-    """``k=v`` hive-style path segments between the table root and the
-    file — harvested as min=max=v stats rows."""
-    rel = os.path.relpath(os.path.dirname(file_path), table_path)
-    vals: dict[str, str] = {}
-    for seg in rel.split(os.sep):
-        if "=" in seg:
-            k, _, v = seg.partition("=")
-            vals[k] = v
-    return vals
-
-
 def harvest_file_stats(
     spark: SparkSession,
     table_path: str,

@@ -1398,11 +1398,10 @@ def stream_cdf_ivm(
         # lineage into executor-local blocks, so on executor loss the
         # batch cannot be recomputed and the stream fails — fine for
         # local/demo scale; a long-running cluster stream should prefer
-        # reliable checkpointing or recompute (set
-        # SPARK_GRAFT_CDF_PIN=0 to opt out).
-        changes = versioned.changes_between(applied, v_max, [key])
-        if os.environ.get("SPARK_GRAFT_CDF_PIN", "1") != "0":
-            changes = changes.localCheckpoint(eager=True)
+        # reliable checkpointing or recompute.
+        changes = versioned.changes_between(applied, v_max, [key]).localCheckpoint(
+            eager=True
+        )
         delta, deletes = cdf_deltas(changes, key)
         view = sess.read.parquet(os.path.join(view_path, f"v{latest_view}"))
         refreshed = refresh_join_view(

@@ -24,7 +24,7 @@ SLOW_TESTS = {
     "test_cc_both_algorithms_match_union_find",
     "test_quantile_from_hist_matches_python_replay",
     "test_index_upsert_stream_crash_replay_converges",
-    "test_multi_pit_matches_sequential_chain",
+    "test_multi_pit_matches_bruteforce",
     "test_multibatch_ingest_stability",
     "test_stream_ingest_corpus_dedup",
     "test_pit_join_matches_bruteforce",

@@ -196,11 +196,11 @@ def test_latest_features_snapshot(spark):
     assert 3 not in snap
 
 
-def test_multi_lookup_pit_matches_sequential(spark, manager):
-    """The one-shuffle multi-table PIT join must be value-identical to
-    the sequential chain on every edge: ties (feature at the spine
-    instant wins), unmatched spine rows (NULL features), per-lookup
-    tolerance null-out, and tables with different release cadences."""
+def test_multi_lookup_pit_semantics(spark, manager):
+    """The one-shuffle multi-table PIT join on every edge: ties (feature
+    at the spine instant wins), unmatched spine rows (NULL features),
+    per-lookup tolerance null-out, and tables with different release
+    cadences."""
     f_a = spark.createDataFrame(
         [
             (1, dt.date(2024, 1, 1), 10.0),
@@ -244,22 +244,9 @@ def test_multi_lookup_pit_matches_sequential(spark, manager):
         ),
     ]
 
-    def rows(strategy):
-        out = create_training_set(
-            manager, labels, lookups, spine_time="label_dt", strategy=strategy
-        )
-        return {
-            tuple(r[c] for c in sorted(out.columns)) for r in out.collect()
-        }
-
-    multi = rows("multi")
-    seq = rows("sequential")
-    assert multi == seq
-    # spot-check the semantics directly (fa, fb) per (customer, label_dt)
+    # the semantics directly (fa, fb) per (customer, label_dt)
     by_key = {}
-    out = create_training_set(
-        manager, labels, lookups, spine_time="label_dt", strategy="multi"
-    )
+    out = create_training_set(manager, labels, lookups, spine_time="label_dt")
     for r in out.collect():
         by_key[(r["pk_customer"], str(r["label_dt"]))] = (r["fa"], r["fb"])
     assert by_key[(1, "2024-01-15")] == (10.0, None)   # fb stale → tolerance NULL
@@ -267,6 +254,55 @@ def test_multi_lookup_pit_matches_sequential(spark, manager):
     assert by_key[(2, "2024-02-15")] == (5.0, 200)     # tie resolves to feature
     assert by_key[(3, "2024-03-01")] == (None, None)   # unmatched spine survives
 
+
+
+def test_training_set_mixed_key_groups(spark, manager):
+    """Lookups on two different key sets, interleaved: one kernel call
+    per key group, values as-of per group, and the feature columns come
+    out in lookup order after the spine's columns."""
+    for name, key, rows, col in (
+        ("mk_cust_a", "pk_customer",
+         [(1, dt.date(2024, 1, 1), 10.0), (1, dt.date(2024, 3, 1), 11.0)], "fa"),
+        ("mk_prod", "pk_product",
+         [(7, dt.date(2024, 1, 20), 70.0), (8, dt.date(2024, 2, 1), 80.0)], "fp"),
+        ("mk_cust_b", "pk_customer",
+         [(1, dt.date(2024, 2, 1), 1.5), (2, dt.date(2024, 1, 1), 2.5)], "fb"),
+    ):
+        manager.save(
+            spark.createDataFrame(rows, f"{key} int, tpk_release_dt date, {col} double"),
+            FeatureTableSpec(
+                name=name,
+                primary_keys=(key, "tpk_release_dt"),
+                timestamp_keys=("tpk_release_dt",),
+            ),
+            mode="overwrite",
+        )
+    labels = spark.createDataFrame(
+        [
+            (1, dt.date(2024, 2, 1), 7, 1),
+            (1, dt.date(2024, 3, 15), 8, 0),
+            (2, dt.date(2024, 1, 10), 8, 1),
+        ],
+        "pk_customer int, label_dt date, pk_product int, y int",
+    )
+    lookups = [
+        FeatureLookup(table="mk_cust_a", lookup_keys=("pk_customer",)),
+        FeatureLookup(table="mk_prod", lookup_keys=("pk_product",)),
+        FeatureLookup(table="mk_cust_b", lookup_keys=("pk_customer",)),
+    ]
+    out = create_training_set(manager, labels, lookups, spine_time="label_dt")
+    assert out.columns == [
+        "pk_customer", "label_dt", "pk_product", "y", "fa", "fp", "fb"
+    ]
+    got = {
+        (r["pk_customer"], str(r["label_dt"])): (r["pk_product"], r["y"], r["fa"], r["fp"], r["fb"])
+        for r in out.collect()
+    }
+    assert got == {
+        (1, "2024-02-01"): (7, 1, 10.0, 70.0, 1.5),
+        (1, "2024-03-15"): (8, 0, 11.0, 80.0, 1.5),
+        (2, "2024-01-10"): (8, 1, None, None, 2.5),
+    }
 
 def test_negative_samples_properties(spark):
     """Negatives never collide with positives, at most k per user,
@@ -374,11 +410,10 @@ def test_store_doctor_flags_pk_violations(spark, manager):
     assert d["max_ts"] is None  # no timestamp key declared
 
 
-def test_training_set_payload_collisions_raise_every_strategy(spark, manager):
+def test_training_set_payload_collisions_raise(spark, manager):
     """A feature column colliding with the spine's columns or with another
-    lookup must raise up front under EVERY strategy — the sequential chain
-    would otherwise emit duplicate output column names (an ambiguous
-    frame), not a usable result."""
+    lookup must raise up front — also across key groups, which no single
+    kernel call sees."""
     import pytest
 
     f_a = spark.createDataFrame(
@@ -406,23 +441,16 @@ def test_training_set_payload_collisions_raise_every_strategy(spark, manager):
         FeatureLookup(table="coll_a", lookup_keys=("pk_customer",)),
         FeatureLookup(table="coll_b", lookup_keys=("pk_customer",)),
     ]
-    for strategy in ("auto", "sequential", "multi"):
-        with pytest.raises(ValueError, match="collides"):
-            create_training_set(
-                manager, labels, lookups, spine_time="label_dt", strategy=strategy
-            )
+    with pytest.raises(ValueError, match="collides"):
+        create_training_set(manager, labels, lookups, spine_time="label_dt")
     # collision with a SPINE column (the label itself) raises too
     spine_coll = [
         FeatureLookup(table="coll_a", lookup_keys=("pk_customer",),
                       feature_names=("f1",)),
     ]
     labels_y = labels.withColumnRenamed("y", "f1")
-    for strategy in ("auto", "sequential"):
-        with pytest.raises(ValueError, match="collides"):
-            create_training_set(
-                manager, labels_y, spine_coll, spine_time="label_dt",
-                strategy=strategy,
-            )
+    with pytest.raises(ValueError, match="collides"):
+        create_training_set(manager, labels_y, spine_coll, spine_time="label_dt")
 
 
 def test_multi_join_rejects_spine_column_collision(spark):

@@ -124,16 +124,31 @@ def test_cc_both_algorithms_match_union_find(spark, edges, extra_nodes):
         assert got == expected, algo
 
 
-_feat_a = st.lists(
-    st.tuples(_keys, _hours, st.integers(min_value=-100, max_value=100)),
+# each drawn (key, hour) carries 1-3 values: duplicate (k, time) rows
+# are the norm, so the per-lookup tiebreaks decide real matches
+_feat_dups = st.lists(
+    st.tuples(
+        _keys,
+        _hours,
+        st.lists(st.integers(min_value=-100, max_value=100), min_size=1, max_size=3),
+    ),
     min_size=0,
-    max_size=15,
+    max_size=10,
 )
-_feat_b = st.lists(
-    st.tuples(_keys, _hours, st.integers(min_value=-100, max_value=100)),
-    min_size=0,
-    max_size=15,
-)
+
+
+def _brute_force_lookup(spine, feats, tol_hours=None):
+    """Per spine row: the value of the latest feature row at-or-before it
+    (ties on time -> greatest tiebreak), NULL past ``tol_hours``."""
+    out = {}
+    for i, (k, h) in enumerate(spine):
+        cands = [(fh, tb, v) for fk, fh, tb, v in feats if fk == k and fh <= h]
+        best = max(cands) if cands else None
+        if best is None or (tol_hours is not None and h - best[0] > tol_hours):
+            out[i] = None
+        else:
+            out[i] = best[2]
+    return out
 
 
 @settings(
@@ -141,13 +156,13 @@ _feat_b = st.lists(
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
 )
-@given(spine=_spine_rows, fa=_feat_a, fb=_feat_b)
-def test_multi_pit_matches_sequential_chain(spark, spine, fa, fb):
-    """point_in_time_multi_join (one shuffle, N struct carries) must be
-    row-identical to the sequential point_in_time_join chain on
-    randomized spines and two feature tables — including key overlap,
-    timestamp ties between spine and features, duplicate feature rows,
-    empty histories, and per-lookup tolerance."""
+@given(spine=_spine_rows, fa=_feat_dups, fb=_feat_dups)
+def test_multi_pit_matches_bruteforce(spark, spine, fa, fb):
+    """point_in_time_multi_join (one shuffle, N struct carries) must equal
+    a per-lookup brute-force as-of on randomized spines and two feature
+    tables — key overlap, spine/feature timestamp ties, duplicate
+    (k, time) rows resolved by each lookup's OWN feature_tiebreak, empty
+    histories, and per-lookup tolerance."""
     from databricks_demo_feature_store_spark.operators.joins import (
         point_in_time_multi_join,
     )
@@ -156,42 +171,41 @@ def test_multi_pit_matches_sequential_chain(spark, spine, fa, fb):
         [(i, k, BASE + dt.timedelta(hours=h)) for i, (k, h) in enumerate(spine)],
         ["row_id", "k", "ts"],
     )
+    # table a breaks (k, time) ties on its value, table b on a row
+    # sequence number that is unrelated to its value
+    rows_a = [(k, h, v, v) for k, h, vs in fa for v in vs]
+    flat_b = [(k, h, v) for k, h, vs in fb for v in vs]
+    rows_b = [(k, h, j, v) for j, (k, h, v) in enumerate(flat_b)]
 
     def fdf(rows, col):
-        # collapse duplicate (k, time) rows to one (max value) so both
-        # forms see identical inputs without needing a tiebreak column
-        # (multi-join's cross-table window has no per-table tiebreaks)
-        best = {}
-        for k, h, v in rows:
-            best[(k, h)] = max(v, best.get((k, h), v))
-        data = [(k, BASE + dt.timedelta(hours=h), v) for (k, h), v in best.items()]
-        schema = f"k long, fts_{col} timestamp, {col} long"
-        return (
-            spark.createDataFrame(data, ["k", f"fts_{col}", col])
-            if data
-            else spark.createDataFrame([], schema)
-        )
+        schema = f"k long, fts_{col} timestamp, tb_{col} long, {col} long"
+        data = [(k, BASE + dt.timedelta(hours=h), tb, v) for k, h, tb, v in rows]
+        return spark.createDataFrame(data, schema)
 
-    fa_df, fb_df = fdf(fa, "va"), fdf(fb, "vb")
     lookups = [
-        {"features": fa_df, "feature_time": "fts_va"},
-        {"features": fb_df, "feature_time": "fts_vb", "tolerance_expr": "INTERVAL 10 HOURS"},
+        {
+            "features": fdf(rows_a, "va"),
+            "feature_time": "fts_va",
+            "feature_cols": ["va"],
+            "feature_tiebreak": ["tb_va"],
+        },
+        {
+            "features": fdf(rows_b, "vb"),
+            "feature_time": "fts_vb",
+            "feature_cols": ["vb"],
+            "feature_tiebreak": ["tb_vb"],
+            "tolerance_expr": "INTERVAL 10 HOURS",
+        },
     ]
-    multi = {
+    got = {
         r["row_id"]: (r["va"], r["vb"])
         for r in point_in_time_multi_join(
             spine_df, lookups, keys=["k"], spine_time="ts"
         ).collect()
     }
-    seq_df = point_in_time_join(
-        spine_df, fa_df, keys=["k"], spine_time="ts", feature_time="fts_va"
-    )
-    seq_df = point_in_time_join(
-        seq_df, fb_df, keys=["k"], spine_time="ts", feature_time="fts_vb",
-        tolerance_expr="INTERVAL 10 HOURS",
-    )
-    seq = {r["row_id"]: (r["va"], r["vb"]) for r in seq_df.collect()}
-    assert multi == seq
+    want_a = _brute_force_lookup(spine, rows_a)
+    want_b = _brute_force_lookup(spine, rows_b, tol_hours=10)
+    assert got == {i: (want_a[i], want_b[i]) for i in range(len(spine))}
 
 
 _surv_rows = st.lists(
