@@ -236,9 +236,12 @@ def _orchestrate(sf_dir: str, sf: float | None) -> None:
       * a wall budget (SPARK_GRAFT_BENCH_BUDGET_SEC; default 1800 s at
         32 cores, scaled by sqrt(32/cpus) at lower core counts since the
         same suite is legitimately slower there) degrades remaining
-        chunks to min-of-1 — and, only if even that cannot fit, skips
-        them — with the degradation named in the printed line. On a calm
-        host the 32-core sweep runs ~20 min and never triggers this.
+        chunks to min-of-1 — and, only if even that cannot fit (or the
+        sweep already runs min-of-1), skips them — with the degradation
+        named in the printed line. On a calm host the 32-core sweep runs
+        ~20 min and never triggers this;
+      * the signal handler terminates the in-flight chunk child before
+        exiting, so no chunk JVM outlives the bench.
     """
     import signal
     import statistics
@@ -264,11 +267,21 @@ def _orchestrate(sf_dir: str, sf: float | None) -> None:
     chunks = [names[i : i + chunk_size] for i in range(0, len(names), chunk_size)]
     notes: list[str] = []
     current_out: dict[str, str] = {}
+    current_child: dict[str, subprocess.Popen] = {}
 
     def _emit_partial(signum, frame):  # pragma: no cover - signal path
         # a timeout (SIGTERM from `timeout`) or Ctrl-C must still leave a
-        # parseable driver line: merge the in-flight chunk's partial file
-        # and print over everything completed so far, then exit
+        # parseable result line: stop the in-flight chunk child (its JVM
+        # exits when the child's gateway pipe closes), merge its partial
+        # file and print over everything completed so far, then exit
+        child = current_child.get("proc")
+        if child is not None and child.poll() is None:
+            child.terminate()
+            try:
+                child.wait(timeout=10)
+            except subprocess.TimeoutExpired:
+                child.kill()
+                child.wait()
         try:
             if current_out.get("path"):
                 with open(current_out["path"]) as fh:
@@ -301,11 +314,12 @@ def _orchestrate(sf_dir: str, sf: float | None) -> None:
             per_q = statistics.median(w / n for n, w in chunk_walls)
             est_full = per_q * len(chunk)
             # ~15 s JVM startup is inside per_q already (amortized)
-            if remaining < est_full * 1.15 and runs > 1:
+            if remaining < est_full * 1.15:
                 # min-of-1 costs roughly 1/runs of the timed part plus
-                # the fixed JVM/registration overhead; estimate half
+                # the fixed JVM/registration overhead; estimate half. A
+                # min-of-1 sweep has nothing to degrade to: it skips.
                 est_one = est_full * (1.0 / runs) + 20.0 * (len(chunk) / 50.0)
-                if remaining >= est_one * 1.15:
+                if runs > 1 and remaining >= est_one * 1.15:
                     child_runs = 1
                     degraded.extend(chunk)
                 else:
@@ -323,17 +337,22 @@ def _orchestrate(sf_dir: str, sf: float | None) -> None:
         env["SPARK_GRAFT_BENCH_RUNS"] = str(child_runs)
         current_out["path"] = out_path
         t_chunk = time.time()
-        proc = subprocess.run(
+        # Popen, not run: the signal handler must be able to stop the
+        # in-flight child, or its JVM outlives the bench
+        proc = subprocess.Popen(
             [sys.executable, os.path.abspath(__file__)],
             env=env,
             stdout=subprocess.DEVNULL,
             stderr=subprocess.PIPE,
         )
+        current_child["proc"] = proc
+        _, child_err = proc.communicate()
+        current_child.pop("proc")
         current_out["path"] = ""
         if proc.returncode != 0:
             # surface the child's actual failure (Spark/py4j traceback) —
             # a bare "chunk N failed" leaves the error unrecoverable
-            tail = (proc.stderr or b"").decode(errors="replace").strip()
+            tail = (child_err or b"").decode(errors="replace").strip()
             tail = "\n".join(tail.splitlines()[-40:])
             raise SystemExit(
                 f"bench chunk {ci} failed "

@@ -30,9 +30,13 @@ from enum import Enum
 
 from pyspark.sql import DataFrame, SparkSession
 
-from databricks_demo_feature_store_spark.sources.writers import merge_upsert
-
-METADATA_FILE = "_feature_metadata.json"
+from databricks_demo_feature_store_spark.sources.writers import (
+    METADATA_FILE,
+    READ_SCHEMA_KEY,
+    merge_upsert,
+    read_schema_pin,
+    read_table,
+)
 
 
 class EvolutionPolicy(str, Enum):
@@ -110,18 +114,37 @@ class FeatureStoreManager:
         return False
 
     def read(self, name: str) -> DataFrame:
-        return self.spark.read.format(self.fmt).load(self.path(name))
+        return self.read_registered(name)[0]
 
-    def get_metadata(self, name: str) -> dict:
-        """Registry read — reference ``_get_metadata`` (:1440-1456)."""
+    def read_registered(self, name: str) -> tuple[DataFrame, dict]:
+        """The table and its registry metadata from ONE sidecar load. The
+        scan uses the schema the last save pinned in the sidecar while
+        the table's file listing still matches it, so planning it runs
+        no footer-inference job; tables the registry does not describe
+        (written outside the manager, partitioned, carrying deletion
+        vectors, non-parquet) fall back to inference."""
+        meta = self._sidecar(name)
+        df = read_table(self.spark, self.path(name), self.fmt, meta)
+        meta.pop(READ_SCHEMA_KEY, None)
+        return df, meta
+
+    def _sidecar(self, name: str) -> dict:
         meta_path = os.path.join(self.path(name), METADATA_FILE)
         if not os.path.exists(meta_path):
             return {}
         with open(meta_path) as fh:
             return json.load(fh)
 
-    def _update_metadata(self, spec: FeatureTableSpec) -> None:
-        """Registry write — reference ``_update_metadata`` (:1490-1508)."""
+    def get_metadata(self, name: str) -> dict:
+        """Registry read — reference ``_get_metadata`` (:1440-1456). The
+        read-schema pin is storage detail and not part of the registry."""
+        meta = self._sidecar(name)
+        meta.pop(READ_SCHEMA_KEY, None)
+        return meta
+
+    def _update_metadata(self, spec: FeatureTableSpec, schema=None) -> None:
+        """Registry write — reference ``_update_metadata`` (:1490-1508),
+        plus the read-schema pin of the ``schema`` just written."""
         meta = {
             "name": spec.name,
             "description": spec.description,
@@ -131,6 +154,9 @@ class FeatureStoreManager:
             "source_tables": list(spec.source_tables),
             "check_constraints": list(spec.check_constraints),
         }
+        pin = None if schema is None else read_schema_pin(self.path(spec.name), schema)
+        if pin is not None:
+            meta[READ_SCHEMA_KEY] = pin
         os.makedirs(self.path(spec.name), exist_ok=True)
         with open(os.path.join(self.path(spec.name), METADATA_FILE), "w") as fh:
             json.dump(meta, fh, indent=2, sort_keys=True)
@@ -246,10 +272,11 @@ class FeatureStoreManager:
             if spec.partition_by:
                 writer = writer.partitionBy(*spec.partition_by)
             writer.save(path)
+            written = out_df.schema
         else:
             keys = list(spec.primary_keys)
             update_columns = diff.new_columns or None
-            merge_upsert(
+            written = merge_upsert(
                 df,
                 path,
                 keys,
@@ -257,7 +284,7 @@ class FeatureStoreManager:
                 partition_by=list(spec.partition_by) or None,
                 update_columns=update_columns,
             )
-        self._update_metadata(spec)
+        self._update_metadata(spec, written)
         return diff
 
 
@@ -343,10 +370,9 @@ def store_doctor(manager: "FeatureStoreManager"):
 
     out = None
     for name in manager.list_tables():
-        meta = manager.get_metadata(name)
+        df, meta = manager.read_registered(name)
         pks = meta.get("primary_keys") or []
         ts_keys = meta.get("timestamp_keys") or []
-        df = manager.read(name)
         if not pks:
             continue
         null_pk = None
@@ -412,9 +438,8 @@ def forget_entities(
     n_forget = forget.count()
     rows = []
     for name in manager.list_tables():
-        meta = manager.get_metadata(name)
+        df, meta = manager.read_registered(name)
         pks = meta.get("primary_keys", [])
-        df = manager.read(name)
         if key_col not in pks or key_col not in df.columns:
             rows.append((name, False, df.count(), 0))
             continue

@@ -93,13 +93,13 @@ def create_training_set(
     lookups = [lk for lk in lookups if not isinstance(lk, WindowLookup)]
 
     def resolve(lk: FeatureLookup) -> tuple[DataFrame, str]:
-        meta = manager.get_metadata(lk.table)
+        features, meta = manager.read_registered(lk.table)
         ts_keys = meta.get("timestamp_keys") or []
         if not ts_keys:
             raise ValueError(
                 f"Feature table {lk.table!r} has no timestamp_keys in its registry metadata"
             )
-        return manager.read(lk.table), ts_keys[0]
+        return features, ts_keys[0]
 
     resolved = []
     for lk in lookups:
@@ -172,11 +172,13 @@ def create_training_set(
         out = point_in_time_multi_join(
             out, entries, keys=list(gkeys), spine_time=spine_time
         )
-        if lead is None:
+        if lead is None and len(groups) > 1:
             lead = [c for c in out.columns if c not in feature_names]
-    # a later group's call carries the earlier groups' features as spine
-    # payload; restore the lookup order (a no-op select for one group)
-    return apply_window_lookups(out.select(*lead, *feature_names))
+    if lead is not None:
+        # a later group's call carries the earlier groups' features as
+        # spine payload; restore the lookup order
+        out = out.select(*lead, *feature_names)
+    return apply_window_lookups(out)
 
 
 def latest_features(

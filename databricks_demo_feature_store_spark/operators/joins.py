@@ -151,6 +151,15 @@ def point_in_time_multi_join(
     ``asc_nulls_first`` after ``(time, is_spine)``, so one table's
     tiebreak never reorders another table's carry.
 
+    Construction: the plan is built from SQL expression strings, one per
+    output slot, so building it costs O(lookups) Py4J calls whatever the
+    payload width. Each table's payload (its time last, as ``__ft{i}``)
+    is one ``struct(...)`` expression; the union's NULL slots come from
+    ``unionByName(allowMissingColumns=True)``; tolerance and the nearest
+    choice act on whole structs, so a match out of tolerance NULLs every
+    field of it; the output star-expands each struct and then drops or
+    renames (``matched_time_col``) its time field.
+
     Output: keys, ``spine_time``, the other spine columns, then each
     lookup's feature columns (and matched time column) in lookup order.
     Output names must be disjoint from the spine's columns and across
@@ -160,24 +169,26 @@ def point_in_time_multi_join(
         raise ValueError(
             f"direction must be backward|forward|nearest, got {direction!r}"
         )
-    keys = list(keys)
+    keys, lookups = list(keys), list(lookups)
     spine_cols = [c for c in df_spine.columns if c not in keys and c != spine_time]
-    looks = []
-    # seed with the spine's own output columns (keys, spine_time, payload):
-    # a feature column named like any of them would silently yield a
+    qkeys = [_q(k) for k in keys]
+    keys_sql = ", ".join(qkeys)
+    branches, tiebreaks, drops, renames = [], [], [], {}
+    # seed with the spine's own output columns (keys, spine_time, payload)
+    # and the per-lookup time fields dropped or renamed by name below: a
+    # feature column named like any of them would silently yield a
     # duplicate output column name — later select-by-name becomes ambiguous
     seen: set[str] = set(df_spine.columns) | set(keys) | {spine_time}
+    seen |= {f"__ft{i}" for i in range(len(lookups))}
     for i, lk in enumerate(lookups):
         features = lk["features"]
         ftime = lk["feature_time"]
         fcols = lk.get("feature_cols")
         if fcols is None:
             fcols = [c for c in features.columns if c not in keys and c != ftime]
-        fields = [(c, c) for c in fcols]
-        if lk.get("matched_time_col") is not None:
-            fields.append(("__ft", lk["matched_time_col"]))
+        mtime = lk.get("matched_time_col")
         dup = set()
-        for _, name in fields:
+        for name in [*fcols, *([mtime] if mtime is not None else [])]:
             if name in seen:
                 dup.add(name)
             seen.add(name)
@@ -186,130 +197,91 @@ def point_in_time_multi_join(
                 f"as-of join: output columns {sorted(dup)} collide with the "
                 "spine's columns/keys or another lookup — rename before joining"
             )
-        feat = F.struct(
-            F.col(ftime).cast("timestamp").alias("__ft"),
-            *[F.col(c) for c in fcols],
-        )
-        looks.append(
-            {
-                "features": features,
-                "ftime": ftime,
-                "feat": feat,
-                "feat_t": features.select(feat.alias("s")).schema["s"].dataType,
-                "fields": fields,
-                "tol": lk.get("tolerance_expr"),
-                "slot": f"__feat{i}",
-                "tb": [
-                    (f"__tb{i}_{j}", c, features.schema[c].dataType)
-                    for j, c in enumerate(lk.get("feature_tiebreak") or ())
-                ],
-            }
-        )
-
-    # one tagged frame per side, unioned on the shared (keys, time) axis
-    left = df_spine.select(
-        *keys,
-        F.col(spine_time).cast("timestamp").alias("__t"),
-        F.lit(1).alias("__is_spine"),
-        F.struct(*[F.col(c) for c in ([spine_time] + spine_cols)]).alias(
-            "__spine_payload"
-        ),
-    )
-    spine_payload_t = left.schema["__spine_payload"].dataType
-    left = left.select(
-        "*",
-        *[F.lit(None).cast(lk["feat_t"]).alias(lk["slot"]) for lk in looks],
-        *[F.lit(None).cast(t).alias(tb) for lk in looks for tb, _, t in lk["tb"]],
-    )
-    unioned = left
-    for lk in looks:
-        unioned = unioned.unionByName(
-            lk["features"].select(
-                *keys,
-                F.col(lk["ftime"]).cast("timestamp").alias("__t"),
-                F.lit(0).alias("__is_spine"),
-                F.lit(None).cast(spine_payload_t).alias("__spine_payload"),
-                *[
-                    (lk["feat"] if other is lk else F.lit(None).cast(other["feat_t"]))
-                    .alias(other["slot"])
-                    for other in looks
-                ],
-                *[
-                    (F.col(c) if other is lk else F.lit(None).cast(t)).alias(tb)
-                    for other in looks
-                    for tb, c, t in other["tb"]
-                ],
-            )
-        )
-
-    tiebreaks = [F.col(tb).asc_nulls_first() for lk in looks for tb, _, _ in lk["tb"]]
-
-    def carry(time_order: F.Column):
-        return (
-            Window.partitionBy(*keys)
-            .orderBy(time_order, F.col("__is_spine").asc(), *tiebreaks)
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-
-    carries = []
-    for lk in looks:
-        if direction != "forward":
-            carries.append(
-                F.last(lk["slot"], ignorenulls=True)
-                .over(carry(F.col("__t").asc()))
-                .alias(lk["slot"])
-            )
-        if direction != "backward":
-            carries.append(
-                F.last(lk["slot"], ignorenulls=True)
-                .over(carry(F.col("__t").desc()))
-                .alias(lk["slot"] + "_fwd")
-            )
-    carried = unioned.select(
-        *keys, "__is_spine", "__spine_payload", *carries
-    ).filter(F.col("__is_spine") == 1)
-
-    st = F.col("__spine_payload").getField(spine_time).cast("timestamp")
-
-    def out_of_tol(side: F.Column, tol: str, is_back: bool) -> F.Column:
-        ft = side.getField("__ft")
-        return ft < (st - F.expr(tol)) if is_back else ft > (st + F.expr(tol))
-
-    def null_if(cond: F.Column, v: F.Column) -> F.Column:
-        return F.when(cond, F.lit(None)).otherwise(v)
-
-    out_feature_cols = []
-    for lk in looks:
-        back, fwd, cond = F.col(lk["slot"]), F.col(lk["slot"] + "_fwd"), None
-        if direction == "nearest":
-            if lk["tol"] is not None:
-                back = null_if(out_of_tol(back, lk["tol"], True), back)
-                fwd = null_if(out_of_tol(fwd, lk["tol"], False), fwd)
-            d_back = F.unix_micros(st) - F.unix_micros(back.getField("__ft"))
-            d_fwd = F.unix_micros(fwd.getField("__ft")) - F.unix_micros(st)
-            side = (
-                F.when(back.isNull(), fwd)
-                .when(fwd.isNull(), back)
-                .when(d_back <= d_fwd, back)  # exact tie -> backward
-                .otherwise(fwd)
-            )
+        if mtime is None:
+            drops.append(f"__ft{i}")
         else:
-            side = back if direction == "backward" else fwd
-            if lk["tol"] is not None:
-                cond = out_of_tol(side, lk["tol"], direction == "backward")
-        for field, name in lk["fields"]:
-            v = side.getField(field)
-            if cond is not None:
-                v = null_if(cond, v)
-            out_feature_cols.append(v.alias(name))
-    return carried.select(
-        *keys,
-        F.col("__spine_payload").getField(spine_time).alias(spine_time),
-        *[
-            F.col("__spine_payload").getField(c).alias(c) for c in spine_cols
-        ],
-        *out_feature_cols,
+            renames[f"__ft{i}"] = mtime
+        tbs = [(f"__tb{i}_{j}", c) for j, c in enumerate(lk.get("feature_tiebreak") or ())]
+        tiebreaks += [tb for tb, _ in tbs]
+        ft = f"CAST({_q(ftime)} AS TIMESTAMP)"
+        branches.append(
+            features.selectExpr(
+                *qkeys,
+                f"{ft} AS __t",
+                "0 AS __is_spine",
+                f"struct({''.join(_q(c) + ', ' for c in fcols)}{ft} AS __ft{i}) AS __feat{i}",
+                *[f"{_q(c)} AS {tb}" for tb, c in tbs],
+            )
+        )
+
+    # one tagged frame per side, unioned on the shared (keys, time) axis;
+    # each side's missing slots (other tables' structs and tiebreaks, the
+    # spine payload) are NULLs of the right type
+    unioned = df_spine.selectExpr(
+        *qkeys,
+        f"CAST({_q(spine_time)} AS TIMESTAMP) AS __t",
+        "1 AS __is_spine",
+        f"struct({', '.join(map(_q, [spine_time, *spine_cols]))}) AS __spine_payload",
     )
+    for branch in branches:
+        unioned = unioned.unionByName(branch, allowMissingColumns=True)
+
+    order = "".join(f", {tb} ASC NULLS FIRST" for tb in tiebreaks)
+
+    def carry(i: int, time_order: str, name: str) -> str:
+        return (
+            f"last(__feat{i}, true) OVER (PARTITION BY {keys_sql} ORDER BY "
+            f"__t {time_order}, __is_spine ASC{order} ROWS BETWEEN "
+            f"UNBOUNDED PRECEDING AND CURRENT ROW) AS {name}"
+        )
+
+    def within_tol(side: str, i: int, is_back: bool) -> str:
+        tol = lookups[i].get("tolerance_expr")
+        if tol is None:
+            return side
+        far = f"{side}.__ft{i} < __t - ({tol})" if is_back else f"{side}.__ft{i} > __t + ({tol})"
+        return f"CASE WHEN {far} THEN NULL ELSE {side} END"
+
+    # under backward/forward the one side carried is the match
+    back, fwd = ("__back", "__fwd") if direction == "nearest" else ("__feat",) * 2
+    carries, sides = [], []
+    for i in range(len(lookups)):
+        if direction != "forward":
+            carries.append(carry(i, "ASC", f"{back}{i}"))
+            sides.append(f"{within_tol(f'{back}{i}', i, True)} AS {back}{i}")
+        if direction != "backward":
+            carries.append(carry(i, "DESC", f"{fwd}{i}"))
+            sides.append(f"{within_tol(f'{fwd}{i}', i, False)} AS {fwd}{i}")
+    # every match is a whole struct: a tolerance miss NULLs all its fields
+    matched = (
+        unioned.selectExpr(*qkeys, "__t", "__is_spine", "__spine_payload", *carries)
+        .where("__is_spine = 1")
+        .selectExpr(*qkeys, "__t", "__spine_payload", *sides)
+    )
+    if direction == "nearest":
+        matched = matched.selectExpr(
+            *qkeys,
+            "__spine_payload",
+            *[
+                f"CASE WHEN __back{i} IS NULL THEN __fwd{i} "
+                f"WHEN __fwd{i} IS NULL THEN __back{i} "
+                f"WHEN unix_micros(__t) - unix_micros(__back{i}.__ft{i}) "
+                f"<= unix_micros(__fwd{i}.__ft{i}) - unix_micros(__t) "
+                f"THEN __back{i} ELSE __fwd{i} END AS __feat{i}"  # exact tie -> backward
+                for i in range(len(lookups))
+            ],
+        )
+    out = matched.selectExpr(
+        *qkeys, "__spine_payload.*", *[f"__feat{i}.*" for i in range(len(lookups))]
+    )
+    if drops:
+        out = out.drop(*drops)
+    return out.withColumnsRenamed(renames) if renames else out
+
+
+def _q(name: str) -> str:
+    """``name`` as a SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def exclude_ids_anti_join(

@@ -378,9 +378,19 @@ def cms_estimate(
     multiplicity (duplicate key values produce duplicate rows — the old
     form collapsed them via its re-aggregation; every engine caller
     passes distinct/grouped keys, where the two are identical).
+
+    Column constraint: ``keys`` must not already have a ``cms_count``
+    column (``ValueError`` — the output would carry two). Any other
+    name, ``__cells`` included, is safe: the probe references the
+    broadcast map and the key through their own frames.
     """
     from databricks_demo_feature_store_spark.textops.dedup import portable_hash_col
 
+    if "cms_count" in keys.columns:
+        raise ValueError(
+            "cms_estimate: keys already has a 'cms_count' column, the name "
+            "of the estimate it adds — rename or drop it first"
+        )
     width = int(width)
     cell_map = sketch.groupBy().agg(
         F.map_from_entries(
@@ -397,12 +407,12 @@ def cms_estimate(
     probes = [
         F.coalesce(
             F.element_at(
-                F.col("__cells"),
+                cell_map["__cells"],
                 (
                     F.lit(i * width)
                     + F.pmod(
                         portable_hash_col(
-                            F.concat(F.lit(f"{i}:"), F.col(col).cast("string")),
+                            F.concat(F.lit(f"{i}:"), keys[col].cast("string")),
                             seed=seed,
                         ),
                         F.lit(width),

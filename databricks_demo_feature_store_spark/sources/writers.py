@@ -19,6 +19,7 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from databricks_demo_feature_store_spark.sources.catalog import HAS_DELTA
 
@@ -179,6 +180,76 @@ def _swap_dirs(live: str, staging: str, expected_generation=_UNCHECKED) -> None:
     shutil.rmtree(old, ignore_errors=True)
 
 
+#: a feature table's registry sidecar (``featurestore/manager.py``). Next
+#: to the registry it holds the table's read-schema pin under
+#: ``READ_SCHEMA_KEY``: the schema the last manager save wrote and the
+#: data-file listing that schema describes.
+METADATA_FILE = "_feature_metadata.json"
+READ_SCHEMA_KEY = "read_schema"
+
+
+def data_file_listing(path: str) -> list[list] | None:
+    """Sorted ``[name, size]`` of every entry Spark's file index scans
+    directly under ``path`` (``_``/``.`` names are hidden from it too).
+    ``None`` when the table is missing or keeps data in subdirectories:
+    hive ``k=v`` layouts are never pinned."""
+    import os
+
+    try:
+        entries = list(os.scandir(path.removeprefix("file:")))
+    except (FileNotFoundError, NotADirectoryError):
+        return None
+    out = []
+    for e in entries:
+        if e.name.startswith(("_", ".")):
+            continue
+        if e.is_dir():
+            return None
+        out.append([e.name, e.stat().st_size])
+    return sorted(out)
+
+
+def read_schema_pin(path: str, schema: StructType) -> dict | None:
+    """The sidecar entry pinning ``schema`` to the files now under
+    ``path`` (``None`` for layouts :func:`data_file_listing` skips)."""
+    files = data_file_listing(path)
+    if files is None:
+        return None
+    return {"schema": schema.jsonValue(), "files": files}
+
+
+def read_table(spark: SparkSession, path: str, fmt: str, meta: dict | None = None) -> DataFrame:
+    """Scan the table at ``path`` with the read schema pinned in its
+    sidecar (``meta``, or the file under ``path`` when omitted) — no
+    footer-inference job — while the pin still describes the table: a
+    parquet table with no deletion-vector sidecar whose listing equals
+    the recorded one. Any write outside the manager changes the listing
+    (data files carry unique names), so a stale pin is never used;
+    otherwise the schema is inferred."""
+    import json
+    import os
+
+    from databricks_demo_feature_store_spark.sources.deletion_vectors import dv_path
+
+    reader = spark.read.format(fmt)
+    p = path.removeprefix("file:")
+    if meta is None:
+        try:
+            with open(os.path.join(p, METADATA_FILE)) as fh:
+                meta = json.load(fh)
+        except (OSError, ValueError):  # absent, or mid-rewrite
+            meta = {}
+    pin = meta.get(READ_SCHEMA_KEY)
+    if (
+        pin
+        and fmt == "parquet"  # Delta rejects a read schema
+        and not os.path.isdir(dv_path(p))
+        and data_file_listing(p) == pin["files"]
+    ):
+        reader = reader.schema(StructType.fromJson(pin["schema"]))
+    return reader.load(path)
+
+
 def _read_folding_dv(spark: SparkSession, path: str, fmt: str) -> DataFrame:
     """Scan ``path`` with pending deletion-vector deletes FOLDED OUT.
 
@@ -200,7 +271,7 @@ def _read_folding_dv(spark: SparkSession, path: str, fmt: str) -> DataFrame:
 
         if os.path.isdir(dv_path(path.removeprefix("file:"))):
             return read_with_deletes(spark, path)
-    return spark.read.format(fmt).load(path)
+    return read_table(spark, path, fmt)
 
 
 def save_table(
@@ -346,8 +417,10 @@ def merge_upsert(
     fmt: str = "parquet",
     partition_by: Sequence[str] | None = None,
     update_columns: Sequence[str] | None = None,
-) -> None:
-    """Upsert ``df`` into the table at ``path`` keyed on ``keys``.
+) -> StructType | None:
+    """Upsert ``df`` into the table at ``path`` keyed on ``keys``; returns
+    the schema of the frame written (``None`` on the Delta path), which
+    the feature-store manager pins as the table's read schema.
 
     Delta path: ``DeltaTable.merge`` with ``whenMatchedUpdate`` (restricted
     to ``update_columns`` when given, matching the reference's
@@ -375,9 +448,9 @@ def merge_upsert(
             else:
                 merge = merge.whenMatchedUpdateAll()
             merge.whenNotMatchedInsertAll().execute()
-            return
+            return None
         _write(df, path, "delta", "overwrite", partition_by)
-        return
+        return None
 
     from pyspark.errors import AnalysisException
 
@@ -396,7 +469,7 @@ def merge_upsert(
 
     if not table_exists:
         _write(df, path, fmt, "overwrite", partition_by)
-        return
+        return df.schema
 
     incoming = df
     if update_columns:
@@ -426,6 +499,7 @@ def merge_upsert(
     staging = path.rstrip("/") + "__staging"
     _write(out, staging, fmt, "overwrite", partition_by)
     _swap_dirs(path, staging, expected_generation=generation)
+    return out.schema
 
 
 def compact(

@@ -937,3 +937,118 @@ def test_save_many_matches_sequential_saves(spark, tmp_path):
             [(frames["t0"], spec("dup")), (frames["t1"], spec("dup"))],
             mode="overwrite",
         )
+
+
+def _jobs(spark) -> set[int]:
+    """Ids of the jobs the status tracker has seen so far."""
+    return set(spark.sparkContext.statusTracker().getJobIdsForGroup(None))
+
+
+def _five_table_store(spark, manager):
+    """Five saved feature tables on one key, twelve payload columns each."""
+    names = [f"ft{i}" for i in range(5)]
+    for i, name in enumerate(names):
+        df = spark.range(0, 40).select(
+            (F.col("id") % 8).cast("int").alias("pk_customer"),
+            F.timestamp_seconds(F.lit(1_700_000_000) + F.col("id") * 3600).alias(
+                "tpk_release_dt"
+            ),
+            *[(F.col("id") * (j + 1) + i).cast("double").alias(f"f{i}_{j}") for j in range(12)],
+        )
+        spec = FeatureTableSpec(
+            name=name,
+            primary_keys=("pk_customer", "tpk_release_dt"),
+            timestamp_keys=("tpk_release_dt",),
+        )
+        manager.save(df, spec, mode="overwrite")
+    spine = spark.range(0, 30).select(
+        F.col("id").alias("label_id"),
+        (F.col("id") % 8).cast("int").alias("pk_customer"),
+        F.timestamp_seconds(F.lit(1_700_000_000) + F.col("id") * 5000).alias("label_ts"),
+    )
+    return names, spine
+
+
+def test_training_set_build_launches_no_job(spark, manager):
+    """Building a training set over registered tables plans every read
+    with the registry-pinned schema: no footer-inference job."""
+    import time
+
+    names, spine = _five_table_store(spark, manager)
+    lookups = [FeatureLookup(table=n, lookup_keys=("pk_customer",)) for n in names]
+    spine.columns  # the spine's own analysis is not part of the build
+    before = _jobs(spark)
+    ts = create_training_set(manager, spine, lookups, spine_time="label_ts")
+    time.sleep(0.5)  # job events reach the status tracker asynchronously
+    assert _jobs(spark) - before == set()
+    assert ts.count() == 30
+    assert len(ts.columns) == 3 + 5 * 12
+
+
+def test_training_set_build_py4j_budget(spark, manager):
+    """The build's Py4J round trips grow with the lookups, not with
+    lookups² or the payload columns: five 12-column tables stay far
+    under 1,000 calls (the per-column construction took ~5,800 here)."""
+    import py4j.clientserver as cs
+
+    names, spine = _five_table_store(spark, manager)
+    lookups = [FeatureLookup(table=n, lookup_keys=("pk_customer",)) for n in names]
+    spine.columns
+    calls = [0]
+    send = cs.ClientServerConnection.send_command
+
+    def counting(self, command):
+        calls[0] += 1
+        return send(self, command)
+
+    cs.ClientServerConnection.send_command = counting
+    try:
+        create_training_set(manager, spine, lookups, spine_time="label_ts")
+    finally:
+        cs.ClientServerConnection.send_command = send
+    assert 0 < calls[0] <= 1000
+
+
+def test_pinned_read_schema_tracks_outside_writes(spark, manager):
+    """The pin is used only while the listing it records is current: a
+    table rewritten outside the manager with an extra column is read
+    with that column, whether or not the writer left the sidecar."""
+    import os
+    import shutil
+
+    from databricks_demo_feature_store_spark.featurestore.manager import METADATA_FILE
+
+    df = _df(spark, [(1, dt.date(2024, 1, 1), 1.0)])
+    manager.save(df, SPEC, mode="overwrite")
+    path = manager.path("cust_features")
+    # the pinned schema is the one inference would give
+    assert manager.read("cust_features").schema == spark.read.parquet(path).schema
+
+    sidecar = os.path.join(path, METADATA_FILE)
+    kept = str(os.path.join(os.path.dirname(path), "sidecar.json"))
+    shutil.copy(sidecar, kept)
+    wider = _df(spark, [(2, dt.date(2024, 1, 2), 2.0)]).withColumn("f2", F.lit(5.0))
+    wider.write.mode("overwrite").parquet(path)  # drops the sidecar
+    assert manager.read("cust_features").columns[-1] == "f2"
+
+    shutil.copy(kept, sidecar)  # a stale pin beside the new files
+    got = manager.read("cust_features")
+    assert got.columns[-1] == "f2"
+    assert got.first().f2 == 5.0
+
+
+def test_evolving_merge_updates_pin(spark, manager):
+    """A merge that adds a column under EVOLVE re-pins the table: the
+    next read sees the column and plans with no inference job."""
+    import time
+
+    manager.save(_df(spark, [(1, dt.date(2024, 1, 1), 1.0)]), SPEC, mode="overwrite")
+    wide = _df(spark, [(2, dt.date(2024, 1, 1), 2.0)]).withColumn("f2", F.lit(7.0))
+    manager.save(wide, SPEC, mode="merge", policy=EvolutionPolicy.EVOLVE)
+    before = _jobs(spark)
+    got = manager.read("cust_features")
+    time.sleep(0.5)
+    assert _jobs(spark) - before == set()
+    assert got.columns == ["pk_customer", "tpk_release_dt", "f1", "f2"]
+    assert {(r.pk_customer, r.f2) for r in got.collect()} == {(1, None), (2, 7.0)}
+    assert "read_schema" not in manager.get_metadata("cust_features")

@@ -274,3 +274,35 @@ def test_cms_estimate_map_lookup_matches_cell_replay(spark):
     # duplicate key rows stay duplicated (documented contract change)
     dup = spark.createDataFrame([("a",), ("a",)], "k string")
     assert cms_estimate(sk, dup, "k", depth=depth, width=width).count() == 2
+
+
+def test_cms_estimate_key_column_names(spark):
+    """A keys column named like the internal cell map (``__cells``) is
+    probed unambiguously, as the key or as a passenger column; one named
+    ``cms_count`` is rejected by name instead of duplicating the output."""
+    import pytest
+
+    from databricks_demo_feature_store_spark.operators.sketches import (
+        cms_estimate,
+        count_min_sketch,
+    )
+
+    df = spark.createDataFrame([(k,) for k in "aaabc"], "k string")
+    sk = count_min_sketch(df, "k", depth=4, width=1024)
+    want = {"a": 3, "b": 1, "c": 1, "x": 0}
+
+    keys = spark.createDataFrame([(k,) for k in "abcx"], "__cells string")
+    out = cms_estimate(sk, keys, "__cells", depth=4, width=1024)
+    assert out.columns == ["__cells", "cms_count"]
+    assert {r["__cells"]: r["cms_count"] for r in out.collect()} == want
+
+    keys = spark.createDataFrame([(k, 7) for k in "abcx"], "k string, __cells int")
+    out = cms_estimate(sk, keys, "k", depth=4, width=1024)
+    assert out.columns == ["k", "__cells", "cms_count"]
+    assert {r["k"]: (r["cms_count"], r["__cells"]) for r in out.collect()} == {
+        k: (n, 7) for k, n in want.items()
+    }
+
+    keys = spark.createDataFrame([("a", 1)], "k string, cms_count long")
+    with pytest.raises(ValueError, match="'cms_count'"):
+        cms_estimate(sk, keys, "k", depth=4, width=1024)
