@@ -36,7 +36,20 @@ from databricks_demo_feature_store_spark.sources.writers import (
     merge_upsert,
     read_schema_pin,
     read_table,
+    stage_and_swap,
+    table_generation,
 )
+
+
+def _write_sidecar(directory: str, meta: dict, schema=None) -> None:
+    """Write registry ``meta`` into ``directory``'s sidecar, with the
+    read-schema pin of ``schema`` over the data files now in it."""
+    pin = None if schema is None else read_schema_pin(directory, schema)
+    if pin is not None:
+        meta = {**meta, READ_SCHEMA_KEY: pin}
+    os.makedirs(directory, exist_ok=True)
+    with open(os.path.join(directory, METADATA_FILE), "w") as fh:
+        json.dump(meta, fh, indent=2, sort_keys=True)
 
 
 class EvolutionPolicy(str, Enum):
@@ -142,9 +155,13 @@ class FeatureStoreManager:
         meta.pop(READ_SCHEMA_KEY, None)
         return meta
 
-    def _update_metadata(self, spec: FeatureTableSpec, schema=None) -> None:
+    def _update_metadata(
+        self, spec: FeatureTableSpec, schema=None, directory: str | None = None
+    ) -> None:
         """Registry write — reference ``_update_metadata`` (:1490-1508),
-        plus the read-schema pin of the ``schema`` just written."""
+        plus the read-schema pin of the ``schema`` just written, into the
+        table's directory or the staging ``directory`` about to replace
+        it."""
         meta = {
             "name": spec.name,
             "description": spec.description,
@@ -154,12 +171,7 @@ class FeatureStoreManager:
             "source_tables": list(spec.source_tables),
             "check_constraints": list(spec.check_constraints),
         }
-        pin = None if schema is None else read_schema_pin(self.path(spec.name), schema)
-        if pin is not None:
-            meta[READ_SCHEMA_KEY] = pin
-        os.makedirs(self.path(spec.name), exist_ok=True)
-        with open(os.path.join(self.path(spec.name), METADATA_FILE), "w") as fh:
-            json.dump(meta, fh, indent=2, sort_keys=True)
+        _write_sidecar(directory or self.path(spec.name), meta, schema)
 
     # writer-internal directory suffixes (sources/writers.py _swap_dirs
     # and its callers): crash debris with these names must never be
@@ -230,10 +242,14 @@ class FeatureStoreManager:
         """Write a feature table with policy-driven schema evolution.
 
         ``mode="overwrite"`` replaces the table (reference overwriteSchema
-        path :1707-1711). ``mode="merge"`` upserts on the PKs; new columns
-        are added to matched rows and full rows inserted for new keys
-        (reference ADD COLUMNS + MERGE :1727-1758). Type changes or missing
-        columns under ``policy=fail`` raise; under ``evolve``/``overwrite``
+        path :1707-1711): the frame is written to a staging directory
+        together with its registry sidecar and promoted by directory
+        rename, so a failed job leaves the old table and registry in
+        place, and ``df`` may read the table it replaces. ``mode="merge"``
+        upserts on the PKs; new columns are added to matched rows and full
+        rows inserted for new keys (reference ADD COLUMNS + MERGE
+        :1727-1758). Type changes or missing columns under
+        ``policy=fail`` raise; under ``evolve``/``overwrite``
         they force a full overwrite (the reference asks interactively —
         :1991-2014 — which a batch engine must not do).
         """
@@ -247,8 +263,10 @@ class FeatureStoreManager:
             # evaluation and write a different one
             df = df.localCheckpoint(eager=True)
             enforce_check_constraints(df, spec.check_constraints)
-        diff = self.validate_schema(spec.name, df)
         path = self.path(spec.name)
+        # taken before any read of the table, including df's own
+        generation = table_generation(path)
+        diff = self.validate_schema(spec.name, df)
 
         needs_overwrite = mode == "overwrite"
         if diff.missing_columns or diff.type_changed:
@@ -259,31 +277,26 @@ class FeatureStoreManager:
                 )
             needs_overwrite = True
 
+        # Unpartitioned by default (reference :1656-1663); spec can opt
+        # into a hive layout (see FeatureTableSpec.partition_by).
+        partition_by = list(spec.partition_by) or None
         if needs_overwrite or not self.exists(spec.name):
-            # Unpartitioned by default (reference :1656-1663); spec can
-            # opt into a hive layout (see FeatureTableSpec.partition_by).
-            out_df = df
-            if spec.partition_by:
-                # one shuffle on the layout columns: without it every
-                # task writes into every partition dir (tasks × dirs
-                # small files — writers._write has the same guard)
-                out_df = df.repartition(*spec.partition_by)
-            writer = out_df.write.format(self.fmt).mode("overwrite")
-            if spec.partition_by:
-                writer = writer.partitionBy(*spec.partition_by)
-            writer.save(path)
-            written = out_df.schema
-        else:
-            keys = list(spec.primary_keys)
-            update_columns = diff.new_columns or None
-            written = merge_upsert(
-                df,
-                path,
-                keys,
-                fmt=self.fmt,
-                partition_by=list(spec.partition_by) or None,
-                update_columns=update_columns,
+            # not sized: the frame's bytes are unknown before the write
+            stage_and_swap(
+                df, path, self.fmt, generation, partition_by, sized=False,
+                before_swap=lambda staging: self._update_metadata(
+                    spec, df.schema, staging
+                ),
             )
+            return diff
+        written = merge_upsert(
+            df,
+            path,
+            list(spec.primary_keys),
+            fmt=self.fmt,
+            partition_by=partition_by,
+            update_columns=diff.new_columns or None,
+        )
         self._update_metadata(spec, written)
         return diff
 
@@ -304,7 +317,7 @@ class FeatureStoreManager:
 
         ``items`` is an iterable of ``(df, spec)`` pairs targeting
         DISTINCT tables (validated — two writers on one table would race
-        the non-atomic overwrite). Per-table writes and registry
+        for the same staging directory). Per-table writes and registry
         sidecars are filesystem-independent, so concurrency cannot
         change any table's content; result is the same per-name
         :class:`SchemaDiff` map the sequential loop would produce.
@@ -313,7 +326,10 @@ class FeatureStoreManager:
         raises, saves already IN FLIGHT on other threads run to
         completion (their tables and metadata land) before the exception
         propagates — callers must treat a raised ``save_many`` as
-        partially applied, exactly like a crash mid-sequential-loop."""
+        partially applied, exactly like a crash mid-sequential-loop. The
+        failed table itself keeps its previous rows and registry (every
+        save is staged and promoted by rename), so retrying just the
+        failed items is safe."""
         from concurrent.futures import ThreadPoolExecutor
 
         items = list(items)
@@ -443,32 +459,22 @@ def forget_entities(
         if key_col not in pks or key_col not in df.columns:
             rows.append((name, False, df.count(), 0))
             continue
-        from databricks_demo_feature_store_spark.sources.writers import (
-            table_generation,
-        )
-
         path = manager.path(name)
         generation = table_generation(path)
         before = df.count()
         kept = df.join(
             F.broadcast(forget), df[key_col] == forget[key_col], "left_anti"
         )
-        staging = path.rstrip("/") + "__forget"
-        kept.write.format(manager.fmt).mode("overwrite").save(staging)
         # Registry metadata rides IN the staging directory, so the rename
         # promotes data and primary_keys in one atomic step. Writing it
         # after the swap left a crash window that permanently lost
         # primary_keys — after which every later forget_entities call saw
         # key_col ∉ pks and silently stopped propagating deletions for
         # this table (the worst failure mode for a compliance path).
-        if meta:
-            with open(
-                os.path.join(staging.removeprefix("file:"), METADATA_FILE), "w"
-            ) as fh:
-                json.dump(meta, fh, indent=2, sort_keys=True)
-        from databricks_demo_feature_store_spark.sources.writers import _swap_dirs
-
-        _swap_dirs(path, staging, expected_generation=generation)
+        stage_and_swap(
+            kept, path, manager.fmt, generation, suffix="__forget",
+            before_swap=lambda staging: _write_sidecar(staging, meta, kept.schema),
+        )
         after = manager.read(name).count()
         rows.append((name, True, after, before - after))
     out = manager.spark.createDataFrame(

@@ -28,7 +28,7 @@ from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
-from databricks_demo_feature_store_spark.sources.writers import _swap_dirs, _write
+from databricks_demo_feature_store_spark.sources.writers import _write, stage_and_swap
 
 
 def replace_entities(
@@ -69,9 +69,7 @@ def replace_entities(
     touched = df.select(entity_col).distinct()
     kept = existing.join(F.broadcast(touched), on=entity_col, how="left_anti")
     out = kept.unionByName(df, allowMissingColumns=True)
-    staging = path.rstrip("/") + "__staging"
-    _write(out, staging, fmt, "overwrite", partition_by)
-    _swap_dirs(path, staging, expected_generation=generation)
+    stage_and_swap(out, path, fmt, generation, partition_by)
 
 
 def incremental_entity_refresh(

@@ -148,7 +148,7 @@ def materialize_mapping(spark: SparkSession, table_path: str) -> int:
     resurrect deleted rows (for GDPR erasure, silent un-deletion)."""
     from databricks_demo_feature_store_spark.sources.writers import (
         _read_folding_dv,
-        _swap_dirs,
+        stage_and_swap,
         table_generation,
     )
 
@@ -160,9 +160,7 @@ def materialize_mapping(spark: SparkSession, table_path: str) -> int:
     live = base.select(
         *[F.col(c).alias(mapping.get(c, c)) for c in base.columns]
     ).localCheckpoint(eager=True)
-    staging = table_path.rstrip("/") + "__staging"
-    live.write.mode("overwrite").parquet(staging)
-    _swap_dirs(table_path, staging, expected_generation=generation)
+    stage_and_swap(live, table_path, "parquet", generation)
     # the sidecar was inside the replaced directory, so it is already
     # gone; nothing to clean up
     return len(mapping)

@@ -127,7 +127,7 @@ def apply_deletes(spark: SparkSession, table_path: str) -> int:
     the table directory, and ``_swap_dirs`` replaces the whole dir —
     the staging side simply doesn't carry one)."""
     from databricks_demo_feature_store_spark.sources.writers import (
-        _swap_dirs,
+        stage_and_swap,
         table_generation,
     )
 
@@ -141,7 +141,5 @@ def apply_deletes(spark: SparkSession, table_path: str) -> int:
     if not dv_count:
         return 0
     live = read_with_deletes(spark, table_path).localCheckpoint(eager=True)
-    staging = table_path.rstrip("/") + "__staging"
-    live.write.mode("overwrite").parquet(staging)
-    _swap_dirs(table_path, staging, expected_generation=generation)
+    stage_and_swap(live, table_path, "parquet", generation)
     return dv_count

@@ -10,13 +10,23 @@ parquet dynamic partition overwrite (:194-199).
 Without Delta on the classpath, MERGE is emulated exactly with
 **anti-join + unionByName + dynamic partition overwrite**: existing rows
 whose keys collide are replaced by the incoming rows, everything else is
-kept. At scale the rewrite cost is bounded by partitioning on the
-historical key so only affected partitions rewrite.
+kept.
+
+Every staged whole-table rewrite (merge, entity replacement, forget,
+deletion-vector purge, column-mapping materialization, compaction) goes
+through :func:`stage_and_swap`, which sizes the write to the rewrite's
+bytes: one write task and file per split the next scan would read
+(:func:`split_partitions`), instead of one per input partition of the
+rewrite plan. That is the parquet stand-in for the reference's Delta
+``OPTIMIZE`` after every save (``notebooks/utils.py:1762-1765``); below
+``openCostInBytes × defaultParallelism`` a table is one file. A
+partitioned layout keeps one file per partition directory, so there the
+rewrite cost is bounded by partitioning on the historical key.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
@@ -178,6 +188,89 @@ def _swap_dirs(live: str, staging: str, expected_generation=_UNCHECKED) -> None:
         os.rename(live, old)
     os.rename(staging, live)
     shutil.rmtree(old, ignore_errors=True)
+
+
+#: Catalyst's "statistics unknown" sentinel is Long.MaxValue-ish; any
+#: estimate that large means "no idea", not "8 EiB of data".
+_STATS_UNKNOWN = 1 << 62
+
+
+def plan_size_estimate(df: DataFrame) -> int | None:
+    """Catalyst's optimized-plan ``sizeInBytes`` — file-source scans report
+    the exact sum of file lengths (metadata the reader already listed),
+    derived frames report a propagated estimate (a union sums its inputs,
+    an anti join keeps its left side's). Launches no job. Returns None
+    when the estimate is missing/sentinel or the JVM plan is unreachable
+    (Connect)."""
+    try:
+        size = int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+    except Exception:
+        return None
+    return size if 0 < size < _STATS_UNKNOWN else None
+
+
+def split_partitions(df: DataFrame) -> int | None:
+    """How many splits Spark's file scan would cut ``df``'s estimated
+    bytes into: ``ceil(bytes / split)`` with ``split =
+    min(maxPartitionBytes, max(openCostInBytes, bytes /
+    defaultParallelism))`` — ``FilePartition.maxSplitBytes`` over the
+    session's own ``spark.sql.files.*`` settings. ``None`` when Catalyst
+    has no estimate."""
+    size = plan_size_estimate(df)
+    if size is None:
+        return None
+    spark = df.sparkSession
+    conf = spark._jsparkSession.sessionState().conf()
+    split = min(
+        conf.filesMaxPartitionBytes(),
+        max(conf.filesOpenCostInBytes(), size // spark.sparkContext.defaultParallelism),
+    )
+    return -(-size // split)
+
+
+def stage_and_swap(
+    df: DataFrame,
+    path: str,
+    fmt: str,
+    generation: tuple[int, int] | None,
+    partition_by: Sequence[str] | None = None,
+    suffix: str = "__staging",
+    sized: bool = True,
+    before_swap: Callable[[str], None] | None = None,
+) -> None:
+    """Replace the table at ``path`` with ``df``: write it to the sibling
+    directory ``path + suffix``, let ``before_swap(staging_dir)`` add what
+    must be promoted together with the data (a registry sidecar), then
+    promote it with :func:`_swap_dirs` under the ``generation`` check
+    (:func:`table_generation`, captured before ``df``'s read of the
+    table). A failed write removes the staging directory and leaves the
+    live table untouched.
+
+    ``sized`` (whole-table rewrites) coalesces ``df`` to
+    :func:`split_partitions` — one write task, and one file, per split
+    the next scan of the table would read. Each write task pays a fixed
+    cost (deserializing the job's Hadoop configuration, building a
+    Parquet writer and committer) that a small table's rewrite plan,
+    partitioned by its inputs, would otherwise pay once per input
+    partition. Coalesce only ever lowers the count, and a rewrite bigger
+    than ``openCostInBytes × defaultParallelism`` keeps full write
+    parallelism. An unknown estimate and a ``partition_by`` layout (one
+    file per partition directory already) write as planned."""
+    import shutil
+
+    if sized and not partition_by:
+        n = split_partitions(df)
+        if n is not None:
+            df = df.coalesce(n)
+    staging = path.rstrip("/") + suffix
+    try:
+        _write(df, staging, fmt, "overwrite", partition_by)
+        if before_swap is not None:
+            before_swap(staging.removeprefix("file:"))
+    except BaseException:
+        shutil.rmtree(staging.removeprefix("file:"), ignore_errors=True)
+        raise
+    _swap_dirs(path, staging, expected_generation=generation)
 
 
 #: a feature table's registry sidecar (``featurestore/manager.py``). Next
@@ -496,9 +589,7 @@ def merge_upsert(
 
     # Self-overwrite safety: materialize to a temp location first, then
     # promote via rename (never delete-then-rewrite the live table).
-    staging = path.rstrip("/") + "__staging"
-    _write(out, staging, fmt, "overwrite", partition_by)
-    _swap_dirs(path, staging, expected_generation=generation)
+    stage_and_swap(out, path, fmt, generation, partition_by)
     return out.schema
 
 
@@ -512,7 +603,8 @@ def compact(
 ) -> None:
     """Post-write compaction (the reference runs Delta ``OPTIMIZE`` after
     every save — ``notebooks/utils.py:1762-1765``). For parquet we rewrite
-    with coalesce to the target file count.
+    with coalesce to ``target_partitions`` files, by default to one file
+    per scan split (the :func:`stage_and_swap` sizing rule).
 
     The directory swap drops any ``_stats`` sidecar with the old files
     (stale stats can never survive a compaction); pass ``stats_columns``
@@ -527,10 +619,11 @@ def compact(
     # DV-aware for the same reason as merge_upsert: the swap below drops
     # any _dv sidecar, so the rewrite must bake pending deletes in
     df = _read_folding_dv(spark, path, fmt)
-    n = target_partitions or max(1, df.rdd.getNumPartitions() // 4)
-    staging = path.rstrip("/") + "__compact"
-    df.coalesce(n).write.format(fmt).mode("overwrite").save(staging)
-    _swap_dirs(path, staging, expected_generation=generation)
+    if target_partitions:
+        df = df.coalesce(target_partitions)
+    stage_and_swap(
+        df, path, fmt, generation, suffix="__compact", sized=not target_partitions
+    )
     _refresh_stats(spark, path, fmt, stats_columns, bloom_columns)
 
 
@@ -622,9 +715,9 @@ def maybe_compact(
         clustered = cluster_by_zorder(
             df, list(policy.zorder_by), bits=policy.zorder_bits, num_partitions=n
         )
-        staging = path.rstrip("/") + "__compact"
-        clustered.write.format(fmt).mode("overwrite").save(staging)
-        _swap_dirs(path, staging, expected_generation=generation)
+        stage_and_swap(
+            clustered, path, fmt, generation, suffix="__compact", sized=False
+        )
         _refresh_stats(spark, path, fmt, stats_columns, bloom_columns)
     else:
         compact(

@@ -35,6 +35,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from databricks_demo_feature_store_spark.sources.writers import plan_size_estimate
+
 MEDIA_SCHEMA = StructType(
     [
         StructField("media_id", LongType(), False),
@@ -127,23 +129,6 @@ def real_decode_unavailable(*_args, **_kwargs):
     )
 
 
-#: Catalyst's "statistics unknown" sentinel is Long.MaxValue-ish; any
-#: estimate that large means "no idea", not "8 EiB of media".
-_STATS_UNKNOWN = 1 << 62
-
-
-def _plan_size_estimate(media: DataFrame) -> int | None:
-    """Catalyst's optimized-plan ``sizeInBytes`` — file-source scans report
-    the exact sum of file lengths (metadata the reader already listed),
-    derived frames report a propagated estimate. Returns None when the
-    estimate is missing/sentinel or the JVM plan is unreachable (Connect)."""
-    try:
-        size = int(str(media._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
-    except Exception:
-        return None
-    return size if 0 < size < _STATS_UNKNOWN else None
-
-
 def _input_file_size(media: DataFrame) -> int | None:
     """Sum of the scan's file lengths via the Hadoop FileSystem — pure
     metadata (one ``getFileStatus`` per file, the same listing cost the
@@ -198,7 +183,7 @@ def media_repartition(
         raise ValueError(f"method must be auto|metadata|scan, got {method!r}")
     total: int | None = None
     if method in ("auto", "metadata"):
-        total = _plan_size_estimate(media)
+        total = plan_size_estimate(media)
         if total is None:
             total = _input_file_size(media)
         if total is None and method == "metadata":

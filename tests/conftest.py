@@ -93,9 +93,28 @@ SLOW_TESTS = {
 }
 
 
+def _named_node_ids(config) -> set[str]:
+    """Test ids named explicitly on the command line (``file::test``),
+    as absolute-path ``file::test`` without parametrization."""
+    named = set()
+    for arg in config.args:
+        path, sep, rest = arg.partition("::")
+        if sep:
+            path = os.path.abspath(os.path.join(config.invocation_params.dir, path))
+            named.add(f"{path}::{rest.split('[')[0]}")
+    return named
+
+
 def pytest_collection_modifyitems(config, items):
+    # A slow test named by node id runs under the default "not slow"
+    # selection: naming it is the request to run it. An explicit -m
+    # (e.g. tools/gate.py's -m slow) still sees every SLOW_TESTS mark.
+    named = _named_node_ids(config) if config.option.markexpr == "not slow" else set()
     for item in items:
-        if item.name.split("[")[0] in SLOW_TESTS:
+        if item.name.split("[")[0] not in SLOW_TESTS:
+            continue
+        test_id = item.nodeid.split("::", 1)[1].split("[")[0]
+        if f"{item.path}::{test_id}" not in named:
             item.add_marker(pytest.mark.slow)
 
 

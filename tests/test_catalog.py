@@ -691,3 +691,96 @@ def test_retry_on_conflict_wins_second_attempt(spark, tmp_path, monkeypatch):
     )
     got = {(r.k, r.v) for r in spark.read.parquet(path).collect()}
     assert got == {(1, "a"), (2, "b"), (3, "c")}  # both writers' rows landed
+
+
+def _data_files(path: str) -> list[str]:
+    import os
+
+    return [n for n in os.listdir(path) if n.startswith("part-")]
+
+
+def _last_job_final_stage_tasks(spark, group: str) -> int:
+    """Task count of the final stage of ``group``'s last job."""
+    import time
+
+    st = spark.sparkContext.statusTracker()
+    for _ in range(50):  # job events reach the status tracker asynchronously
+        jobs = st.getJobIdsForGroup(group)
+        info = st.getJobInfo(max(jobs)) if jobs else None
+        stage = st.getStageInfo(max(info.stageIds)) if info else None
+        if stage is not None:
+            return stage.numTasks
+        time.sleep(0.1)
+    raise AssertionError(f"no job recorded for group {group!r}")
+
+
+def test_merge_rewrite_sized_to_one_split(spark, tmp_path):
+    """A small table's merge rewrite writes one file from one task, not
+    one per input partition of the rewrite plan (the table's scan splits
+    plus the batch's eight partitions)."""
+    from pyspark.sql import functions as F
+
+    from databricks_demo_feature_store_spark.sources.writers import merge_upsert
+
+    path = str(tmp_path / "tbl")
+    spark.range(0, 2000).select(
+        F.col("id").alias("k"), (F.col("id") * 1.5).alias("v")
+    ).repartition(3).write.parquet(path)
+    batch = spark.range(1990, 2030, numPartitions=8).select(
+        F.col("id").alias("k"), F.col("id").cast("double").alias("v")
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("merge-sizing", "merge")
+    try:
+        merge_upsert(batch, path, ["k"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert _last_job_final_stage_tasks(spark, "merge-sizing") == 1
+    assert len(_data_files(path)) == 1
+    got = dict(spark.read.parquet(path).collect())
+    assert len(got) == 2030
+    assert got[1995] == 1995.0 and got[10] == 15.0
+
+
+def test_merge_rewrite_file_count_follows_split_size(spark, tmp_path):
+    """With lowered ``spark.sql.files.*`` split settings the rewrite
+    writes ceil(bytes / split) files, split = min(maxPartitionBytes,
+    max(openCostInBytes, bytes / defaultParallelism)) — the rule is the
+    scan's split size, not "always one file"."""
+    import math
+    import os
+
+    from pyspark.sql import functions as F
+
+    from databricks_demo_feature_store_spark.sources.writers import (
+        merge_upsert,
+        plan_size_estimate,
+    )
+
+    path = str(tmp_path / "tbl")
+    spark.range(0, 4000).select(
+        F.col("id").alias("k"), (F.col("id") * 1.5).alias("v")
+    ).repartition(12).write.parquet(path)
+    batch = spark.range(4000, 4040, numPartitions=8).select(
+        F.col("id").alias("k"), F.col("id").cast("double").alias("v")
+    )
+    settings = {
+        "spark.sql.files.maxPartitionBytes": 8192,
+        "spark.sql.files.openCostInBytes": 1024,
+    }
+    saved = {k: spark.conf.get(k) for k in settings}
+    try:
+        for k, v in settings.items():
+            spark.conf.set(k, str(v))
+        size = sum(
+            os.path.getsize(os.path.join(path, f)) for f in _data_files(path)
+        ) + plan_size_estimate(batch)
+        split = min(8192, max(1024, size // spark.sparkContext.defaultParallelism))
+        expected = math.ceil(size / split)
+        assert expected > 1
+        merge_upsert(batch, path, ["k"])
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    assert len(_data_files(path)) == expected
+    assert spark.read.parquet(path).count() == 4040

@@ -1052,3 +1052,96 @@ def test_evolving_merge_updates_pin(spark, manager):
     assert got.columns == ["pk_customer", "tpk_release_dt", "f1", "f2"]
     assert {(r.pk_customer, r.f2) for r in got.collect()} == {(1, None), (2, 7.0)}
     assert "read_schema" not in manager.get_metadata("cust_features")
+
+
+def _failing(df, key: int):
+    """``df`` whose job raises ``boom`` on the row with ``pk_customer == key``."""
+    return df.withColumn(
+        "f1",
+        F.when(F.col("pk_customer") == key, F.raise_error(F.lit("boom"))).otherwise(
+            F.col("f1")
+        ),
+    )
+
+
+def _rows(manager, name: str) -> list:
+    return sorted(map(tuple, manager.read(name).collect()))
+
+
+def test_failed_overwrite_keeps_table_and_registry(spark, manager):
+    """An overwrite whose job fails mid-write leaves the old table, its
+    registry and its read-schema pin in place, and no staging debris."""
+    import os
+
+    day = dt.date(2024, 1, 1)
+    manager.save(_df(spark, [(1, day, 1.0), (2, day, 2.0)]), SPEC, mode="overwrite")
+    before, meta = _rows(manager, SPEC.name), manager.get_metadata(SPEC.name)
+    with pytest.raises(Exception, match="boom"):
+        manager.save(
+            _failing(_df(spark, [(1, day, 5.0), (2, day, 6.0)]), 2), SPEC, mode="overwrite"
+        )
+    assert _rows(manager, SPEC.name) == before
+    assert manager.get_metadata(SPEC.name) == meta
+    assert sorted(os.listdir(manager.root)) == [SPEC.name]
+
+
+def test_self_overwrite_reads_the_table_it_replaces(spark, manager):
+    """``save(read(t) ..., mode="overwrite")`` — explicit, or forced by a
+    type change under EVOLVE — rewrites the table from its own rows, and
+    the registry pin describes the promoted files."""
+    from databricks_demo_feature_store_spark.sources.writers import (
+        READ_SCHEMA_KEY,
+        data_file_listing,
+    )
+
+    day = dt.date(2024, 1, 1)
+    manager.save(_df(spark, [(1, day, 1.0), (2, day, 2.0)]), SPEC, mode="overwrite")
+    doubled = manager.read(SPEC.name).withColumn("f1", F.col("f1") * 2)
+    manager.save(doubled, SPEC, mode="overwrite")
+    assert _rows(manager, SPEC.name) == [(1, day, 2.0), (2, day, 4.0)]
+
+    as_text = manager.read(SPEC.name).withColumn("f1", F.col("f1").cast("string"))
+    diff = manager.save(as_text, SPEC, mode="merge", policy=EvolutionPolicy.EVOLVE)
+    assert diff.type_changed == [("f1", "double", "string")]
+    assert _rows(manager, SPEC.name) == [(1, day, "2.0"), (2, day, "4.0")]
+    pin = manager._sidecar(SPEC.name)[READ_SCHEMA_KEY]
+    assert pin["files"] == data_file_listing(manager.path(SPEC.name))
+    assert manager.get_metadata(SPEC.name)["primary_keys"] == list(SPEC.primary_keys)
+
+
+@pytest.mark.parametrize("mode", ["merge", "overwrite"])
+def test_save_many_one_failing_item(spark, tmp_path, mode):
+    """One ``save_many`` item's job raises mid-write: the other tables
+    land, the failed one keeps its rows and registry, no staging debris
+    is left, and a retry with a good frame succeeds."""
+    import dataclasses
+    import os
+
+    mgr = FeatureStoreManager(spark, str(tmp_path / "fs"))
+    names = ["t0", "t1", "t2"]
+    specs = {n: dataclasses.replace(SPEC, name=n) for n in names}
+    day = dt.date(2024, 1, 1)
+    for i, n in enumerate(names):
+        mgr.save(_df(spark, [(k, day, float(i * 10 + k)) for k in range(3)]), specs[n], mode="overwrite")
+    before = {n: (_rows(mgr, n), mgr.get_metadata(n)) for n in names}
+    batch = {n: _df(spark, [(k, day, 100.0 + i * 10 + k) for k in (2, 3)]) for i, n in enumerate(names)}
+    expected = {
+        n: sorted(
+            ([r for r in before[n][0] if r[0] != 2] if mode == "merge" else [])
+            + [(k, day, 100.0 + i * 10 + k) for k in (2, 3)]
+        )
+        for i, n in enumerate(names)
+    }
+
+    items = [(_failing(batch[n], 3) if n == "t1" else batch[n], specs[n]) for n in names]
+    with pytest.raises(Exception, match="boom"):
+        mgr.save_many(items, mode=mode)
+    for n in ("t0", "t2"):
+        assert _rows(mgr, n) == expected[n]
+    assert (_rows(mgr, "t1"), mgr.get_metadata("t1")) == before["t1"]
+    assert mgr.list_tables() == names
+    assert sorted(os.listdir(mgr.root)) == names
+
+    mgr.save_many([(batch["t1"], specs["t1"])], mode=mode)
+    assert _rows(mgr, "t1") == expected["t1"]
+    assert mgr.get_metadata("t1") == before["t1"][1]

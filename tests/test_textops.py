@@ -271,9 +271,11 @@ def test_resize_images_byte_exact(spark):
 def test_media_repartition_metadata_sizing(spark, tmp_path):
     """The round-7 re-plan: partition count comes from METADATA (plan
     stats / file lengths), not from a pre-scan of the payloads."""
+    from databricks_demo_feature_store_spark.sources.writers import (
+        plan_size_estimate,
+    )
     from databricks_demo_feature_store_spark.textops.multimodal import (
         _input_file_size,
-        _plan_size_estimate,
         media_repartition,
         synthesize_media_from_documents,
     )
@@ -291,7 +293,7 @@ def test_media_repartition_metadata_sizing(spark, tmp_path):
         f.stat().st_size for f in (tmp_path / "media").glob("*.parquet")
     )
     assert _input_file_size(on_disk) == file_bytes
-    est = _plan_size_estimate(on_disk)
+    est = plan_size_estimate(on_disk)
     assert est is not None and est >= file_bytes  # stats may pad, never undercount
 
     # target = half the table → 2..3 partitions, derived without scanning
@@ -301,7 +303,7 @@ def test_media_repartition_metadata_sizing(spark, tmp_path):
 
     # derived in-memory frame: metadata-only raises loudly, scan still works
     derived = on_disk.limit(5).localCheckpoint()
-    if _plan_size_estimate(derived) is None:
+    if plan_size_estimate(derived) is None:
         with pytest.raises(ValueError, match="no plan statistics"):
             media_repartition(derived, method="metadata")
     assert media_repartition(derived, target_bytes=10, method="scan").count() == 5

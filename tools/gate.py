@@ -65,6 +65,10 @@ SLOW_GUARDS = {
         "tests/test_catalog.py::test_append_skips_incremental_refresh_when_compaction_trips",
         "tests/test_index_store.py::test_partitioned_layout_merged_equals_rebuilt",
     ],
+    "databricks_demo_feature_store_spark/textops/multimodal.py": [
+        "tests/test_textops.py::test_multimodal_stub_roundtrip",
+        "tests/test_textops.py::test_png_decode_real_bytes",
+    ],
 }
 
 
