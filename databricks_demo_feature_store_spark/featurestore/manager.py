@@ -23,7 +23,6 @@ lookups scan a compact unfragmented table).
 
 from __future__ import annotations
 
-import json
 import os
 from dataclasses import dataclass, field
 from enum import Enum
@@ -34,22 +33,12 @@ from databricks_demo_feature_store_spark.sources.writers import (
     METADATA_FILE,
     READ_SCHEMA_KEY,
     merge_upsert,
-    read_schema_pin,
+    read_sidecar,
     read_table,
+    rewrite_table,
     stage_and_swap,
     table_generation,
 )
-
-
-def _write_sidecar(directory: str, meta: dict, schema=None) -> None:
-    """Write registry ``meta`` into ``directory``'s sidecar, with the
-    read-schema pin of ``schema`` over the data files now in it."""
-    pin = None if schema is None else read_schema_pin(directory, schema)
-    if pin is not None:
-        meta = {**meta, READ_SCHEMA_KEY: pin}
-    os.makedirs(directory, exist_ok=True)
-    with open(os.path.join(directory, METADATA_FILE), "w") as fh:
-        json.dump(meta, fh, indent=2, sort_keys=True)
 
 
 class EvolutionPolicy(str, Enum):
@@ -92,6 +81,21 @@ class SchemaDiff:
         return not (self.new_columns or self.missing_columns or self.type_changed)
 
 
+def _registry(spec: FeatureTableSpec) -> dict:
+    """The registry entry of ``spec`` — reference ``_update_metadata``
+    (:1490-1508). Every save writes it into the staging directory it
+    promotes, so the table and its registry change in one swap."""
+    return {
+        "name": spec.name,
+        "description": spec.description,
+        "primary_keys": list(spec.primary_keys),
+        "timestamp_keys": list(spec.timestamp_keys),
+        "tags": dict(spec.tags),
+        "source_tables": list(spec.source_tables),
+        "check_constraints": list(spec.check_constraints),
+    }
+
+
 class FeatureStoreManager:
     """Persist + register feature tables under a root directory."""
 
@@ -130,23 +134,20 @@ class FeatureStoreManager:
         return self.read_registered(name)[0]
 
     def read_registered(self, name: str) -> tuple[DataFrame, dict]:
-        """The table and its registry metadata from ONE sidecar load. The
-        scan uses the schema the last save pinned in the sidecar while
-        the table's file listing still matches it, so planning it runs
-        no footer-inference job; tables the registry does not describe
-        (written outside the manager, partitioned, carrying deletion
-        vectors, non-parquet) fall back to inference."""
+        """The table's live rows (``writers.read_table``: deletion
+        vectors folded out) and its registry metadata from ONE sidecar
+        load. The scan uses the schema the last rewrite pinned in the
+        sidecar while the table's file listing still matches it, so
+        planning it runs no footer-inference job; tables the pin does not
+        describe (written outside a rewrite, partitioned, non-parquet)
+        fall back to inference."""
         meta = self._sidecar(name)
         df = read_table(self.spark, self.path(name), self.fmt, meta)
         meta.pop(READ_SCHEMA_KEY, None)
         return df, meta
 
     def _sidecar(self, name: str) -> dict:
-        meta_path = os.path.join(self.path(name), METADATA_FILE)
-        if not os.path.exists(meta_path):
-            return {}
-        with open(meta_path) as fh:
-            return json.load(fh)
+        return read_sidecar(self.path(name))
 
     def get_metadata(self, name: str) -> dict:
         """Registry read — reference ``_get_metadata`` (:1440-1456). The
@@ -155,37 +156,14 @@ class FeatureStoreManager:
         meta.pop(READ_SCHEMA_KEY, None)
         return meta
 
-    def _update_metadata(
-        self, spec: FeatureTableSpec, schema=None, directory: str | None = None
-    ) -> None:
-        """Registry write — reference ``_update_metadata`` (:1490-1508),
-        plus the read-schema pin of the ``schema`` just written, into the
-        table's directory or the staging ``directory`` about to replace
-        it."""
-        meta = {
-            "name": spec.name,
-            "description": spec.description,
-            "primary_keys": list(spec.primary_keys),
-            "timestamp_keys": list(spec.timestamp_keys),
-            "tags": dict(spec.tags),
-            "source_tables": list(spec.source_tables),
-            "check_constraints": list(spec.check_constraints),
-        }
-        _write_sidecar(directory or self.path(spec.name), meta, schema)
-
-    # writer-internal directory suffixes (sources/writers.py _swap_dirs
-    # and its callers): crash debris with these names must never be
-    # listed as registered tables — a leftover staging dir now carries
-    # the registry metadata file too (atomic-promotion discipline), so
-    # name-based exclusion is the only reliable tell
-    _INTERNAL_SUFFIXES = ("__old", "__staging", "__compact", "__forget")
-
     def _is_writer_debris(self, name: str, siblings: set[str]) -> bool:
         """Precise writer-internal match (ADVICE r12: a bare endswith hid a
         legitimately-registered table named e.g. ``prices__old``): strip the
         writer suffix chain (``_swap_dirs`` can stack them, e.g.
-        ``tbl__staging__old``) plus an optional random tail, and call it
-        debris only when a suffix WAS stripped and either (a) the remaining
+        ``tbl__staging__old``; ``__compact``/``__forget`` are staging
+        names of earlier layouts) plus an optional random tail (every
+        staging directory has one), and call it debris only when a
+        suffix WAS stripped and either (a) the remaining
         base is an existing sibling table — the exact name every writer
         derives staging/old dirs from — or (b) the dir carries no registry
         metadata file, so it was never a registered table at all."""
@@ -284,22 +262,19 @@ class FeatureStoreManager:
             # not sized: the frame's bytes are unknown before the write
             stage_and_swap(
                 df, path, self.fmt, generation, partition_by, sized=False,
-                before_swap=lambda staging: self._update_metadata(
-                    spec, df.schema, staging
-                ),
+                registry=_registry(spec),
             )
             return diff
-        written = merge_upsert(
+        merge_upsert(
             df,
             path,
             list(spec.primary_keys),
             fmt=self.fmt,
             partition_by=partition_by,
             update_columns=diff.new_columns or None,
+            registry=_registry(spec),
         )
-        self._update_metadata(spec, written)
         return diff
-
 
     def save_many(
         self,
@@ -316,8 +291,8 @@ class FeatureStoreManager:
         thread pool back-fills those cores. 2–3 in flight is plenty.
 
         ``items`` is an iterable of ``(df, spec)`` pairs targeting
-        DISTINCT tables (validated — two writers on one table would race
-        for the same staging directory). Per-table writes and registry
+        DISTINCT tables (validated — two writers on one table would
+        conflict, and one of them raise ``ConcurrentWriteError``). Per-table writes and registry
         sidecars are filesystem-independent, so concurrency cannot
         change any table's content; result is the same per-name
         :class:`SchemaDiff` map the sequential loop would produce.
@@ -435,11 +410,11 @@ def forget_entities(
     deletion audit (one row per affected table).
 
     Shape per table: ONE broadcast left-anti join (the forget set is
-    small by nature — a deletion request batch, never corpus-sized) and
-    a staged rewrite promoted by directory rename, so a crash never
-    leaves a half-deleted live table and a concurrent reader sees either
-    the old or the new version. Registry metadata survives the swap
-    (re-written after). Tables whose primary keys don't include
+    small by nature — a deletion request batch, never corpus-sized) in a
+    ``rewrite_table``, so a crash never leaves a half-deleted live table,
+    a concurrent reader sees either the old or the new version, rows a
+    deletion vector already removed stay removed, and the registry
+    promotes with the data. Tables whose primary keys don't include
     ``key_col`` are reported untouched rather than silently skipped, so
     the audit is the compliance record: every table accounted for.
 
@@ -459,21 +434,10 @@ def forget_entities(
         if key_col not in pks or key_col not in df.columns:
             rows.append((name, False, df.count(), 0))
             continue
-        path = manager.path(name)
-        generation = table_generation(path)
         before = df.count()
-        kept = df.join(
-            F.broadcast(forget), df[key_col] == forget[key_col], "left_anti"
-        )
-        # Registry metadata rides IN the staging directory, so the rename
-        # promotes data and primary_keys in one atomic step. Writing it
-        # after the swap left a crash window that permanently lost
-        # primary_keys — after which every later forget_entities call saw
-        # key_col ∉ pks and silently stopped propagating deletions for
-        # this table (the worst failure mode for a compliance path).
-        stage_and_swap(
-            kept, path, manager.fmt, generation, suffix="__forget",
-            before_swap=lambda staging: _write_sidecar(staging, meta, kept.schema),
+        rewrite_table(
+            manager.spark, manager.path(name), manager.fmt,
+            lambda cur: cur.join(F.broadcast(forget), on=key_col, how="left_anti"),
         )
         after = manager.read(name).count()
         rows.append((name, True, after, before - after))

@@ -35,6 +35,9 @@ from databricks_demo_feature_store_spark.functions.rounding import dround
 #: below any ranking-relevant difference, exact to sum across partitions
 _RANK_SCALE = 12
 _DEC = f"decimal(38,{_RANK_SCALE})"
+#: node count up to which pagerank broadcasts its rank table (~a few
+#: hundred MB of (node, deg, rank) rows)
+_PAGERANK_BROADCAST_NODES = 4_000_000
 
 
 def pagerank(
@@ -105,11 +108,7 @@ def pagerank(
     # plan, which reuses e's checkpointed src-partitioning. Both plans
     # compute identical values — only the join strategy differs.
     n_nodes = nodes.count()
-    import os as _os
-
-    broadcast_ranks = n_nodes <= int(
-        _os.environ.get("SPARK_GRAFT_PAGERANK_BROADCAST_NODES", "4000000")
-    )
+    broadcast_ranks = n_nodes <= _PAGERANK_BROADCAST_NODES
 
     ranks = base.select(
         "node",

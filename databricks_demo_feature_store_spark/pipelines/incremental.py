@@ -19,7 +19,7 @@ that prunes the source scan (predicate reaches the parquet scan; with the
 source bucketed by entity the semi-join is shuffle-free), the pipeline
 runs on that slice only, and the write replaces exactly the affected
 entities' rows (Delta: ``MERGE`` with a source-scoped delete; parquet
-fallback: anti-join + staged swap).
+fallback: anti-join in ``writers.rewrite_table``).
 """
 
 from __future__ import annotations
@@ -28,7 +28,7 @@ from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
-from databricks_demo_feature_store_spark.sources.writers import _write, stage_and_swap
+from databricks_demo_feature_store_spark.sources.writers import _write, rewrite_table
 
 
 def replace_entities(
@@ -45,31 +45,21 @@ def replace_entities(
 
     Delta form: ``MERGE ON t.entity = s.entity`` with
     ``whenMatchedDelete`` + append, or ``replaceWhere entity IN (...)``.
-    Parquet fallback: kept = existing ⟕anti(entity) df, out = kept ∪ df,
-    staged write + directory swap (never delete-then-rewrite the live
-    table).
+    Parquet fallback: a ``rewrite_table`` whose build is kept = live
+    rows ⟕anti(entity) df, out = kept ∪ df; the table's registry sidecar
+    carries over and rows a deletion vector removed stay removed. A
+    missing table is bootstrapped with ``df``.
     """
-    from pyspark.errors import AnalysisException
-
-    from databricks_demo_feature_store_spark.sources.writers import (
-        table_generation,
-    )
-
-    spark = df.sparkSession
-    generation = table_generation(path)
-    try:
-        existing = spark.read.format(fmt).load(path)
-    except AnalysisException:
-        # first write only: the table path does not exist yet. ONLY the
-        # analysis-time miss may fall through to the bootstrap overwrite —
-        # a transient read error overwriting the live table with one
-        # batch would be silent data loss
-        _write(df, path, fmt, "overwrite", partition_by)
-        return
     touched = df.select(entity_col).distinct()
-    kept = existing.join(F.broadcast(touched), on=entity_col, how="left_anti")
-    out = kept.unionByName(df, allowMissingColumns=True)
-    stage_and_swap(out, path, fmt, generation, partition_by)
+
+    def build(existing: DataFrame) -> DataFrame:
+        kept = existing.join(F.broadcast(touched), on=entity_col, how="left_anti")
+        return kept.unionByName(df, allowMissingColumns=True)
+
+    if not rewrite_table(
+        df.sparkSession, path, fmt, build, partition_by=partition_by
+    ):
+        _write(df, path, fmt, "overwrite", partition_by)
 
 
 def incremental_entity_refresh(

@@ -84,12 +84,9 @@ def get_spark(
         # micro-batch — doubling checkpoint file creates. The checksums
         # only guard against storage bit-rot of checkpoint internals
         # (never query results); on storage with its own integrity
-        # guarantees they are pure overhead, so default off and keep the
-        # knob for deployments on unreliable stores.
-        .config(
-            "spark.sql.streaming.checkpoint.fileChecksum.enabled",
-            os.environ.get("SPARK_GRAFT_STREAM_CKPT_CHECKSUM", "false"),
-        )
+        # guarantees they are pure overhead, so default off; deployments on
+        # unreliable stores can set the conf back on at runtime.
+        .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
         # parquet's default INT96 timestamps carry NO footer min/max
         # statistics, which silently disables every timestamp-column
         # data-skipping path (sources/skipping.py) on Spark-written

@@ -17,12 +17,11 @@ replacement, mirroring how Delta decoupled logical schema from physical
 layout.
 
 Concurrency/crash discipline: the mapping file is written atomically
-(tmp + rename). The sidecar lives inside the table directory with an
-underscore name, invisible to plain parquet scans, and survives
-append-mode writes; staged full rewrites (compact / merge_upsert) read
-through plain column names, so tables under those writers should apply
-:func:`materialize_mapping` first — the guard in the writers' path is
-the reader's own missing-column error, never silent misnaming.
+(``writers.atomic_open``). The sidecar lives inside the table directory
+with an underscore name, invisible to plain parquet scans, and survives
+append-mode writes; a table rewrite (``writers.rewrite_table``) reads
+physical column names and does not carry the mapping, so apply
+:func:`materialize_mapping` before rewriting a renamed table.
 """
 
 from __future__ import annotations
@@ -31,6 +30,11 @@ import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from databricks_demo_feature_store_spark.sources.writers import (
+    atomic_open,
+    rewrite_table,
+)
 
 __all__ = [
     "rename_column",
@@ -58,11 +62,8 @@ def load_mapping(table_path: str) -> dict[str, str]:
 
 
 def _save_mapping(table_path: str, mapping: dict[str, str]) -> None:
-    p = mapping_path(table_path)
-    tmp = p + ".tmp"
-    with open(tmp, "w") as fh:
+    with atomic_open(mapping_path(table_path)) as fh:
         json.dump(mapping, fh, indent=2, sort_keys=True)
-    os.rename(tmp, p)  # atomic on POSIX — readers see old or new, never half
 
 
 def _physical_columns(spark: SparkSession, table_path: str) -> list[str]:
@@ -136,31 +137,19 @@ def write_with_mapping(df: DataFrame, table_path: str, mode: str = "append") -> 
 
 
 def materialize_mapping(spark: SparkSession, table_path: str) -> int:
-    """Bake logical names into the files (staged-swap rewrite) and drop
-    the sidecar — the escape hatch before handing the table to a reader
-    or writer that does not speak the mapping. Returns renamed-column
-    count; no-op without a sidecar.
-
-    DV discipline (same contract as ``compact``/``merge_upsert`` via
-    ``_read_folding_dv``): the staged swap replaces the whole directory,
-    ``_dv`` sidecar included, so the rewrite MUST read with pending
-    row-level deletes folded out — a plain scan here would silently
-    resurrect deleted rows (for GDPR erasure, silent un-deletion)."""
-    from databricks_demo_feature_store_spark.sources.writers import (
-        _read_folding_dv,
-        stage_and_swap,
-        table_generation,
-    )
-
+    """Bake logical names into the files (a ``writers.rewrite_table``)
+    and drop the sidecar — the escape hatch before handing the table to a
+    reader or writer that does not speak the mapping. Returns
+    renamed-column count; no-op without a sidecar."""
     mapping = load_mapping(table_path)
     if not mapping:
         return 0
-    generation = table_generation(table_path)
-    base = _read_folding_dv(spark, table_path, "parquet")
-    live = base.select(
-        *[F.col(c).alias(mapping.get(c, c)) for c in base.columns]
-    ).localCheckpoint(eager=True)
-    stage_and_swap(live, table_path, "parquet", generation)
-    # the sidecar was inside the replaced directory, so it is already
-    # gone; nothing to clean up
+    # the mapping sidecar lives in the replaced directory, so the swap
+    # drops it
+    rewrite_table(
+        spark, table_path, "parquet",
+        lambda base: base.select(
+            *[F.col(c).alias(mapping.get(c, c)) for c in base.columns]
+        ).localCheckpoint(eager=True),
+    )
     return len(mapping)

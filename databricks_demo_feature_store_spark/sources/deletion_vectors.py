@@ -11,10 +11,11 @@ the files that contain them — THE at-scale win when deletes are sparse
 
 Positions are stable because parquet files are immutable:
 ``_metadata.row_index`` is the row's ordinal within its file, fixed at
-write time. Compaction/rewrite invalidates coordinates — so
+write time. A rewrite invalidates coordinates, so every table rewrite
+(``writers.rewrite_table``) reads through ``writers.read_table``, which
+folds the deletes out, and promotes new files without the sidecar;
 :func:`apply_deletes` (the Delta ``REORG TABLE ... APPLY (PURGE)`` twin)
-materializes the deletes into a rewritten table and clears the sidecar,
-through the same staged-swap discipline as every other writer here.
+is that rewrite with nothing else to change.
 
 Scale shape: the DV sidecar is tiny by construction (deleted coordinates
 only); the read path broadcasts it into a left-anti join against the
@@ -118,28 +119,19 @@ def read_with_deletes(spark: SparkSession, table_path: str) -> DataFrame:
 
 def apply_deletes(spark: SparkSession, table_path: str) -> int:
     """Materialize the deletion vectors: rewrite the table without the
-    deleted rows and clear the sidecar (Delta ``REORG ... APPLY
-    (PURGE)``). Staged-swap promotion — a crash never leaves a
-    half-rewritten live table. Returns rows physically removed.
-
-    This is the moment coordinates die: after the swap the files are
-    new, so the sidecar MUST go with the same promotion (it lives inside
-    the table directory, and ``_swap_dirs`` replaces the whole dir —
-    the staging side simply doesn't carry one)."""
-    from databricks_demo_feature_store_spark.sources.writers import (
-        stage_and_swap,
-        table_generation,
-    )
+    deleted rows, which drops the sidecar (Delta ``REORG ... APPLY
+    (PURGE)``). Returns rows physically removed."""
+    from databricks_demo_feature_store_spark.sources.writers import rewrite_table
 
     out = dv_path(table_path)
     if not os.path.isdir(out):
         return 0
-    generation = table_generation(table_path)
     # concurrent delete waves may append duplicate coordinates; the
     # physical count is over DISTINCT (file, row) pairs
     dv_count = spark.read.parquet(out).distinct().count()
     if not dv_count:
         return 0
-    live = read_with_deletes(spark, table_path).localCheckpoint(eager=True)
-    stage_and_swap(live, table_path, "parquet", generation)
+    rewrite_table(
+        spark, table_path, "parquet", lambda live: live.localCheckpoint(eager=True)
+    )
     return dv_count

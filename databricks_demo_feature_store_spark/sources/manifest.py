@@ -17,8 +17,9 @@ column names in the files are not the logical schema (Delta again —
 symlink manifests don't support column mapping); bake names in with
 ``materialize_mapping`` first.
 
-The manifest write is atomic (tmp + rename), so concurrent readers see
-the previous complete manifest or the new one, never a torn list.
+The manifest write is atomic (``writers.atomic_open``), so concurrent
+readers see the previous complete manifest or the new one, never a torn
+list.
 """
 
 from __future__ import annotations
@@ -26,6 +27,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+
+from databricks_demo_feature_store_spark.sources.writers import atomic_open
 
 __all__ = ["write_manifest", "read_manifest", "manifest_file"]
 
@@ -65,12 +68,8 @@ def write_manifest(spark: SparkSession, table_path: str) -> list[str]:
             "before write_manifest"
         )
     files = _list_part_files(root)
-    out = manifest_file(root)
-    os.makedirs(os.path.dirname(out), exist_ok=True)
-    tmp = out + ".tmp"
-    with open(tmp, "w") as fh:
+    with atomic_open(manifest_file(root)) as fh:
         fh.write("\n".join(files) + ("\n" if files else ""))
-    os.rename(tmp, out)
     return files
 
 

@@ -83,6 +83,10 @@ def _list_part_files(table_path: str) -> list[str]:
     return sorted(out)
 
 
+#: footers one harvest slice reads (see :func:`_files_df`)
+_HARVEST_FILES_PER_SLICE = 8
+
+
 def _files_df(spark: SparkSession, files: Sequence[str]) -> DataFrame:
     """File-list frame with a slice count derived from the LIST size, not
     the core count: a handful of footers spread over defaultParallelism
@@ -92,14 +96,7 @@ def _files_df(spark: SparkSession, files: Sequence[str]) -> DataFrame:
     slices keeps cold-start worker imports concurrent — coalescing to 1
     slice serializes every footer read through one worker and loses 2×
     (the round-14 item-9 measured negative). Large lists keep
-    defaultParallelism slices, so cluster-scale harvests are unchanged.
-    ``SPARK_GRAFT_HARVEST_FILES_PER_SLICE=0`` restores the plain
-    defaultParallelism fan-out (read per call for A/B measurement)."""
-    per_slice = int(os.environ.get("SPARK_GRAFT_HARVEST_FILES_PER_SLICE", "8"))
-    if per_slice <= 0:
-        return spark.createDataFrame(
-            [(f,) for f in files], "file_path string"
-        )
+    defaultParallelism slices, so cluster-scale harvests are unchanged."""
     n = len(files)
     if n == 0:
         # parallelize(..., 0) raises; an empty list can reach here when a
@@ -107,7 +104,10 @@ def _files_df(spark: SparkSession, files: Sequence[str]) -> DataFrame:
         return spark.createDataFrame([], "file_path string")
     slices = max(
         min(n, 4),
-        min(spark.sparkContext.defaultParallelism, -(-n // per_slice)),
+        min(
+            spark.sparkContext.defaultParallelism,
+            -(-n // _HARVEST_FILES_PER_SLICE),
+        ),
     )
     return spark.createDataFrame(
         spark.sparkContext.parallelize([(f,) for f in files], slices),

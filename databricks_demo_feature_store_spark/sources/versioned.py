@@ -27,6 +27,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from databricks_demo_feature_store_spark.sources.writers import atomic_open
+
 MANIFEST = "_versions.json"
 COMMITS_DIR = "_commits"
 
@@ -95,18 +97,22 @@ class VersionedTable:
         h = self.history()
         return h[0].version if h else None
 
+    def _write_manifest(self, infos: list[VersionInfo]) -> None:
+        """Replace ``_versions.json`` with ``infos`` (oldest first)
+        atomically: a failed write leaves the previous history."""
+        with atomic_open(self._manifest_path()) as fh:
+            json.dump([vars(v) for v in infos], fh, indent=2)
+
     def _write_commit_marker(self, info: VersionInfo) -> None:
         """One tiny JSON per commit under ``_commits/`` — the streamable
         commit log (the Delta ``_delta_log`` twin at marker granularity).
         A Structured Streaming file source over this directory turns
         version commits into a micro-batch trigger
-        (``streaming/ops.py`` ``stream_cdf_ivm``). Atomic tmp+rename;
-        the dot-prefixed tmp name is invisible to Hadoop file listings,
-        so a reader can never observe a half-written marker."""
-        d = os.path.join(self.path, COMMITS_DIR)
-        os.makedirs(d, exist_ok=True)
-        tmp = os.path.join(d, f".commit-{info.version}.json.tmp")
-        with open(tmp, "w") as fh:
+        (``streaming/ops.py`` ``stream_cdf_ivm``). Written through
+        ``atomic_open``, whose tmp name is invisible to Hadoop file
+        listings, so a reader can never observe a half-written marker."""
+        path = os.path.join(self.commits_path(), f"commit-{info.version}.json")
+        with atomic_open(path) as fh:
             json.dump(
                 {
                     "version": info.version,
@@ -115,7 +121,6 @@ class VersionedTable:
                 },
                 fh,
             )
-        os.rename(tmp, os.path.join(d, f"commit-{info.version}.json"))
 
     def commits_path(self) -> str:
         return os.path.join(self.path, COMMITS_DIR)
@@ -149,10 +154,7 @@ class VersionedTable:
                 else None
             ),
         )
-        manifest = [vars(v) for v in reversed(self.history())] + [vars(info)]
-        os.makedirs(self.path, exist_ok=True)
-        with open(self._manifest_path(), "w") as fh:
-            json.dump(manifest, fh, indent=2)
+        self._write_manifest([*reversed(self.history()), info])
         self._write_commit_marker(info)
         return info
 
@@ -317,9 +319,7 @@ class VersionedTable:
             operation=f"RESTORE(v{version})",
             num_rows=restored.num_rows,
         )
-        manifest = [vars(v) for v in reversed(history)] + [vars(info)]
-        with open(self._manifest_path(), "w") as fh:
-            json.dump(manifest, fh, indent=2)
+        self._write_manifest([*reversed(history), info])
         self._write_commit_marker(info)
         assert n_linked > 0 or restored.num_rows in (0, None)
         return info
@@ -352,10 +352,8 @@ class VersionedTable:
             operation=f"CLONE({self.path}@v{latest})",
             num_rows=src_info.num_rows,
         )
-        os.makedirs(target_path, exist_ok=True)
-        with open(os.path.join(target_path, MANIFEST), "w") as fh:
-            json.dump([vars(info)], fh, indent=2)
         out = VersionedTable(self.spark, target_path, fmt=self.fmt)
+        out._write_manifest([info])
         out._write_commit_marker(info)
         return out
 
@@ -374,9 +372,7 @@ class VersionedTable:
             except FileNotFoundError:
                 pass
             dropped.append(v.version)
-        manifest = [vars(v) for v in reversed(history) if v.version in keep]
-        with open(self._manifest_path(), "w") as fh:
-            json.dump(manifest, fh, indent=2)
+        self._write_manifest([v for v in reversed(history) if v.version in keep])
         return dropped
 
 

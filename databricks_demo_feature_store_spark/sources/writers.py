@@ -12,21 +12,41 @@ Without Delta on the classpath, MERGE is emulated exactly with
 whose keys collide are replaced by the incoming rows, everything else is
 kept.
 
-Every staged whole-table rewrite (merge, entity replacement, forget,
-deletion-vector purge, column-mapping materialization, compaction) goes
-through :func:`stage_and_swap`, which sizes the write to the rewrite's
-bytes: one write task and file per split the next scan would read
-(:func:`split_partitions`), instead of one per input partition of the
-rewrite plan. That is the parquet stand-in for the reference's Delta
-``OPTIMIZE`` after every save (``notebooks/utils.py:1762-1765``); below
-``openCostInBytes × defaultParallelism`` a table is one file. A
-partitioned layout keeps one file per partition directory, so there the
-rewrite cost is bounded by partitioning on the historical key.
+Every stored table has ONE read and ONE rewrite:
+
+- :func:`read_table` is what a table's live rows are: pending
+  deletion-vector deletes folded out, otherwise a scan with the read
+  schema pinned in the registry sidecar (no footer-inference job).
+- :func:`rewrite_table` is what survives a rewrite. Merge, entity
+  replacement, forget, deletion-vector purge, column-mapping
+  materialization and compaction are each a ``build`` function over the
+  live rows; the rewrite takes the generation token, reads through
+  :func:`read_table` (so deletes are baked in, never resurrected),
+  writes ``build(current)`` to a uniquely named staging sibling together
+  with the registry sidecar, and promotes both with one directory swap.
+  That is the parquet stand-in for the reference keeping its registry in
+  Delta table properties (``notebooks/utils.py:1490-1508``), which every
+  MERGE and OPTIMIZE commits along with the data.
+
+The staged write is sized to the rewrite's bytes: one write task and
+file per split the next scan would read (:func:`split_partitions`),
+instead of one per input partition of the rewrite plan — the stand-in for
+the reference's Delta ``OPTIMIZE`` after every save
+(``notebooks/utils.py:1762-1765``); below ``openCostInBytes ×
+defaultParallelism`` a table is one file. A partitioned layout keeps one
+file per partition directory, so there the rewrite cost is bounded by
+partitioning on the historical key.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Sequence
+import contextlib
+import json
+import os
+import shutil
+import threading
+import uuid
+from collections.abc import Callable, Iterator, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
@@ -106,8 +126,6 @@ def table_generation(path: str) -> tuple[int, int] | None:
     commit by another writer changes the token. Driver-side metadata,
     O(files) — the same cost class as ``maybe_compact``'s listing.
     ``None`` when the table does not exist yet."""
-    import os
-
     p = path.removeprefix("file:").rstrip("/")
     try:
         top = os.stat(p)
@@ -145,6 +163,9 @@ def retry_on_conflict(fn, attempts: int = 3):
 
 
 _UNCHECKED = object()
+#: serializes the generation check and the renames of every swap in this
+#: process, so threads committing to one table cannot both pass the check
+_SWAP_LOCK = threading.Lock()
 
 
 def _swap_dirs(live: str, staging: str, expected_generation=_UNCHECKED) -> None:
@@ -163,31 +184,30 @@ def _swap_dirs(live: str, staging: str, expected_generation=_UNCHECKED) -> None:
     writer committed in the window — the swap raises
     :class:`ConcurrentWriteError` and discards ``staging`` instead of
     silently clobbering that commit. Single-writer callers (bootstrap
-    writes, sidecar refreshes) omit it. The residual check→rename race is
-    microseconds wide and loses only to a writer that slipped a full
-    commit inside it; the zero-window fix is an atomic log commit (Delta),
-    which this emulation stands in for.
+    writes, sidecar refreshes) omit it. Within one process the check and
+    the renames run under one lock; across processes the check→rename
+    race is microseconds wide and loses only to a writer that slipped a
+    full commit inside it. The zero-window fix is an atomic log commit
+    (Delta), which this emulation stands in for.
     """
-    import os
-    import shutil
-
     live = live.removeprefix("file:")
     staging = staging.removeprefix("file:")
-    if expected_generation is not _UNCHECKED:
-        current = table_generation(live)
-        if current != expected_generation:
-            shutil.rmtree(staging, ignore_errors=True)
-            raise ConcurrentWriteError(
-                f"table {live!r} changed while this rewrite was running "
-                f"(generation {expected_generation} -> {current}); "
-                "its snapshot is stale — retry against the new state"
-            )
-    old = live.rstrip("/") + "__old"
-    shutil.rmtree(old, ignore_errors=True)
-    if os.path.exists(live):
-        os.rename(live, old)
-    os.rename(staging, live)
-    shutil.rmtree(old, ignore_errors=True)
+    with _SWAP_LOCK:
+        if expected_generation is not _UNCHECKED:
+            current = table_generation(live)
+            if current != expected_generation:
+                shutil.rmtree(staging, ignore_errors=True)
+                raise ConcurrentWriteError(
+                    f"table {live!r} changed while this rewrite was running "
+                    f"(generation {expected_generation} -> {current}); "
+                    "its snapshot is stale — retry against the new state"
+                )
+        old = live.rstrip("/") + "__old"
+        shutil.rmtree(old, ignore_errors=True)
+        if os.path.exists(live):
+            os.rename(live, old)
+        os.rename(staging, live)
+        shutil.rmtree(old, ignore_errors=True)
 
 
 #: Catalyst's "statistics unknown" sentinel is Long.MaxValue-ish; any
@@ -234,14 +254,13 @@ def stage_and_swap(
     fmt: str,
     generation: tuple[int, int] | None,
     partition_by: Sequence[str] | None = None,
-    suffix: str = "__staging",
     sized: bool = True,
-    before_swap: Callable[[str], None] | None = None,
+    registry: dict | None = None,
 ) -> None:
-    """Replace the table at ``path`` with ``df``: write it to the sibling
-    directory ``path + suffix``, let ``before_swap(staging_dir)`` add what
-    must be promoted together with the data (a registry sidecar), then
-    promote it with :func:`_swap_dirs` under the ``generation`` check
+    """Replace the table at ``path`` with ``df``: write it, and the
+    ``registry`` sidecar when one is given (:func:`_write_sidecar`), to a
+    uniquely named sibling directory, then promote both with
+    :func:`_swap_dirs` under the ``generation`` check
     (:func:`table_generation`, captured before ``df``'s read of the
     table). A failed write removes the staging directory and leaves the
     live table untouched.
@@ -256,27 +275,45 @@ def stage_and_swap(
     than ``openCostInBytes × defaultParallelism`` keeps full write
     parallelism. An unknown estimate and a ``partition_by`` layout (one
     file per partition directory already) write as planned."""
-    import shutil
-
     if sized and not partition_by:
         n = split_partitions(df)
         if n is not None:
             df = df.coalesce(n)
-    staging = path.rstrip("/") + suffix
+    staging = f"{path.rstrip('/')}__staging-{uuid.uuid4().hex[:12]}"
     try:
         _write(df, staging, fmt, "overwrite", partition_by)
-        if before_swap is not None:
-            before_swap(staging.removeprefix("file:"))
+        if registry is not None:
+            _write_sidecar(staging, registry, df.schema)
     except BaseException:
         shutil.rmtree(staging.removeprefix("file:"), ignore_errors=True)
         raise
     _swap_dirs(path, staging, expected_generation=generation)
 
 
-#: a feature table's registry sidecar (``featurestore/manager.py``). Next
-#: to the registry it holds the table's read-schema pin under
-#: ``READ_SCHEMA_KEY``: the schema the last manager save wrote and the
-#: data-file listing that schema describes.
+@contextlib.contextmanager
+def atomic_open(path: str) -> Iterator:
+    """Open ``path`` for text writing through a hidden (dot-prefixed,
+    so invisible to Hadoop listings) tmp file in the same directory that
+    ``os.replace`` installs on a clean exit: readers see the old file or
+    the new one, never a torn write, and an exception mid-write leaves
+    the old file as it was."""
+    directory, name = os.path.split(path.removeprefix("file:"))
+    os.makedirs(directory, exist_ok=True)
+    tmp = os.path.join(directory, f".{name}.{uuid.uuid4().hex}.tmp")
+    try:
+        with open(tmp, "w") as fh:
+            yield fh
+        os.replace(tmp, os.path.join(directory, name))
+    except BaseException:
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(tmp)
+        raise
+
+
+#: a table's registry sidecar (the feature-store manager's metadata,
+#: ``featurestore/manager.py``). Next to the registry it holds the
+#: table's read-schema pin under ``READ_SCHEMA_KEY``: the schema the last
+#: rewrite wrote and the data-file listing that schema describes.
 METADATA_FILE = "_feature_metadata.json"
 READ_SCHEMA_KEY = "read_schema"
 
@@ -286,8 +323,6 @@ def data_file_listing(path: str) -> list[list] | None:
     directly under ``path`` (``_``/``.`` names are hidden from it too).
     ``None`` when the table is missing or keeps data in subdirectories:
     hive ``k=v`` layouts are never pinned."""
-    import os
-
     try:
         entries = list(os.scandir(path.removeprefix("file:")))
     except (FileNotFoundError, NotADirectoryError):
@@ -302,69 +337,92 @@ def data_file_listing(path: str) -> list[list] | None:
     return sorted(out)
 
 
-def read_schema_pin(path: str, schema: StructType) -> dict | None:
-    """The sidecar entry pinning ``schema`` to the files now under
-    ``path`` (``None`` for layouts :func:`data_file_listing` skips)."""
-    files = data_file_listing(path)
-    if files is None:
-        return None
-    return {"schema": schema.jsonValue(), "files": files}
+def read_sidecar(path: str) -> dict:
+    """The sidecar under ``path``; ``{}`` when absent or unreadable."""
+    try:
+        with open(os.path.join(path.removeprefix("file:"), METADATA_FILE)) as fh:
+            return json.load(fh)
+    except (OSError, ValueError):
+        return {}
+
+
+def _write_sidecar(directory: str, registry: dict, schema: StructType) -> None:
+    """Write ``registry`` as ``directory``'s sidecar, with the read-schema
+    pin of ``schema`` over the data files now in it (no pin for layouts
+    :func:`data_file_listing` skips)."""
+    meta = {k: v for k, v in registry.items() if k != READ_SCHEMA_KEY}
+    files = data_file_listing(directory)
+    if files is not None:
+        meta[READ_SCHEMA_KEY] = {"schema": schema.jsonValue(), "files": files}
+    with atomic_open(os.path.join(directory, METADATA_FILE)) as fh:
+        json.dump(meta, fh, indent=2, sort_keys=True)
 
 
 def read_table(spark: SparkSession, path: str, fmt: str, meta: dict | None = None) -> DataFrame:
-    """Scan the table at ``path`` with the read schema pinned in its
-    sidecar (``meta``, or the file under ``path`` when omitted) — no
+    """The live rows of the table at ``path``. Pending deletion-vector
+    deletes are folded out (``deletion_vectors.read_with_deletes``).
+    Without them the scan uses the read schema pinned in the sidecar
+    (``meta``, or the file under ``path`` when omitted) — no
     footer-inference job — while the pin still describes the table: a
-    parquet table with no deletion-vector sidecar whose listing equals
-    the recorded one. Any write outside the manager changes the listing
-    (data files carry unique names), so a stale pin is never used;
-    otherwise the schema is inferred."""
-    import json
-    import os
+    parquet table whose listing equals the recorded one. Any write
+    outside a rewrite changes the listing (data files carry unique
+    names), so a stale pin is never used; otherwise the schema is
+    inferred."""
+    from databricks_demo_feature_store_spark.sources.deletion_vectors import (
+        dv_path,
+        read_with_deletes,
+    )
 
-    from databricks_demo_feature_store_spark.sources.deletion_vectors import dv_path
-
-    reader = spark.read.format(fmt)
     p = path.removeprefix("file:")
-    if meta is None:
-        try:
-            with open(os.path.join(p, METADATA_FILE)) as fh:
-                meta = json.load(fh)
-        except (OSError, ValueError):  # absent, or mid-rewrite
-            meta = {}
-    pin = meta.get(READ_SCHEMA_KEY)
+    if fmt == "parquet" and os.path.isdir(dv_path(p)):
+        return read_with_deletes(spark, path)
+    reader = spark.read.format(fmt)
+    pin = (read_sidecar(p) if meta is None else meta).get(READ_SCHEMA_KEY)
     if (
         pin
         and fmt == "parquet"  # Delta rejects a read schema
-        and not os.path.isdir(dv_path(p))
         and data_file_listing(p) == pin["files"]
     ):
         reader = reader.schema(StructType.fromJson(pin["schema"]))
     return reader.load(path)
 
 
-def _read_folding_dv(spark: SparkSession, path: str, fmt: str) -> DataFrame:
-    """Scan ``path`` with pending deletion-vector deletes FOLDED OUT.
+def rewrite_table(
+    spark: SparkSession,
+    path: str,
+    fmt: str,
+    build: Callable[[DataFrame], DataFrame],
+    *,
+    partition_by: Sequence[str] | None = None,
+    sized: bool = True,
+    registry: dict | None = None,
+) -> bool:
+    """Replace the table at ``path`` with ``build(current)``, where
+    ``current`` is its live rows (:func:`read_table`). In order: take the
+    generation token, read, write ``build(current)`` and the sidecar to a
+    staging sibling, swap under the token (:func:`stage_and_swap`). The
+    sidecar is ``registry``, or the live one when ``registry`` is None
+    (none when the table has none); its read-schema pin is always
+    recomputed for the written files. Deletion vectors and stats
+    sidecars do not survive: the deletes are baked into the rewrite.
 
-    Every staged full rewrite (``compact``, ``merge_upsert``) promotes a
-    fresh directory over the live one, discarding the ``_dv`` sidecar with
-    it — so a plain scan here would silently RESURRECT rows the user
-    deleted (for GDPR erasure that is silent un-deletion, the exact
-    failure ``read_with_skipping`` guards against for stale stats). Any
-    rewrite must therefore read through the DV fold; the subsequent swap
-    then bakes the deletes in, mirroring ``apply_deletes``.
-    """
-    if fmt == "parquet":
-        import os
+    Returns False, writing nothing, when the table does not exist — the
+    read's path-miss ``AnalysisException``; callers with a bootstrap
+    write it themselves. Errors from ``build`` propagate."""
+    from pyspark.errors import AnalysisException
 
-        from databricks_demo_feature_store_spark.sources.deletion_vectors import (
-            dv_path,
-            read_with_deletes,
-        )
-
-        if os.path.isdir(dv_path(path.removeprefix("file:"))):
-            return read_with_deletes(spark, path)
-    return read_table(spark, path, fmt)
+    generation = table_generation(path)
+    live = read_sidecar(path)
+    try:
+        current = read_table(spark, path, fmt, live)
+    except AnalysisException:
+        return False
+    if registry is None and live:
+        registry = live
+    stage_and_swap(
+        build(current), path, fmt, generation, partition_by, sized, registry
+    )
+    return True
 
 
 def save_table(
@@ -510,26 +568,27 @@ def merge_upsert(
     fmt: str = "parquet",
     partition_by: Sequence[str] | None = None,
     update_columns: Sequence[str] | None = None,
-) -> StructType | None:
-    """Upsert ``df`` into the table at ``path`` keyed on ``keys``; returns
-    the schema of the frame written (``None`` on the Delta path), which
-    the feature-store manager pins as the table's read schema.
+    registry: dict | None = None,
+) -> None:
+    """Upsert ``df`` into the table at ``path`` keyed on ``keys``. The
+    table keeps its sidecar, or takes ``registry`` when given (the
+    feature-store manager's metadata).
 
     Delta path: ``DeltaTable.merge`` with ``whenMatchedUpdate`` (restricted
     to ``update_columns`` when given, matching the reference's
     new-columns-only merge at ``notebooks/utils.py:1748-1758``) +
     ``whenNotMatchedInsertAll``.
 
-    Parquet fallback: keep = existing ⟕anti df; out = keep ∪ df. When
-    ``update_columns`` is given, matched rows keep their old values except
-    the listed columns (reference semantics for schema-evolution merges).
+    Parquet fallback, a :func:`rewrite_table` whose build is keep =
+    existing ⟕anti df; out = keep ∪ df. When ``update_columns`` is given,
+    matched rows keep their old values except the listed columns
+    (reference semantics for schema-evolution merges). A missing table is
+    bootstrapped with ``df``.
     """
     spark = df.sparkSession
     keys = list(keys)
 
     if HAS_DELTA:  # pragma: no cover
-        from delta.tables import DeltaTable
-
         if DeltaTable.isDeltaTable(spark, path):
             target = DeltaTable.forPath(spark, path)
             cond = " AND ".join(f"t.{k} <=> s.{k}" for k in keys)
@@ -541,31 +600,17 @@ def merge_upsert(
             else:
                 merge = merge.whenMatchedUpdateAll()
             merge.whenNotMatchedInsertAll().execute()
-            return None
-        _write(df, path, "delta", "overwrite", partition_by)
-        return None
+        else:
+            _write(df, path, "delta", "overwrite", partition_by)
+        if registry is not None:
+            _write_sidecar(path, registry, df.schema)
+        return
 
-    from pyspark.errors import AnalysisException
-
-    # optimistic concurrency: token BEFORE the read plan is built — any
-    # other writer's commit between here and the swap aborts the promotion
-    generation = table_generation(path)
-    try:
-        # DV-aware: a staged rewrite discards the _dv sidecar, so pending
-        # row-level deletes MUST fold into `existing` here or they resurrect
-        existing = _read_folding_dv(spark, path, fmt)
-        table_exists = True
-    except AnalysisException:
-        # only the analysis-time path miss means "no table yet" — any
-        # other failure must propagate, not bootstrap-overwrite the data
-        table_exists = False
-
-    if not table_exists:
-        _write(df, path, fmt, "overwrite", partition_by)
-        return df.schema
-
-    incoming = df
-    if update_columns:
+    def build(existing: DataFrame) -> DataFrame:
+        incoming = df
+        kept = existing.join(incoming.select(*keys), on=keys, how="left_anti")
+        if not update_columns:
+            return kept.unionByName(incoming, allowMissingColumns=True)
         # Matched rows: existing values except update_columns, which come
         # from the incoming side; unmatched incoming rows insert whole.
         upd = list(update_columns)
@@ -579,18 +624,16 @@ def merge_upsert(
             )
         )
         unmatched_new = incoming.join(existing.select(*keys), on=keys, how="left_anti")
-        kept = existing.join(incoming.select(*keys), on=keys, how="left_anti")
-        out = kept.unionByName(matched, allowMissingColumns=True).unionByName(
+        return kept.unionByName(matched, allowMissingColumns=True).unionByName(
             unmatched_new, allowMissingColumns=True
         )
-    else:
-        kept = existing.join(incoming.select(*keys), on=keys, how="left_anti")
-        out = kept.unionByName(incoming, allowMissingColumns=True)
 
-    # Self-overwrite safety: materialize to a temp location first, then
-    # promote via rename (never delete-then-rewrite the live table).
-    stage_and_swap(out, path, fmt, generation, partition_by)
-    return out.schema
+    if not rewrite_table(
+        spark, path, fmt, build, partition_by=partition_by, registry=registry
+    ):
+        _write(df, path, fmt, "overwrite", partition_by)
+        if registry is not None:
+            _write_sidecar(path, registry, df.schema)
 
 
 def compact(
@@ -602,27 +645,22 @@ def compact(
     bloom_columns: Sequence[str] | None = None,
 ) -> None:
     """Post-write compaction (the reference runs Delta ``OPTIMIZE`` after
-    every save — ``notebooks/utils.py:1762-1765``). For parquet we rewrite
-    with coalesce to ``target_partitions`` files, by default to one file
-    per scan split (the :func:`stage_and_swap` sizing rule).
+    every save — ``notebooks/utils.py:1762-1765``). For parquet, a
+    :func:`rewrite_table` that coalesces to ``target_partitions`` files,
+    by default to one file per scan split (the :func:`stage_and_swap`
+    sizing rule). A missing table is left alone.
 
     The directory swap drops any ``_stats`` sidecar with the old files
     (stale stats can never survive a compaction); pass ``stats_columns``
     to re-harvest for the new layout in the same call.
     """
     if HAS_DELTA:  # pragma: no cover
-        from delta.tables import DeltaTable
-
         DeltaTable.forPath(spark, path).optimize().executeCompaction()
         return
-    generation = table_generation(path)
-    # DV-aware for the same reason as merge_upsert: the swap below drops
-    # any _dv sidecar, so the rewrite must bake pending deletes in
-    df = _read_folding_dv(spark, path, fmt)
-    if target_partitions:
-        df = df.coalesce(target_partitions)
-    stage_and_swap(
-        df, path, fmt, generation, suffix="__compact", sized=not target_partitions
+    rewrite_table(
+        spark, path, fmt,
+        lambda df: df.coalesce(target_partitions) if target_partitions else df,
+        sized=not target_partitions,
     )
     _refresh_stats(spark, path, fmt, stats_columns, bloom_columns)
 
@@ -658,8 +696,6 @@ def _policy_trips(path: str, policy: CompactionPolicy) -> bool:
     satisfy the policy's small-file trigger? O(files) metadata, no Spark
     job — cheap enough that ``save_table`` runs it once per append to
     decide whether the incremental sidecar refresh would be wasted."""
-    import os
-
     from databricks_demo_feature_store_spark.sources.skipping import (
         _list_part_files,
     )
@@ -686,12 +722,11 @@ def maybe_compact(
     trips. Returns whether a compaction ran.
 
     The decision is size-based, not sidecar-based, so it works on tables
-    that never opted into stats. The rewrite itself goes through the same
-    staged-swap + DV-fold discipline as :func:`compact`; with
-    ``zorder_by`` it is a :func:`cluster_by_zorder` rewrite (one range
-    exchange + local sort) instead of a plain coalesce."""
+    that never opted into stats. The rewrite is a :func:`rewrite_table`
+    like :func:`compact`'s; with ``zorder_by`` it is a
+    :func:`cluster_by_zorder` rewrite (one range exchange + local sort)
+    instead of a plain coalesce."""
     import math
-    import os
 
     from databricks_demo_feature_store_spark.sources.skipping import (
         _list_part_files,
@@ -710,13 +745,12 @@ def maybe_compact(
             cluster_by_zorder,
         )
 
-        generation = table_generation(path)
-        df = _read_folding_dv(spark, path, fmt)
-        clustered = cluster_by_zorder(
-            df, list(policy.zorder_by), bits=policy.zorder_bits, num_partitions=n
-        )
-        stage_and_swap(
-            clustered, path, fmt, generation, suffix="__compact", sized=False
+        rewrite_table(
+            spark, path, fmt,
+            lambda df: cluster_by_zorder(
+                df, list(policy.zorder_by), bits=policy.zorder_bits, num_partitions=n
+            ),
+            sized=False,
         )
         _refresh_stats(spark, path, fmt, stats_columns, bloom_columns)
     else:

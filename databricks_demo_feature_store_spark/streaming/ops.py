@@ -49,12 +49,12 @@ _MEMORY_QUERY_IDS = itertools.count()
 # sized for either local mode or the cluster is wrong at the other end
 # (guide §2: derive partitioning from input size, don't hard-code), so the
 # partition count is derived from the source's size: ~one partition per
-# SPARK_GRAFT_STREAM_PARTITION_BYTES of input (default 32 MB), clamped to
+# _STREAM_PARTITION_BYTES of input (32 MB), clamped to
 # [1, 4 × defaultParallelism] so huge inputs still spread over the cluster
 # without creating millions of state files. Correctness is unaffected —
 # state partitioning never changes query results, and a fresh checkpoint is
 # created per run (re-partitioning an EXISTING checkpoint is invalid).
-_STREAM_PARTITION_BYTES_ENV = "SPARK_GRAFT_STREAM_PARTITION_BYTES"
+_STREAM_PARTITION_BYTES = 32 << 20
 
 
 def _source_bytes(*paths: str) -> int:
@@ -82,11 +82,8 @@ def stream_partitions(spark: SparkSession, nbytes: int) -> int:
     """Shuffle/state partition count for a stream fed by ``nbytes`` of
     source data: ceil(nbytes / target-bytes-per-partition), clamped to
     [1, 4 × defaultParallelism]."""
-    target = int(
-        os.environ.get(_STREAM_PARTITION_BYTES_ENV, str(32 * 1024 * 1024))
-    )
     cap = 4 * spark.sparkContext.defaultParallelism
-    return max(1, min(math.ceil(nbytes / max(1, target)), cap))
+    return max(1, min(math.ceil(nbytes / _STREAM_PARTITION_BYTES), cap))
 
 
 @contextlib.contextmanager
@@ -577,13 +574,14 @@ def stream_ingest_corpus_dedup(
     )
 
 
-def _latest_cms_version(sketch_path: str) -> int | None:
-    """Highest committed sketch version (``v<batch_id>`` subdirectory)
-    under ``sketch_path``, or ``None`` when no batch has committed yet."""
+def _latest_version(directory: str) -> int | None:
+    """Highest committed version (``v<N>`` entry) under ``directory`` — a
+    sketch, CDC table, state or CDF view — or ``None`` when nothing has
+    committed yet."""
     import re as _re
 
     try:
-        names = os.listdir(sketch_path)
+        names = os.listdir(directory)
     except FileNotFoundError:
         return None
     versions = [int(n[1:]) for n in names if _re.fullmatch(r"v\d+", n)]
@@ -594,7 +592,7 @@ def read_count_min_sketch(spark: SparkSession, sketch_path: str) -> DataFrame:
     """Read the latest committed sketch maintained by
     :func:`stream_count_min` (the highest ``v<batch_id>`` subdirectory —
     partially-written ``_tmp_*`` staging dirs are never visible here)."""
-    latest = _latest_cms_version(sketch_path)
+    latest = _latest_version(sketch_path)
     if latest is None:
         raise FileNotFoundError(f"no committed sketch under {sketch_path}")
     return spark.read.parquet(os.path.join(sketch_path, f"v{latest}"))
@@ -628,7 +626,7 @@ def _merge_cms_batch(
         count_min_sketch,
     )
 
-    latest = _latest_cms_version(sketch_path)
+    latest = _latest_version(sketch_path)
     if latest is not None and latest >= batch_id:
         return False  # already merged: replay after a post-commit crash
     if batch_df.isEmpty():
@@ -704,17 +702,6 @@ def stream_count_min(
     )
 
 
-def _latest_cdc_version(table_path: str) -> int | None:
-    import re as _re
-
-    try:
-        names = os.listdir(table_path)
-    except FileNotFoundError:
-        return None
-    versions = [int(n[1:]) for n in names if _re.fullmatch(r"v\d+", n)]
-    return max(versions) if versions else None
-
-
 def _applied_batch_of(table_path: str, version: int) -> int:
     """The highest stream batch_id folded into committed ``v<version>``
     (the ``_APPLIED_BATCH`` marker — a ``_``-prefixed file, invisible to
@@ -755,7 +742,7 @@ def init_cdc_table(snapshot: DataFrame, table_path: str) -> None:
 def read_cdc_table(spark: SparkSession, table_path: str) -> DataFrame:
     """Read the latest committed state of a CDC-maintained table (live
     rows only — tombstones and the sequence watermark are internal)."""
-    latest = _latest_cdc_version(table_path)
+    latest = _latest_version(table_path)
     if latest is None:
         raise FileNotFoundError(f"no committed CDC table under {table_path}")
     df = spark.read.parquet(os.path.join(table_path, f"v{latest}"))
@@ -820,7 +807,7 @@ def stream_apply_changes(
     ]
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        latest = _latest_cdc_version(table_path)
+        latest = _latest_version(table_path)
         if latest is not None and _applied_batch_of(table_path, latest) >= batch_id:
             return  # replay after a post-commit crash: already applied
         if batch_df.isEmpty():
@@ -927,7 +914,7 @@ def vacuum_cdc_table(spark: SparkSession, table_path: str, horizon_seq: int) -> 
     """
     import shutil
 
-    latest = _latest_cdc_version(table_path)
+    latest = _latest_version(table_path)
     if latest is None:
         raise FileNotFoundError(f"no committed CDC table under {table_path}")
     cur = spark.read.parquet(os.path.join(table_path, f"v{latest}"))
@@ -947,7 +934,7 @@ def vacuum_cdc_table(spark: SparkSession, table_path: str, horizon_seq: int) -> 
 def read_trailing_state(spark: SparkSession, state_path: str) -> DataFrame:
     """Latest committed per-(keys, bucket) moment state maintained by
     :func:`stream_trailing_state` (highest ``v<batch_id>`` dir)."""
-    latest = _latest_cms_version(state_path)
+    latest = _latest_version(state_path)
     if latest is None:
         raise FileNotFoundError(f"no committed trailing state under {state_path}")
     return spark.read.parquet(os.path.join(state_path, f"v{latest}"))
@@ -1009,7 +996,7 @@ def stream_trailing_state(
         h_lo, h_hi, h_n = float(hist[0]), float(hist[1]), int(hist[2])
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        latest = _latest_cms_version(state_path)
+        latest = _latest_version(state_path)
         if latest is not None and latest >= batch_id:
             return  # replay after a post-commit crash: already merged
         if batch_df.isEmpty():
@@ -1271,17 +1258,6 @@ def watermark_progress_metrics(query) -> list[dict]:
 _CDF_VIEW_MARKER = "_source_version.json"
 
 
-def _latest_cdf_view_version(view_path: str) -> int | None:
-    if not os.path.isdir(view_path):
-        return None
-    versions = [
-        int(n[1:])
-        for n in os.listdir(view_path)
-        if n.startswith("v") and n[1:].isdigit()
-    ]
-    return max(versions) if versions else None
-
-
 def _cdf_view_source_version(view_path: str, view_version: int) -> int:
     import json
 
@@ -1298,7 +1274,7 @@ def _commit_cdf_view(df: DataFrame, view_path: str, source_version: int) -> None
     import json
     import shutil
 
-    latest = _latest_cdf_view_version(view_path)
+    latest = _latest_version(view_path)
     next_version = (latest if latest is not None else -1) + 1
     os.makedirs(view_path, exist_ok=True)
     staging = os.path.join(view_path, f"_tmp_v{next_version}")
@@ -1314,13 +1290,13 @@ def init_cdf_view(view_df: DataFrame, view_path: str, source_version: int) -> No
     """Bootstrap the materialized view: the FULL join computed at
     ``source_version`` of the fact table. The stream then folds only
     commits newer than this version."""
-    if _latest_cdf_view_version(view_path) is not None:
+    if _latest_version(view_path) is not None:
         raise FileExistsError(f"CDF view already initialized at {view_path}")
     _commit_cdf_view(view_df, view_path, source_version)
 
 
 def read_cdf_view(spark: SparkSession, view_path: str) -> DataFrame:
-    latest = _latest_cdf_view_version(view_path)
+    latest = _latest_version(view_path)
     if latest is None:
         raise FileNotFoundError(f"no CDF view at {view_path}")
     return spark.read.parquet(os.path.join(view_path, f"v{latest}"))
@@ -1380,7 +1356,7 @@ def stream_cdf_ivm(
         ]
         if not markers:
             return
-        latest_view = _latest_cdf_view_version(view_path)
+        latest_view = _latest_version(view_path)
         if latest_view is None:
             raise FileNotFoundError(
                 f"CDF view at {view_path} not initialized — call "
@@ -1457,7 +1433,7 @@ def stream_cdf_agg_ivm(
         ]
         if not markers:
             return
-        latest_state = _latest_cdf_view_version(state_path)
+        latest_state = _latest_version(state_path)
         if latest_state is None:
             raise FileNotFoundError(
                 f"CDF aggregate state at {state_path} not initialized — "

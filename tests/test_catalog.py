@@ -597,12 +597,12 @@ def test_concurrent_staged_swap_raises_no_lost_update(spark, tmp_path, monkeypat
     ).write.parquet(path)
 
     state = {"b_done": False}
-    real_read = writers._read_folding_dv
+    real_read = writers.read_table
 
-    def interleave(spark_, path_, fmt_):
+    def interleave(spark_, path_, fmt_, meta_=None):
         # pin A's snapshot BEFORE B commits (a real concurrent writer's
         # plan would already have scanned the old files)
-        df = real_read(spark_, path_, fmt_).localCheckpoint(eager=True)
+        df = real_read(spark_, path_, fmt_, meta_).localCheckpoint(eager=True)
         if not state["b_done"]:
             state["b_done"] = True
             writers.merge_upsert(
@@ -612,7 +612,7 @@ def test_concurrent_staged_swap_raises_no_lost_update(spark, tmp_path, monkeypat
             )
         return df
 
-    monkeypatch.setattr(writers, "_read_folding_dv", interleave)
+    monkeypatch.setattr(writers, "read_table", interleave)
     with pytest.raises(writers.ConcurrentWriteError, match="changed while"):
         writers.merge_upsert(
             spark.createDataFrame([(2, "A2")], "k int, v string"), path, ["k"]
@@ -620,15 +620,60 @@ def test_concurrent_staged_swap_raises_no_lost_update(spark, tmp_path, monkeypat
 
     got = {(r.k, r.v) for r in spark.read.parquet(path).collect()}
     assert got == {(1, "a"), (2, "b"), (3, "c")}  # B intact, A not applied
-    assert not os.path.exists(path + "__staging")  # loser's staging discarded
+    # loser's staging discarded
+    assert not [n for n in os.listdir(tmp_path) if n.startswith("tbl__staging")]
 
     # A retried against the new state commits cleanly
-    monkeypatch.setattr(writers, "_read_folding_dv", real_read)
+    monkeypatch.setattr(writers, "read_table", real_read)
     writers.merge_upsert(
         spark.createDataFrame([(2, "A2")], "k int, v string"), path, ["k"]
     )
     got = {(r.k, r.v) for r in spark.read.parquet(path).collect()}
     assert got == {(1, "a"), (2, "A2"), (3, "c")}
+
+
+def test_concurrent_merges_one_winner(spark, tmp_path, monkeypatch):
+    """Two threads merge into one table and both finish their staging
+    writes before either swaps. Each has its own staging directory, so
+    the caller that returns is the one whose rows the table holds; the
+    other raises ConcurrentWriteError, and no staging is left behind."""
+    import os
+    import threading
+
+    from databricks_demo_feature_store_spark.sources import writers
+
+    path = str(tmp_path / "tbl")
+    spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string").write.parquet(path)
+    barrier = threading.Barrier(2, timeout=60)
+    real_swap = writers._swap_dirs
+
+    def swap_after_barrier(live, staging, expected_generation=writers._UNCHECKED):
+        barrier.wait()
+        real_swap(live, staging, expected_generation)
+
+    monkeypatch.setattr(writers, "_swap_dirs", swap_after_barrier)
+    outcome: dict = {}
+
+    def merge(tag):
+        batch = spark.createDataFrame([(2, tag)], "k int, v string")
+        try:
+            writers.merge_upsert(batch, path, ["k"])
+            outcome[tag] = "ok"
+        except writers.ConcurrentWriteError:
+            outcome[tag] = "conflict"
+        except Exception as exc:  # reported by the assertion below
+            outcome[tag] = repr(exc)
+
+    threads = [threading.Thread(target=merge, args=(t,)) for t in ("A", "B")]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert sorted(outcome.values()) == ["conflict", "ok"], outcome
+    winner = next(t for t, o in outcome.items() if o == "ok")
+    got = {(r.k, r.v) for r in spark.read.parquet(path).collect()}
+    assert got == {(1, "a"), (2, winner)}
+    assert sorted(os.listdir(tmp_path)) == ["tbl"]
 
 
 def test_table_generation_token_tracks_commits(spark, tmp_path):
@@ -670,10 +715,10 @@ def test_retry_on_conflict_wins_second_attempt(spark, tmp_path, monkeypatch):
     spark.createDataFrame([(1, "a")], "k int, v string").write.parquet(path)
 
     state = {"b_done": False}
-    real_read = writers._read_folding_dv
+    real_read = writers.read_table
 
-    def interleave(spark_, path_, fmt_):
-        df = real_read(spark_, path_, fmt_).localCheckpoint(eager=True)
+    def interleave(spark_, path_, fmt_, meta_=None):
+        df = real_read(spark_, path_, fmt_, meta_).localCheckpoint(eager=True)
         if not state["b_done"]:
             state["b_done"] = True
             writers.merge_upsert(
@@ -683,7 +728,7 @@ def test_retry_on_conflict_wins_second_attempt(spark, tmp_path, monkeypatch):
             )
         return df
 
-    monkeypatch.setattr(writers, "_read_folding_dv", interleave)
+    monkeypatch.setattr(writers, "read_table", interleave)
     writers.retry_on_conflict(
         lambda: writers.merge_upsert(
             spark.createDataFrame([(2, "b")], "k int, v string"), path, ["k"]

@@ -720,11 +720,13 @@ def test_refresh_join_view_equals_recompute(spark):
     assert refresh_join_view(view, None, dim, on=("k", "k2"), replace_key="fid") is view
 
 
-def test_forget_metadata_promoted_atomically(spark, tmp_path, monkeypatch):
-    """ADVICE r11: registry metadata must ride in the staging directory so
-    the _swap_dirs rename promotes data + primary_keys atomically. A crash
-    AT the swap must leave the live table (and its metadata) untouched,
-    and the staging dir must already contain the metadata file."""
+@pytest.mark.parametrize("op", ["forget", "merge"])
+def test_forget_metadata_promoted_atomically(spark, tmp_path, monkeypatch, op):
+    """Registry metadata rides in the staging directory, so the _swap_dirs
+    rename promotes data + primary_keys atomically, for a forget and for
+    a merge alike. A crash AT the swap leaves the live table and its
+    registry untouched while staging already holds the registry; a crash
+    right AFTER the swap leaves the new rows with their registry."""
     import os
 
     from databricks_demo_feature_store_spark.featurestore import forget_entities
@@ -736,35 +738,52 @@ def test_forget_metadata_promoted_atomically(spark, tmp_path, monkeypatch):
     from databricks_demo_feature_store_spark.sources import writers
 
     mgr = FeatureStoreManager(spark, str(tmp_path / "store"))
+    spec = FeatureTableSpec(name="ta", primary_keys=("uid",))
     a = spark.createDataFrame([(1, 10.0), (2, 20.0)], "uid int, v double")
-    mgr.save(a, FeatureTableSpec(name="ta", primary_keys=("uid",)), mode="overwrite")
-    forget = spark.createDataFrame([(2,)], "uid int")
+    mgr.save(a, spec, mode="overwrite")
+    meta = mgr.get_metadata("ta")
+
+    def run():
+        if op == "forget":
+            forget_entities(mgr, spark.createDataFrame([(2,)], "uid int"), "uid")
+        else:
+            mgr.save(spark.createDataFrame([(3, 30.0)], "uid int, v double"), spec)
+
+    def uids():
+        return {r.uid for r in mgr.read("ta").collect()}
 
     real_swap = writers._swap_dirs
     staged: dict = {}
 
-    def crash_swap(live, staging, expected_generation=None):
+    def crash_at_swap(live, staging, expected_generation=None):
         staged["path"] = staging.removeprefix("file:")
         raise RuntimeError("simulated crash at swap")
 
-    monkeypatch.setattr(writers, "_swap_dirs", crash_swap)
-    import pytest as _pytest
+    def crash_after_swap(live, staging, expected_generation=None):
+        real_swap(live, staging, expected_generation)
+        raise RuntimeError("simulated crash after swap")
 
-    with _pytest.raises(RuntimeError, match="simulated crash"):
-        forget_entities(mgr, forget, "uid")
+    monkeypatch.setattr(writers, "_swap_dirs", crash_at_swap)
+    with pytest.raises(RuntimeError, match="crash at swap"):
+        run()
     # staging already carries the registry metadata — the rename alone
     # would have promoted both
     assert os.path.exists(os.path.join(staged["path"], METADATA_FILE))
-    # live table + metadata untouched by the crash
-    assert mgr.read("ta").count() == 2
-    assert mgr.get_metadata("ta")["primary_keys"] == ["uid"]
+    assert uids() == {1, 2}
+    assert mgr.get_metadata("ta") == meta
 
-    # recovery: the next forget (with the real swap) completes and keeps
-    # propagating — primary_keys never got lost
+    monkeypatch.setattr(writers, "_swap_dirs", crash_after_swap)
+    with pytest.raises(RuntimeError, match="crash after swap"):
+        run()
+    assert uids() == ({1} if op == "forget" else {1, 2, 3})
+    assert mgr.get_metadata("ta") == meta
+
+    # forget keeps propagating — primary_keys never got lost
     monkeypatch.setattr(writers, "_swap_dirs", real_swap)
+    forget = spark.createDataFrame([(1,)], "uid int")
     audit = {r["table"]: r for r in forget_entities(mgr, forget, "uid").collect()}
     assert audit["ta"]["key_matched"] is True and audit["ta"]["rows_deleted"] == 1
-    assert mgr.get_metadata("ta")["primary_keys"] == ["uid"]
+    assert mgr.get_metadata("ta") == meta
 
 
 def test_list_tables_debris_vs_legit_suffix_names(spark, manager, tmp_path):
@@ -1145,3 +1164,90 @@ def test_save_many_one_failing_item(spark, tmp_path, mode):
     mgr.save_many([(batch["t1"], specs["t1"])], mode=mode)
     assert _rows(mgr, "t1") == expected["t1"]
     assert mgr.get_metadata("t1") == before["t1"][1]
+
+
+@pytest.mark.parametrize(
+    "op",
+    [
+        "merge",
+        "compact",
+        "maybe_compact",
+        "replace_entities",
+        "apply_deletes",
+        "materialize_mapping",
+    ],
+)
+def test_rewrites_keep_registry_and_pin(spark, manager, op):
+    """Every table rewrite promotes the table's registry with its data
+    and re-pins the read schema to the files it wrote, so training and
+    forget keep seeing the primary and timestamp keys."""
+    from pyspark.sql.types import StructType
+
+    from databricks_demo_feature_store_spark.pipelines.incremental import (
+        replace_entities,
+    )
+    from databricks_demo_feature_store_spark.sources import (
+        column_mapping,
+        deletion_vectors,
+        writers,
+    )
+
+    day = dt.date(2024, 1, 1)
+    manager.save(_df(spark, [(k, day, float(k)) for k in range(6)]), SPEC, mode="overwrite")
+    path = manager.path(SPEC.name)
+    meta = manager.get_metadata(SPEC.name)
+    batch = _df(spark, [(1, day, 10.0), (9, day, 9.0)])
+    if op == "merge":
+        writers.merge_upsert(batch, path, list(SPEC.primary_keys))
+    elif op == "compact":
+        writers.compact(spark, path)
+    elif op == "maybe_compact":
+        policy = writers.CompactionPolicy(min_small_files=1)
+        assert writers.maybe_compact(spark, path, policy=policy)
+    elif op == "replace_entities":
+        replace_entities(batch, path, "pk_customer")
+    elif op == "apply_deletes":
+        assert deletion_vectors.delete_rows(spark, path, "pk_customer = 2") == 1
+        assert deletion_vectors.apply_deletes(spark, path) == 1
+    else:
+        column_mapping.rename_column(spark, path, "f1", "f2")
+        assert column_mapping.materialize_mapping(spark, path) == 1
+
+    assert manager.get_metadata(SPEC.name) == meta
+    pin = manager._sidecar(SPEC.name)[writers.READ_SCHEMA_KEY]
+    assert pin["files"] == writers.data_file_listing(path)
+    pinned = StructType.fromJson(pin["schema"])
+    assert pinned.simpleString() == spark.read.parquet(path).schema.simpleString()
+
+
+def test_deleted_rows_stay_deleted_through_reads_and_rewrites(spark, manager):
+    """A row a deletion vector removed is gone from manager.read (the
+    training-set read too) and never comes back through replace_entities
+    or forget_entities on other keys."""
+    from databricks_demo_feature_store_spark.featurestore import forget_entities
+    from databricks_demo_feature_store_spark.pipelines.incremental import (
+        replace_entities,
+    )
+    from databricks_demo_feature_store_spark.sources.deletion_vectors import (
+        delete_rows,
+    )
+
+    day = dt.date(2024, 1, 1)
+    manager.save(_df(spark, [(k, day, float(k)) for k in range(10)]), SPEC, mode="overwrite")
+    path = manager.path(SPEC.name)
+
+    def keys():
+        return sorted(r.pk_customer for r in manager.read(SPEC.name).collect())
+
+    assert delete_rows(spark, path, "pk_customer = 7") == 1
+    assert keys() == [0, 1, 2, 3, 4, 5, 6, 8, 9]
+    assert manager.read_registered(SPEC.name)[0].count() == 9
+
+    replace_entities(_df(spark, [(1, day, 11.0)]), path, "pk_customer")
+    assert keys() == [0, 1, 2, 3, 4, 5, 6, 8, 9]
+
+    assert delete_rows(spark, path, "pk_customer = 5") == 1
+    forget = spark.createDataFrame([(3,)], "pk_customer int")
+    audit = forget_entities(manager, forget, "pk_customer").collect()
+    assert [(r["rows_after"], r["rows_deleted"]) for r in audit] == [(7, 1)]
+    assert keys() == [0, 1, 2, 4, 6, 8, 9]

@@ -395,7 +395,8 @@ def test_scan_fanout_noop_when_already_parallel(spark, tmp_path):
     ).repartition(64).write.parquet(str(wide_dir / "documents.parquet"))
     df = load(spark, str(wide_dir), "documents")
     assert _SCAN_FANOUT[(str(wide_dir), "documents")] is False
-    assert df.rdd.getNumPartitions() >= 32  # kept its native splits
+    # kept its native splits
+    assert df.rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism
 
     # single-file single-row-group table: fan-out kicks in
     narrow_dir = tmp_path / "sfnarrow"

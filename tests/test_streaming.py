@@ -767,10 +767,10 @@ def test_cdc_vacuum_tombstones_and_marker(spark, tmp_path):
         import os as _os
 
         from databricks_demo_feature_store_spark.streaming.ops import (
-            _latest_cdc_version,
+            _latest_version,
         )
 
-        v = _latest_cdc_version(path)
+        v = _latest_version(path)
         return spark.read.parquet(_os.path.join(path, f"v{v}"))
 
     # batch 0: delete k=1 (seq 10), delete k=2 (seq 50)

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from databricks_demo_feature_store_spark.sources.versioned import VersionedTable
 from databricks_demo_feature_store_spark.streaming.ops import (
     _cdf_view_source_version,
-    _latest_cdf_view_version,
+    _latest_version,
     init_cdf_view,
     read_cdf_view,
     stream_cdf_ivm,
@@ -91,7 +91,7 @@ def test_stream_cdf_ivm_backlog_folds_as_one_span(spark, tmp_path):
     )
     q.awaitTermination()
     # one view commit beyond the bootstrap = the whole backlog in one fold
-    assert _latest_cdf_view_version(view_path) == 1
+    assert _latest_version(view_path) == 1
     assert _cdf_view_source_version(view_path, 1) == 3
     got = read_cdf_view(spark, view_path)
     want = vt.read().join(dim, "grp")
@@ -115,7 +115,7 @@ def test_stream_cdf_ivm_replay_skips_applied_versions(spark, tmp_path):
         key="k", other=dim, on="grp",
     )
     q.awaitTermination()
-    before = _latest_cdf_view_version(view_path)
+    before = _latest_version(view_path)
     state_before = _rows(read_cdf_view(spark, view_path))
 
     # fresh checkpoint = worst-case full replay of all markers
@@ -124,7 +124,7 @@ def test_stream_cdf_ivm_replay_skips_applied_versions(spark, tmp_path):
         key="k", other=dim, on="grp",
     )
     q.awaitTermination()
-    assert _latest_cdf_view_version(view_path) == before  # no extra commit
+    assert _latest_version(view_path) == before  # no extra commit
     assert _rows(read_cdf_view(spark, view_path)) == state_before
 
 

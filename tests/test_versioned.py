@@ -344,3 +344,24 @@ def test_read_all_versions_same_schema_strict_ok(spark, tmp_path):
     vt.save(spark.createDataFrame([(2,)], "k int"), operation="OVERWRITE")
     out = vt.read_all_versions(merge_schema=False)
     assert sorted((r._version, r.k) for r in out.collect()) == [(0, 1), (1, 2)]
+
+
+def test_failed_manifest_write_keeps_history(spark, tmp_path, monkeypatch):
+    """A save that fails while writing the version manifest leaves the
+    previous manifest whole: the versions before it stay listed."""
+    import json
+
+    t = VersionedTable(spark, str(tmp_path / "tbl"))
+    t.save(spark.range(3))
+    t.save(spark.range(5))
+
+    def torn_dump(obj, fh, **kw):
+        fh.write("[{")
+        raise OSError("disk full")
+
+    monkeypatch.setattr(json, "dump", torn_dump)
+    with pytest.raises(OSError, match="disk full"):
+        t.save(spark.range(7))
+    monkeypatch.undo()
+    assert [v.version for v in t.history()] == [1, 0]
+    assert t.read().count() == 5

@@ -51,6 +51,11 @@ _PIT_SLOW = [
     "tests/test_operators.py::test_asof_join_directions",
     "tests/test_property_asof.py::test_asof_join_all_directions_match_brute_force",
 ]
+_WRITERS_SLOW = [
+    "tests/test_catalog.py::test_concurrent_staged_swap_raises_no_lost_update",
+    "tests/test_catalog.py::test_append_skips_incremental_refresh_when_compaction_trips",
+    "tests/test_index_store.py::test_partitioned_layout_merged_equals_rebuilt",
+]
 # library module -> the slow tests that must pass whenever it changes
 SLOW_GUARDS = {
     "databricks_demo_feature_store_spark/operators/joins.py": _PIT_SLOW,
@@ -60,10 +65,29 @@ SLOW_GUARDS = {
         "tests/test_index_store.py::test_partitioned_layout_merged_equals_rebuilt",
         "tests/test_index_store.py::test_index_maintenance_merged_equals_rebuilt",
     ],
-    "databricks_demo_feature_store_spark/sources/writers.py": [
-        "tests/test_catalog.py::test_concurrent_staged_swap_raises_no_lost_update",
-        "tests/test_catalog.py::test_append_skips_incremental_refresh_when_compaction_trips",
-        "tests/test_index_store.py::test_partitioned_layout_merged_equals_rebuilt",
+    "databricks_demo_feature_store_spark/sources/writers.py": _WRITERS_SLOW,
+    "databricks_demo_feature_store_spark/sources/deletion_vectors.py": _WRITERS_SLOW,
+    "databricks_demo_feature_store_spark/sources/column_mapping.py": _WRITERS_SLOW,
+    "databricks_demo_feature_store_spark/pipelines/incremental.py": _WRITERS_SLOW,
+    "databricks_demo_feature_store_spark/sources/skipping.py": [
+        "tests/test_skipping.py::test_save_table_refreshes_bloom_and_stats_coexist",
+        "tests/test_skipping.py::test_harvest_string_and_partition_values",
+        "tests/test_skipping.py::test_incremental_bloom_refresh_equals_rebuild",
+        "tests/test_skipping.py::test_incremental_stats_refresh_equals_rebuild",
+        "tests/test_skipping.py::test_randomized_skipping_always_matches_full_scan",
+    ],
+    "databricks_demo_feature_store_spark/sources/versioned.py": [
+        "tests/test_versioned.py::test_restore_promotes_old_version_preserving_history",
+        "tests/test_versioned.py::test_shallow_clone_zero_copy_and_independent_writes",
+    ],
+    "databricks_demo_feature_store_spark/operators/graph.py": [
+        "tests/test_operators.py::test_pagerank_matches_exact_replay",
+        "tests/test_operators.py::test_clustering_coefficient_known_graphs",
+    ],
+    "databricks_demo_feature_store_spark/streaming/ops.py": [
+        "tests/test_streaming.py::test_ingest_crash_recovery_exactly_once",
+        "tests/test_streaming.py::test_stream_trailing_quantile_from_hist_state",
+        "tests/test_streaming_cdf.py::test_stream_cdf_agg_ivm_matches_batch_and_recompute",
     ],
     "databricks_demo_feature_store_spark/textops/multimodal.py": [
         "tests/test_textops.py::test_multimodal_stub_roundtrip",
