@@ -226,7 +226,11 @@ class FeatureStoreManager:
         place, and ``df`` may read the table it replaces. ``mode="merge"``
         upserts on the PKs; new columns are added to matched rows and full
         rows inserted for new keys (reference ADD COLUMNS + MERGE
-        :1727-1758). Type changes or missing columns under
+        :1727-1758); a merge at recent times rewrites only the table's hot
+        tier (``writers.merge_upsert``). Both paths swap under the
+        generation token taken before the schema diff, so another
+        writer's commit after the diff fails the save with
+        ``ConcurrentWriteError``. Type changes or missing columns under
         ``policy=fail`` raise; under ``evolve``/``overwrite``
         they force a full overwrite (the reference asks interactively —
         :1991-2014 — which a batch engine must not do).
@@ -273,6 +277,7 @@ class FeatureStoreManager:
             partition_by=partition_by,
             update_columns=diff.new_columns or None,
             registry=_registry(spec),
+            _generation=generation,
         )
         return diff
 

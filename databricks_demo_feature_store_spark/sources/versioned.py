@@ -27,7 +27,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from databricks_demo_feature_store_spark.sources.writers import atomic_open
+from databricks_demo_feature_store_spark.sources.writers import atomic_open, link_or_copy
 
 MANIFEST = "_versions.json"
 COMMITS_DIR = "_commits"
@@ -47,10 +47,7 @@ def _link_tree(src: str, dst: str) -> int:
         for name in names:
             s = os.path.join(root, name)
             d = os.path.join(out_dir, name)
-            try:
-                os.link(s, d)
-            except OSError:
-                shutil.copy2(s, d)
+            link_or_copy(s, d)
             if not name.startswith(("_", ".")):
                 n += 1
     return n

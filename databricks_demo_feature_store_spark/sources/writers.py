@@ -36,6 +36,18 @@ the reference's Delta ``OPTIMIZE`` after every save
 defaultParallelism`` a table is one file. A partitioned layout keeps one
 file per partition directory, so there the rewrite cost is bounded by
 partitioning on the historical key.
+
+A merge into a table with a time key is file-scoped, like Delta's
+copy-on-write MERGE, which rewrites only the files holding a matched
+key. The table keeps two tiers in one flat directory: **cold** files
+hold the rows with time < ``hot_from`` and **hot** files hold the rest
+(the time is the registry's first ``timestamp_keys`` column). The tier
+record — column, ``hot_from``, hot file names — lives in the read-schema
+pin, so it is trusted exactly while the pin's file listing is current,
+and every other rewrite drops it. When the merge keys include the time
+and every batch row is at or after ``hot_from``, no batch key can match
+a cold row: the merge rewrites the hot files alone and hardlinks the
+cold ones into the new version (:func:`merge_upsert`).
 """
 
 from __future__ import annotations
@@ -48,8 +60,8 @@ import threading
 import uuid
 from collections.abc import Callable, Iterator, Sequence
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql.types import DataType, StructType, TimestampType
 
 from databricks_demo_feature_store_spark.sources.catalog import HAS_DELTA
 
@@ -163,6 +175,9 @@ def retry_on_conflict(fn, attempts: int = 3):
 
 
 _UNCHECKED = object()
+#: "take the generation token now" (a caller that read the table first
+#: passes the token it took before that read instead)
+_FRESH = object()
 #: serializes the generation check and the renames of every swap in this
 #: process, so threads committing to one table cannot both pass the check
 _SWAP_LOCK = threading.Lock()
@@ -256,6 +271,7 @@ def stage_and_swap(
     partition_by: Sequence[str] | None = None,
     sized: bool = True,
     registry: dict | None = None,
+    split: tuple | None = None,
 ) -> None:
     """Replace the table at ``path`` with ``df``: write it, and the
     ``registry`` sidecar when one is given (:func:`_write_sidecar`), to a
@@ -274,16 +290,39 @@ def stage_and_swap(
     partition. Coalesce only ever lowers the count, and a rewrite bigger
     than ``openCostInBytes × defaultParallelism`` keeps full write
     parallelism. An unknown estimate and a ``partition_by`` layout (one
-    file per partition directory already) write as planned."""
+    file per partition directory already) write as planned.
+
+    ``split`` — ``(column, bound)``, a parquet table only — writes the
+    rows with ``column < bound`` as cold files and the rest as hot
+    files, and records the tiers in the sidecar's pin."""
     if sized and not partition_by:
-        n = split_partitions(df)
-        if n is not None:
-            df = df.coalesce(n)
+        df = _sized(df)
+
+    def fill(staging: str) -> None:
+        tier = None
+        if split:
+            tier = _write_tiers(df, staging, *split)
+        else:
+            _write(df, staging, fmt, "overwrite", partition_by)
+        if registry is not None:
+            _write_sidecar(staging, registry, df.schema, tier)
+
+    _stage(path, generation, fill)
+
+
+def _sized(df: DataFrame) -> DataFrame:
+    n = split_partitions(df)
+    return df if n is None else df.coalesce(n)
+
+
+def _stage(path: str, generation, fill: Callable[[str], None]) -> None:
+    """Run ``fill`` on a new uniquely named staging sibling of ``path``,
+    then promote it with :func:`_swap_dirs` under ``generation``. If
+    ``fill`` raises, the staging directory is removed and the live table
+    is untouched."""
     staging = f"{path.rstrip('/')}__staging-{uuid.uuid4().hex[:12]}"
     try:
-        _write(df, staging, fmt, "overwrite", partition_by)
-        if registry is not None:
-            _write_sidecar(staging, registry, df.schema)
+        fill(staging)
     except BaseException:
         shutil.rmtree(staging.removeprefix("file:"), ignore_errors=True)
         raise
@@ -346,14 +385,19 @@ def read_sidecar(path: str) -> dict:
         return {}
 
 
-def _write_sidecar(directory: str, registry: dict, schema: StructType) -> None:
+def _write_sidecar(
+    directory: str, registry: dict, schema: StructType, tier: dict | None = None
+) -> None:
     """Write ``registry`` as ``directory``'s sidecar, with the read-schema
     pin of ``schema`` over the data files now in it (no pin for layouts
-    :func:`data_file_listing` skips)."""
+    :func:`data_file_listing` skips). The pin carries ``tier``, the tier
+    record of those files, when one is given; any other write drops it."""
     meta = {k: v for k, v in registry.items() if k != READ_SCHEMA_KEY}
     files = data_file_listing(directory)
     if files is not None:
         meta[READ_SCHEMA_KEY] = {"schema": schema.jsonValue(), "files": files}
+        if tier is not None:
+            meta[READ_SCHEMA_KEY]["tier"] = tier
     with atomic_open(os.path.join(directory, METADATA_FILE)) as fh:
         json.dump(meta, fh, indent=2, sort_keys=True)
 
@@ -396,6 +440,8 @@ def rewrite_table(
     partition_by: Sequence[str] | None = None,
     sized: bool = True,
     registry: dict | None = None,
+    split: tuple | None = None,
+    _generation=_FRESH,
 ) -> bool:
     """Replace the table at ``path`` with ``build(current)``, where
     ``current`` is its live rows (:func:`read_table`). In order: take the
@@ -403,15 +449,18 @@ def rewrite_table(
     staging sibling, swap under the token (:func:`stage_and_swap`). The
     sidecar is ``registry``, or the live one when ``registry`` is None
     (none when the table has none); its read-schema pin is always
-    recomputed for the written files. Deletion vectors and stats
-    sidecars do not survive: the deletes are baked into the rewrite.
+    recomputed for the written files, with a tier record only when
+    ``split`` (:func:`stage_and_swap`) writes tiers. Deletion vectors and
+    stats sidecars do not survive: the deletes are baked into the
+    rewrite. ``_generation`` is a token the caller took before its own
+    read of the table.
 
     Returns False, writing nothing, when the table does not exist — the
     read's path-miss ``AnalysisException``; callers with a bootstrap
     write it themselves. Errors from ``build`` propagate."""
     from pyspark.errors import AnalysisException
 
-    generation = table_generation(path)
+    generation = table_generation(path) if _generation is _FRESH else _generation
     live = read_sidecar(path)
     try:
         current = read_table(spark, path, fmt, live)
@@ -420,9 +469,129 @@ def rewrite_table(
     if registry is None and live:
         registry = live
     stage_and_swap(
-        build(current), path, fmt, generation, partition_by, sized, registry
+        build(current), path, fmt, generation, partition_by, sized, registry, split
     )
     return True
+
+
+def link_or_copy(src: str, dst: str) -> None:
+    """Hardlink ``src`` to ``dst``; copy it (keeping its mtime) where a
+    link cannot be made, e.g. across devices. Safe for immutable data
+    files only: nothing ever writes through either name."""
+    try:
+        os.link(src, dst)
+    except OSError:
+        shutil.copy2(src, dst)
+
+
+def _move_file(src_dir: str, name: str, dst_dir: str, new_name: str, link: bool = False) -> None:
+    """Move (or with ``link``, hardlink) data file ``name`` and its Hadoop
+    ``.crc`` checksum, when it has one, to ``dst_dir/new_name``."""
+    move = link_or_copy if link else os.rename
+    move(os.path.join(src_dir, name), os.path.join(dst_dir, new_name))
+    crc = os.path.join(src_dir, f".{name}.crc")
+    if os.path.exists(crc):
+        move(crc, os.path.join(dst_dir, f".{new_name}.crc"))
+
+
+# the bound of a tier split as the tier record stores it: epoch
+# microseconds for an instant, so no session time zone can shift it;
+# the value's string form for every other type
+def _to_bound(c: Column, dtype: DataType) -> Column:
+    return F.unix_micros(c) if isinstance(dtype, TimestampType) else c.cast("string")
+
+
+def _from_bound(bound, dtype: DataType) -> Column:
+    if isinstance(dtype, TimestampType):
+        return F.timestamp_micros(F.lit(bound))
+    return F.lit(bound).cast(dtype)
+
+
+_HOT_COLUMN = "__tier_hot"
+
+
+def _write_tiers(df: DataFrame, staging: str, column: str, bound) -> dict:
+    """Write ``df`` to ``staging`` in one job: rows with ``column <
+    bound`` as cold files, the rest (NULL times too) as hot files. The
+    job writes the two tiers to partition directories, whose files then
+    move up into the flat table directory. Returns the tier record."""
+    below = F.col(column) < _from_bound(bound, df.schema[column].dataType)
+    df.withColumn(_HOT_COLUMN, ~F.coalesce(below, F.lit(False))).write.mode(
+        "overwrite"
+    ).partitionBy(_HOT_COLUMN).parquet(staging)
+    staging = staging.removeprefix("file:")
+    hot = []
+    for value in ("false", "true"):
+        part = os.path.join(staging, f"{_HOT_COLUMN}={value}")
+        for name in os.listdir(part) if os.path.isdir(part) else ():
+            if name.startswith(("_", ".")):
+                continue
+            # both tiers of one write task carry the same file name
+            new_name = f"hot-{name}" if value == "true" else name
+            _move_file(part, name, staging, new_name)
+            if value == "true":
+                hot.append(new_name)
+        shutil.rmtree(part, ignore_errors=True)
+    return {"column": column, "hot_from": bound, "hot": sorted(hot)}
+
+
+class _BelowHotTier(Exception):
+    """A batch row is older than the hot tier; ``bound`` is the batch's
+    lowest time, where the whole-table rewrite re-splits."""
+
+    def __init__(self, bound):
+        super().__init__(bound)
+        self.bound = bound
+
+
+def _merge_hot_tier(
+    df: DataFrame,
+    path: str,
+    keys: list[str],
+    pin: dict,
+    registry: dict,
+    generation,
+) -> None:
+    """Merge ``df`` into the hot files of the table at ``path`` (tier
+    record ``pin["tier"]``): the new hot file is ``(hot ⟕anti df) ∪ df``,
+    the cold files are hardlinked beside it, and the staging directory is
+    promoted under ``generation``. The batch's time bound is observed on
+    the batch branch of the same write job; a row below ``hot_from``
+    discards the staging directory and raises :class:`_BelowHotTier`."""
+    spark = df.sparkSession
+    tier = pin["tier"]
+    schema = StructType.fromJson(pin["schema"])
+    c, dtype = F.col(tier["column"]), schema[tier["column"]].dataType
+    if tier["hot"]:
+        hot = spark.read.schema(schema).parquet(*[os.path.join(path, f) for f in tier["hot"]])
+    else:
+        hot = spark.createDataFrame([], schema)
+    obs = Observation(f"hot-tier-{uuid.uuid4().hex}")
+    batch = df.observe(
+        obs,
+        F.count_if(c < _from_bound(tier["hot_from"], dtype)).alias("below"),
+        F.min(_to_bound(c, dtype)).alias("low"),
+    )
+    merged = _sized(
+        hot.join(df.select(*keys), on=keys, how="left_anti").unionByName(
+            batch, allowMissingColumns=True
+        )
+    )
+    live = path.removeprefix("file:")
+
+    def fill(staging: str) -> None:
+        # write first: the write's overwrite mode would remove the links
+        _write(merged, staging, "parquet", "overwrite", None)
+        seen = obs.get
+        if seen["below"]:
+            raise _BelowHotTier(seen["low"])
+        new_hot = [name for name, _size in data_file_listing(staging)]
+        for name, _size in pin["files"]:
+            if name not in tier["hot"]:
+                _move_file(live, name, staging.removeprefix("file:"), name, link=True)
+        _write_sidecar(staging, registry, merged.schema, {**tier, "hot": new_hot})
+
+    _stage(path, generation, fill)
 
 
 def save_table(
@@ -569,10 +738,14 @@ def merge_upsert(
     partition_by: Sequence[str] | None = None,
     update_columns: Sequence[str] | None = None,
     registry: dict | None = None,
+    _generation=_FRESH,
 ) -> None:
     """Upsert ``df`` into the table at ``path`` keyed on ``keys``. The
     table keeps its sidecar, or takes ``registry`` when given (the
-    feature-store manager's metadata).
+    feature-store manager's metadata). ``_generation`` is the
+    :func:`table_generation` token of a caller that read the table before
+    the merge (the manager's schema diff): a commit after it fails the
+    merge with :class:`ConcurrentWriteError`.
 
     Delta path: ``DeltaTable.merge`` with ``whenMatchedUpdate`` (restricted
     to ``update_columns`` when given, matching the reference's
@@ -584,6 +757,24 @@ def merge_upsert(
     matched rows keep their old values except the listed columns
     (reference semantics for schema-evolution merges). A missing table is
     bootstrapped with ``df``.
+
+    Tiers (see the module docstring). When the registry's first
+    ``timestamp_keys`` column ``t`` is a merge key, the merge touches only
+    the hot tier: the new hot file is ``(hot ⟕anti df) ∪ df``, read from
+    the hot files with the pinned schema, and the cold files are
+    hardlinked into the staging directory. The batch's lowest ``t`` is
+    observed on the batch branch of that write job; if a batch row is
+    older than ``hot_from``, the staging directory is discarded and the
+    whole table is rewritten, re-split at that time. The whole table is
+    also rewritten, split at the batch's lowest ``t`` (one aggregation
+    job over the batch), when there is no trusted tier record (the first
+    merge after an overwrite, or an outside write), when deletion vectors
+    are pending, when ``update_columns`` is set or the batch's columns do
+    not match the pinned ones (one schema for every file), and when the
+    hot files hold more bytes than the cold ones, which keeps a lagging
+    ``hot_from`` from growing the hot tier without bound. Without such a
+    ``t``, with ``partition_by``, or for another format, the merge is the
+    plain whole-table rewrite with no tiers.
     """
     spark = df.sparkSession
     keys = list(keys)
@@ -628,12 +819,54 @@ def merge_upsert(
             unmatched_new, allowMissingColumns=True
         )
 
+    generation = table_generation(path) if _generation is _FRESH else _generation
+    live = read_sidecar(path)
+    meta = live if registry is None else registry
+    column = (meta.get("timestamp_keys") or [None])[0]
+    split = None
+    exists = os.path.isdir(path.removeprefix("file:"))
+    if column in keys and fmt == "parquet" and not partition_by and exists:
+        pin = live.get(READ_SCHEMA_KEY) or {}
+        if not update_columns and _hot_tier_fits(path, pin, column, df.schema):
+            try:
+                _merge_hot_tier(df, path, keys, pin, meta, generation)
+                return
+            except _BelowHotTier as below:
+                low = below.bound
+        else:
+            dtype = df.schema[column].dataType
+            low = df.agg(F.min(_to_bound(F.col(column), dtype))).first()[0]
+        if low is not None:  # None: no batch row has a time
+            split = (column, low)
+
     if not rewrite_table(
-        spark, path, fmt, build, partition_by=partition_by, registry=registry
+        spark, path, fmt, build, partition_by=partition_by, registry=registry,
+        split=split, _generation=generation,
     ):
         _write(df, path, fmt, "overwrite", partition_by)
         if registry is not None:
             _write_sidecar(path, registry, df.schema)
+
+
+def _hot_tier_fits(path: str, pin: dict, column: str, schema: StructType) -> bool:
+    """May a merge of a batch with ``schema`` rewrite only the hot tier of
+    the table at ``path``? Only while the pin's tier record on ``column``
+    describes the live files, no deletion vector is pending, every batch
+    column has its pinned type, and the hot files are no bigger than the
+    cold ones."""
+    from databricks_demo_feature_store_spark.sources.deletion_vectors import dv_path
+
+    tier, p = pin.get("tier"), path.removeprefix("file:")
+    if not tier or tier["column"] != column or os.path.isdir(dv_path(p)):
+        return False
+    if data_file_listing(p) != pin["files"]:
+        return False
+    pinned = {f.name: f.dataType for f in StructType.fromJson(pin["schema"]).fields}
+    if any(pinned.get(f.name) != f.dataType for f in schema.fields):
+        return False
+    sizes = dict(map(tuple, pin["files"]))
+    hot = sum(sizes[name] for name in tier["hot"])
+    return hot <= sum(sizes.values()) - hot
 
 
 def compact(

@@ -90,6 +90,8 @@ SLOW_TESTS = {
     "test_index_maintenance_merged_equals_rebuilt",
     "test_count_min_sketch_properties",
     "test_shallow_clone_zero_copy_and_independent_writes",
+    # fourth tranche: randomized store-level properties
+    "test_tiered_merge_matches_bruteforce",
 }
 
 

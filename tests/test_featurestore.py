@@ -720,13 +720,14 @@ def test_refresh_join_view_equals_recompute(spark):
     assert refresh_join_view(view, None, dim, on=("k", "k2"), replace_key="fid") is view
 
 
-@pytest.mark.parametrize("op", ["forget", "merge"])
+@pytest.mark.parametrize("op", ["forget", "merge", "hot_merge"])
 def test_forget_metadata_promoted_atomically(spark, tmp_path, monkeypatch, op):
     """Registry metadata rides in the staging directory, so the _swap_dirs
-    rename promotes data + primary_keys atomically, for a forget and for
-    a merge alike. A crash AT the swap leaves the live table and its
-    registry untouched while staging already holds the registry; a crash
-    right AFTER the swap leaves the new rows with their registry."""
+    rename promotes data + primary_keys atomically, for a forget, a merge
+    and a hot-tier merge alike. A crash AT the swap leaves the live table
+    and its registry (and tier record) untouched while staging already
+    holds the registry; a crash right AFTER the swap leaves the new rows
+    with their registry and a pin that describes them."""
     import os
 
     from databricks_demo_feature_store_spark.featurestore import forget_entities
@@ -738,16 +739,31 @@ def test_forget_metadata_promoted_atomically(spark, tmp_path, monkeypatch, op):
     from databricks_demo_feature_store_spark.sources import writers
 
     mgr = FeatureStoreManager(spark, str(tmp_path / "store"))
-    spec = FeatureTableSpec(name="ta", primary_keys=("uid",))
-    a = spark.createDataFrame([(1, 10.0), (2, 20.0)], "uid int, v double")
-    mgr.save(a, spec, mode="overwrite")
+    if op == "hot_merge":
+        spec = FeatureTableSpec(name="ta", primary_keys=("uid", "day"), timestamp_keys=("day",))
+        schema = "uid int, day int, v double"
+        # a cold tier well above the hot files' parquet footers, so the
+        # hot tier stays the smaller one
+        history = [(u, d, float(d)) for u in (1, 2) for d in range(1, 401)]
+        mgr.save(spark.createDataFrame(history, schema), spec, mode="overwrite")
+        # the first merge splits the table into a cold and a hot tier
+        mgr.save(spark.createDataFrame([(2, 401, 20.0)], schema), spec)
+        mgr.save(spark.createDataFrame([(2, 401, 21.0)], schema), spec)
+    else:
+        spec = FeatureTableSpec(name="ta", primary_keys=("uid",))
+        a = spark.createDataFrame([(1, 10.0), (2, 20.0)], "uid int, v double")
+        mgr.save(a, spec, mode="overwrite")
     meta = mgr.get_metadata("ta")
+    pin = mgr._sidecar("ta")[writers.READ_SCHEMA_KEY]
+    assert ("tier" in pin) == (op == "hot_merge")
 
     def run():
         if op == "forget":
             forget_entities(mgr, spark.createDataFrame([(2,)], "uid int"), "uid")
-        else:
+        elif op == "merge":
             mgr.save(spark.createDataFrame([(3, 30.0)], "uid int, v double"), spec)
+        else:
+            mgr.save(spark.createDataFrame([(3, 401, 30.0)], "uid int, day int, v double"), spec)
 
     def uids():
         return {r.uid for r in mgr.read("ta").collect()}
@@ -771,18 +787,28 @@ def test_forget_metadata_promoted_atomically(spark, tmp_path, monkeypatch, op):
     assert os.path.exists(os.path.join(staged["path"], METADATA_FILE))
     assert uids() == {1, 2}
     assert mgr.get_metadata("ta") == meta
+    assert mgr._sidecar("ta")[writers.READ_SCHEMA_KEY] == pin
 
     monkeypatch.setattr(writers, "_swap_dirs", crash_after_swap)
     with pytest.raises(RuntimeError, match="crash after swap"):
         run()
     assert uids() == ({1} if op == "forget" else {1, 2, 3})
     assert mgr.get_metadata("ta") == meta
+    new_pin = mgr._sidecar("ta")[writers.READ_SCHEMA_KEY]
+    assert new_pin["files"] == writers.data_file_listing(mgr.path("ta"))
+    if op == "hot_merge":
+        # only the hot file was rewritten; the cold one is the same file
+        assert new_pin["tier"]["hot_from"] == pin["tier"]["hot_from"]
+        assert new_pin["tier"]["hot"] != pin["tier"]["hot"]
+        cold = {n for n, _ in pin["files"]} - set(pin["tier"]["hot"])
+        assert cold and cold == {n for n, _ in new_pin["files"]} - set(new_pin["tier"]["hot"])
 
     # forget keeps propagating — primary_keys never got lost
     monkeypatch.setattr(writers, "_swap_dirs", real_swap)
     forget = spark.createDataFrame([(1,)], "uid int")
     audit = {r["table"]: r for r in forget_entities(mgr, forget, "uid").collect()}
-    assert audit["ta"]["key_matched"] is True and audit["ta"]["rows_deleted"] == 1
+    assert audit["ta"]["key_matched"] is True
+    assert audit["ta"]["rows_deleted"] == (400 if op == "hot_merge" else 1)
     assert mgr.get_metadata("ta") == meta
 
 
@@ -1251,3 +1277,278 @@ def test_deleted_rows_stay_deleted_through_reads_and_rewrites(spark, manager):
     audit = forget_entities(manager, forget, "pk_customer").collect()
     assert [(r["rows_after"], r["rows_deleted"]) for r in audit] == [(7, 1)]
     assert keys() == [0, 1, 2, 4, 6, 8, 9]
+
+
+def test_merge_detects_commit_after_schema_diff(spark, manager, monkeypatch):
+    """``save`` diffs the schema before it merges. Another writer that
+    commits in between (here: an overwrite that adds the batch's new
+    column) fails the merge with ``ConcurrentWriteError`` instead of
+    letting it apply an ``update_columns`` decision made against a schema
+    that is gone; the retry diffs the new table and upserts every column."""
+    from databricks_demo_feature_store_spark.sources.writers import (
+        ConcurrentWriteError,
+        retry_on_conflict,
+    )
+
+    day = dt.date(2024, 1, 1)
+    manager.save(_df(spark, [(1, day, 1.0), (2, day, 2.0)]), SPEC, mode="overwrite")
+    batch = _df(spark, [(1, day, 11.0), (3, day, 3.0)]).withColumn("f2", F.col("f1") * 10)
+    real = FeatureStoreManager.validate_schema
+    committed = []
+
+    def racing(self, name, df):
+        diff = real(self, name, df)
+        if not committed:
+            committed.append(True)
+            wider = _df(spark, [(1, day, 1.0), (2, day, 2.0)]).withColumn("f2", F.lit(0.5))
+            self.save(wider, SPEC, mode="overwrite")
+        return diff
+
+    monkeypatch.setattr(FeatureStoreManager, "validate_schema", racing)
+    with pytest.raises(ConcurrentWriteError):
+        manager.save(batch, SPEC)
+    retry_on_conflict(lambda: manager.save(batch, SPEC))
+    got = {r.pk_customer: (r.f1, r.f2) for r in manager.read(SPEC.name).collect()}
+    assert got == {1: (11.0, 110.0), 2: (2.0, 0.5), 3: (3.0, 30.0)}
+
+
+# -- two-tier merges ----------------------------------------------------------
+
+MONTH = [dt.date(2024, m, 1) for m in range(1, 13)]
+
+
+def _parquet_frame(spark, tmp_path, rows, schema="pk_customer int, tpk_release_dt date, f1 double"):
+    """``rows`` read back from parquet: a frame whose size Catalyst knows,
+    like a landed batch, so rewrites are sized to one file per tier."""
+    import uuid
+
+    path = str(tmp_path / f"frame-{uuid.uuid4().hex[:8]}")
+    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def _tiers(manager, name):
+    """``(tier record, cold file names, hot file names)`` of a table."""
+    from databricks_demo_feature_store_spark.sources.writers import (
+        READ_SCHEMA_KEY,
+        data_file_listing,
+    )
+
+    pin = manager._sidecar(name)[READ_SCHEMA_KEY]
+    assert pin["files"] == data_file_listing(manager.path(name))
+    files, hot = {n for n, _ in pin["files"]}, set(pin["tier"]["hot"])
+    assert hot <= files
+    return pin["tier"], files - hot, hot
+
+
+def _times(spark, path, names):
+    rows = spark.read.parquet(*[f"{path}/{n}" for n in names]).select("tpk_release_dt").collect()
+    return {r[0] for r in rows}
+
+
+def _upsert(model: dict, rows) -> dict:
+    """(old ANTI JOIN batch) ∪ batch on (pk_customer, tpk_release_dt)."""
+    out = dict(model)
+    out.update({(k, t): v for k, t, v in rows})
+    return out
+
+
+def _as_model(manager, name) -> dict:
+    rows = manager.read(name).collect()
+    assert len(rows) == len({(r[0], r[1]) for r in rows})  # no duplicate key
+    return {(r[0], r[1]): r[2] for r in rows}
+
+
+def _tiered_store(spark, manager, tmp_path):
+    """60 customers × ten months, then the first merge (month 10 restated,
+    month 11 new), which splits the table at month 10."""
+    history = [(k, MONTH[m], float(k * 100 + m)) for k in range(60) for m in range(10)]
+    manager.save(_parquet_frame(spark, tmp_path, history), SPEC, mode="overwrite")
+    batch = [(k, MONTH[9], -1.0) for k in range(5)] + [(k, MONTH[10], 1.0) for k in range(5)]
+    manager.save(_parquet_frame(spark, tmp_path, batch), SPEC)
+    return _upsert({(k, t): v for k, t, v in history}, batch)
+
+
+def test_tiered_merge_rewrites_only_the_hot_file(spark, manager, tmp_path):
+    """The first merge after an overwrite leaves one cold and one hot
+    file, split at the batch's lowest time. A merge at or after
+    ``hot_from`` rewrites the hot file only: every cold file keeps its
+    inode and mtime, and the merge launches no more jobs than the
+    whole-table merge of the same batch into an untiered table."""
+    import dataclasses
+    import os
+    import time
+
+    model = _tiered_store(spark, manager, tmp_path)
+    path = manager.path(SPEC.name)
+    tier, cold, hot = _tiers(manager, SPEC.name)
+    assert len(cold) == 1 and len(hot) == 1
+    assert max(_times(spark, path, cold)) < MONTH[9] <= min(_times(spark, path, hot))
+    assert _as_model(manager, SPEC.name) == model
+
+    def stat(names):
+        return {n: (os.stat(f"{path}/{n}").st_ino, os.stat(f"{path}/{n}").st_mtime_ns) for n in names}
+
+    cold_before = stat(cold)
+    batch = [(k, MONTH[9], -2.0) for k in range(5, 10)] + [(k, MONTH[11], 2.0) for k in range(5)]
+    frame = _parquet_frame(spark, tmp_path, batch)
+    frame.columns
+    before = _jobs(spark)
+    manager.save(frame, SPEC)
+    time.sleep(0.5)  # job events reach the status tracker asynchronously
+    tiered_jobs = len(_jobs(spark) - before)
+    new_tier, new_cold, new_hot = _tiers(manager, SPEC.name)
+    assert new_tier["hot_from"] == tier["hot_from"]
+    assert stat(new_cold) == cold_before
+    assert len(new_hot) == 1 and new_hot != hot
+    assert _as_model(manager, SPEC.name) == _upsert(model, batch)
+
+    # the same merge through the untiered whole-table rewrite
+    plain = dataclasses.replace(SPEC, name="plain", timestamp_keys=())
+    manager.save(manager.read(SPEC.name), plain, mode="overwrite")
+    manager.save(_parquet_frame(spark, tmp_path, batch[:3]), plain)
+    frame = _parquet_frame(spark, tmp_path, batch)
+    frame.columns
+    before = _jobs(spark)
+    manager.save(frame, plain)
+    time.sleep(0.5)
+    assert tiered_jobs <= len(_jobs(spark) - before)
+
+
+def test_tiered_merge_below_hot_from_resplits(spark, manager, tmp_path):
+    """A batch row older than ``hot_from`` could match a cold row: the
+    merge falls back to the whole table and re-splits at that row."""
+    model = _tiered_store(spark, manager, tmp_path)
+    path = manager.path(SPEC.name)
+    _tier, cold, _hot = _tiers(manager, SPEC.name)
+    batch = [(3, MONTH[4], -5.0), (70, MONTH[10], 7.0)]
+    manager.save(_parquet_frame(spark, tmp_path, batch), SPEC)
+    tier, new_cold, new_hot = _tiers(manager, SPEC.name)
+    assert new_cold and not new_cold & cold
+    assert max(_times(spark, path, new_cold)) < MONTH[4] <= min(_times(spark, path, new_hot))
+    assert _as_model(manager, SPEC.name) == _upsert(model, batch)
+
+
+@pytest.mark.parametrize("outside", ["append", "delete", "new_column"])
+def test_tiered_merge_falls_back_after_outside_writes(spark, manager, tmp_path, outside):
+    """A write the tier record does not describe — a plain append (the
+    listing changes), a pending deletion vector, a merge that adds a
+    column — makes the next merge rewrite the whole table, which equals
+    ``(old ANTI JOIN batch) ∪ batch`` and leaves a valid tier record."""
+    from databricks_demo_feature_store_spark.sources.deletion_vectors import (
+        delete_rows,
+    )
+
+    model = _tiered_store(spark, manager, tmp_path)
+    path = manager.path(SPEC.name)
+    _tier, cold, _hot = _tiers(manager, SPEC.name)
+    batch = [(k, MONTH[9], -3.0) for k in range(10, 15)] + [(k, MONTH[11], 3.0) for k in range(3)]
+    frame = _parquet_frame(spark, tmp_path, batch)
+    if outside == "append":
+        extra = [(k, MONTH[10], 9.0) for k in range(200, 204)]
+        _parquet_frame(spark, tmp_path, extra).write.mode("append").parquet(path)
+        model = _upsert(model, extra)
+    elif outside == "delete":
+        assert delete_rows(spark, path, "pk_customer = 30") == 10
+        model = {key: v for key, v in model.items() if key[0] != 30}
+    else:
+        frame = frame.withColumn("f2", F.col("f1") * 2)
+    manager.save(frame, SPEC)
+    _tier, new_cold, _new_hot = _tiers(manager, SPEC.name)
+    assert new_cold and not new_cold & cold  # the cold tier was rewritten
+    if outside == "new_column":
+        # matched rows keep their other columns and take the new one
+        got = {(r[0], r[1]): (r.f1, r.f2) for r in manager.read(SPEC.name).collect()}
+        batch_keys = {(k, t) for k, t, _ in batch}
+        expected = {key: (v, None) for key, v in model.items()}
+        expected.update({(k, t): (model.get((k, t), v), 2 * v) for k, t, v in batch})
+        assert got == expected and batch_keys <= set(got)
+    else:
+        assert _as_model(manager, SPEC.name) == _upsert(model, batch)
+
+
+def test_tiered_merge_matches_bruteforce(spark, manager, tmp_path, monkeypatch):
+    """Random sequences of merges above, straddling and below ``hot_from``
+    with restated and new keys, interleaved with forget_entities,
+    compaction and an outside append: after every step Spark's
+    ``manager.read``, DuckDB's ``read_parquet('path/*.parquet')`` and a
+    dict model hold the same rows."""
+    import random
+
+    import duckdb
+
+    from databricks_demo_feature_store_spark.featurestore import forget_entities
+    from databricks_demo_feature_store_spark.sources import writers
+
+    rng = random.Random(7)
+    path = manager.path(SPEC.name)
+    hot_merges = {"committed": 0, "below": 0}
+    real = writers._merge_hot_tier
+
+    def counting(*args):
+        try:
+            real(*args)
+        except writers._BelowHotTier:
+            hot_merges["below"] += 1
+            raise
+        hot_merges["committed"] += 1
+
+    monkeypatch.setattr(writers, "_merge_hot_tier", counting)
+    day0 = dt.date(2024, 1, 1)
+
+    def day(i):
+        return day0 + dt.timedelta(days=i)
+
+    model = {(k, day(d)): float(k * 1000 + d) for k in range(40) for d in range(30)}
+    rows = [(k, t, v) for (k, t), v in model.items()]
+    manager.save(_parquet_frame(spark, tmp_path, rows), SPEC, mode="overwrite")
+    next_key = 40
+    ops = ["above"] * 6 + ["straddle"] * 3 + ["below"] * 2 + ["forget", "compact", "append"]
+
+    for step in range(24):
+        op = rng.choice(ops)
+        tier = manager._sidecar(SPEC.name)[writers.READ_SCHEMA_KEY].get("tier")
+        # the first day of the hot tier, or where a first merge would split
+        lo_day = (dt.date.fromisoformat(tier["hot_from"]) - day0).days if tier else 25
+        if op in ("above", "straddle", "below"):
+            lo, hi = {
+                "above": (lo_day, lo_day + 6),
+                "straddle": (lo_day - 4, lo_day + 4),
+                "below": (max(0, lo_day - 12), max(1, lo_day - 1)),
+            }[op]
+            batch = {}
+            for _ in range(rng.randint(1, 8)):
+                d = rng.randint(max(0, lo), max(0, hi))
+                if rng.random() < 0.3:
+                    k, next_key = next_key, next_key + 1
+                else:
+                    k = rng.randrange(next_key)
+                batch[(k, day(d))] = float(step * 10_000 + rng.randint(0, 999))
+            manager.save(
+                _parquet_frame(spark, tmp_path, [(k, t, v) for (k, t), v in batch.items()]),
+                SPEC,
+            )
+            model.update(batch)
+        elif op == "forget":
+            k = rng.randrange(next_key)
+            forget_entities(manager, spark.createDataFrame([(k,)], "pk_customer int"), "pk_customer")
+            model = {key: v for key, v in model.items() if key[0] != k}
+        elif op == "compact":
+            writers.compact(spark, path)
+        else:
+            extra = {(next_key, day(rng.randint(0, 40))): float(step)}
+            next_key += 1
+            _parquet_frame(
+                spark, tmp_path, [(k, t, v) for (k, t), v in extra.items()]
+            ).write.mode("append").parquet(path)
+            model.update(extra)
+
+        got = {(r[0], r[1]): r[2] for r in manager.read(SPEC.name).collect()}
+        duck = duckdb.sql(
+            f"SELECT pk_customer, tpk_release_dt, f1 FROM read_parquet('{path}/*.parquet')"
+        ).fetchall()
+        assert len(duck) == len(model), (step, op)
+        assert got == model, (step, op)
+        assert {(k, t): v for k, t, v in duck} == model, (step, op)
+    # both outcomes of a hot-tier attempt were exercised
+    assert hot_merges["committed"] >= 3 and hot_merges["below"] >= 1, hot_merges

@@ -55,6 +55,7 @@ _WRITERS_SLOW = [
     "tests/test_catalog.py::test_concurrent_staged_swap_raises_no_lost_update",
     "tests/test_catalog.py::test_append_skips_incremental_refresh_when_compaction_trips",
     "tests/test_index_store.py::test_partitioned_layout_merged_equals_rebuilt",
+    "tests/test_featurestore.py::test_tiered_merge_matches_bruteforce",
 ]
 # library module -> the slow tests that must pass whenever it changes
 SLOW_GUARDS = {
@@ -64,6 +65,7 @@ SLOW_GUARDS = {
         "tests/test_featurestore.py::test_forget_entities_propagates_and_is_idempotent",
         "tests/test_index_store.py::test_partitioned_layout_merged_equals_rebuilt",
         "tests/test_index_store.py::test_index_maintenance_merged_equals_rebuilt",
+        "tests/test_featurestore.py::test_tiered_merge_matches_bruteforce",
     ],
     "databricks_demo_feature_store_spark/sources/writers.py": _WRITERS_SLOW,
     "databricks_demo_feature_store_spark/sources/deletion_vectors.py": _WRITERS_SLOW,
