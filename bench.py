@@ -6,6 +6,11 @@ JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 Each query is executed to completion through the noop sink (full plan runs,
 nothing is collected to the driver — measures engine throughput, not
 toPandas serialization).
+
+A complete sf0.1 sweep at ``RECORD_CPUS`` cores appends its per-query map
+to BENCH_SWEEP.json's ``recent_sweeps`` (the last 3 are kept) and rewrites
+BENCH_FULL.json as their per-query minimum, the standing record. No other
+run writes either file.
 """
 
 from __future__ import annotations
@@ -16,7 +21,12 @@ import re
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
+
+# BENCH_FULL.json / BENCH_SWEEP.json hold sweeps at this core count only:
+# a sweep at another count (the scaling arm) is not comparable with them.
+RECORD_CPUS = 32
 
 HEADLINE = [
     "q01_pricing_summary",
@@ -194,21 +204,64 @@ def _sweep_names(QUERIES) -> list[str]:
     ]
 
 
-def _record_cpus() -> tuple[int, int]:
-    """(current core count, record core count). Standing-record artifacts
-    (BENCH_FULL.json / BENCH_SWEEP.json) are only comparable at one core
-    count; round 14's driver ran the scaling arm at 8 cores and the
-    unconditional artifact writes polluted the rolling-record window with
-    an incomparable sweep (VERDICT r14 item 2)."""
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    record = int(os.environ.get("SPARK_GRAFT_BENCH_RECORD_CPUS", "32"))
-    return cpus, record
+def standing_record(
+    recent_sweeps: list[dict[str, float]], registered
+) -> dict[str, float]:
+    """The standing per-query record: the minimum over the last <= 3
+    complete sweeps, for names that are still registered."""
+    recent = recent_sweeps[-3:]
+    return {
+        q: min(s[q] for s in recent if q in s)
+        for q in sorted({q for s in recent for q in s})
+        if q in registered
+    }
+
+
+def _save_sweep(timings: dict[str, float], registered, sf: float, runs: int) -> None:
+    """Append a complete record-grade sweep to BENCH_SWEEP.json's
+    ``recent_sweeps`` and rewrite BENCH_FULL.json as their
+    ``standing_record``."""
+    sweep_path = os.path.join(ROOT, "BENCH_SWEEP.json")
+    try:
+        with open(sweep_path) as fh:
+            recent = json.load(fh)["recent_sweeps"]
+    except (FileNotFoundError, KeyError, json.JSONDecodeError):
+        recent = []
+    recent = (recent + [timings])[-3:]
+    with open(sweep_path, "w") as fh:
+        json.dump(
+            {
+                "metric": "raw_sweep_wall_sec",
+                "value": round(sum(timings.values()), 3),
+                "queries": timings,
+                "recent_sweeps": recent,
+                "sf": sf,
+                "runs_per_query": runs,
+                "cpus": RECORD_CPUS,
+            },
+            fh,
+            indent=1,
+            sort_keys=True,
+        )
+    record = standing_record(recent, registered)
+    with open(os.path.join(ROOT, "BENCH_FULL.json"), "w") as fh:
+        json.dump(
+            {
+                "metric": "headline_queries_wall_sec",
+                "value": round(sum(record.values()), 3),
+                "unit": "sec",
+                "queries": record,
+                "sf": sf,
+                "runs_per_query": runs,
+            },
+            fh,
+            indent=1,
+            sort_keys=True,
+        )
 
 
 def _progress_path() -> str:
-    return os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_PROGRESS.json"
-    )
+    return os.path.join(ROOT, "BENCH_PROGRESS.json")
 
 
 def _orchestrate(sf_dir: str, sf: float | None) -> None:
@@ -222,7 +275,7 @@ def _orchestrate(sf_dir: str, sf: float | None) -> None:
     the artifact itself becomes the evidence. Children are sequential
     (parallel JVMs on one host would recreate the contention this
     removes) and write raw timings to a temp file; the parent merges,
-    maintains BENCH_FULL.json and prints the single driver line.
+    records a complete sweep and prints the single driver line.
 
     Timeout resilience (round 14 post-mortem: the driver's 32-core run
     hit its wall clock and rc=124 left ZERO evidence because all output
@@ -256,12 +309,12 @@ def _orchestrate(sf_dir: str, sf: float | None) -> None:
     chunk_size = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_CHUNK", "50")))
     timings: dict[str, float] = {}
     runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
-    cpus, record_cpus = _record_cpus()
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     budget_env = os.environ.get("SPARK_GRAFT_BENCH_BUDGET_SEC")
     budget = (
         float(budget_env)
         if budget_env
-        else 1800.0 * (max(record_cpus, cpus) / max(1, cpus)) ** 0.5
+        else 1800.0 * (max(RECORD_CPUS, cpus) / max(1, cpus)) ** 0.5
     )
     t_start = time.time()
     chunks = [names[i : i + chunk_size] for i in range(0, len(names), chunk_size)]
@@ -397,60 +450,19 @@ def _orchestrate(sf_dir: str, sf: float | None) -> None:
     signal.signal(signal.SIGINT, signal.SIG_DFL)
     complete = not skipped
     if complete and not degraded:
-        # full evidence lands in BENCH_SWEEP/BENCH_FULL; a degraded or
-        # partial sweep keeps BENCH_PROGRESS.json as its raw map — the
-        # record artifacts skip it by design, so deleting progress too
-        # would leave the run with no per-query evidence at all
+        # a degraded or partial sweep keeps BENCH_PROGRESS.json as its
+        # raw map — the record skips it by design, so deleting progress
+        # too would leave the run with no per-query evidence at all
         try:
             os.unlink(_progress_path())
         except FileNotFoundError:
             pass
-    # Raw sweep artifact: BENCH_FULL.json keeps standing MINIMA, which
-    # hides what THIS sweep actually measured — persist the un-merged map
-    # so the tail-inflation audit (sweep value / standing record) is
-    # computable from committed artifacts. Written ONLY here (full
-    # sweeps): a targeted SPARK_GRAFT_BENCH_ONLY re-measure must not
-    # clobber the suite-wide evidence with its handful of names. Guarded
-    # on the record core count AND on completeness at full min-of-N: a
-    # scaling-arm run (8 cores) or a budget-degraded sweep is not
-    # comparable with the rolling-record window (VERDICT r14 item 2).
-    if sf == 0.1 and cpus == record_cpus and complete and not degraded and not limit:
-        sweep_path = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "BENCH_SWEEP.json"
-        )
-        # Rolling-window records (VERDICT r13 task 8): all-time minima in
-        # BENCH_FULL.json drift ever-further below reality as rounds
-        # accumulate (r13 sweep median 1.13 vs all-time on HEALTHY plans —
-        # old lucky timings, not plan regressions). Keep the last 3 full
-        # sweeps' raw maps and publish their per-query MIN as the
-        # rolling record; the "2x of baseline" ratchet should read the
-        # rolling column so it stays a signal about plans.
-        prev_sweeps: list[dict[str, float]] = []
-        try:
-            with open(sweep_path) as fh:
-                prev = json.load(fh)
-            prev_sweeps = prev.get("recent_sweeps") or []
-            if not prev_sweeps and prev.get("queries"):
-                prev_sweeps = [prev["queries"]]
-        except Exception:
-            pass
-        recent = (prev_sweeps + [timings])[-3:]
-        with open(sweep_path, "w") as fh:
-            json.dump(
-                {
-                    "metric": "raw_sweep_wall_sec",
-                    "value": round(sum(timings.values()), 3),
-                    "queries": timings,
-                    "recent_sweeps": recent,
-                    "sf": sf,
-                    "runs_per_query": runs,
-                    "cpus": cpus,
-                },
-                fh,
-                indent=1,
-                sort_keys=True,
-            )
-    _finalize(timings, QUERIES, sf, runs, notes=notes, partial=not complete)
+    # Only a complete min-of-N sweep at the benchmark scale and the record
+    # core count joins the record: a scaling-arm run, a budget-degraded or
+    # partial sweep, or a LIMIT smoke is not comparable with it.
+    if sf == 0.1 and cpus == RECORD_CPUS and complete and not degraded and not limit:
+        _save_sweep(timings, QUERIES, sf, runs)
+    _print_line(timings, sf, runs, partial=not complete, notes=notes)
 
 
 def main() -> None:
@@ -458,10 +470,11 @@ def main() -> None:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
 
-    # targeted re-measure (standing-record protocol): run only the named
-    # queries, e.g. SPARK_GRAFT_BENCH_ONLY=q_ext_dsir_weights,q_pagerank
+    # targeted re-measure: run only the named queries in this process,
+    # e.g. SPARK_GRAFT_BENCH_ONLY=q_ext_dsir_weights,q_pagerank. It prints
+    # its line and writes no record; full sweeps run as fresh-JVM chunks.
     only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
-    if not only and os.environ.get("SPARK_GRAFT_BENCH_FORK", "1") != "0":
+    if not only:
         _orchestrate(sf_dir, sf)
         return
 
@@ -469,14 +482,11 @@ def main() -> None:
 
     QUERIES = _register_all()
 
+    names = [n.strip() for n in only.split(",") if n.strip()]
+    missing = [n for n in names if n not in QUERIES]
+    if missing:
+        raise SystemExit(f"unknown bench queries: {missing}")
     spark = get_spark("bench")
-    names = _sweep_names(QUERIES)
-    if only:
-        wanted = [n.strip() for n in only.split(",") if n.strip()]
-        missing = [n for n in wanted if n not in QUERIES]
-        if missing:
-            raise SystemExit(f"unknown bench queries: {missing}")
-        names = wanted
 
     # warm the JVM + parquet footers so per-query numbers measure the
     # query, not first-touch overheads. Two rounds: a fresh chunk JVM's
@@ -520,98 +530,10 @@ def main() -> None:
             _flush_child()
     spark.sparkContext.setJobDescription(None)
 
-    # chunk-child mode (_orchestrate): hand raw timings to the parent and
-    # leave BENCH_FULL bookkeeping + the driver line to it
-    if out_path:
-        spark.stop()
-        return
-
-    _finalize(timings, QUERIES, sf, runs)
     spark.stop()
-
-
-def _finalize(
-    timings: dict[str, float],
-    QUERIES,
-    sf: float | None,
-    runs: int,
-    notes: list[str] | None = None,
-    partial: bool = False,
-) -> None:
-    # The driver captures only the LAST ~2000 characters of stdout and
-    # json-parses them; a per-query map over the full 170+ query suite
-    # blew that window from round 4 on (BENCH_r{4..7}.json all recorded
-    # ``parsed: None``). Keep the printed line compact — total over the
-    # FULL benched suite plus the slowest queries (the ones a perf grade
-    # turns on) — and write the complete per-query map next to this
-    # script as BENCH_FULL.json for BASELINE.md bookkeeping.
-    full_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json"
-    )
-    full_timings = dict(timings)
-    # MERGE into the standing full map instead of clobbering it (same sf
-    # only): a targeted re-measure updates just its names, and a full
-    # headline run must not DROP the standing records of
-    # registered-but-not-headline queries (they were swept separately;
-    # losing them would blind the perf ratchet for those queries).
-    # Records for names no longer registered are dropped.
-    try:
-        with open(full_path) as fh:
-            prev = json.load(fh)
-        if prev.get("sf") == sf:
-            carried = {
-                q: t
-                for q, t in prev.get("queries", {}).items()
-                if q in QUERIES
-            }
-            # standing records are MINIMA: a noisy sweep must not inflate
-            # a query's record (the regression ratchet compares fresh runs
-            # against records — records themselves only ever tighten)
-            full_timings = {
-                q: min(t, carried[q]) if q in carried else t
-                for q, t in timings.items()
-            }
-            full_timings = {**carried, **full_timings}
-    except Exception:
-        pass
-    # Rolling record next to the all-time minima (VERDICT r13 task 8):
-    # per-query MIN over the last <=3 full sweeps, read from
-    # BENCH_SWEEP.json's recent_sweeps history. The "within 2x of
-    # baseline" ratchet should compare against queries_rolling3, not the
-    # ever-tightening all-time column — a 13-round-old lucky timing says
-    # nothing about today's plan.
-    rolling: dict[str, float] = {}
-    try:
-        with open(
-            os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_SWEEP.json")
-        ) as fh:
-            recent = json.load(fh).get("recent_sweeps") or []
-        rolling = {
-            q: min(s[q] for s in recent if q in s)
-            for q in {k for s in recent for k in s}
-            if q in QUERIES
-        }
-    except Exception:
-        pass
-    full = {
-        "metric": "headline_queries_wall_sec",
-        "value": round(sum(full_timings.values()), 3),
-        "unit": "sec",
-        "queries": full_timings,
-        "queries_rolling3": rolling,
-        "sf": sf,
-        "runs_per_query": runs,
-    }
-    # BENCH_FULL.json is the standing-record bookkeeping for BASELINE.md
-    # and is only meaningful at the benchmark scale AND core count — a
-    # sf0.001 smoke run (tools/gate.py step 4) or the driver's low-core
-    # scaling arm must not clobber it (VERDICT r14 item 2)
-    cpus, record_cpus = _record_cpus()
-    if sf == 0.1 and cpus == record_cpus:
-        with open(full_path, "w") as fh:
-            json.dump(full, fh, indent=1, sort_keys=True)
-
-    _print_line(timings, sf, runs, partial=partial, notes=notes)
+    # a chunk child hands its timings to the parent through its out file
+    if not out_path:
+        _print_line(timings, sf, runs)
 
 
 def _print_line(
@@ -630,7 +552,7 @@ def _print_line(
         "unit": "sec",
         "queries": top,
         "n_queries": len(timings),
-        "queries_note": "25 slowest shown; full per-query map in BENCH_FULL.json",
+        "queries_note": "25 slowest shown; full per-query map in BENCH_SWEEP.json",
         "sf": sf,
         "runs_per_query": runs,
     }
@@ -650,9 +572,9 @@ def _print_line(
             sorted(timings.items(), key=lambda kv: -kv[1])[:n_top]
         )
         line["queries_note"] = (
-            f"{n_top} slowest shown; full per-query map in BENCH_FULL.json"
+            f"{n_top} slowest shown; full per-query map in BENCH_SWEEP.json"
             if n_top
-            else "totals only; full per-query map in BENCH_FULL.json"
+            else "totals only; full per-query map in BENCH_SWEEP.json"
         )
         out = json.dumps(line)
     print(out)

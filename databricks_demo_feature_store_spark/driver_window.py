@@ -1,848 +1,46 @@
-"""Explicit ordering of the correctness-gate window.
+"""Which queries land in the driver's correctness window.
 
-The external driver checks the FIRST 50 registered queries against their
-DuckDB oracles (round 1 evidence: CORRECTNESS_r01.json covered exactly
-registration positions 1-50; everything later — all pipelines, streaming,
-validation, training-set, rollup — was silently unchecked).
-
-``DRIVER_WINDOW`` pins which 50 queries land in that window, independent of
-module import order. Selection policy:
-
-* End-to-end composites first (pipelines, training set, validation,
-  rollup, a representative streaming spread) — these are the queries whose
-  green driver row proves the engine, and they transitively exercise the
-  scalar/date/quality micro-operators demoted below.
-* One anchor per operator family stays in-window (joins, windows, aggs,
-  filters, sets, text/dedup/ANN/multimodal ops).
-* Demoted (still registered, still covered by the stricter local gate
-  ``tools/check_correctness.py`` which checks ALL queries): micro-coverage
-  queries whose operator is also exercised inside an in-window composite —
-  q03/q05/q06 (scan→join→agg shapes repeated by q01 + pipelines),
-  q_select_distinct, q_shift_date, q_months_between, q_na_standardize,
-  q_string_normalize, q_ratios_pct, q_categorize_binarize (all inside
-  q_feature_chain / q_pipeline_*), q_monthly_lags, q_lag_diff_roc,
-  q_rolling_stats (inside q_window_dispatch / q_rsi / q_pipeline_*),
-  q_top1_latest (trivial TakeOrdered), and (round 3) q_ext_frame_sample —
-  the multimodal mapInPandas surface stays anchored by
-  q_ext_multimodal_decode; its slot went to the fifth end-to-end pipeline
-  composite q_pipeline_payment_behavior.
-* Round-4 rotation: the round-3 operator families (lexical search,
-  winnowing fingerprints, decontamination, corpus cleaning, mixture
-  sampling, heavy hitters, and the cleaning→quality→dedup curation
-  composite) had NO in-window anchor. Seven micro-anchors rotate out to
-  make room, each with documented transitive cover: q_month_spine (inside
-  q_pipeline_demographic), q_filter_dict / q_filter_max_value (family
-  anchored by q_filter_fold + every pipeline's ingestion predicates),
-  q_native_pivot (pivot family: q_conditional_pivot +
-  q_pipeline_product_holdings), q_union_by_name (thin unionByName
-  wrapper), q_lags_ind (window family: q_window_dispatch, q_rsi, rolling
-  stats in three in-window pipelines; lag op itself inside
-  q_pipeline_customer_tx), q_ext_sessionize (session semantics anchored
-  by in-window q_stream_sessionize). Late-round swaps: q_ext_quality_score
-  → q_ext_lm_score (quality_score_col runs inside in-window
-  q_ext_curation_pipeline; the LM scorer is new machinery), and
-  q_ext_cosine_topk → q_ext_ann_recall (the recall query recomputes the
-  exact brute-force top-k as its ground-truth side, so the baseline stays
-  hash-checked while the index and the comparison gain coverage);
-  q_ext_frequent_items → q_pipeline_incremental (heavy hitters is one
-  plain agg+filter, its machinery anchored everywhere; the incremental
-  entity-refresh composite proves pipeline decomposability + the
-  entity-scoped replace writer against the full-recompute oracle).
-* Round-5 rotation: ten never-driver-checked (or newly-oracled) families
-  rotate IN — q_rolling_quantile, q_rolling_ewma (round-4 window ops),
-  q_ext_session_features, q_ext_dsir_weights, q_ext_dedup_keep_best (the
-  full near-dup resolution composite, post-perf-fix),
-  q_ext_corpus_roundtrip (JSONL ingestion), q_ext_semantic_dedup (full
-  Lloyd-replay oracle, new in round 5), q_ext_sketch_profile
-  (self-auditing sketch bounds, new oracle), q_gen_payment_golden (pinned
-  digest oracle), q_ext_paragraph_dedup (now non-vacuous span dedup).
-  Demoted with transitive cover: q_ext_lang_id + q_ext_fingerprint_dedup
-  (both run verbatim inside in-window q_ext_curation_pipeline via
-  lang_id_col / fingerprint_col + min-id groupBy; fingerprints also in
-  rotating-in q_ext_paragraph_dedup), q_ext_ngram_jaccard (the exact
-  candidate-jaccard verify runs inside in-window q_ext_minhash_dedup),
-  q_ext_ann_lsh (the same LSH index is the measured side of in-window
-  q_ext_ann_recall), q_ext_stratified_sample (sampling family anchored by
-  q_ext_token_mixture), q_anti_join (left-anti machinery inside
-  rotating-in q_ext_semantic_dedup and in-window q_ext_contamination),
-  q_val_profile (monitor family keeps 4 in-window anchors),
-  q_ext_text_stats (tokenization/length stats run inside q_ext_lm_score,
-  q_ext_bm25_topk and the curation quality score), q_conditional_pivot
-  (the SUM(CASE)+ind_* pivot is the core of in-window
-  q_pipeline_product_holdings), q_agg_dispatch (the same name-dispatch
-  allowlist backs in-window q_window_dispatch and every pipeline agg
-  step). Late round-5 additions — four families born THIS round rotate
-  straight in (q_ext_substring_dedup, q_ext_quality_classifier,
-  q_stream_distinct_sketch, q_fs_online_snapshot) — demoting, with
-  cover: q_filter_fold (AND-fold filters run in every in-window
-  pipeline's ingestion predicates and q_feature_chain), q_rsi (window
-  family holds q_window_dispatch + q_rolling_quantile/q_rolling_ewma +
-  rolling stats inside three in-window pipelines; RSI's gain/loss CASE
-  split is the q_feature_chain categorize algebra), q_val_dimension_drift
-  (monitor family keeps crosscheck/schema-cast/timetravel in-window; the
-  1-row global agg shape is also the in-window q_ext_sketch_profile),
-  q_ext_embedding_near_dup (cosine-threshold near-dup pairs run inside
-  in-window q_ext_semantic_dedup; the LSH blocking machinery is the
-  measured side of in-window q_ext_ann_recall). Final round-5 sweep —
-  four more new families in (q_ext_ivfpq_topk, the IVF-PQ capstone whose
-  coarse stage IS the IVF assignment; q_val_expectations;
-  q_target_encoding; q_fill_gaps_interpolate), demoting with cover:
-  q_ext_ann_ivf (assignment + probe selection run verbatim inside
-  in-window q_ext_ivfpq_topk and q_ext_semantic_dedup),
-  q_rolling_quantile (window family holds q_rolling_ewma,
-  q_window_dispatch and three pipelines' rolling stats in-window),
-  q_ext_winnowing + q_ext_repetition (fingerprint/analysis families
-  anchored in-window by q_ext_paragraph_dedup / q_ext_substring_dedup and
-  q_ext_lm_score / q_ext_curation_pipeline; both stay exact-checked by
-  the local full gate and pytest).
-* Round-6 rotation (VERDICT r5 task 1: drive the never-driver-checked
-  set through the window, round-5-born families first): twelve rotate
-  IN — q_funnel_steps + q_retention_cohorts (event analytics, new r5,
-  funnel re-planned r6 as the single-pass fold), q_quantile_bin (the r5
-  `weak`, re-planned r6 as the distributed global rank — the driver row
-  now certifies the fixed plan), q_bin_by_cutpoints (the fit-then-assign
-  companion), q_unpivot_melt, q_train_test_split,
-  q_feature_correlations, q_ext_pq_adc_topk (the exhaustive-ADC PQ
-  baseline next to in-window q_ext_ivfpq_topk), and the four streaming
-  holdouts q_stream_interval_join, q_stream_enrich, q_stream_sliding,
-  q_stream_feature_store. Demoted with transitive cover (all green in
-  ≥1 earlier driver round AND in the full local gate):
-  q_equi_join_left_wins + q_interval_join (join machinery runs inside
-  every in-window pipeline; the interval-join bucketing is the exact
-  batch twin of rotating-in q_stream_interval_join),
-  q_window_dispatch + q_rolling_ewma (window family keeps rolling stats
-  inside three in-window pipelines; the dispatch allowlist backs every
-  pipeline agg step), q_rollup_hierarchy (Expand+agg shape also planned
-  by the in-window pivot pipelines), q_ext_session_features (session
-  semantics anchored by in-window q_stream_sessionize; lag+cumsum by
-  the pipelines), q_ext_dsir_weights (hashed-feature + broadcast-model
-  machinery anchored by in-window q_ext_quality_classifier),
-  q_ext_corpus_roundtrip (r5 driver-green; the roundtrip reads with
-  id_field so the r6 salt change is outside its path — salting is
-  pytest-gated), q_ext_paragraph_dedup (span-dedup family anchored by
-  in-window q_ext_substring_dedup), q_ext_semantic_dedup (Lloyd/IVF
-  assignment runs inside in-window q_ext_ivfpq_topk; anti-join inside
-  q_ext_contamination), q_ext_sketch_profile (HLL machinery anchored by
-  in-window q_stream_distinct_sketch), q_ext_pii_scrub (cleaning regex
-  family runs inside in-window q_ext_curation_pipeline). Late round-6
-  additions — four families born THIS round rotate straight in:
-  q_val_psi_drift + q_val_ks_drift (distribution-drift monitoring; KS
-  exercises the new distributed prefix-sum primitive),
-  q_event_attribution (last-touch credit), q_ext_weighted_sample (Efraimidis-Spirakis weighted sampling — it
-  replays the portable-hash + distributed-global-rank machinery of
-  q_ext_exact_sample plus the E-S keys, so the simpler exact-k form
-  stays local-gated), q_event_transitions (Markov matrix over event
-  sequences), q_chi2_association (categorical association screen).
-  q_ext_pq_refined_topk supersedes q_ext_pq_adc_topk in-window: the
-  refined oracle replays seeding, encoding and the ADC fold of the
-  unrefined pipeline VERBATIM plus one full Lloyd iteration. Demoted
-  with cover, all r5-driver-green: q_val_expectations (contract rules
-  are two plain aggregates, pytest + local-gate checked; the monitor
-  family keeps crosscheck/schema-cast/timetravel in-window),
-  q_target_encoding (DECIMAL category agg + broadcast join-back — the
-  same shape as in-window q_fs_online_snapshot and the pipeline aggs),
-  q_fill_gaps_interpolate (window family keeps three pipelines' rolling
-  stats + the spine/sequence machinery of q_pipeline_demographic
-  in-window), q_ext_dedup_keep_best (its LSH→CC→argmax stages are
-  anchored by in-window q_ext_minhash_dedup + q_ext_dedup_clusters; the
-  r5 driver row proved the composite post-perf-fix),
-  q_gen_payment_golden (r5 driver-green pinned-digest oracle; its
-  round-6 exact-share change runs on attach_global_rank, which
-  in-window q_quantile_bin certifies), q_fs_online_snapshot (r5
-  driver-green; the max_by latest-row agg is the same shape as every
-  in-window pipeline's keep-latest step).
-* Round-7 rotation (VERDICT r6 task 1: burn down the 37 never-driver-
-  checked queries, round-6-born families first): fourteen rotate IN —
-  q_val_roc_auc (exact tie-aware Mann-Whitney over the distributed
-  prefix-sum primitive), q_val_calibration, q_val_threshold_metrics,
-  q_val_decile_lift (the model-evaluation family), q_stream_psi_drift +
-  q_stream_count_anomalies (streaming drift/volume monitors),
-  q_key_skew_profile, q_table_diff, q_scd2_intervals,
-  q_join_size_estimate (ops diagnostics family), q_mutual_information,
-  q_winsorize, q_event_decay, q_rank_normalize. Demoted with transitive
-  cover — ALL fourteen are round-6 driver-green (CORRECTNESS_r06) and
-  stay in the full local gate: q_funnel_steps + q_retention_cohorts +
-  q_event_transitions + q_event_attribution (event family keeps
-  rotating-in q_event_decay; per-user window/agg machinery runs inside
-  in-window q_stream_sessionize and every pipeline), q_val_psi_drift
-  (the PSI binning/EPS math runs verbatim inside rotating-in
-  q_stream_psi_drift via psi_by_group), q_val_ks_drift (its
-  attach_global_cumsum prefix-sum primitive is the core of rotating-in
-  q_val_roc_auc), q_quantile_bin (r6 row certified the fixed
-  distributed-rank plan; attach_global_rank also drives rotating-in
-  q_rank_normalize's percent_rank sibling and r6-green
-  q_ext_weighted_sample), q_bin_by_cutpoints (fit-broadcast-assign CASE
-  algebra = q_feature_chain; the exact-percentile fit runs inside
-  rotating-in q_winsorize), q_unpivot_melt (single stack projection,
-  pytest + local-gated), q_train_test_split (hash-split machinery =
-  sampling family anchored by in-window q_ext_token_mixture),
-  q_feature_correlations + q_chi2_association (the shared-scan
-  statistics shape is rotating-in q_mutual_information's plan),
-  q_ext_weighted_sample (E-S keys over attach_global_rank — the rank
-  primitive stays certified via q_rank_normalize; sampling family
-  anchored by q_ext_token_mixture), q_ext_pq_refined_topk (PQ/ADC
-  family anchored by in-window q_ext_ivfpq_topk; the Lloyd-replay
-  oracle stays in the full local gate).
-* Round-7 mid-round sweep (burn-down continues + three queries born
-  this round rotate straight in): twelve more swaps. IN —
-  q_pipeline_credit_native + q_pipeline_holdings_native (the two
-  native-schema notebook twins new this round), q_ext_simhash_pairs
-  (the 64-bit production-geometry blocking + verification, new this
-  round — supersedes the signatures-only check), and nine
-  never-driver-checked: q_ext_dedup_clusters_twophase (large/small-star
-  O(log n) CC), q_ext_ann_multiprobe, q_ext_tfidf_terms,
-  q_ext_contamination_bloom, q_ext_curate_corpus, q_val_freshness,
-  q_salted_join, q_rolling_quantile, q_ext_domain_cap. OUT, all
-  driver-green in >= 1 round with transitive cover: q_ext_simhash
-  (16-bit signatures are the low-60-bit projection of the machinery
-  q_ext_simhash_pairs now certifies end-to-end), q_ext_dedup_clusters
-  (min-label CC anchored by the rotating-in two-phase variant, which
-  shares the edge-touched-nodes contract; also inside in-window
-  q_ext_minhash_dedup's downstream usage), q_ext_ann_recall (the
-  recall query's measured side is the LSH index whose probing the
-  rotating-in multiprobe query exercises more deeply; brute-force
-  ground truth is r6-green), q_ext_bm25_topk (lexical family keeps
-  rotating-in q_ext_tfidf_terms; the BM25 fold shares its broadcast-idf
-  scan shape), q_ext_contamination (the exact shingle semi-join runs
-  verbatim inside rotating-in q_ext_contamination_bloom, which adds the
-  Bloom pre-filter on top), q_ext_curation_pipeline (the composed
-  verdict is rotating-in q_ext_curate_corpus's flow; the stage ops are
-  anchored by in-window q_ext_substring_dedup / q_ext_quality_classifier
-  and pytest), q_val_crosscheck (multi-round driver-green; the outer-join
-  count reconciliation shape is in-window q_table_diff's core),
-  q_stream_hourly (tumbling windows are the degenerate case of in-window
-  q_stream_sliding; the hourly-count finisher is certified by in-window
-  q_stream_count_anomalies), q_stream_dedup (watermarked
-  dropDuplicates is exercised by in-window q_stream_interval_join's
-  state machinery; r6-green), q_ext_lm_score (broadcast-model scoring
-  anchored by in-window q_ext_quality_classifier; bigram perplexity
-  stays exact-checked in the local gate + pytest), q_ext_token_mixture
-  (sampling family anchor passes to rotating-in q_ext_domain_cap +
-  r6-green q_ext_weighted_sample; the shard/mixture composition stays
-  local-gated), q_pipeline_incremental (r6-green composite; its
-  decomposability + entity-scoped replace writer are pytest-gated and
-  the pipeline machinery keeps five in-window composites). Late
-  round-7 sweep — two more families born this round rotate straight in:
-  q_ext_pack_sequences (concat-then-chunk sequence packing over the
-  distributed prefix sum) evicting q_val_schema_cast (multi-round
-  driver-green; the cast/rename schema rules are hash-certified by every
-  in-window q_pipeline_* schema match and the yyyy-MM-qq quarter parse
-  stays pytest- and local-gated), and q_ext_cross_corpus_dedup
-  (incremental batch-vs-corpus dedup with witness caps) evicting
-  q_stream_sessionize (driver-green r2-r6; session-window semantics
-  remain anchored by in-window q_stream_stateful_stats and the batch
-  sessionize twin in the full local gate).
-* Round-7 final sweep (three more queries born this round rotate
-  straight in + five never-driver-checked, continuing the burn-down):
-  eight swaps. IN — q_stream_ingest_dedup (streaming corpus ingestion
-  with incremental dedup, new this round), q_ext_hybrid_rrf (lexical +
-  vector Reciprocal Rank Fusion, new this round), q_ext_minhash_recall
-  (LSH-geometry recall self-evaluation, new this round), and five
-  never-checked: q_ext_pq_adc_topk, q_ext_ngram_jaccard_cutoff,
-  q_feature_scaling, q_ext_line_clean, q_robust_outliers. OUT, each
-  driver-green in >= 1 round with transitive cover:
-  q_stream_enrich (r6-green; the broadcast static-dim join runs inside
-  every in-window pipeline; the streaming family keeps stateful,
-  interval-join, feature-store sink, psi-drift, count-anomalies,
-  distinct-sketch plus rotating-in q_stream_ingest_dedup in-window),
-  q_stream_sliding (r6-green; windowed-agg machinery anchored by
-  in-window q_stream_count_anomalies' tumbling counts and
-  q_stream_psi_drift; the overlap enumeration stays local-gated),
-  q_pit_join (driver-green r2-r6; the PIT as-of join runs verbatim
-  inside in-window q_training_set's feature lookups and is
-  hypothesis-property-tested), q_ext_ivfpq_topk (r5+r6-green; its ADC
-  fold is exactly what rotating-in q_ext_pq_adc_topk certifies and the
-  coarse IVF assignment stays exact-checked in the full local gate),
-  q_ext_minhash_dedup (driver-green r2-r6; the signature+banding arm is
-  replayed verbatim inside rotating-in q_ext_minhash_recall and the
-  incremental variant inside in-window q_ext_cross_corpus_dedup; the
-  exact-Jaccard verify is shared with rotating-in
-  q_ext_ngram_jaccard_cutoff), q_feature_chain (driver-green r2-r6; its
-  math/ratio/CASE scalar algebra runs inside every in-window
-  q_pipeline_* composite; the functions family gains rotating-in
-  q_feature_scaling), q_ext_substring_dedup (r5+r6-green; span-dedup
-  stays exact-checked by the full local gate + pytest, and the
-  shingle/fingerprint machinery is shared with in-window
-  q_ext_simhash_pairs and rotating-in q_ext_ngram_jaccard_cutoff),
-  q_layer_roundtrip (r6-green; the layered catalog read/write machinery
-  is exercised in-window by q_val_timetravel_crosscheck's versioned
-  reads and q_stream_feature_store's foreachBatch upsert through the
-  same writers, plus tests/test_catalog.py).
-* Round-7 closing sweep (the eight operator families born AFTER the
-  final-sweep rotation go straight into their first gate): eight swaps.
-  IN - q_pagerank (iterative graph power iteration, checkpointed loop),
-  q_val_feature_screen (grouped Mann-Whitney over one global prefix
-  sum), q_ext_mmr_rerank (unrolled greedy diversity re-rank),
-  q_val_cusum (running-min reset identity, DECIMAL-exact alarms),
-  q_frequent_pairs (A-priori-pruned co-occurrence), q_ext_ndcg_eval
-  (exponential-gain ranking quality), q_name_linkage (blocked
-  Levenshtein linkage - first levenshtein() cross-engine parity check),
-  q_val_pr_auc (1e-12-unit DECIMAL floor-division AP). OUT, each
-  driver-green in >= 2 earlier rounds with transitive cover:
-  q_pipeline_supplier_risk + q_pipeline_product_holdings +
-  q_pipeline_demographic + q_pipeline_customer_tx (driver-green r2-r6;
-  their agg/pivot/spine/rolling machinery runs verbatim inside the
-  in-window native-schema supersets q_pipeline_credit_native /
-  q_pipeline_holdings_native plus q_pipeline_payment_behavior, and all
-  four stay exact-checked in the full local gate), q_stream_feature_store
-  (r6-green; the foreachBatch sink discipline is exercised in-window by
-  q_stream_ingest_dedup's batch-ingest upsert loop and merge_upsert is
-  exact-value pytest-covered), q_ext_curate_corpus (green r4-r6; a pure
-  composition of quality/lang/contamination scorers that remain
-  in-window via q_ext_contamination_bloom + q_ext_quality_classifier),
-  q_ext_dedup_clusters_twophase (green r6 + recursive-CTE oracle in the
-  local gate; the banding arm stays in-window via q_ext_minhash_recall
-  and the CC convergence property is pytest-anchored),
-  q_stream_distinct_sketch (green r5+r6; HLL sketch agg is a native
-  Spark function exact-checked against the DuckDB HLL twin in the local
-  gate).
-* Round-8 rotation (burn the never-driver-checked debt to ZERO): the 19
-  remaining queries that have never appeared in a CORRECTNESS gate plus
-  the two operators gated this round per ADVICE r7 (q_clustering_coeff,
-  q_ext_vocab_coverage) all rotate IN — q_backtest_folds,
-  q_ext_chunk_documents, q_ext_curate_corpus,
-  q_ext_dedup_clusters_twophase, q_ext_exact_sample,
-  q_ext_frequent_items, q_ext_pmi_collocations, q_ext_quantization_error,
-  q_ext_random_projection, q_ext_shuffle_shards, q_semi_join_exists,
-  q_stream_cusum, q_triangle_count, q_val_cohens_kappa,
-  q_val_count_anomalies, q_val_pit_leakage, q_val_pr_curve,
-  q_val_psi_numeric, q_zorder_key. After this window runs green, every
-  registered query is driver-gate-certified in >= 1 round. OUT — all 21
-  are round-7 driver-green (CORRECTNESS_r07 was 50/50) and stay in the
-  full local gate + pytest; transitive cover: q_frequent_pairs (its
-  A-priori edge build is replayed VERBATIM as the graph construction of
-  rotating-in q_triangle_count and q_clustering_coeff), q_val_cusum (the
-  cusum_from_counts finisher is the batch half of rotating-in
-  q_stream_cusum), q_val_roc_auc (the exact Mann-Whitney prefix-sum
-  machinery is generalized by in-window q_val_feature_screen, which
-  computes per-feature AUCs through the same attach_global_cumsum
-  ranks), q_val_calibration + q_val_psi_numeric-style fixed-bin collapse
-  (rotating-in q_val_psi_numeric certifies the binning/EPS arithmetic;
-  calibration bin rates stay pytest+local), q_val_threshold_metrics
-  (one-scan conditional sums — the shape of every pipeline agg step;
-  family keeps q_val_feature_screen + q_val_decile_lift in-window),
-  q_val_pr_auc (rotating-in q_val_pr_curve replays the identical
-  per-score collapse + descending prefix sums; the 1e-12-unit AP floor
-  division stays pytest+local-gated), q_rolling_quantile (window family
-  keeps rolling stats inside three in-window pipelines; the exact
-  percentile-fit machinery is in-window q_winsorize's fit step),
-  q_ext_pack_sequences (the distributed prefix-sum chunk assignment is
-  rotating-in q_ext_chunk_documents' token-window machinery; the
-  concat-then-chunk trajectory stays pytest+local), q_salted_join (join
-  machinery in every in-window pipeline; the salt/explode rewrite is
-  pytest-gated and rotating-in q_semi_join_exists keeps a join-family
-  rotation anchor), q_ext_hybrid_rrf (lexical arm anchored in-window by
-  q_ext_tfidf_terms, vector arm by q_ext_ann_multiprobe; the RRF fold is
-  pytest+local), q_feature_scaling (fit-broadcast-assign standardization
-  = in-window q_robust_outliers' median/MAD attach; the scalar algebra
-  runs inside every pipeline), q_name_linkage (r7 proved levenshtein()
-  cross-engine parity; the blocked distinct-collapse self-join shape is
-  in-window q_ext_simhash_pairs' blocking), q_ext_line_clean (line-level
-  cleaning runs inside rotating-in q_ext_curate_corpus's composed
-  verdict), q_ext_ngram_jaccard_cutoff (the exact-Jaccard verify is the
-  ground-truth side of in-window q_ext_minhash_recall; the hot-shingle
-  cutoff stays pytest+local), q_stream_count_anomalies (hourly windowed
-  counts shared with rotating-in q_stream_cusum; the trailing z-score
-  finisher is rotating-in q_val_count_anomalies), q_stream_psi_drift
-  (the PSI binning/EPS math is rotating-in q_val_psi_numeric via
-  psi_by_group; streaming window machinery certified by rotating-in
-  q_stream_cusum), q_key_skew_profile (count-collapse diagnostics =
-  in-window q_join_size_estimate's exact pre-flight), q_scd2_intervals
-  (gaps-and-islands per-key sort pytest+local; history family keeps
-  q_table_diff in-window), q_rank_normalize (attach_global_rank/cumsum
-  are certified by rotating-in q_ext_vocab_coverage — rank + cumulative
-  share — and rotating-in q_ext_exact_sample's rank top-k; the
-  null-adjusted percent_rank stays pytest+local), q_val_freshness
-  (1-row max-timestamp agg; monitor family keeps
-  q_val_timetravel_crosscheck + q_table_diff in-window), q_ext_ndcg_eval
-  (DECIMAL-summed exponential gains pytest+local; retrieval family keeps
-  q_ext_tfidf_terms, q_ext_ann_multiprobe, q_ext_pq_adc_topk,
-  q_ext_mmr_rerank in-window).
-* Round-9 rotation (VERDICT r8 task 2: rotation debt to zero): the three
-  queries born in commit 31b629b after the round-8 gate ran — the only
-  registered queries never driver-checked — rotate IN: q_grouping_sets
-  (arbitrary GROUPING SETS, one Expand + hash agg), q_val_privacy
-  (k-anonymity / l-diversity audit), q_val_benford (first-digit Benford
-  screen). OUT — all three are round-8 driver-green (CORRECTNESS_r08)
-  and stay in the full local gate + pytest; transitive cover:
-  q_semi_join_exists (LEFT SEMI machinery is the core of in-window
-  q_ext_contamination_bloom's shingle semi-join, and join planning runs
-  inside every in-window pipeline), q_val_cohens_kappa (the exact-integer
-  agreement arithmetic stays pytest+local; the evaluation family keeps
-  q_val_feature_screen, q_val_decile_lift and q_val_pr_curve in-window),
-  q_zorder_key (pure bit-interleave column algebra, pytest+local; the
-  ops-diagnostics family keeps q_table_diff + q_join_size_estimate
-  in-window). After this window runs green, every registered query is
-  driver-gate-certified in >= 1 round and rotation debt is zero.
-* Round-9 births rotate straight in (same-round certification, no new
-  debt): q_rfm_segments (single-shared-rank RFM segmentation),
-  q_training_set_stress (5-table multi-lookup PIT + embargoed leakage
-  audit — drives point_in_time_multi_join), q_stream_ingest_multibatch
-  (3-round incremental corpus ingestion incl. the cold-start path),
-  q_val_serving_skew (online-vs-offline per-feature PSI),
-  q_golden_records (name-graph CC + survivorship), q_negative_samples
-  (hash-slot negative sampling). OUT — all six are round-8 driver-green
-  and stay in the full local gate + pytest; transitive cover:
-  q_backtest_folds (literal-array explode + range predicates,
-  pytest+local; date machinery in every in-window pipeline),
-  q_triangle_count (in-window q_clustering_coeff replays the oriented
-  wedge-join triangle count as its numerator, and its frequent-pairs
-  edge build too), q_val_pr_curve (evaluation family keeps
-  q_val_feature_screen + q_val_decile_lift in-window; the descending
-  prefix sums stay pytest+local), q_ext_frequent_items (one agg +
-  filter; the A-priori machinery is q_clustering_coeff's in-window
-  edge build), q_ext_exact_sample (attach_global_rank top-k is
-  certified by rotating-in q_rfm_segments' shared rank and
-  q_negative_samples' dimension ranking; sampling family keeps
-  q_ext_domain_cap + q_ext_shuffle_shards in-window),
-  q_val_count_anomalies (trailing z-score pytest+local; the monitoring
-  family keeps q_stream_cusum + q_val_timetravel_crosscheck in-window).
-  Late round-9 births rotate straight in as well: q_ext_group_sample
-  (per-group exact-k sampling), q_ext_matryoshka_recall (prefix-dim
-  recall evaluation), q_ext_two_stage_topk (prefix-retrieve +
-  full-dim rerank). OUT with cover: q_val_pit_leakage (the identical
-  pit_leakage_audit runs INSIDE in-window q_training_set_stress, with
-  embargo, over a real PIT-join output), q_ext_quantization_error (PQ
-  family keeps q_ext_pq_adc_topk in-window; the int8 error math stays
-  pytest+local), q_ext_pmi_collocations (analysis family keeps
-  q_ext_quality_classifier + q_ext_vocab_coverage in-window; exact
-  contingency margins stay pytest+local). Final round-9 births:
-  q_cms_frequencies (Count-Min build + broadcast point-query +
-  one-sided-error self-audit), q_stream_cms (the streaming cell-sum
-  merge twin — streamed state ≡ batch sketch), and
-  q_name_linkage_multiblock (prefix + reversed-prefix two-pass
-  blocking). OUT with cover: q_mutual_information (one contingency
-  collapse + log arithmetic, pytest+local; the screen family keeps
-  q_val_feature_screen in-window), q_event_decay (time-decay
-  aggregate, pytest+local; event analytics keep q_stream_cusum + the
-  stream windows in-window), q_winsorize (its exact percentile FIT is
-  the grouped-percentile machinery rotating-in q_val_serving_skew
-  certifies; the clamp algebra stays pytest+local). And
-  q_training_set_refresh (incremental refresh proven equal to full
-  reassembly) rotates in for q_ext_chunk_documents (OUT with cover:
-  the token-window chunk assignment stays pytest+local; the
-  sampling/sharding family keeps q_ext_domain_cap, q_ext_shuffle_shards
-  and q_ext_group_sample in-window). Last: the JSON payload pair
-  q_json_extract (typed try_cast extraction, pure projection) +
-  q_json_key_profile (key discovery) rotate in for
-  q_ext_shuffle_shards (OUT — deterministic hash-bucket sharding,
-  pytest+local; the portable-hash assignment machinery is in-window
-  via q_ext_group_sample and q_cms_frequencies) and q_val_decile_lift
-  (OUT — rank-bucket lift aggregation, pytest+local; the evaluation
-  family keeps q_val_feature_screen in-window and the rank-bucket
-  machinery is in-window q_rfm_segments' shared ntile). And
-  q_json_schema_drift (payload schema drift: added/removed/present keys
-  + presence-share deltas) rotates in for q_val_psi_numeric (OUT — the
-  identical quartile-cutpoint binned-PSI arithmetic runs TWICE per
-  feature inside in-window q_val_serving_skew; the numeric binning
-  stays pytest+local). And q_purged_folds (purged + embargoed CV — the
-  leakage-safe split for forward-horizon labels) rotates in for
-  q_ext_curate_corpus (OUT — its composed verdict runs the SAME
-  cleaning / quality-classifier / dedup machinery the in-window
-  q_ext_quality_classifier, q_ext_contamination_bloom and
-  q_ext_cross_corpus_dedup anchors certify; the verdict fold stays
-  pytest+local). And q_store_lineage (registry lineage edges +
-  checkpointed frontier-BFS transitive closure with min hop depths)
-  rotates in for q_join_size_estimate (OUT — the exact count-collapse
-  pre-flight is one agg + one broadcast join, pytest+local; the
-  ops-diagnostics family keeps q_table_diff in-window). And
-  q_store_doctor (registry-driven PK-contract + freshness audit — the
-  uniqueness invariant every PIT lookup and merge-upsert assumes)
-  rotates in for q_robust_outliers (OUT — the median/MAD
-  fit-broadcast-assign shape is the grouped-percentile machinery
-  in-window q_val_serving_skew certifies; the flag algebra stays
-  pytest+local). Finally q_position_attribution (U-shaped multi-touch
-  credit — the corrective to last-touch bias) rotates in for
-  q_ext_dedup_clusters_twophase (OUT — the two-phase large/small-star
-  CC is pytest+property-tested and the CC family keeps rotating-in
-  q_golden_records' min-label closure plus q_ext_cross_corpus_dedup
-  in-window; the two-phase variant stays in the full local gate). And
-  q_conversion_lags (time-to-conversion percentiles per first-touch
-  channel) rotates in for q_ext_mmr_rerank (OUT — driver-green in two
-  rounds; the retrieval family keeps q_ext_two_stage_topk,
-  q_ext_pq_adc_topk, q_ext_ann_multiprobe and q_ext_tfidf_terms
-  in-window; the unrolled greedy MMR trajectory stays pytest + full
-  local gate).
-* Round-10 rotation (VERDICT r9 task 1: freshness — re-certify the
-  oldest driver-gated queries on current code, oldest-first). IN: all
-  26 queries last driver-certified in rounds 1–3 (r1: q03/q05/q06,
-  q_categorize_binarize, q_ext_minhash_sig, q_ext_token_shards,
-  q_lag_diff_roc, q_monthly_lags, q_months_between, q_na_standardize,
-  q_ratios_pct, q_rolling_stats, q_select_distinct, q_shift_date,
-  q_string_normalize, q_top1_latest; r2: q_ext_frame_sample; r3:
-  q_ext_cosine_topk, q_ext_quality_score, q_ext_sessionize,
-  q_filter_dict, q_filter_max_value, q_lags_ind, q_month_spine,
-  q_native_pivot, q_union_by_name) plus the five judge-named priority
-  re-certs whose implementing modules were re-planned since their last
-  driver row (q_ext_minhash_dedup, q_ext_dedup_clusters,
-  q_ext_ngram_jaccard — textops/dedup.py gained the round-7 capped
-  candidate generation; q_pit_join — joins.py gained the multi-join +
-  collision validation; q_conditional_pivot —
-  functions/feature_generation.py round-5/6 rewrites). KEPT in-window
-  (13): q01_pricing_summary (flagship) and the three native pipelines,
-  plus EVERY query over code changed THIS round — q_training_set /
-  q_training_set_stress / q_training_set_refresh
-  (featurestore/training.py collision validation + AQE-gated
-  broadcasts), q_stream_cms (streaming/ops.py idempotent versioned CMS
-  commit), q_stream_ingest_dedup + q_stream_ingest_multibatch
-  (exact-id replay anti-join + crash hook) — plus family anchors
-  q_stream_stateful_stats (arbitrary state),
-  q_ext_multimodal_decode (the one Python-UDF surface),
-  q_ext_cross_corpus_dedup (banded dedup composite). OUT: the other 37
-  of the round-9 window — every one of them is round-9 driver-green
-  (CORRECTNESS_r09 was 50/50 on current code, the freshest possible
-  certification) and stays in the full local differential gate
-  (`tools/check_correctness.py`, ALL-OK/198 rerun by the round-9
-  judge) + pytest; rotating the FRESHEST-certified queries out for the
-  stalest is exactly the freshness policy this rotation implements.
-  Round-10 births rotate straight in as they land (no new debt):
-  q07_volume_shipping / q08_market_share / q09_product_profit (TPC-H
-  planner-stress trio — 5-6 table joins, mixed broadcast/shuffle,
-  pushed date+dim filters), q_cdc_apply_changes (sequence-ordered
-  upsert/delete change-stream apply), q_asof_nearest
-  (direction-aware as-of join: backward/forward/nearest + tolerance),
-  q_scd2_dim_join (fact⋈SCD2-dimension temporal join). Mid-round birth
-  q_trailing_features (trailing-window aggregate features via
-  prefix-sum + exclusive anchor carries, ONE shuffle) rotates in for
-  q_ext_cross_corpus_dedup (OUT with cover: r9 driver-green, and the
-  incremental cross-corpus band join runs VERBATIM inside in-window
-  q_stream_ingest_dedup and q_stream_ingest_multibatch's per-batch
-  dedup step; stays in the full local gate + pytest). Two more births:
-  q_incr_agg_refresh (mergeable moment state proven ≡ full recompute)
-  rotates in for q_pipeline_payment_behavior (OUT with cover: r9
-  driver-green; the pipeline family keeps the two native-schema
-  supersets q_pipeline_credit_native + q_pipeline_holdings_native
-  in-window, and its rolling/agg machinery is theirs), and
-  q_stream_cdc_apply (streaming MERGE INTO — versioned commits,
-  sequence watermarks, tombstones) rotates in for
-  q_stream_stateful_stats (OUT with cover: r9 driver-green; the
-  applyInPandasWithState machinery keeps exact-value pytest twins
-  `test_stateful_user_stats_matches_batch` / `test_tws_*`, and the
-  streaming family keeps interval-join, CMS, ingest ×2 and the new
-  CDC apply in-window). And q_label_window (forward outcome-window
-  labels — the (t, t+h] mirror of q_trailing_features on the same
-  anchor-carry core) rotates in for q_pipeline_credit_native (OUT with
-  cover: r9 driver-green; its lag / rolling-stats / RSI window
-  machinery is certified THIS round by the rotating-in micro-anchors
-  q_monthly_lags, q_lag_diff_roc, q_rolling_stats and q_rsi's family,
-  and the pipeline composition by in-window
-  q_pipeline_holdings_native; stays in the full local gate + pytest).
-  Last birth: q_ext_filtered_ann (metadata-filtered vector search —
-  predicate pushed below scoring, exact strategy gated, IVF variant
-  recall-tested) rotates in for q_stream_ingest_dedup (OUT with cover:
-  r9 driver-green, and its ENTIRE per-batch path — including this
-  round's exact-id replay anti-join — runs verbatim inside in-window
-  q_stream_ingest_multibatch's three checkpointed rounds; the
-  crash-recovery pytest `test_ingest_crash_recovery_exactly_once`
-  interrupts and replays the same code). And q_trailing_multi_window
-  (N windows × M conditional measures through ONE shuffle) rotates in
-  for q_training_set (OUT with cover: r9 driver-green; the as-of
-  lookup it wraps is certified by rotating-in q_pit_join, the manager
-  write + multi-PIT path by in-window q_training_set_stress, the
-  version-diff path by in-window q_training_set_refresh, and this
-  round's collision validation by
-  `test_training_set_payload_collisions_raise_every_strategy`). And
-  q_ext_semantic_contamination (embedding-level benchmark
-  decontamination — broadcast benchmark, one corpus scan, map-side
-  per-item max) rotates in for q_ext_multimodal_decode (OUT with
-  cover: driver-green r3-r9; the PNG/WAV decoders are BIT-EXACT
-  pytest-gated — `test_png_decode_real_bytes` /
-  `test_wav_decode_real_bytes` assert pixel/sample sums on real
-  stdlib-decoded bytes — and the Arrow mapInPandas batch contract has
-  its own shape tests; stays in the full local gate). Final birth:
-  q_training_set_windowed (create_training_set mixing an as-of
-  FeatureLookup with a WindowLookup — the Feast/Tecton window-aggregate
-  feature-view surface end-to-end through the manager, vs an
-  ASOF-join + range-join oracle) rotates in for q_training_set_stress
-  (OUT with cover: r9 driver-green; its happy path is bit-unchanged
-  this round — the only round-10 change to point_in_time_multi_join is
-  the raise-on-collision validation, certified by
-  `test_multi_join_rejects_spine_column_collision` — and the
-  manager-write + assembly surface is certified in-window by the
-  rotating-in windowed composite plus q_training_set_refresh; the
-  multi-vs-sequential equality stays pytest-gated). And q_event_paths
-  (top-k event-type path discovery — one per-user window + hash count
-  + TakeOrdered) rotates in for q_training_set_refresh (OUT with
-  cover: r9 driver-green AND its only round-10 change is REMOVING
-  broadcast hints — a join-strategy annotation that cannot change
-  values, re-verified value-exact by the full local gate on current
-  code; the refresh-equals-full-reassembly contract also holds in
-  `test_refresh_training_set_touches_only_changed_entities`, and the
-  create_training_set surface keeps in-window q_training_set_windowed).
-
-Round-11 rotation (VERDICT r10 task 1 — continue oldest-first): after
-r10 re-certified the whole r1-r3 cohort, the stalest certs were r4 (15
-queries) and r5 (18); ALL 33 rotate in, leaving 5 slots for the
-most-changed r6 queries (q_ext_ivfpq_topk over similarity.py which the
-new index store reuses; q_ext_curation_pipeline + q_ext_contamination
-over curation.py and q_funnel_steps + q_event_attribution over
-events.py, both modules touched by this round's ADVICE fixes). Kept
-in-window: the flagship, the 8 queries over code changed THIS round
-(windows.py RANGE-frame cumsum, CDC NULL-op guards, scd2 collision,
-contamination tie-break, event-path null steps), and the 3 round-11
-births (q_ext_index_refresh, q_stream_trailing_features,
-q_event_path_conversion). All 37 round-10 members rotating out are
-green in CORRECTNESS_r10.json and stay exact-checked by the full local
-gate + pytest; remaining oldest debt after this round is the r6 cohort
-(~34 queries), which fits one future window.
-
-Late round-11 TPC-H completion (q02/q04/q10-q22, 15 births,
-`queries_tpch.py`): these stay OUT of the window — displacing 15
-freshness-rotation members would invert this round's judge-directed
-priority (VERDICT r10 task 1). Cover until they rotate into r12: all 15
-are value-exact in the full local differential gate (which the judge
-re-runs on current code), their decorrelation rewrites are additionally
-pinned against the LITERAL correlated forms inside Spark itself
-(tests/test_tpch_shapes.py — a defense the oracle can't provide, since
-oracle and query could share an adaptation mistake), and the three
-already-in-window TPC-H anchors (q01 flagship + the r10 trio's gate
-rows) exercise the same scan/broadcast/agg machinery.
-
-The same rotate-into-r12 plan covers the other late-session births
-(q_skipping_scan / q_skipping_zorder / q_bloom_join_reduce /
-q_ext_bpe_pair_stats / q_ext_bpe_roundtrip / q_fs_forget /
-q_incr_join_refresh / q_incr_agg_join_refresh / q_ext_classifier_train
-/ q_ext_quality_filter_e2e / q_ext_curriculum_mixture /
-q_ext_lm_backoff / q_seasonal_decompose / q_seasonal_anomalies /
-q_ext_cluster_split / q_ext_neardup_split):
-each is green
-in the full local differential
-gate on current code, and each carries dedicated pytest pinning beyond
-the oracle — pruning effectiveness + never-prune-blind + stale-stats
-guard, bloom reduction factor + plain-join equality, merge-for-merge
-Sennrich-reference equality, forget idempotence + metadata survival,
-IVM row-identical recompute equality.
-Round-12 rotation (VERDICT r11 task 1: certification debt is the
-biggest risk surface — burn the never-driver-certified set to zero,
-then oldest-first): the window takes the flagship + ALL 37 queries that
-have never appeared in any CORRECTNESS gate (the 34 round-11 late
-births: TPC-H q02/q04/q10–q22, the skipping/z-order pair, Bloom join,
-both BPE queries, right-to-be-forgotten, both IVM join refreshes, the
-classifier/quality-filter/curriculum trio, the backoff LM, both
-seasonal queries, both leakage-safe splits, URL dedup, index
-doctor/refine — plus the 3 round-12 births: q_skipping_bloom,
-q_ext_index_partitioned, q_ext_index_rebuild_policy) + (after the late-birth swaps below) 9 of the 37 r6-stale queries,
-prioritized by module churn since their last cert
-(similarity.py: q_ext_ivfpq_topk + q_ext_pq_refined_topk, reused by
-the index store; writers.py changed THIS round: q_layer_roundtrip +
-q_stream_feature_store; manager.py changed THIS round — its broader
-cover is the in-window q_fs_forget + all four index-store queries;
-pipelines: q_pipeline_supplier_risk + q_pipeline_customer_tx; plus
-family anchors q_ext_substring_dedup, q_ext_token_mixture,
-q_stream_sliding, q_val_crosscheck). Two later round-12 births
-(q_version_changes — the CDF read; q_ext_image_dhash — perceptual-hash
-dedup) take the slots earmarked for q_funnel_steps + q_quantile_bin
-(both r6-green with family cover: events kept q_event_paths +
-q_event_path_conversion driver-certs in r11, and the distributed
-global-rank primitive behind quantile_bin was re-certified via
-q_rank_normalize (r8) and rides inside in-window q_ext_curriculum_mixture's
-token-budget ranking; both stay in the full local gate + pytest —
-births-before-stale keeps never-certified debt at zero). Late birth
-q_skipping_incremental stays OUT of this window with documented cover
-(the r11 TPC-H precedent): its append + incremental-sidecar machinery
-is pytest-pinned maintained-≡-rebuilt bit-for-bit, it is green in the
-full local gate, and the skipping family carries FOUR in-window
-anchors this round (scan / zorder / bloom / index_partitioned) over
-the same prune-and-residual read path; it rotates into r13's window.
-The third late birth q_deletion_vectors (row-level deletes on the storage core —
-new machinery, must not accrue debt) takes q_stream_sliding's slot
-(r6-green; the streaming family keeps q_stream_feature_store in-window
-this round and sliding's window machinery carried driver certs through
-the r7-r9 tumbling/count-anomaly anchors; stays in the full local gate
-+ pytest).
-
-OUT: all 49 non-flagship round-11 window members — every one is
-round-11 driver-green (CORRECTNESS_r11 was 50/50 on effectively
-current code, the freshest certification any query can carry) and
-stays exact-checked by the full local differential gate (256 queries,
-judge-rerun each round) + pytest; rotating the freshest-certified out
-for the never-certified is precisely the policy VERDICT r11 directed.
-Remaining debt after this round: the 28 other r6-stale queries (the
-r6 set minus the NINE re-certified here — q_funnel_steps /
-q_quantile_bin / q_stream_sliding stayed r6-certified after the late
-r12 births took their slots) plus the r7 cohort (21) — they fit the
-next two windows, oldest-first; each keeps an in-window family anchor
-this round
-(pipelines via supplier_risk/customer_tx, streaming via
-feature_store/sliding, events via funnel_steps, eval/monitor via
-crosscheck, sampling via token_mixture, PQ/ANN via ivfpq/pq_refined,
-rank primitives via quantile_bin).
-Round-13 rotation (VERDICT r12 task 1, verbatim: "the r13 window = the
-28 r6-stale + 21 r7-stale re-certs + q_skipping_incremental — exactly
-50. Oldest-first per driver_window.py discipline."): the window takes
-every query whose newest driver certification is round 6 (28 queries)
-or round 7 (21 queries), oldest cohort first, plus q_skipping_incremental
-(born after the r12 window was pinned — its first-ever driver row).
-After this gate runs green, NO registered query's newest driver cert is
-older than round 8 and never-certified debt is zero again.
-
-OUT: all 50 round-12 window members, including the flagship
-q01_pricing_summary — every one is round-12 driver-green
-(CORRECTNESS_r12 was 50/50 on current code, the freshest certification
-any query can carry), the flagship additionally runs EVERY round as the
-driver's entry() smoke check, and all 50 stay exact-checked by the full
-local differential gate (260 queries, judge-rerun each round) + pytest.
-Rotating the freshest-certified out for the stalest-certified is
-precisely the freshness policy VERDICT r12 directed.
-
-Round-13 births (q_incr_cdf_refresh, q_compact_policy,
-q_stream_late_metrics, q_check_constraints, q_incr_cdf_agg_refresh,
-q_column_mapping, q_manifest_snapshot, q_generated_columns) stay OUT
-of this window
-with documented cover (the r11 TPC-H / r12 q_skipping_incremental
-precedent): adding
-them would displace stale re-certs and break the judge's explicit
-"no cert older than r8" done-criterion. Each birth is green in the
-full local differential gate on current code and carries dedicated
-pytest pinning beyond the oracle; they rotate into r14's window
-first, before any further freshness re-certs.
-
-Round-14 rotation (VERDICT r13 task 1, verbatim: "8 r13 births first,
-then the 24 r8-stale re-certs and the 18 oldest r9-stale rows =
-exactly 50"): the window takes the 8 never-driver-certified r13
-births (q_incr_cdf_refresh, q_incr_cdf_agg_refresh, q_compact_policy,
-q_stream_late_metrics, q_check_constraints, q_column_mapping,
-q_manifest_snapshot, q_generated_columns — births-before-stale keeps
-never-certified debt at zero), then ALL 24 queries whose newest
-driver cert is round 8, then 18 of the 46 r9-stale queries. All 46
-are equally old by cert round, so the 18 are prioritized by MODULE
-CHURN this round — the queries most at risk from r14 code changes:
-q_val_timetravel_crosscheck (sources/versioned.py gains
-RESTORE/clone this round), q_training_set + q_training_set_refresh +
-q_training_set_stress + q_pipeline_credit_native +
-q_pipeline_payment_behavior (sources/writers.py gains the
-optimistic-concurrency swap guard + the compaction-aware refresh
-skip; the manager and every pipeline write through it),
-q_stream_ingest_dedup + q_stream_stateful_stats +
-q_stream_interval_join + q_stream_cusum (streaming family — the r14
-streaming-CDF source lands in this module cluster), plus the family
-anchors with the largest blast radius: q_ext_multimodal_decode (the
-one Python-UDF surface), q_ext_quality_classifier,
-q_ext_cross_corpus_dedup, q_ext_contamination_bloom (textops),
-q_golden_records, q_pagerank (iterative/graph),
-q_val_serving_skew, q_val_feature_screen (validation). After this
-gate runs green, never-certified debt is zero and no query's newest
-cert is older than round 9; the remaining 28 r9-stale queries fit
-one future window.
-
-OUT: all 50 round-13 window members — every one is round-13
-driver-green (CORRECTNESS_r13 was 50/50 on current code, the
-freshest certification any query can carry) and stays exact-checked
-by the full local differential gate (268 queries, judge-rerun each
-round) + pytest. Round-14 births (q_version_restore, q_version_clone,
-q_stream_cdf_ivm, …) born after this window is pinned follow the
-standing precedent: green in the full local gate + dedicated pytest
-pinning, they rotate into r15's window first.
-
-Round-15 rotation (VERDICT r14 task 4): the 11 never-driver-certified
-queries first (the partial-BUILD-round births — OHLC family, PCA pair,
-RESTORE/clone/schema-evolution, row policy, streaming CDF IVM pair —
-never sampled because the r14 window was pinned before they existed),
-then the round-14-TOUCHED paths whose newest cert predates their
-rewrite, in VERDICT's own priority order: the IVF/PQ broadcast-argmax
-family (q_ext_ivfpq_topk + the six index-lifecycle queries +
-q_ext_semantic_dedup + the other ANN consumers q_ext_pq_adc_topk /
-q_ext_pq_refined_topk / q_ext_ann_ivf), the window-form
-q_seasonal_anomalies, the repartition-sharing pipeline family (5
-uncertified members + q_pipeline_incremental + q_gen_payment_golden),
-q_stream_trailing_quantile + q_stream_trailing_features (fused
-trailing state), the footer-harvest skipping/storage family
-(q_skipping_* + q_deletion_vectors + q_fs_forget + q_version_changes),
-the stream-scaling + shared-shingle-hash consumers
-(q_stream_ingest_multibatch, q_stream_index_upserts, q_stream_hourly),
-save_many consumers (q_training_set_windowed, q_store_doctor), and the
-projection-before-boundary q_ext_bpe_roundtrip. The last slots take
-round-15's own optimization targets (q_stream_cms, q_cms_frequencies,
-q_ext_image_dhash, q_ext_dsir_weights) so this round's rewrites are
-driver-certified in the same round they land.
-
-OUT: all 50 round-14 window members — every one is round-14
-driver-green (CORRECTNESS_r14: 50/50) and stays exact-checked by the
-full local differential gate (279 queries) + pytest.
+The external driver checks the first ``WINDOW_SIZE`` entries of
+``queries()`` against their DuckDB oracles. The window is computed from
+the driver's own reports, ``CORRECTNESS_rN.json`` in the artifact root:
+the oracle-bearing queries whose last certification is oldest go first,
+so every query is re-certified in turn. A query's last-certified round
+is the highest N whose report shows its rows, schema and hash all
+matching; a query never certified counts as round 0. Ties keep
+registration order, and every query outside the window follows in
+registration order. With no reports, the window is the first
+``WINDOW_SIZE`` oracle-bearing queries in registration order.
 """
 
 from __future__ import annotations
 
-DRIVER_WINDOW: tuple[str, ...] = (
-    # ---- round-15 window (see docstring tail) ----
-    # never-driver-certified: the 11 partial-BUILD-round births
-    "q_stream_cdf_ivm",
-    "q_stream_cdf_agg_ivm",
-    "q_version_restore",
-    "q_version_clone",
-    "q_version_schema_evolution",
-    "q_ohlc_bars",
-    "q_ohlc_weekly_rollup",
-    "q_stream_ohlc",
-    "q_row_policy",
-    "q_ext_embedding_pca",
-    "q_ext_pca_two_stage",
-    # r14-touched, newest cert predates the rewrite (VERDICT priority)
-    "q_ext_ivfpq_topk",
-    "q_ext_index_search",
-    "q_ext_index_refresh",
-    "q_ext_index_refine",
-    "q_ext_index_partitioned",
-    "q_ext_index_rebuild_policy",
-    "q_ext_index_doctor",
-    "q_ext_semantic_dedup",
-    "q_ext_pq_adc_topk",
-    "q_ext_pq_refined_topk",
-    "q_ext_ann_ivf",
-    "q_seasonal_anomalies",
-    "q_pipeline_customer_tx",
-    "q_pipeline_supplier_risk",
-    "q_pipeline_product_holdings",
-    "q_pipeline_holdings_native",
-    "q_pipeline_demographic",
-    "q_pipeline_incremental",
-    "q_gen_payment_golden",
-    "q_stream_trailing_quantile",
-    "q_stream_trailing_features",
-    "q_skipping_scan",
-    "q_skipping_zorder",
-    "q_skipping_bloom",
-    "q_skipping_incremental",
-    "q_deletion_vectors",
-    "q_fs_forget",
-    "q_version_changes",
-    "q_stream_ingest_multibatch",
-    "q_stream_index_upserts",
-    "q_stream_hourly",
-    "q_training_set_windowed",
-    "q_store_doctor",
-    "q_ext_bpe_roundtrip",
-    # round-15 optimization targets (certified in the round they change)
-    "q_stream_cms",
-    "q_cms_frequencies",
-    "q_ext_image_dhash",
-    "q_ext_dsir_weights",
-    "q_ext_dedup_keep_best",
-)
-
-# (older window tuples live in git history — r11: commit 0934e9c,
-#  r13: commit 24812cb, r14: commit 50f8ec6)
+import json
+import pathlib
+import re
 
 WINDOW_SIZE = 50
 
-assert len(DRIVER_WINDOW) == WINDOW_SIZE, (
-    f"DRIVER_WINDOW must list exactly {WINDOW_SIZE} queries, got {len(DRIVER_WINDOW)}"
-)
-assert len(set(DRIVER_WINDOW)) == len(DRIVER_WINDOW), "duplicate names in DRIVER_WINDOW"
+
+def last_certified(artifact_root: str) -> dict[str, int]:
+    """Query name -> the newest round whose report matched it fully."""
+    rounds: dict[str, int] = {}
+    for path in pathlib.Path(artifact_root).glob("CORRECTNESS_r*.json"):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", path.name)
+        if not m:
+            continue
+        for name, row in json.loads(path.read_text()).items():
+            if row.get("rows_match") and row.get("schema_match") and row.get("hash_match"):
+                rounds[name] = max(rounds.get(name, 0), int(m.group(1)))
+    return rounds
 
 
-def reorder(queries: dict) -> dict:
-    """Return ``queries`` with DRIVER_WINDOW names first (in window order),
-    then every remaining registration in its original order.
-
-    Raises if a window name is not registered — a rename must not silently
-    shrink the checked set.
-    """
-    missing = [n for n in DRIVER_WINDOW if n not in queries]
-    if missing:
-        raise KeyError(f"DRIVER_WINDOW names not registered: {missing}")
-    ordered = {n: queries[n] for n in DRIVER_WINDOW}
-    for name, spec in queries.items():
-        if name not in ordered:
-            ordered[name] = spec
+def reorder(queries: dict, artifact_root: str) -> dict:
+    """Return ``queries`` with the window first (oldest certification
+    first), then every other query in registration order."""
+    certified = last_certified(artifact_root)
+    candidates = [name for name, spec in queries.items() if spec.oracle is not None]
+    # sorted() is stable: equal rounds keep registration order
+    window = sorted(candidates, key=lambda name: certified.get(name, 0))[:WINDOW_SIZE]
+    ordered = {name: queries[name] for name in window}
+    ordered.update((name, spec) for name, spec in queries.items() if name not in ordered)
     return ordered

@@ -70,18 +70,6 @@ def rename_columns(df: DataFrame, renames: Mapping[str, str]) -> DataFrame:
     return df.withColumnsRenamed(dict(renames))
 
 
-def prefix_columns(
-    df: DataFrame, prefix: str, exclude: Sequence[str] = ()
-) -> DataFrame:
-    """Rename non-key columns with a table prefix (``cdmg_``, ``chr_``, …).
-
-    Reference ``fs_cus_demographic.py:374-378`` (same block in all five
-    pipelines).
-    """
-    renames = {c: f"{prefix}{c}" for c in df.columns if c not in set(exclude)}
-    return df.withColumnsRenamed(renames)
-
-
 def robust_outlier_flags(
     df,
     column: str,

@@ -85,81 +85,3 @@ def finalize_user_stats(emissions: DataFrame) -> DataFrame:
         F.min("first_event_id").alias("first_event_id"),
         F.timestamp_micros(F.max("last_ts_us")).alias("last_ts"),
     )
-
-
-def stateful_user_stats_tws(stream: DataFrame) -> DataFrame:
-    """The same per-user running stats through Spark 4's
-    ``transformWithStateInPandas`` — the successor API to
-    ``applyInPandasWithState``: explicit named state handles
-    (ValueState/ListState/MapState), per-state TTL, and timers, instead
-    of one opaque state tuple. Kept alongside the legacy twin so both
-    stateful surfaces stay covered; the emission contract (cumulative
-    snapshots, order-independent components) is identical, so the same
-    GROUP BY oracle verifies it.
-
-    The processor class is defined inside this function so cloudpickle
-    ships it BY VALUE — executor Python workers never import this
-    package.
-
-    Environment note: the TWS runtime speaks protobuf to the state
-    server; on images without ``protobuf`` the query fails at
-    initialization (this sandbox — the legacy twin above carries the
-    driver gate there). The implementation is complete and the test
-    suite exercises it wherever protobuf is importable.
-    """
-    try:  # TWS hard-requires protobuf at run time; fail early and clearly
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as e:  # pragma: no cover
-        raise ImportError(
-            "transformWithStateInPandas requires the protobuf package "
-            "(pyspark's TWS state protocol); install protobuf or use "
-            "stateful_user_stats (applyInPandasWithState) instead"
-        ) from e
-    try:  # Spark 4.0+ API; 3.5 sessions use the applyInPandasWithState twin
-        from pyspark.sql.streaming.stateful_processor import (
-            StatefulProcessor,
-            StatefulProcessorHandle,
-        )
-    except ImportError as e:  # pragma: no cover
-        raise ImportError(
-            "transformWithStateInPandas requires PySpark >= 4.0; on 3.5 use "
-            "stateful_user_stats (applyInPandasWithState), which has the "
-            "same emission contract"
-        ) from e
-
-    class UserStats(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._stats = handle.getValueState("stats", _STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            count, min_id, max_ts = 0, None, None
-            if self._stats.exists():
-                count, min_id, max_ts = self._stats.get()
-            for pdf in rows:
-                count += len(pdf)
-                batch_min = int(pdf["event_id"].min())
-                batch_max = int(pdf["ts_us"].max())
-                min_id = batch_min if min_id is None else min(min_id, batch_min)
-                max_ts = batch_max if max_ts is None else max(max_ts, batch_max)
-            self._stats.update((count, min_id, max_ts))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [count],
-                    "first_event_id": [min_id],
-                    "last_ts_us": [max_ts],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    events = stream.select(
-        "user_id", "event_id", F.unix_micros(F.col("ts")).alias("ts_us")
-    )
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=UserStats(),
-        outputStructType=STATS_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )

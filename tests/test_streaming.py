@@ -331,51 +331,6 @@ def test_dedup_stream_watermark_boundary(spark, tmp_path):
     assert sorted(k for k, _ in rows) == [1, 2]
 
 
-def test_tws_user_stats_matches_batch(spark):
-    import pytest
-    pytest.importorskip("google.protobuf", reason="TWS state protocol needs protobuf")
-    from databricks_demo_feature_store_spark.streaming.ops import (
-        read_events_stream,
-        run_available_now,
-    )
-    from databricks_demo_feature_store_spark.streaming.stateful import (
-        finalize_user_stats,
-        stateful_user_stats_tws,
-    )
-
-    stream = read_events_stream(spark, "/root/testdata/sf0.001")
-    em = run_available_now(stateful_user_stats_tws(stream), output_mode="update")
-    got = {r["user_id"]: r for r in finalize_user_stats(em).collect()}
-    from databricks_demo_feature_store_spark.queries import load
-
-    want = {
-        r["user_id"]: r
-        for r in load(spark, "/root/testdata/sf0.001", "events")
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.min("event_id").alias("fid"))
-        .collect()
-    }
-    assert set(got) == set(want)
-    for uid, r in got.items():
-        assert r["n_events"] == want[uid]["n"] and r["first_event_id"] == want[uid]["fid"]
-
-
-def test_tws_raises_clearly_without_protobuf(spark):
-    import pytest
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-        pytest.skip("protobuf present — covered by the matching test above")
-    except ImportError:
-        pass
-    from databricks_demo_feature_store_spark.streaming.ops import read_events_stream
-    from databricks_demo_feature_store_spark.streaming.stateful import (
-        stateful_user_stats_tws,
-    )
-
-    with pytest.raises(ImportError, match="protobuf"):
-        stateful_user_stats_tws(read_events_stream(spark, "/root/testdata/sf0.001"))
-
-
 def test_sliding_counts_keyed_matches_batch(spark):
     """key_cols adds grouping keys next to the sliding window; the keyed
     streamed answer must equal the batch overlapping-window GROUP BY."""

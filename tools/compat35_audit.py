@@ -12,9 +12,8 @@ audit enforces compatibility STATICALLY, as a ratchet:
    fails the audit until someone verifies it exists in 3.5 and adds it
    here — the same conscious-raise discipline as SCALING.md's exchange
    budgets.
-2. Known 4.x-only APIs (``SPARK4_ONLY_APIS``) may appear ONLY at their
-   documented, version-gated sites (``EXEMPT_SITES``), which must raise a
-   loud error or fall back on 3.5.
+2. Known 4.x-only APIs (``SPARK4_ONLY_APIS``) may not be called anywhere
+   in the package.
 3. (round 9, VERDICT r8 task 7) Every METHOD the package calls on the
    DataFrame / GroupedData / Column / SparkSession / Window / reader /
    writer / streaming surface must appear in
@@ -73,6 +72,7 @@ PYSPARK_35_FUNCTIONS_VERIFIED = {
     "percentile_approx", "bit_or",  # bit_or 3.5.0
     "hll_sketch_agg", "hll_sketch_estimate", "hll_union_agg",  # 3.5.0
     "grouping_id", "call_function",  # call_function 3.5.0
+    "count_if",  # added 3.5.0
     # windows / ordering
     "lag", "lead", "rank", "row_number",
     # arrays / higher-order
@@ -89,11 +89,9 @@ PYSPARK_35_FUNCTIONS_VERIFIED = {
     "spark_partition_id", "session_window", "window",
 }
 
-#: APIs that do NOT exist in PySpark 3.5. Each may appear only at an
-#: exempt site that gates it behind a version/feature check with a loud
-#: 3.5 fallback path.
+#: APIs that do NOT exist in PySpark 3.5; none may be called.
 SPARK4_ONLY_APIS = [
-    "transformWithStateInPandas",  # 4.0; 3.5 path = applyInPandasWithState
+    "transformWithStateInPandas",  # 4.0; use applyInPandasWithState (3.4)
     "toArrow",            # DataFrame.toArrow added 4.0
     "mergeInto",          # 4.0
     "lateralJoin",        # 4.0
@@ -101,11 +99,6 @@ SPARK4_ONLY_APIS = [
     "randstr",            # 4.0
     "uniform",            # 4.0
 ]
-
-#: file -> the 4.x APIs it is allowed to mention (documented gated sites).
-EXEMPT_SITES = {
-    "streaming/stateful.py": {"transformWithStateInPandas"},
-}
 
 #: Every method the package calls on the DataFrame/GroupedData/Column/
 #: SparkSession/Window/reader/writer/streaming surface, verified present
@@ -121,6 +114,7 @@ PYSPARK_35_METHODS_VERIFIED = {
     "dropna", "exceptAll", "filter", "first", "groupBy", "inputFiles",
     "isEmpty",  # added 3.3.0
     "join", "limit", "localCheckpoint", "mapInPandas",  # mapInPandas 3.0.0
+    "observe",  # added 3.3.0
     "orderBy", "persist", "repartition", "repartitionByRange", "replace",
     "rollup", "select", "selectExpr", "sortWithinPartitions", "stat",
     "transform",  # DataFrame.transform 3.0.0
@@ -143,6 +137,7 @@ PYSPARK_35_METHODS_VERIFIED = {
     "try_cast",  # Column.try_cast added 3.5.0
     # SparkSession / catalog-ish
     "createDataFrame", "range", "read", "sql", "table", "exists",
+    "conf",  # JVM SessionState.conf() through py4j; SparkSession.conf is a 2.0 property
     # Window
     "partitionBy", "rowsBetween",
     "rangeBetween",  # Window/WindowSpec.rangeBetween, 2.1 (hand-verified 3.5 docs)
@@ -281,11 +276,8 @@ def main() -> int:
         for api in SPARK4_ONLY_APIS:
             # match actual invocation sites (.api( / F.api), not prose
             hit = f".{api}(" in src or f"F.{api}" in src
-            if hit and api not in EXEMPT_SITES.get(rel, set()):
-                problems.append(
-                    f"{rel}: uses Spark-4-only API {api!r} outside the "
-                    f"documented gated sites ({sorted(EXEMPT_SITES)})"
-                )
+            if hit:
+                problems.append(f"{rel}: uses Spark-4-only API {api!r}")
 
     unknown = sorted(set(used) - PYSPARK_35_FUNCTIONS_VERIFIED)
     for name in unknown:
@@ -295,10 +287,7 @@ def main() -> int:
             "replace it with a 3.5-available form"
         )
 
-    exempt_methods = {m for v in EXEMPT_SITES.values() for m in v}
-    unknown_methods = sorted(
-        set(methods_used) - PYSPARK_35_METHODS_VERIFIED - exempt_methods
-    )
+    unknown_methods = sorted(set(methods_used) - PYSPARK_35_METHODS_VERIFIED)
     for name in unknown_methods:
         problems.append(
             f".{name}() (in {sorted(methods_used[name])[:3]}) is on the Spark "

@@ -57,46 +57,140 @@ _WRITERS_SLOW = [
     "tests/test_index_store.py::test_partitioned_layout_merged_equals_rebuilt",
     "tests/test_featurestore.py::test_tiered_merge_matches_bruteforce",
 ]
-# library module -> the slow tests that must pass whenever it changes
+# the runner dispatches functions/ and pipelines/ steps by name
+_PIPELINE_SLOW = [
+    "tests/test_pipelines.py::test_pipeline_runs_steps_lazily_with_debug",
+    "tests/test_pipelines.py::test_customer_tx_pipeline_schema_and_values",
+    "tests/test_pipelines.py::test_reference_native_stack",
+    "tests/test_datagen.py::test_golden_pipeline_run",
+]
+_PKG = "databricks_demo_feature_store_spark/"
+# library module -> the slow tests that must pass whenever it changes;
+# tests/test_harness.py checks that every SLOW_TESTS entry has a guard
 SLOW_GUARDS = {
-    "databricks_demo_feature_store_spark/operators/joins.py": _PIT_SLOW,
-    "databricks_demo_feature_store_spark/featurestore/training.py": _PIT_SLOW,
-    "databricks_demo_feature_store_spark/featurestore/manager.py": [
+    _PKG + "operators/joins.py": _PIT_SLOW + [
+        "tests/test_streaming.py::test_interval_join_matches_naive_theta_join",
+        "tests/test_streaming.py::test_interval_join_stream_matches_batch",
+    ],
+    _PKG + "featurestore/training.py": _PIT_SLOW,
+    _PKG + "featurestore/manager.py": [
         "tests/test_featurestore.py::test_forget_entities_propagates_and_is_idempotent",
         "tests/test_index_store.py::test_partitioned_layout_merged_equals_rebuilt",
         "tests/test_index_store.py::test_index_maintenance_merged_equals_rebuilt",
         "tests/test_featurestore.py::test_tiered_merge_matches_bruteforce",
     ],
-    "databricks_demo_feature_store_spark/sources/writers.py": _WRITERS_SLOW,
-    "databricks_demo_feature_store_spark/sources/deletion_vectors.py": _WRITERS_SLOW,
-    "databricks_demo_feature_store_spark/sources/column_mapping.py": _WRITERS_SLOW,
-    "databricks_demo_feature_store_spark/pipelines/incremental.py": _WRITERS_SLOW,
-    "databricks_demo_feature_store_spark/sources/skipping.py": [
+    _PKG + "featurestore/incremental.py": [
+        "tests/test_featurestore.py::test_refresh_join_view_equals_recompute",
+        "tests/test_property_hist_quantile.py::test_quantile_from_hist_matches_python_replay",
+    ],
+    _PKG + "sources/writers.py": _WRITERS_SLOW,
+    _PKG + "sources/deletion_vectors.py": _WRITERS_SLOW,
+    _PKG + "sources/column_mapping.py": _WRITERS_SLOW,
+    _PKG + "pipelines/incremental.py": _WRITERS_SLOW,
+    _PKG + "sources/skipping.py": [
         "tests/test_skipping.py::test_save_table_refreshes_bloom_and_stats_coexist",
         "tests/test_skipping.py::test_harvest_string_and_partition_values",
         "tests/test_skipping.py::test_incremental_bloom_refresh_equals_rebuild",
         "tests/test_skipping.py::test_incremental_stats_refresh_equals_rebuild",
         "tests/test_skipping.py::test_randomized_skipping_always_matches_full_scan",
     ],
-    "databricks_demo_feature_store_spark/sources/versioned.py": [
+    _PKG + "sources/versioned.py": [
         "tests/test_versioned.py::test_restore_promotes_old_version_preserving_history",
         "tests/test_versioned.py::test_shallow_clone_zero_copy_and_independent_writes",
     ],
-    "databricks_demo_feature_store_spark/operators/graph.py": [
+    _PKG + "sources/datagen.py": [
+        "tests/test_datagen.py::test_other_tables_shapes",
+        "tests/test_datagen.py::test_golden_pipeline_run",
+        "tests/test_pipelines.py::test_reference_native_stack",
+    ],
+    _PKG + "operators/graph.py": [
         "tests/test_operators.py::test_pagerank_matches_exact_replay",
         "tests/test_operators.py::test_clustering_coefficient_known_graphs",
     ],
-    "databricks_demo_feature_store_spark/streaming/ops.py": [
+    _PKG + "operators/events.py": [
+        "tests/test_operators.py::test_funnel_steps_dup_collapse_and_cap",
+        "tests/test_property_events.py::test_funnel_fold_matches_sequential_bruteforce",
+        "tests/test_property_events.py::test_event_paths_overlap_and_determinism",
+    ],
+    _PKG + "operators/windows.py": [
+        "tests/test_operators.py::test_trailing_multi_window_matches_single_calls",
+        "tests/test_operators.py::test_seasonal_anomalies_flags_injected_spike",
+        "tests/test_property_windows.py::test_window_family_matches_brute_force",
+    ],
+    _PKG + "operators/cdc.py": [
+        "tests/test_property_windows.py::test_apply_changes_matches_dict_replay",
+    ],
+    _PKG + "operators/linkage.py": [
+        "tests/test_property_pit.py::test_golden_records_matches_bruteforce_union_find",
+    ],
+    _PKG + "operators/sketches.py": [
+        "tests/test_sketches.py::test_count_min_sketch_properties",
+    ],
+    _PKG + "functions/feature_generation.py": [
+        "tests/test_property_rank.py::test_rank_and_ntile_match_bruteforce",
+        "tests/test_property_rank.py::test_cumsum_matches_bruteforce",
+    ] + _PIPELINE_SLOW,
+    _PKG + "functions/quality.py": _PIPELINE_SLOW,
+    _PKG + "pipelines/runner.py": _PIPELINE_SLOW,
+    _PKG + "pipelines/customer_features.py": [
+        "tests/test_pipelines.py::test_customer_tx_pipeline_schema_and_values",
+    ],
+    _PKG + "pipelines/payment_behavior_features.py": [
+        "tests/test_datagen.py::test_golden_pipeline_run",
+    ],
+    _PKG + "pipelines/reference_sources.py": [
+        "tests/test_pipelines.py::test_reference_native_stack",
+    ],
+    _PKG + "streaming/ops.py": [
         "tests/test_streaming.py::test_ingest_crash_recovery_exactly_once",
         "tests/test_streaming.py::test_stream_trailing_quantile_from_hist_state",
         "tests/test_streaming_cdf.py::test_stream_cdf_agg_ivm_matches_batch_and_recompute",
+        "tests/test_streaming.py::test_watermark_drops_late_data",
+        "tests/test_streaming.py::test_dedup_stream_watermark_boundary",
+        "tests/test_streaming.py::test_sliding_counts_keyed_matches_batch",
+        "tests/test_streaming.py::test_stream_ingest_corpus_dedup",
+        "tests/test_streaming.py::test_multibatch_ingest_stability",
+        "tests/test_streaming.py::test_interval_join_stream_matches_batch",
     ],
-    "databricks_demo_feature_store_spark/textops/multimodal.py": [
+    _PKG + "textops/analysis.py": [
+        "tests/test_classifier_train.py::test_trainer_matches_sequential_replay",
+        "tests/test_classifier_train.py::test_training_separates_the_classes",
+    ],
+    _PKG + "textops/dedup.py": [
+        "tests/test_property_pit.py::test_cc_both_algorithms_match_union_find",
+        "tests/test_textops.py::test_two_phase_cc_closes_deep_chains",
+        "tests/test_textops.py::test_hot_bucket_cap_near_linear_on_dup_clique",
+        "tests/test_textops.py::test_simhash_identical_and_pairs",
+    ],
+    _PKG + "textops/curation.py": [
+        "tests/test_textops.py::test_curation_flags_and_contamination",
+    ],
+    _PKG + "textops/similarity.py": [
+        "tests/test_operators.py::test_mmr_rerank_diversity_greedy",
+        "tests/test_sketches.py::test_semantic_dedup_matches_bruteforce",
+        "tests/test_textops.py::test_kmeans_refine_converges_and_ivf_works",
+        "tests/test_textops.py::test_multiprobe_lsh_recall_not_worse",
+        "tests/test_pca.py::test_two_stage_exact_when_candidates_cover_corpus",
+    ],
+    _PKG + "textops/pca.py": [
+        "tests/test_pca.py::test_fit_matches_numpy",
+        "tests/test_pca.py::test_fit_deterministic_across_partitionings",
+        "tests/test_pca.py::test_projection_roundtrip_variance",
+        "tests/test_pca.py::test_audit_all_verdicts_true",
+        "tests/test_pca.py::test_two_stage_recall_on_anisotropic",
+        "tests/test_pca.py::test_two_stage_exact_when_candidates_cover_corpus",
+    ],
+    _PKG + "textops/index_store.py": [
+        "tests/test_index_store.py::test_partitioned_layout_merged_equals_rebuilt",
+        "tests/test_index_store.py::test_index_maintenance_merged_equals_rebuilt",
+        "tests/test_index_store.py::test_index_upsert_stream_crash_replay_converges",
+        "tests/test_index_store.py::test_index_store_with_lloyd_refined_quantizers",
+    ],
+    _PKG + "textops/multimodal.py": [
         "tests/test_textops.py::test_multimodal_stub_roundtrip",
         "tests/test_textops.py::test_png_decode_real_bytes",
     ],
 }
-
 
 def run(
     name: str, argv: list[str], cwd: str = REPO, env: dict[str, str] | None = None
@@ -174,10 +268,9 @@ def main() -> int:
     ok, out = run(
         "bench smoke (sf0.001)",
         [PY, f"{REPO}/bench.py"],
-        # exercise the fork-mode orchestration itself (r13: full sweeps
-        # run as fresh-JVM chunks) but bound the smoke to 2 chunks × 2
-        # queries — the contract under test is the printed JSON line,
-        # not the suite
+        # exercise the fresh-JVM chunk orchestration but bound the smoke
+        # to 2 chunks × 2 queries — the contract under test is the
+        # printed JSON line, not the suite
         env={
             "SPARK_GRAFT_SF_DIR": "/root/testdata/sf0.001",
             "SPARK_GRAFT_BENCH_LIMIT": "4",
