@@ -1,7 +1,7 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"""Benchmark harness: runs every registered query, in registration order,
+at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
+local[$SPARK_GRAFT_CPUS] and prints ONE JSON line: {"metric": ...,
+"value": total_sec, "unit": "sec", "queries": {name: sec}, "sf": ...}.
 
 Each query is executed to completion through the noop sink (full plan runs,
 nothing is collected to the driver — measures engine throughput, not
@@ -28,162 +28,6 @@ sys.path.insert(0, ROOT)
 # a sweep at another count (the scaling arm) is not comparable with them.
 RECORD_CPUS = 32
 
-HEADLINE = [
-    "q01_pricing_summary",
-    "q03_unshipped_revenue",
-    "q06_forecast_revenue",
-    "q05_region_revenue",
-    "q07_volume_shipping",
-    "q08_market_share",
-    "q09_product_profit",
-    "q02_min_cost_supplier",
-    "q04_priority_returns",
-    "q10_returned_revenue",
-    "q11_important_value",
-    "q12_priority_lines",
-    "q13_order_distribution",
-    "q14_promo_share",
-    "q15_top_supplier",
-    "q16_supplier_variety",
-    "q17_small_qty_revenue",
-    "q18_large_orders",
-    "q19_disjunctive_revenue",
-    "q20_dominant_suppliers",
-    "q21_sole_return_suppliers",
-    "q22_dormant_customers",
-    "q_skipping_scan",
-    "q_bloom_join_reduce",
-    "q_skipping_zorder",
-    "q_skipping_bloom",
-    "q_version_changes",
-    "q_deletion_vectors",
-    "q_skipping_incremental",
-    "q_fs_forget",
-    "q_incr_join_refresh",
-    "q_incr_agg_join_refresh",
-    "q_incr_cdf_refresh",
-    "q_incr_cdf_agg_refresh",
-    "q_compact_policy",
-    "q_check_constraints",
-    "q_column_mapping",
-    "q_manifest_snapshot",
-    "q_generated_columns",
-    "q_stream_late_metrics",
-    "q_version_restore",
-    "q_version_clone",
-    "q_version_schema_evolution",
-    "q_stream_cdf_ivm",
-    "q_stream_cdf_agg_ivm",
-    "q_ohlc_bars",
-    "q_ohlc_weekly_rollup",
-    "q_stream_ohlc",
-    "q_row_policy",
-    "q_seasonal_decompose",
-    "q_seasonal_anomalies",
-    "q_cdc_apply_changes",
-    "q_asof_nearest",
-    "q_scd2_dim_join",
-    "q_trailing_features",
-    "q_trailing_multi_window",
-    "q_label_window",
-    "q_incr_agg_refresh",
-    "q_stream_cdc_apply",
-    "q_equi_join_left_wins",
-    "q_conditional_pivot",
-    "q_monthly_lags",
-    "q_rolling_stats",
-    "q_pit_join",
-    "q_interval_join",
-    "q_string_normalize",
-    "q_ratios_pct",
-    "q_pipeline_customer_tx",
-    "q_pipeline_demographic",
-    "q_pipeline_payment_behavior",
-    "q_pipeline_credit_native",
-    "q_pipeline_holdings_native",
-    "q_training_set",
-    "q_training_set_stress",
-    "q_training_set_windowed",
-    "q_training_set_refresh",
-    "q_store_lineage",
-    "q_store_doctor",
-    "q_negative_samples",
-    "q_fs_online_snapshot",
-    "q_unpivot_melt",
-    "q_fill_gaps_interpolate",
-    "q_target_encoding",
-    "q_funnel_steps",
-    "q_retention_cohorts",
-    "q_quantile_bin",
-    "q_bin_by_cutpoints",
-    "q_feature_correlations",
-    "q_train_test_split",
-    "q_stream_hourly",
-    "q_stream_sessionize",
-    "q_stream_distinct_sketch",
-    "q_stream_ingest_dedup",
-    "q_stream_ingest_multibatch",
-    "q_val_crosscheck",
-    "q_val_expectations",
-    "q_val_psi_drift",
-    "q_val_ks_drift",
-    "q_event_attribution",
-    "q_event_paths",
-    "q_event_path_conversion",
-    "q_stream_trailing_features",
-    "q_stream_index_upserts",
-    "q_stream_trailing_quantile",
-    "q_position_attribution",
-    "q_conversion_lags",
-    "q_event_transitions",
-    "q_chi2_association",
-    "q_mutual_information",
-    "q_winsorize",
-    "q_event_decay",
-    "q_val_count_anomalies",
-    "q_stream_psi_drift",
-    "q_stream_count_anomalies",
-    "q_key_skew_profile",
-    "q_cms_frequencies",
-    "q_stream_cms",
-    "q_name_linkage_multiblock",
-    "q_json_extract",
-    "q_json_key_profile",
-    "q_json_schema_drift",
-    "q_val_roc_auc",
-    "q_val_pr_curve",
-    "q_val_pr_auc",
-    "q_val_calibration",
-    "q_val_pit_leakage",
-    "q_val_feature_screen",
-    "q_val_psi_numeric",
-    "q_val_threshold_metrics",
-    "q_val_decile_lift",
-    "q_join_size_estimate",
-    "q_table_diff",
-    "q_scd2_intervals",
-    "q_rank_normalize",
-    "q_robust_outliers",
-    "q_rsi",
-    "q_backtest_folds",
-    "q_purged_folds",
-    "q_rfm_segments",
-    "q_val_cohens_kappa",
-    "q_pagerank",
-    "q_zorder_key",
-    "q_frequent_pairs",
-    "q_triangle_count",
-    "q_clustering_coeff",
-    "q_grouping_sets",
-    "q_val_privacy",
-    "q_val_benford",
-    "q_val_cusum",
-    "q_val_serving_skew",
-    "q_name_linkage",
-    "q_golden_records",
-    "q_stream_cusum",
-]
-
 
 def _register_all():
     from databricks_demo_feature_store_spark.queries import QUERIES
@@ -196,12 +40,6 @@ def _register_all():
     import databricks_demo_feature_store_spark.queries_tpch  # noqa: F401
 
     return QUERIES
-
-
-def _sweep_names(QUERIES) -> list[str]:
-    return [n for n in HEADLINE if n in QUERIES] + [
-        n for n in QUERIES if n.startswith("q_ext_") and n not in HEADLINE
-    ]
 
 
 def standing_record(
@@ -302,7 +140,7 @@ def _orchestrate(sf_dir: str, sf: float | None) -> None:
     import tempfile
 
     QUERIES = _register_all()
-    names = _sweep_names(QUERIES)
+    names = list(QUERIES)  # the sweep set is the registry, in registration order
     limit = int(os.environ.get("SPARK_GRAFT_BENCH_LIMIT", "0"))
     if limit:  # smoke-testing the fork machinery itself
         names = names[:limit]

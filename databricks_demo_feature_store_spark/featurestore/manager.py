@@ -223,7 +223,11 @@ class FeatureStoreManager:
         path :1707-1711): the frame is written to a staging directory
         together with its registry sidecar and promoted by directory
         rename, so a failed job leaves the old table and registry in
-        place, and ``df`` may read the table it replaces. ``mode="merge"``
+        place, and ``df`` may read the table it replaces. The write is
+        sized like every rewrite (``writers.stage_and_swap``): one file per
+        scan split of ``df``'s Catalyst estimate; a frame without one
+        (e.g. ``createDataFrame`` over driver-side rows) keeps its own
+        partitioning. ``mode="merge"``
         upserts on the PKs; new columns are added to matched rows and full
         rows inserted for new keys (reference ADD COLUMNS + MERGE
         :1727-1758); a merge at recent times rewrites only the table's hot
@@ -263,10 +267,8 @@ class FeatureStoreManager:
         # into a hive layout (see FeatureTableSpec.partition_by).
         partition_by = list(spec.partition_by) or None
         if needs_overwrite or not self.exists(spec.name):
-            # not sized: the frame's bytes are unknown before the write
             stage_and_swap(
-                df, path, self.fmt, generation, partition_by, sized=False,
-                registry=_registry(spec),
+                df, path, self.fmt, generation, partition_by, registry=_registry(spec)
             )
             return diff
         merge_upsert(

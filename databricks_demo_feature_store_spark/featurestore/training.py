@@ -77,12 +77,17 @@ def create_training_set(
     before the spine timestamp wins; spine rows with no history keep NULL
     features (reference PIT semantics, ``joins.py:229-236``).
 
-    Lookups are grouped by ``lookup_keys`` in order of first appearance
-    and each group joins in ONE shuffle via
-    :func:`point_in_time_multi_join` — the spine moves through one
-    exchange per key group, not one per table (5× less spine shuffle I/O
-    for a 5-table training set on one key). The output keeps the feature
-    columns in lookup order, after the spine's columns.
+    Scale shape: lookups are grouped by ``lookup_keys`` in order of first
+    appearance and each group is one call of
+    :func:`point_in_time_multi_join`. A group whose spine and feature
+    tables together fit one scan split (the Catalyst estimates summed:
+    on more than one core, at most ``spark.sql.files.openCostInBytes``,
+    4 MB by default) runs as one task with no exchange — less CPU, more wall time, since one
+    core does the work. A bigger group joins in ONE shuffle: the spine
+    moves through one exchange per key group, not one per table (5× less
+    spine shuffle I/O for a 5-table training set on one key). Building
+    the frame launches no job. The output keeps the feature columns in
+    lookup order, after the spine's columns.
 
     Payload column names must be disjoint across lookups AND from the
     spine's own columns — a collision is validated up front and raises

@@ -48,16 +48,21 @@ def json_extract_typed(
         raise ValueError(
             f"json_extract_typed: types {bad} not in allowlist {sorted(_ALLOWED_TYPES)}"
         )
+    src = "`" + json_col.replace("`", "``") + "`"
     cols = [
-        # try_cast (3.5.0), not cast: under ANSI mode (Spark 4 default)
-        # a failed cast THROWS — a single "7px" in 100 TB of payloads
-        # must yield NULL, not kill the job
-        F.get_json_object(F.col(json_col), f"$.{name}")
-        .try_cast(typ)
+        # SQL try_cast (3.2.0), not cast: under ANSI mode (Spark 4
+        # default) a failed cast THROWS — a single "7px" in 100 TB of
+        # payloads must yield NULL, not kill the job
+        F.expr(f"try_cast(get_json_object({src}, {_sql_string('$.' + name)}) AS {typ})")
         .alias(f"{prefix}{name}")
         for name, typ in fields.items()
     ]
     return df.select("*", *cols)
+
+
+def _sql_string(value: str) -> str:
+    """``value`` as a SQL string literal."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def json_key_profile(

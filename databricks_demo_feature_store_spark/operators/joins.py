@@ -14,6 +14,11 @@ from collections.abc import Mapping, Sequence
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from databricks_demo_feature_store_spark.sources.writers import (
+    plan_size_estimate,
+    scan_splits,
+)
+
 
 def make_join(
     df_left: DataFrame,
@@ -108,7 +113,7 @@ def point_in_time_multi_join(
 ) -> DataFrame:
     """The engine's one as-of join kernel: for every spine row and every
     feature table in ``lookups``, the feature row nearest in time on the
-    ``direction`` side, all tables in ONE shuffle.
+    ``direction`` side, all tables in at most ONE shuffle.
     :func:`point_in_time_join`, :func:`asof_join`, :func:`scd2_dim_join`
     and ``featurestore/training.py create_training_set`` are calls to it.
 
@@ -144,12 +149,29 @@ def point_in_time_multi_join(
     independent carries across tables), and spine rows project all N
     matches out. ``forward`` uses the mirror window (time DESCENDING);
     ``nearest`` uses both, and the two sorts share one hash partitioning.
-    Linear in rows, and the spine moves through exactly ONE exchange
-    regardless of N. Feature rows sort before spine rows at equal time,
-    so a same-instant feature is visible in every direction. Each
-    table's tiebreak columns are NULL on every other row and sort
-    ``asc_nulls_first`` after ``(time, is_spine)``, so one table's
-    tiebreak never reorders another table's carry.
+    Linear in rows, and the spine moves through ONE exchange regardless
+    of N, or none for small inputs.
+
+    Small inputs run as ONE task with no exchange: when the Catalyst
+    estimates of the spine and of every feature frame, each taken on its
+    own, sum to one scan split (``writers.scan_splits``: with more than
+    one core, at most ``spark.sql.files.openCostInBytes``), each input and
+    the union are coalesced to one partition, which already satisfies the
+    window's distribution. The wide tagged union (every payload struct
+    side by side) exceeds ``spark.sql.codegen.maxFields``, so its
+    projections are generated per partition; one partition generates
+    them once and shuffles nothing. That trades wall time for CPU — one
+    core instead of all of them, the small-task trade Spark recommends
+    for busy clusters (``coalescePartitions.parallelismFirst=false``).
+    Larger inputs, or any input without an estimate (e.g. a
+    ``createDataFrame`` over driver-side rows), keep the shuffle plan.
+    The decision launches no job.
+
+    Feature rows sort before spine rows at equal time, so a same-instant
+    feature is visible in every direction. Each table's tiebreak columns
+    are NULL on every other row and sort ``asc_nulls_first`` after
+    ``(time, is_spine)``, so one table's tiebreak never reorders another
+    table's carry.
 
     Construction: the plan is built from SQL expression strings, one per
     output slot, so building it costs O(lookups) Py4J calls whatever the
@@ -170,6 +192,9 @@ def point_in_time_multi_join(
             f"direction must be backward|forward|nearest, got {direction!r}"
         )
     keys, lookups = list(keys), list(lookups)
+    one_task = _fits_one_split([df_spine, *(lk["features"] for lk in lookups)])
+    if one_task:
+        df_spine = df_spine.coalesce(1)
     spine_cols = [c for c in df_spine.columns if c not in keys and c != spine_time]
     qkeys = [_q(k) for k in keys]
     keys_sql = ", ".join(qkeys)
@@ -181,7 +206,7 @@ def point_in_time_multi_join(
     seen: set[str] = set(df_spine.columns) | set(keys) | {spine_time}
     seen |= {f"__ft{i}" for i in range(len(lookups))}
     for i, lk in enumerate(lookups):
-        features = lk["features"]
+        features = lk["features"].coalesce(1) if one_task else lk["features"]
         ftime = lk["feature_time"]
         fcols = lk.get("feature_cols")
         if fcols is None:
@@ -225,6 +250,8 @@ def point_in_time_multi_join(
     )
     for branch in branches:
         unioned = unioned.unionByName(branch, allowMissingColumns=True)
+    if one_task:
+        unioned = unioned.coalesce(1)
 
     order = "".join(f", {tb} ASC NULLS FIRST" for tb in tiebreaks)
 
@@ -277,6 +304,21 @@ def point_in_time_multi_join(
     if drops:
         out = out.drop(*drops)
     return out.withColumnsRenamed(renames) if renames else out
+
+
+def _fits_one_split(frames: Sequence[DataFrame]) -> bool:
+    """Do ``frames`` together fit in one scan split (:func:`scan_splits`
+    of the sum of their Catalyst estimates)? Each frame is estimated on
+    its own: a tagged union's NULL payload slots would inflate Catalyst's
+    row width several times over. False when any estimate is missing.
+    Launches no job."""
+    total = 0
+    for df in frames:
+        size = plan_size_estimate(df)
+        if size is None:
+            return False
+        total += size
+    return scan_splits(frames[0].sparkSession, total) == 1
 
 
 def _q(name: str) -> str:
@@ -463,7 +505,7 @@ def asof_join(
     spine time, identical to :func:`point_in_time_join`), ``"forward"``
     (EARLIEST feature row at-or-after) or ``"nearest"`` (whichever is
     closer in absolute time; exact ties resolve to the backward match).
-    Every direction moves the spine through a single shuffle.
+    Every direction moves the spine through at most one shuffle.
 
     ``tolerance_expr`` (e.g. ``"INTERVAL 2 HOURS"``) bounds the match
     distance on EACH side before the nearest choice is made — an

@@ -244,23 +244,26 @@ def plan_size_estimate(df: DataFrame) -> int | None:
     return size if 0 < size < _STATS_UNKNOWN else None
 
 
-def split_partitions(df: DataFrame) -> int | None:
-    """How many splits Spark's file scan would cut ``df``'s estimated
-    bytes into: ``ceil(bytes / split)`` with ``split =
-    min(maxPartitionBytes, max(openCostInBytes, bytes /
-    defaultParallelism))`` — ``FilePartition.maxSplitBytes`` over the
-    session's own ``spark.sql.files.*`` settings. ``None`` when Catalyst
-    has no estimate."""
-    size = plan_size_estimate(df)
-    if size is None:
-        return None
-    spark = df.sparkSession
+def scan_splits(spark: SparkSession, size: int) -> int:
+    """How many splits Spark's file scan would cut ``size`` bytes into:
+    ``ceil(size / split)`` with ``split = min(maxPartitionBytes,
+    max(openCostInBytes, size / defaultParallelism))`` —
+    ``FilePartition.maxSplitBytes`` over the session's own
+    ``spark.sql.files.*`` settings. One split whenever ``size <=
+    openCostInBytes``; with more than one core, only then."""
     conf = spark._jsparkSession.sessionState().conf()
     split = min(
         conf.filesMaxPartitionBytes(),
         max(conf.filesOpenCostInBytes(), size // spark.sparkContext.defaultParallelism),
     )
     return -(-size // split)
+
+
+def split_partitions(df: DataFrame) -> int | None:
+    """:func:`scan_splits` of ``df``'s estimated bytes; ``None`` when
+    Catalyst has no estimate."""
+    size = plan_size_estimate(df)
+    return None if size is None else scan_splits(df.sparkSession, size)
 
 
 def stage_and_swap(
@@ -572,11 +575,16 @@ def _merge_hot_tier(
         F.count_if(c < _from_bound(tier["hot_from"], dtype)).alias("below"),
         F.min(_to_bound(c, dtype)).alias("low"),
     )
-    merged = _sized(
-        hot.join(df.select(*keys), on=keys, how="left_anti").unionByName(
-            batch, allowMissingColumns=True
-        )
+    merged = hot.join(df.select(*keys), on=keys, how="left_anti").unionByName(
+        batch, allowMissingColumns=True
     )
+    # sized from the hot files' pinned bytes and the batch's estimate, so
+    # Catalyst plans the merge once, in the write
+    batch_bytes = plan_size_estimate(df)
+    if batch_bytes is not None:
+        sizes = dict(pin["files"])
+        hot_bytes = sum(sizes[name] for name in tier["hot"])
+        merged = merged.coalesce(scan_splits(spark, hot_bytes + batch_bytes))
     live = path.removeprefix("file:")
 
     def fill(staging: str) -> None:

@@ -1054,6 +1054,117 @@ def test_training_set_build_py4j_budget(spark, manager):
     assert 0 < calls[0] <= 1000
 
 
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _task_count(spark, df) -> int:
+    """Tasks of every stage of every job that writing ``df`` to the noop
+    sink launches."""
+    import time
+    import uuid
+
+    group = f"tasks-{uuid.uuid4().hex}"
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "task count")
+    try:
+        df.write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    for _ in range(50):  # job events reach the status tracker asynchronously
+        jobs = [tracker.getJobInfo(j) for j in tracker.getJobIdsForGroup(group)]
+        stages = [tracker.getStageInfo(s) for job in jobs if job for s in job.stageIds]
+        if jobs and all(jobs) and all(stages):
+            return sum(stage.numTasks for stage in stages)
+        time.sleep(0.1)
+    raise AssertionError(f"no complete job info for group {group}")
+
+
+def test_small_training_set_runs_as_one_task(spark, manager):
+    """Inputs that together fit one scan split assemble with no Exchange,
+    in one task."""
+    names, spine = _five_table_store(spark, manager)
+    lookups = [FeatureLookup(table=n, lookup_keys=("pk_customer",)) for n in names]
+    ts = create_training_set(manager, spine, lookups, spine_time="label_ts")
+    assert "Exchange" not in _plan(ts)
+    assert _task_count(spark, ts) == 1
+
+
+def _asof_inputs(spark):
+    """A spine and two feature frames with many rows per key, feature
+    times shared within a key (ordered by a tiebreak) and Catalyst size
+    estimates (range-based, unlike ``createDataFrame`` frames)."""
+    t0 = 1_700_000_000
+    spine = spark.range(0, 60).select(
+        F.col("id").alias("label_id"),
+        (F.col("id") % 7).cast("int").alias("k"),
+        F.timestamp_seconds(F.lit(t0) + (F.col("id") * 7919) % 90_000).alias("ts"),
+    )
+    fa = spark.range(0, 80).select(
+        (F.col("id") % 7).cast("int").alias("k"),
+        F.timestamp_seconds(F.lit(t0) + ((F.col("id") * 104_729) % 25) * 4000).alias("ft"),
+        F.col("id").cast("double").alias("a"),
+        F.col("id").alias("a_order"),
+    )
+    fb = spark.range(0, 50).select(
+        (F.col("id") % 5).cast("int").alias("k"),
+        F.timestamp_seconds(F.lit(t0) + (F.col("id") * 15_485_863) % 95_000).alias("ft"),
+        (F.col("id") * 2).alias("b"),
+    )
+    return spine, fa, fb
+
+
+@pytest.mark.parametrize("direction", ["backward", "forward", "nearest"])
+def test_one_task_and_shuffle_plans_agree(spark, direction):
+    """The one-task plan and the shuffle plan return the same rows, with
+    a tiebreak, a tolerance and a matched time. ``openCostInBytes=1``
+    makes every input more than one split, which forces the shuffle."""
+    from databricks_demo_feature_store_spark.operators.joins import (
+        point_in_time_multi_join,
+    )
+
+    spine, fa, fb = _asof_inputs(spark)
+
+    def join():
+        return point_in_time_multi_join(
+            spine,
+            [
+                {
+                    "features": fa,
+                    "feature_time": "ft",
+                    "feature_cols": ["a"],
+                    "feature_tiebreak": ["a_order"],
+                    "matched_time_col": "a_ft",
+                },
+                {"features": fb, "feature_time": "ft", "tolerance_expr": "INTERVAL 2 HOURS"},
+            ],
+            keys=["k"],
+            spine_time="ts",
+            direction=direction,
+        )
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    one_task = join()
+    assert "Exchange" not in _plan(one_task)
+    got = rows(one_task)
+    key = "spark.sql.files.openCostInBytes"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        shuffled = join()
+        assert "Exchange" in _plan(shuffled)
+        want = rows(shuffled)
+    finally:
+        spark.conf.set(key, saved)
+    assert got == want
+    assert len(got) == 60
+    assert any(r[3] is not None for r in got)  # a matched
+    assert {r[5] is None for r in got} == {True, False}  # b matched and missed
+
+
 def test_pinned_read_schema_tracks_outside_writes(spark, manager):
     """The pin is used only while the listing it records is current: a
     table rewritten outside the manager with an extra column is read
@@ -1128,6 +1239,21 @@ def test_failed_overwrite_keeps_table_and_registry(spark, manager):
     assert _rows(manager, SPEC.name) == before
     assert manager.get_metadata(SPEC.name) == meta
     assert sorted(os.listdir(manager.root)) == [SPEC.name]
+
+
+def test_overwrite_is_sized_to_one_file(spark, manager):
+    """A small overwrite whose plan has a size estimate lands as one data
+    file, not one per input partition."""
+    from databricks_demo_feature_store_spark.sources.writers import data_file_listing
+
+    df = spark.range(0, 25, numPartitions=8).select(
+        F.col("id").cast("int").alias("pk_customer"),
+        F.date_add(F.lit(dt.date(2024, 1, 1)), F.col("id").cast("int")).alias("tpk_release_dt"),
+        F.col("id").cast("double").alias("f1"),
+    )
+    manager.save(df, SPEC, mode="overwrite")
+    assert len(data_file_listing(manager.path(SPEC.name))) == 1
+    assert manager.read(SPEC.name).count() == 25
 
 
 def test_self_overwrite_reads_the_table_it_replaces(spark, manager):

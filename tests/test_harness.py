@@ -165,6 +165,44 @@ def test_only_run_prints_its_line_and_writes_no_record(tmp_path, monkeypatch, ca
     assert {p.name: p.read_bytes() for p in tmp_path.iterdir()} == before
 
 
+class _Chunk:
+    """Stands in for a sweep's chunk child: records the queries it was
+    given and writes a timing for each to its out file."""
+
+    chunks: list[list[str]] = []
+
+    def __init__(self, _cmd, env, **_kw):
+        names = env["SPARK_GRAFT_BENCH_ONLY"].split(",")
+        self.chunks.append(names)
+        with open(env["SPARK_GRAFT_BENCH_OUT"], "w") as fh:
+            json.dump({"queries": {n: 1.0 for n in names}}, fh)
+        self.returncode = 0
+
+    def communicate(self):
+        return b"", b""
+
+
+def test_sweep_set_is_the_registry(tmp_path, monkeypatch, capsys):
+    import signal
+    import subprocess
+
+    names = ["q_z", "q01_pricing_summary", "q_ext_a", "q_filter_fold", "q_stream_dedup"]
+    monkeypatch.setattr(bench, "ROOT", str(tmp_path))
+    monkeypatch.setattr(bench, "_register_all", lambda: {n: None for n in names})
+    monkeypatch.setattr(subprocess, "Popen", _Chunk)
+    monkeypatch.setattr(signal, "signal", lambda *_: None)
+    monkeypatch.setattr(_Chunk, "chunks", [])
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", "/data/sf0.01")
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_CHUNK", "2")
+    for var in ("SPARK_GRAFT_BENCH_ONLY", "SPARK_GRAFT_BENCH_LIMIT", "SPARK_GRAFT_BENCH_BUDGET_SEC"):
+        monkeypatch.delenv(var, raising=False)
+    bench.main()
+    assert [n for chunk in _Chunk.chunks for n in chunk] == names
+    line = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert line["n_queries"] == len(names) and "partial" not in line
+    assert list(tmp_path.iterdir()) == []  # no record below sf0.1
+
+
 # ---- slow-test guards ----------------------------------------------------
 
 

@@ -134,7 +134,6 @@ PYSPARK_35_METHODS_VERIFIED = {
     "eqNullSafe", "getField", "isNotNull", "isNull", "isin", "otherwise",
     "over", "rlike", "startswith", "substr", "when",
     "like",  # Column.like, 1.3
-    "try_cast",  # Column.try_cast added 3.5.0
     # SparkSession / catalog-ish
     "createDataFrame", "range", "read", "sql", "table", "exists",
     "conf",  # JVM SessionState.conf() through py4j; SparkSession.conf is a 2.0 property
