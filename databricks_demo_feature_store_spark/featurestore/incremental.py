@@ -89,19 +89,17 @@ def aggregate_state(
 def merge_aggregate_state(
     state_a: DataFrame, state_b: DataFrame, keys: Sequence[str]
 ) -> DataFrame:
-    """Cell-sum two moment states (union + one hash agg). Because each
-    component is a commutative monoid, ``merge(state(A), state(B)) ==
-    state(A ∪ B)`` bit-for-bit — the property the incremental refresh
-    and any N-way tree of merges rely on."""
+    """Cell-sum two states (union + one hash agg): every non-key column,
+    in ``state_a``'s column order — moments, histogram bins, sketch
+    cells alike. Because each cell is a commutative monoid,
+    ``merge(state(A), state(B)) == state(A ∪ B)`` bit-for-bit — the
+    property the incremental refresh and any N-way tree of merges rely
+    on."""
     keys = list(keys)
     return (
         state_a.unionByName(state_b)
         .groupBy(*keys)
-        .agg(
-            F.sum("n").alias("n"),
-            F.sum("s").alias("s"),
-            F.sum("s2").alias("s2"),
-        )
+        .agg(*[F.sum(c).alias(c) for c in state_a.columns if c not in keys])
     )
 
 
@@ -146,24 +144,12 @@ def histogram_state(
     last bin (explicit boundary-loss semantics — pick [lo, hi) from a
     profile first). Bin counts are a commutative monoid under
     element-wise sum, so histogram state merges exactly like moment
-    state: ``merge(state(A), state(B)) == state(A ∪ B)`` bit-for-bit.
-    One hash aggregation with map-side combine; state is nbins longs
-    per key regardless of event volume.
+    state (:func:`merge_aggregate_state`): ``merge(state(A), state(B))
+    == state(A ∪ B)`` bit-for-bit. One hash aggregation with map-side
+    combine; state is nbins longs per key regardless of event volume.
     """
     keys = list(keys)
     return events.groupBy(*keys).agg(*_hist_aggs(value_col, lo, hi, nbins))
-
-
-def merge_histogram_state(
-    state_a: DataFrame, state_b: DataFrame, keys: Sequence[str], nbins: int
-) -> DataFrame:
-    """Element-wise sum of two histogram states (union + one hash agg)."""
-    keys = list(keys)
-    return (
-        state_a.unionByName(state_b)
-        .groupBy(*keys)
-        .agg(*[F.sum(f"hist_{i}").alias(f"hist_{i}") for i in range(int(nbins))])
-    )
 
 
 def quantile_from_hist(

@@ -1300,9 +1300,10 @@ def q_ext_sketch_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # last-ulp drift is crushed by the ~1e-7 float32 quantization step. Every
 # other arithmetic step (dot-product folds, sqrt, division, argmax
 # tie-breaks) is an identical IEEE754 sequential computation in both
-# engines. The within-cluster drop replays the columnar pair filter
-# (unit-normalize once, dot >= threshold); tests/test_sketches.py pins the
-# Arrow gram-matrix path to the same verdicts.
+# engines. The within-cluster drop replays semantic_dedup's gram-matrix
+# verdict as a SQL pair filter (unit-normalize once, dot >= threshold,
+# zero vectors never match); tests/test_sketches.py pins the Arrow path
+# against a brute-force replay.
 
 
 def _sem_cos(v: str, cv: str) -> str:

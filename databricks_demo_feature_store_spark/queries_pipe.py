@@ -1849,11 +1849,11 @@ def _multibatch_ingest_oracle(
     )
 
     def shingle_chain(src, pfx):
-        return f"""{pfx}n AS (
+        return f"""{pfx}n AS MATERIALIZED (
       SELECT doc_id, regexp_replace(trim(lower(text)), '\\s+', ' ', 'g') AS norm
       FROM {src}
     ),
-    {pfx}sh AS (
+    {pfx}sh AS MATERIALIZED (
       SELECT doc_id,
              CASE
                WHEN len(t) >= 3 THEN list_distinct(
@@ -1864,8 +1864,8 @@ def _multibatch_ingest_oracle(
              END AS sh
       FROM (SELECT doc_id, norm, string_split(norm, ' ') AS t FROM {pfx}n)
     ),
-    {pfx}sig AS (SELECT doc_id, {mins} FROM {pfx}sh),
-    {pfx}band AS ({" UNION ALL ".join(
+    {pfx}sig AS MATERIALIZED (SELECT doc_id, {mins} FROM {pfx}sh),
+    {pfx}band AS MATERIALIZED ({" UNION ALL ".join(
         f'''SELECT doc_id, {b} AS band,
             md5(concat_ws(',', {", ".join(f"CAST(mh{b * rows + r} AS VARCHAR)" for r in range(rows))})) AS band_key
             FROM {pfx}sig'''
@@ -1875,18 +1875,18 @@ def _multibatch_ingest_oracle(
     ctes = []
     for r in range(n_batches):
         p = f"r{r}"
-        ctes.append(f"""{p}raw AS (
+        ctes.append(f"""{p}raw AS MATERIALIZED (
       SELECT DISTINCT {ohash('text', 'corpus')} AS doc_id, text
       FROM documents WHERE doc_id % {n_batches} = {r}
     )""")
         ctes.append(shingle_chain(f"{p}raw", f"{p}b"))
-        ctes.append(f"""{p}cand AS (
+        ctes.append(f"""{p}cand AS MATERIALIZED (
       SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
       FROM {p}bband a JOIN {p}bband b
         ON a.band = b.band AND a.band_key = b.band_key
       WHERE a.doc_id < b.doc_id
     ),
-    {p}drop AS (
+    {p}drop AS MATERIALIZED (
       SELECT DISTINCT c.id_b AS doc_id
       FROM {p}cand c
       JOIN {p}bsh x ON x.doc_id = c.id_a
@@ -1894,34 +1894,34 @@ def _multibatch_ingest_oracle(
       WHERE CAST(len(list_intersect(x.sh, y.sh)) AS DOUBLE)
             / len(list_distinct(list_concat(x.sh, y.sh))) >= {threshold}
     ),
-    {p}keep0 AS (
+    {p}keep0 AS MATERIALIZED (
       SELECT r.* FROM {p}raw r LEFT JOIN {p}drop d USING (doc_id)
       WHERE d.doc_id IS NULL
     )""")
         if r == 0:
-            ctes.append(f"corpus1 AS (SELECT doc_id, text FROM {p}keep0)")
+            ctes.append(f"corpus1 AS MATERIALIZED (SELECT doc_id, text FROM {p}keep0)")
         else:
-            ctes.append(f"""{p}allv AS (
+            ctes.append(f"""{p}allv AS MATERIALIZED (
       SELECT DISTINCT doc_id, text FROM (
         SELECT doc_id, text FROM {p}keep0
         UNION ALL SELECT doc_id, text FROM corpus{r}
       )
     )""")
             ctes.append(shingle_chain(f"{p}allv", f"{p}u"))
-            ctes.append(f"""{p}wit AS (
+            ctes.append(f"""{p}wit AS MATERIALIZED (
       SELECT band, band_key, doc_id AS id_corpus,
              ROW_NUMBER() OVER (PARTITION BY band, band_key
                                 ORDER BY doc_id) AS rn
       FROM {p}uband
       WHERE doc_id IN (SELECT doc_id FROM corpus{r})
     ),
-    {p}xcand AS (
+    {p}xcand AS MATERIALIZED (
       SELECT DISTINCT b.doc_id AS id_batch, w.id_corpus
       FROM {p}uband b
       JOIN {p}wit w ON b.band = w.band AND b.band_key = w.band_key
       WHERE b.doc_id IN (SELECT doc_id FROM {p}keep0) AND w.rn <= {cap}
     ),
-    {p}flagged AS (
+    {p}flagged AS MATERIALIZED (
       SELECT DISTINCT c.id_batch AS doc_id
       FROM {p}xcand c
       JOIN {p}ush x ON x.doc_id = c.id_batch
@@ -1929,7 +1929,7 @@ def _multibatch_ingest_oracle(
       WHERE CAST(len(list_intersect(x.sh, y.sh)) AS DOUBLE)
             / len(list_distinct(list_concat(x.sh, y.sh))) >= {threshold}
     ),
-    corpus{r + 1} AS (
+    corpus{r + 1} AS MATERIALIZED (
       SELECT doc_id, text FROM corpus{r}
       UNION ALL
       SELECT k.doc_id, k.text FROM {p}keep0 k

@@ -22,6 +22,32 @@ Design:
 State-store note: aggregations shuffle by grouping key into the state
 store, so key skew maps to state skew; the session/user keys used here
 are high-cardinality and uniform.
+
+Micro-batch folds: every ``foreachBatch`` operator here (and
+``textops/index_store.py upsert_stream``) drains through
+:func:`drain_batches` — empty batches skipped, ``availableNow`` trigger,
+an optional after-batch hook that runs before the checkpoint commit
+(the fault-injection seam of the crash-replay tests).
+
+Versioned state: the folds that keep their own state on disk (the
+count-min sketch, the CDC table, the trailing moment state, the CDF join
+and aggregate views) share ONE commit protocol. State lives in ``v<N>``
+subdirectories, where N counts commits; each carries an ``_APPLIED``
+marker (a ``_``-prefixed file, invisible to parquet readers) holding the
+last stream position folded into it — the micro-batch id, or the source
+version for CDF folds (−1 / the bootstrap version for an initial
+snapshot). A commit (:func:`_commit_state`) writes ``_tmp_v<N>`` plus the
+marker, publishes both with ONE ``os.rename`` to ``v<N>`` and then drops
+``v<N-1>``: readers (:func:`_read_state`, always the newest ``v<N>``)
+see the old version or the new one, never a partial write, and a
+``_tmp_v<N>`` left by a crash is ignored and overwritten by the next
+commit. Every fold skips a batch whose position is at or below the
+marker, so a batch replayed after a crash between the state commit and
+the checkpoint commit is a no-op instead of a double fold; maintenance
+commits (:func:`vacuum_cdc_table`) carry the marker forward. Batch-id
+state shares its checkpoint's lifetime: a FRESH checkpoint (batch ids
+restart at 0) against old state would wrongly skip, so start both empty
+together.
 """
 
 from __future__ import annotations
@@ -32,6 +58,7 @@ import itertools
 import math
 import os
 import re
+import shutil
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -273,6 +300,30 @@ def stream_to_sink(
     )
 
 
+def drain_batches(stream: DataFrame, checkpoint: str, fold, after_batch_hook=None):
+    """Run ``fold(batch_df, batch_id)`` on every non-empty micro-batch of
+    ``stream`` (foreachBatch — the streaming↔batch bridge, so the batch
+    frame supports the full batch API), then ``after_batch_hook(batch_id)``
+    when given, before the checkpoint commit. availableNow: drains the
+    backlog and stops; returns the StreamingQuery (caller owns its
+    lifecycle)."""
+
+    def run(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        fold(batch_df, batch_id)
+        if after_batch_hook is not None:
+            after_batch_hook(batch_id)
+
+    return (
+        stream.writeStream.foreachBatch(run)
+        .option("checkpointLocation", checkpoint)
+        .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def stream_features_to_store(
     result: DataFrame,
     manager,
@@ -280,25 +331,15 @@ def stream_features_to_store(
     checkpoint: str,
 ):
     """Streaming feature materialization: every micro-batch MERGE-upserts
-    into a feature table through the FeatureStoreManager (foreachBatch is
-    the streaming↔batch bridge — inside it the batch frame supports the
-    full writer surface, incl. schema-evolution policy).
+    into a feature table through the FeatureStoreManager (inside
+    foreachBatch the batch frame supports the full writer surface, incl.
+    schema-evolution policy).
 
     Exactly-once: the checkpoint tracks committed batches; the upsert is
     idempotent on the table's primary keys, so replays converge. Returns
     the StreamingQuery (caller owns its lifecycle)."""
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        manager.save(batch_df, spec, mode="merge")
-
-    return (
-        result.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
+    return drain_batches(
+        result, checkpoint, lambda batch_df, _: manager.save(batch_df, spec, mode="merge")
     )
 
 
@@ -485,16 +526,13 @@ def stream_ingest_corpus_dedup(
     corpus (step 3a below) — the near-dup banding alone would usually
     catch the re-arrival too, but its deterministic per-bucket witness
     cap can exclude the exact twin on a hot bucket, so idempotence must
-    not depend on it. ``after_append_hook(batch_id)``, when given, runs
-    after the corpus append and before foreachBatch returns (i.e.
-    before the checkpoint commit) — the fault-injection point the
-    crash-recovery test uses; production callers leave it None. At
-    warehouse scale, persist the corpus MinHash band table alongside
-    the corpus and feed it to the cross step instead of re-deriving
-    signatures from text (the operator reads the corpus per batch here
-    for self-containedness). Runs with ``availableNow`` so a backlog
-    drains in one call; returns the StreamingQuery (caller owns its
-    lifecycle).
+    not depend on it. ``after_append_hook`` is :func:`drain_batches`'
+    after-batch hook (runs after the corpus append, before the
+    checkpoint commit). At warehouse scale, persist the corpus MinHash
+    band table alongside the corpus and feed it to the cross step
+    instead of re-deriving signatures from text (the operator reads the
+    corpus per batch here for self-containedness). Returns the
+    StreamingQuery.
     """
     from databricks_demo_feature_store_spark.textops.dedup import (
         cross_corpus_dedup_pairs,
@@ -506,8 +544,6 @@ def stream_ingest_corpus_dedup(
     stream = spark.readStream.schema(schema).json(input_path)
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         spark_b = batch_df.sparkSession
         # hash the batch text ONCE into the checkpointed frame: batch-side
         # signatures, LSH verification and the cross-corpus step all reuse
@@ -562,40 +598,58 @@ def stream_ingest_corpus_dedup(
             ).select(F.col("id_batch").alias("doc_id")).distinct()
             batch = batch.join(flagged, on="doc_id", how="left_anti")
         batch.drop("__hs").write.mode("append").parquet(corpus_path)
-        if after_append_hook is not None:
-            after_append_hook(batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain_batches(stream, checkpoint, ingest, after_append_hook)
 
 
-def _latest_version(directory: str) -> int | None:
-    """Highest committed version (``v<N>`` entry) under ``directory`` — a
-    sketch, CDC table, state or CDF view — or ``None`` when nothing has
-    committed yet."""
-    import re as _re
+_APPLIED = "_APPLIED"
 
+
+def _state_head(path: str) -> tuple[int, int] | None:
+    """``(version, applied)`` of the newest committed ``v<N>`` under
+    ``path`` (see "Versioned state" in the module docstring), or ``None``
+    when nothing has committed yet. A ``v<N>`` without its marker raises:
+    no commit leaves one."""
     try:
-        names = os.listdir(directory)
+        names = os.listdir(path)
     except FileNotFoundError:
         return None
-    versions = [int(n[1:]) for n in names if _re.fullmatch(r"v\d+", n)]
-    return max(versions) if versions else None
+    versions = [int(n[1:]) for n in names if re.fullmatch(r"v\d+", n)]
+    if not versions:
+        return None
+    version = max(versions)
+    with open(os.path.join(path, f"v{version}", _APPLIED)) as fh:
+        return version, int(fh.read())
+
+
+def _read_state(
+    spark: SparkSession, path: str, head: tuple[int, int] | None = None
+) -> DataFrame:
+    """The committed state at ``head`` (default: the newest version)."""
+    head = head or _state_head(path)
+    if head is None:
+        raise FileNotFoundError(f"state at {path} not initialized: no committed version")
+    return spark.read.parquet(os.path.join(path, f"v{head[0]}"))
+
+
+def _commit_state(
+    df: DataFrame, path: str, applied: int, head: tuple[int, int] | None
+) -> None:
+    """Commit ``df`` as the version after ``head`` with marker ``applied``:
+    staging write, one rename, then drop the superseded version."""
+    version = 0 if head is None else head[0] + 1
+    staging = os.path.join(path, f"_tmp_v{version}")
+    df.write.mode("overwrite").parquet(staging)  # clears a crashed staging dir
+    with open(os.path.join(staging, _APPLIED), "w") as fh:
+        fh.write(str(int(applied)))
+    os.rename(staging, os.path.join(path, f"v{version}"))
+    if head is not None:
+        shutil.rmtree(os.path.join(path, f"v{head[0]}"), ignore_errors=True)
 
 
 def read_count_min_sketch(spark: SparkSession, sketch_path: str) -> DataFrame:
-    """Read the latest committed sketch maintained by
-    :func:`stream_count_min` (the highest ``v<batch_id>`` subdirectory —
-    partially-written ``_tmp_*`` staging dirs are never visible here)."""
-    latest = _latest_version(sketch_path)
-    if latest is None:
-        raise FileNotFoundError(f"no committed sketch under {sketch_path}")
-    return spark.read.parquet(os.path.join(sketch_path, f"v{latest}"))
+    """The latest committed sketch maintained by :func:`stream_count_min`."""
+    return _read_state(spark, sketch_path)
 
 
 def _merge_cms_batch(
@@ -607,49 +661,25 @@ def _merge_cms_batch(
     width: int,
     seed: int | str,
 ) -> bool:
-    """Idempotently merge one micro-batch's cell counts into the standing
-    sketch. Returns ``True`` if the batch was applied, ``False`` if it was
-    skipped because version ``batch_id`` (or later) is already committed —
-    the crash-replay case (crash between commit-rename and checkpoint
-    commit must NOT double-count the batch).
-
-    Commit protocol: write the merged sketch to a staging dir, then one
-    atomic ``os.rename`` to ``v<batch_id>`` (the destination never exists
-    when we get here, so the rename either fully lands or fully doesn't —
-    no window where the sketch is missing or half-written), then
-    best-effort delete of superseded versions (readers always resolve the
-    MAX committed version, so leftover old dirs are harmless).
-    """
-    import shutil
-
+    """Merge one micro-batch's cell counts into the standing sketch and
+    commit it (versioned state, module docstring). Returns ``False`` when
+    the batch was already applied — the crash-replay case."""
+    from databricks_demo_feature_store_spark.featurestore.incremental import (
+        merge_aggregate_state,
+    )
     from databricks_demo_feature_store_spark.operators.sketches import (
         count_min_sketch,
     )
 
-    latest = _latest_version(sketch_path)
-    if latest is not None and latest >= batch_id:
-        return False  # already merged: replay after a post-commit crash
-    if batch_df.isEmpty():
+    head = _state_head(sketch_path)
+    if head and head[1] >= batch_id:
         return False
     cells = count_min_sketch(batch_df, col, depth=depth, width=width, seed=seed)
-    if latest is not None:
-        standing = batch_df.sparkSession.read.parquet(
-            os.path.join(sketch_path, f"v{latest}")
-        )
-        cells = (
-            standing.unionByName(cells)
-            .groupBy("row_idx", "bucket")
-            .agg(F.sum("n").alias("n"))
-        )
-    # the sketch is tiny (<= depth*width rows): collect-free single-file
-    # write via coalesce(1) into staging (overwrite clears a staging dir
-    # left by a pre-rename crash), then the atomic commit rename
-    os.makedirs(sketch_path, exist_ok=True)
-    staging = os.path.join(sketch_path, f"_tmp_v{batch_id}")
-    cells.coalesce(1).write.mode("overwrite").parquet(staging)
-    os.rename(staging, os.path.join(sketch_path, f"v{batch_id}"))
-    if latest is not None:
-        shutil.rmtree(os.path.join(sketch_path, f"v{latest}"), ignore_errors=True)
+    if head:
+        standing = _read_state(batch_df.sparkSession, sketch_path, head)
+        cells = merge_aggregate_state(standing, cells, ["row_idx", "bucket"])
+    # the sketch is tiny (<= depth*width rows): one file
+    _commit_state(cells.coalesce(1), sketch_path, batch_id, head)
     return True
 
 
@@ -675,78 +705,41 @@ def stream_count_min(
     foreachBatch read-merge-commit on a ≤ depth·width-row parquet — the
     rewrite cost is CONSTANT per batch regardless of history (this is
     the smallest possible streaming state: the sketch IS the aggregate).
-    Exactly-once under crash, not just under replay: each committed
-    sketch lives in a ``v<batch_id>`` subdirectory landed by ONE atomic
-    rename, and the merge SKIPS any batch_id at or below the committed
-    version (:func:`_merge_cms_batch`), so a batch replayed after a
-    crash between the sketch commit and the checkpoint commit is a
-    no-op instead of a double count. Read the standing sketch with
-    :func:`read_count_min_sketch` (it resolves the latest committed
-    version). The sketch directory and the checkpoint share a lifetime —
-    restarting with a FRESH checkpoint (batch ids reset to 0) against an
-    old sketch directory would wrongly skip; start both empty together.
-    availableNow drains the backlog in one call; returns the
-    StreamingQuery.
+    Exactly-once under crash through the versioned-state protocol (module
+    docstring); read the standing sketch with
+    :func:`read_count_min_sketch`. Returns the StreamingQuery.
     """
-    stream = spark.readStream.schema(schema).json(input_path)
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        _merge_cms_batch(batch_df, batch_id, sketch_path, col, depth, width, seed)
-
-    return (
-        stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
+    return drain_batches(
+        spark.readStream.schema(schema).json(input_path),
+        checkpoint,
+        lambda batch_df, batch_id: _merge_cms_batch(
+            batch_df, batch_id, sketch_path, col, depth, width, seed
+        ),
     )
 
 
-def _applied_batch_of(table_path: str, version: int) -> int:
-    """The highest stream batch_id folded into committed ``v<version>``
-    (the ``_APPLIED_BATCH`` marker — a ``_``-prefixed file, invisible to
-    parquet readers). −1 for a bootstrap/no-batches state; missing marker
-    (pre-marker layouts) degrades to ``version − 1``, the old naming
-    convention."""
-    try:
-        with open(os.path.join(table_path, f"v{version}", "_APPLIED_BATCH")) as fh:
-            return int(fh.read().strip())
-    except (FileNotFoundError, ValueError):
-        return version - 1
-
-
-def _write_applied_marker(staging: str, applied_batch: int) -> None:
-    with open(os.path.join(staging, "_APPLIED_BATCH"), "w") as fh:
-        fh.write(str(int(applied_batch)))
-
-
 def init_cdc_table(snapshot: DataFrame, table_path: str) -> None:
-    """Bootstrap a CDC-maintained table from an initial snapshot (stored
-    as version ``v0`` carrying applied-batch marker −1; each stream batch
-    commits the NEXT version number — version numbers are commit
-    counters, decoupled from batch ids so maintenance commits like
-    :func:`vacuum_cdc_table` can interleave without desynchronizing the
-    replay-skip check). Initial rows get sequence −1 — every real change
-    (sequences must be ≥ 0) supersedes them."""
-    os.makedirs(table_path, exist_ok=True)
-    staging = os.path.join(table_path, "_tmp_v0")
-    snapshot.select(
-        "*",
-        F.lit(-1).cast("long").alias("__seq"),
-        F.lit(False).alias("__deleted"),
-    ).write.mode("overwrite").parquet(staging)
-    _write_applied_marker(staging, -1)
-    os.rename(staging, os.path.join(table_path, "v0"))
+    """Bootstrap a CDC-maintained table from an initial snapshot: version
+    ``v0`` with applied marker −1 (versioned state, module docstring).
+    Initial rows get sequence −1 — every real change (sequences must be
+    ≥ 0) supersedes them."""
+    _commit_state(
+        snapshot.select(
+            "*",
+            F.lit(-1).cast("long").alias("__seq"),
+            F.lit(False).alias("__deleted"),
+        ),
+        table_path,
+        -1,
+        None,
+    )
 
 
 def read_cdc_table(spark: SparkSession, table_path: str) -> DataFrame:
     """Read the latest committed state of a CDC-maintained table (live
     rows only — tombstones and the sequence watermark are internal)."""
-    latest = _latest_version(table_path)
-    if latest is None:
-        raise FileNotFoundError(f"no committed CDC table under {table_path}")
-    df = spark.read.parquet(os.path.join(table_path, f"v{latest}"))
-    return df.filter(~F.col("__deleted")).drop("__seq", "__deleted")
+    state = _read_state(spark, table_path)
+    return state.filter(~F.col("__deleted")).drop("__seq", "__deleted")
 
 
 def stream_apply_changes(
@@ -768,9 +761,8 @@ def stream_apply_changes(
     MERGE loop (``notebooks/utils.py:1748-1758``), with two guarantees
     that loop does not have:
 
-    - **Exactly-once under crash**: each post-batch state commits as an
-      atomic ``v<batch_id+1>`` rename (the CMS commit protocol —
-      :func:`_merge_cms_batch`); a batch replayed after a crash between
+    - **Exactly-once under crash**: each post-batch state is a versioned
+      commit (module docstring); a batch replayed after a crash between
       the state commit and the checkpoint commit SKIPS instead of
       re-applying.
     - **Out-of-order safety ACROSS batches**: every stored row carries
@@ -783,22 +775,16 @@ def stream_apply_changes(
       scale tombstones are vacuumed once the source's out-of-order
       horizon passes.
 
-    ``after_commit_hook(batch_id)``, when given, runs after the state
-    commit lands and before foreachBatch returns (i.e. before the
-    CHECKPOINT commit) — the fault-injection point the crash-recovery
-    test uses to kill the stream in the exactly-once danger window;
-    production callers leave it None.
+    ``after_commit_hook`` is :func:`drain_batches`' after-batch hook
+    (after the state commit, before the checkpoint commit).
 
     Sequences must be ≥ 0 (init rows use −1) and unique per key across
     the whole stream. The per-batch rewrite here is whole-table (like
     the reference's MERGE on a small feature table); a 100 TB target
     pairs the same winner-aggregation with a partition-pruned writer so
     only partitions holding touched keys rewrite. Read the maintained
-    table with :func:`read_cdc_table`. Returns the StreamingQuery
-    (availableNow — drains the backlog and stops).
+    table with :func:`read_cdc_table`. Returns the StreamingQuery.
     """
-    import shutil
-
     keys = list(keys)
     stream = spark.readStream.schema(schema).json(input_path)
     payload = [
@@ -807,12 +793,9 @@ def stream_apply_changes(
     ]
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        latest = _latest_version(table_path)
-        if latest is not None and _applied_batch_of(table_path, latest) >= batch_id:
+        head = _state_head(table_path)
+        if head and head[1] >= batch_id:
             return  # replay after a post-commit crash: already applied
-        if batch_df.isEmpty():
-            return
-        sess = batch_df.sparkSession
         cand = F.struct(
             F.col(op_col).alias("__op"),
             F.col(sequence_col).cast("long").alias("__seq"),
@@ -827,7 +810,7 @@ def stream_apply_changes(
         # same two contract guards as batch apply_changes: a NULL op
         # would make the later `__op == delete_op` comparison NULL and
         # silently tombstone the key, so raise in the same aggregation
-        finals = finals.select(
+        unioned = finals.select(
             *keys,
             F.when(
                 F.col("__n") != F.col("__nseq"),
@@ -841,9 +824,8 @@ def stream_apply_changes(
                 ),
             ).otherwise(F.col("__cand")).alias("__cand"),
         )
-        sides = [finals]
-        if latest is not None:
-            stored = sess.read.parquet(os.path.join(table_path, f"v{latest}"))
+        if head:
+            stored = _read_state(batch_df.sparkSession, table_path, head)
             missing = [c for c in payload if c not in stored.columns]
             if missing:
                 raise ValueError(
@@ -851,7 +833,7 @@ def stream_apply_changes(
                     f"columns {missing} — the stream schema and the table "
                     "bootstrapped by init_cdc_table must agree"
                 )
-            sides.append(
+            unioned = unioned.unionByName(
                 stored.select(
                     *keys,
                     F.struct(
@@ -862,9 +844,6 @@ def stream_apply_changes(
                     ).alias("__cand"),
                 )
             )
-        unioned = sides[0]
-        for s in sides[1:]:
-            unioned = unioned.unionByName(s)
         winners = unioned.groupBy(*keys).agg(
             F.max_by(F.col("__cand"), F.col("__cand.__seq")).alias("__w")
         )
@@ -874,26 +853,9 @@ def stream_apply_changes(
             F.col("__w.__seq").alias("__seq"),
             (F.col("__w.__op") == F.lit(delete_op)).alias("__deleted"),
         )
-        os.makedirs(table_path, exist_ok=True)
-        next_version = (latest if latest is not None else -1) + 1
-        staging = os.path.join(table_path, f"_tmp_v{next_version}")
-        new_state.write.mode("overwrite").parquet(staging)
-        _write_applied_marker(staging, batch_id)
-        os.rename(staging, os.path.join(table_path, f"v{next_version}"))
-        if latest is not None:
-            shutil.rmtree(
-                os.path.join(table_path, f"v{latest}"), ignore_errors=True
-            )
-        if after_commit_hook is not None:
-            after_commit_hook(batch_id)
+        _commit_state(new_state, table_path, batch_id, head)
 
-    return (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain_batches(stream, checkpoint, apply_batch, after_commit_hook)
 
 
 def vacuum_cdc_table(spark: SparkSession, table_path: str, horizon_seq: int) -> int:
@@ -905,39 +867,23 @@ def vacuum_cdc_table(spark: SparkSession, table_path: str, horizon_seq: int) -> 
     guarding against reorderable stale updates. Returns the number of
     tombstones removed.
 
-    The vacuum commits exactly like a batch: the compacted state lands as
-    the next ``v<N+1>`` directory via one atomic rename (carrying the
-    previous version's applied-batch marker forward, so the stream's
-    replay-skip check is untouched by interleaved maintenance commits) —
-    readers never observe a partial vacuum and a crash mid-vacuum leaves
-    the previous version intact.
+    The vacuum is a versioned commit (module docstring) that carries the
+    applied marker forward, so the stream's replay-skip check is
+    untouched by interleaved maintenance commits.
     """
-    import shutil
-
-    latest = _latest_version(table_path)
-    if latest is None:
-        raise FileNotFoundError(f"no committed CDC table under {table_path}")
-    cur = spark.read.parquet(os.path.join(table_path, f"v{latest}"))
+    head = _state_head(table_path)
+    cur = _read_state(spark, table_path, head)
     dead = F.col("__deleted") & (F.col("__seq") <= F.lit(int(horizon_seq)))
     n_dead = cur.filter(dead).count()
-    if n_dead == 0:
-        return 0
-    applied = _applied_batch_of(table_path, latest)
-    staging = os.path.join(table_path, f"_tmp_v{latest + 1}")
-    cur.filter(~dead).write.mode("overwrite").parquet(staging)
-    _write_applied_marker(staging, applied)
-    os.rename(staging, os.path.join(table_path, f"v{latest + 1}"))
-    shutil.rmtree(os.path.join(table_path, f"v{latest}"), ignore_errors=True)
+    if n_dead:
+        _commit_state(cur.filter(~dead), table_path, head[1], head)
     return n_dead
 
 
 def read_trailing_state(spark: SparkSession, state_path: str) -> DataFrame:
     """Latest committed per-(keys, bucket) moment state maintained by
-    :func:`stream_trailing_state` (highest ``v<batch_id>`` dir)."""
-    latest = _latest_version(state_path)
-    if latest is None:
-        raise FileNotFoundError(f"no committed trailing state under {state_path}")
-    return spark.read.parquet(os.path.join(state_path, f"v{latest}"))
+    :func:`stream_trailing_state`."""
+    return _read_state(spark, state_path)
 
 
 def stream_trailing_state(
@@ -962,6 +908,9 @@ def stream_trailing_state(
     O(batch) + one state rewrite, never a rescan of event history, and
     serving a trailing window is a bucket-range sum
     (:func:`trailing_features_from_state`) instead of an event scan.
+    ``hist=(lo, hi, nbins)`` additionally maintains per-bucket fixed-bin
+    histogram counts next to the moments, the mergeable state
+    :func:`trailing_quantile_from_state` serves from.
 
     Because each bucket's state is a commutative monoid, the streamed
     state is BIT-IDENTICAL to a single batch aggregation of all events —
@@ -969,88 +918,36 @@ def stream_trailing_state(
     ``trailing_window_features`` recompute over raw events (the
     ``q_stream_trailing_features`` oracle proves exactly this).
 
-    Exactly-once under crash: same versioned commit protocol as
-    :func:`stream_count_min` — the merged state lands in ``v<batch_id>``
-    by one atomic rename and replayed batch ids at/below the committed
-    version are skipped, so a crash between state commit and checkpoint
-    commit cannot double-merge. State size is O(keys × active buckets);
-    at real scale the state table is partitioned by bucket so the
-    rewrite touches only buckets present in the batch. availableNow —
-    drains the backlog and stops; returns the StreamingQuery.
+    Exactly-once under crash through the versioned-state protocol
+    (module docstring); ``after_commit_hook`` is :func:`drain_batches`'
+    after-batch hook. State size is O(keys × active buckets); at real
+    scale the state table is partitioned by bucket so the rewrite
+    touches only buckets present in the batch. Returns the
+    StreamingQuery.
     """
-    import shutil
-
     from databricks_demo_feature_store_spark.featurestore.incremental import (
         aggregate_state,
         merge_aggregate_state,
     )
 
-    keys = list(keys)
+    gcols = [*keys, "bucket_start"]
     stream = spark.readStream.schema(schema).json(input_path)
-    # ``hist=(lo, hi, nbins)`` additionally maintains per-bucket
-    # fixed-bin histogram counts next to the moments — the mergeable
-    # state quantile-type trailing features serve from
-    # (:func:`trailing_quantile_from_state`); bin counts cell-sum on
-    # merge exactly like n/s/s2.
-    if hist is not None:
-        h_lo, h_hi, h_n = float(hist[0]), float(hist[1]), int(hist[2])
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        latest = _latest_version(state_path)
-        if latest is not None and latest >= batch_id:
+        head = _state_head(state_path)
+        if head and head[1] >= batch_id:
             return  # replay after a post-commit crash: already merged
-        if batch_df.isEmpty():
-            return
         b = batch_df.withColumn(
             "bucket_start", F.date_trunc(bucket, F.col(event_time).cast("timestamp"))
         )
-        # moments and bin counts in ONE hash aggregation (the old shape —
-        # aggregate_state joined to histogram_state on the same keys —
-        # paid a second agg plus a join exchange per micro-batch for
-        # columns the single groupBy computes side by side)
-        state = aggregate_state(
-            b, [*keys, "bucket_start"], value_col, scale,
-            hist=None if hist is None else (h_lo, h_hi, h_n),
-        )
-        if latest is not None:
-            standing = batch_df.sparkSession.read.parquet(
-                os.path.join(state_path, f"v{latest}")
-            )
-            gcols = [*keys, "bucket_start"]
-            if hist is None:
-                state = merge_aggregate_state(standing, state, gcols)
-            else:
-                state = (
-                    standing.unionByName(state)
-                    .groupBy(*gcols)
-                    .agg(
-                        F.sum("n").alias("n"),
-                        F.sum("s").alias("s"),
-                        F.sum("s2").alias("s2"),
-                        *[
-                            F.sum(f"hist_{i}").alias(f"hist_{i}")
-                            for i in range(h_n)
-                        ],
-                    )
-                )
-        os.makedirs(state_path, exist_ok=True)
-        staging = os.path.join(state_path, f"_tmp_v{batch_id}")
-        state.write.mode("overwrite").parquet(staging)
-        os.rename(staging, os.path.join(state_path, f"v{batch_id}"))
-        if latest is not None:
-            shutil.rmtree(
-                os.path.join(state_path, f"v{latest}"), ignore_errors=True
-            )
-        if after_commit_hook is not None:
-            after_commit_hook(batch_id)
+        # moments and bin counts in ONE hash aggregation
+        state = aggregate_state(b, gcols, value_col, scale, hist=hist)
+        if head:
+            standing = _read_state(batch_df.sparkSession, state_path, head)
+            state = merge_aggregate_state(standing, state, gcols)
+        _commit_state(state, state_path, batch_id, head)
 
-    return (
-        stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain_batches(stream, checkpoint, merge, after_commit_hook)
 
 
 def trailing_features_from_state(
@@ -1255,51 +1152,22 @@ def watermark_progress_metrics(query) -> list[dict]:
 # Streaming CDF source → incremental materialized view (the DLT pattern)
 # ---------------------------------------------------------------------------
 
-_CDF_VIEW_MARKER = "_source_version.json"
-
-
-def _cdf_view_source_version(view_path: str, view_version: int) -> int:
-    import json
-
-    with open(
-        os.path.join(view_path, f"v{view_version}", _CDF_VIEW_MARKER)
-    ) as fh:
-        return int(json.load(fh)["source_version"])
-
-
-def _commit_cdf_view(df: DataFrame, view_path: str, source_version: int) -> None:
-    """Atomic versioned commit of the view state (the CMS/CDC commit
-    protocol): staging dir carries the source-version marker, one rename
-    publishes both, the previous version is dropped after."""
-    import json
-    import shutil
-
-    latest = _latest_version(view_path)
-    next_version = (latest if latest is not None else -1) + 1
-    os.makedirs(view_path, exist_ok=True)
-    staging = os.path.join(view_path, f"_tmp_v{next_version}")
-    df.write.mode("overwrite").parquet(staging)
-    with open(os.path.join(staging, _CDF_VIEW_MARKER), "w") as fh:
-        json.dump({"source_version": int(source_version)}, fh)
-    os.rename(staging, os.path.join(view_path, f"v{next_version}"))
-    if latest is not None:
-        shutil.rmtree(os.path.join(view_path, f"v{latest}"), ignore_errors=True)
-
 
 def init_cdf_view(view_df: DataFrame, view_path: str, source_version: int) -> None:
     """Bootstrap the materialized view: the FULL join computed at
-    ``source_version`` of the fact table. The stream then folds only
-    commits newer than this version."""
-    if _latest_version(view_path) is not None:
+    ``source_version`` of the fact table, committed with that version as
+    its applied marker. The stream then folds only commits newer than
+    this version."""
+    if _state_head(view_path) is not None:
         raise FileExistsError(f"CDF view already initialized at {view_path}")
-    _commit_cdf_view(view_df, view_path, source_version)
+    _commit_state(view_df, view_path, source_version, None)
 
 
 def read_cdf_view(spark: SparkSession, view_path: str) -> DataFrame:
-    latest = _latest_version(view_path)
-    if latest is None:
-        raise FileNotFoundError(f"no CDF view at {view_path}")
-    return spark.read.parquet(os.path.join(view_path, f"v{latest}"))
+    return _read_state(spark, view_path)
+
+
+_COMMITS_SCHEMA = "version long, timestamp string, operation string"
 
 
 def stream_cdf_ivm(
@@ -1330,43 +1198,27 @@ def stream_cdf_ivm(
     delta-sized re-join) — a 10-commit backlog costs the same jobs as a
     1-commit backlog, and the view's history is never rescanned.
 
-    Exactly-once: the view commits via the atomic versioned-rename
-    protocol with the applied source version riding IN the commit; a
-    batch replayed after a crash between view commit and checkpoint
-    commit sees ``max_version <= applied`` and skips. Only the tiny
-    commit COORDINATES are ever collected to the driver (the markers are
-    bytes-sized; the data path stays distributed). Vacuum interplay: the
-    fact table must retain at least the last applied version
-    (``vacuum(keep_last=...)`` deeper than the stream's worst lag), or
-    the span diff loses its base snapshot.
+    Exactly-once: the view is versioned state (module docstring) whose
+    applied marker is the source version, so a batch replayed after a
+    crash between view commit and checkpoint commit — or re-delivered by
+    a fresh checkpoint — sees ``max_version <= applied`` and skips. Only
+    the max commit version is collected to the driver (the data path
+    stays distributed). Vacuum interplay: the fact table must retain at
+    least the last applied version (``vacuum(keep_last=...)`` deeper
+    than the stream's worst lag), or the span diff loses its base
+    snapshot.
     """
     from databricks_demo_feature_store_spark.featurestore.incremental import (
         cdf_deltas,
         refresh_join_view,
     )
 
-    stream = spark.readStream.schema(
-        "version long, timestamp string, operation string"
-    ).json(versioned.commits_path())
-
     def fold(batch_df: DataFrame, batch_id: int) -> None:
-        markers = [
-            int(r["version"])
-            for r in batch_df.select("version").distinct().collect()
-        ]
-        if not markers:
-            return
-        latest_view = _latest_version(view_path)
-        if latest_view is None:
-            raise FileNotFoundError(
-                f"CDF view at {view_path} not initialized — call "
-                "init_cdf_view with the bootstrap join first"
-            )
-        applied = _cdf_view_source_version(view_path, latest_view)
-        v_max = max(markers)
-        if v_max <= applied:
+        v_max = batch_df.agg(F.max("version")).first()[0]
+        head = _state_head(view_path)
+        if head and head[1] >= v_max:
             return  # replay after post-commit crash, or bootstrap marker
-        sess = batch_df.sparkSession
+        view = _read_state(batch_df.sparkSession, view_path, head)
         # pin the span diff once: cdf_deltas fans it out to three plan
         # consumers, each of which would re-run the full-outer version
         # join (see refresh_join_view_from_cdf); the feed is delta-sized.
@@ -1375,23 +1227,17 @@ def stream_cdf_ivm(
         # batch cannot be recomputed and the stream fails — fine for
         # local/demo scale; a long-running cluster stream should prefer
         # reliable checkpointing or recompute.
-        changes = versioned.changes_between(applied, v_max, [key]).localCheckpoint(
+        changes = versioned.changes_between(head[1], v_max, [key]).localCheckpoint(
             eager=True
         )
         delta, deletes = cdf_deltas(changes, key)
-        view = sess.read.parquet(os.path.join(view_path, f"v{latest_view}"))
         refreshed = refresh_join_view(
             view, delta, other, on=on, replace_key=key, deletes=deletes
         )
-        _commit_cdf_view(refreshed, view_path, v_max)
+        _commit_state(refreshed, view_path, v_max, head)
 
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
+    stream = spark.readStream.schema(_COMMITS_SCHEMA).json(versioned.commits_path())
+    return drain_batches(stream, checkpoint, fold)
 
 
 def stream_cdf_agg_ivm(
@@ -1410,54 +1256,32 @@ def stream_cdf_agg_ivm(
     pattern for both materialized-view kinds (join views AND aggregate
     views). Same commit-marker file source, same span-shaped fold (one
     ``changes_between(applied, max)`` however deep the backlog), same
-    exactly-once versioned state commit; deletes subtract and updates
-    re-price because pre-images fold with negated cells
-    (``cdf_aggregate_delta`` — the invertible-monoid half of aggregate
-    IVM). State is ≤ one row per key, so each commit is
-    O(changed rows + keys), never O(fact history). Bootstrap with
-    :func:`init_cdf_view` over ``aggregate_state(fact@v0)``; read with
-    :func:`read_cdf_view`; finalize with ``finalize_aggregates``.
+    versioned state; deletes subtract and updates re-price because
+    pre-images fold with negated cells (``cdf_aggregate_delta`` — the
+    invertible-monoid half of aggregate IVM). State is ≤ one row per
+    key, so each commit is O(changed rows + keys), never O(fact
+    history). Bootstrap with :func:`init_cdf_view` over
+    ``aggregate_state(fact@v0)``; read with :func:`read_cdf_view`;
+    finalize with ``finalize_aggregates``.
     """
     from databricks_demo_feature_store_spark.featurestore.incremental import (
         refresh_aggregate_state_from_cdf,
     )
 
-    stream = spark.readStream.schema(
-        "version long, timestamp string, operation string"
-    ).json(versioned.commits_path())
-
     def fold(batch_df: DataFrame, batch_id: int) -> None:
-        markers = [
-            int(r["version"])
-            for r in batch_df.select("version").distinct().collect()
-        ]
-        if not markers:
-            return
-        latest_state = _latest_version(state_path)
-        if latest_state is None:
-            raise FileNotFoundError(
-                f"CDF aggregate state at {state_path} not initialized — "
-                "call init_cdf_view with aggregate_state(fact@v0) first"
-            )
-        applied = _cdf_view_source_version(state_path, latest_state)
-        v_max = max(markers)
-        if v_max <= applied:
+        v_max = batch_df.agg(F.max("version")).first()[0]
+        head = _state_head(state_path)
+        if head and head[1] >= v_max:
             return  # replay after post-commit crash, or bootstrap marker
-        sess = batch_df.sparkSession
-        state = sess.read.parquet(os.path.join(state_path, f"v{latest_state}"))
         refreshed = refresh_aggregate_state_from_cdf(
-            state, versioned, id_keys=id_keys, agg_keys=agg_keys,
-            value_col=value_col, scale=scale, v_from=applied, v_to=v_max,
+            _read_state(batch_df.sparkSession, state_path, head), versioned,
+            id_keys=id_keys, agg_keys=agg_keys,
+            value_col=value_col, scale=scale, v_from=head[1], v_to=v_max,
         )
-        _commit_cdf_view(refreshed, state_path, v_max)
+        _commit_state(refreshed, state_path, v_max, head)
 
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
+    stream = spark.readStream.schema(_COMMITS_SCHEMA).json(versioned.commits_path())
+    return drain_batches(stream, checkpoint, fold)
 
 
 def ohlc_bars_stream(

@@ -62,6 +62,7 @@ from databricks_demo_feature_store_spark.featurestore.manager import (
     FeatureTableSpec,
 )
 from databricks_demo_feature_store_spark.functions.rounding import dround
+from databricks_demo_feature_store_spark.streaming.ops import drain_batches
 from databricks_demo_feature_store_spark.textops.similarity import (
     _l2sq,
     _pq_subvectors,
@@ -323,32 +324,21 @@ class VectorIndexStore:
     ):
         """Maintain the index from a STREAM of arriving embeddings:
         every micro-batch is assigned/encoded against the frozen
-        quantizers and MERGEd into the postings table (foreachBatch —
-        the streaming↔batch bridge, same discipline as
-        ``streaming/ops.py stream_features_to_store``). Exactly-once
-        under crash replay WITHOUT version markers: :meth:`upsert` is
-        idempotent — re-encoding the same vectors against the same
-        frozen quantizers produces identical rows, and the MERGE on the
-        id PK converges, so a batch replayed after a crash between the
-        table write and the checkpoint commit lands the same state.
-        availableNow — drains the backlog and stops; returns the
-        StreamingQuery. ``after_batch_hook(batch_id)`` is a test seam
+        quantizers and MERGEd into the postings table
+        (``streaming/ops.py drain_batches``, same discipline as
+        ``stream_features_to_store``). Exactly-once under crash replay
+        WITHOUT version markers: :meth:`upsert` is idempotent —
+        re-encoding the same vectors against the same frozen quantizers
+        produces identical rows, and the MERGE on the id PK converges,
+        so a batch replayed after a crash between the table write and
+        the checkpoint commit lands the same state. Returns the
+        StreamingQuery; ``after_batch_hook(batch_id)`` is a test seam
         for fault injection."""
-        stream = spark.readStream.schema(schema).json(input_path)
-
-        def fold(batch_df: DataFrame, batch_id: int) -> None:
-            if batch_df.isEmpty():
-                return
-            self.upsert(batch_df)
-            if after_batch_hook is not None:
-                after_batch_hook(batch_id)
-
-        return (
-            stream.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", checkpoint)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
+        return drain_batches(
+            spark.readStream.schema(schema).json(input_path),
+            checkpoint,
+            lambda batch_df, _: self.upsert(batch_df),
+            after_batch_hook,
         )
 
     def vacuum_tombstones(self) -> int:

@@ -524,7 +524,6 @@ def semantic_dedup(
     nlist: int = 16,
     threshold: float = 0.95,
     kmeans_iterations: int = 2,
-    strategy: str = "arrow",
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): cluster embeddings with the IVF coarse
     quantizer, then within each cluster drop every vector whose cosine to a
@@ -534,14 +533,14 @@ def semantic_dedup(
     Returns the input rows that SURVIVE, plus their ``cluster`` id.
 
     Scale shape: candidate pairs exist only WITHIN a cluster — the
-    all-pairs comparison is bounded per-cluster, an equi-join on the
-    cluster key, never a global cross join. At 100 TB raise ``nlist``
-    so clusters stay bounded (SemDeDup uses 50k clusters for LAION-scale
+    all-pairs comparison is bounded per-cluster, grouped on the cluster
+    key, never a global cross join. At 100 TB raise ``nlist`` so
+    clusters stay bounded (SemDeDup uses 50k clusters for LAION-scale
     corpora) and persist ``ivf_assign`` partitioned by cluster; the
-    pair join is then partition-local.
+    per-cluster scan is then partition-local.
 
-    ``strategy="arrow"`` (default): the within-cluster pair scan runs as
-    ONE Arrow-batched ``applyInPandas`` per cluster — normalize the
+    The within-cluster pair scan runs as ONE Arrow-batched
+    ``applyInPandas`` per cluster — normalize the
     cluster's vector block once, one BLAS matmul for the full Gram
     matrix, mask the upper triangle. This is exactly the SemDeDup paper's
     per-cluster computation, and vectorized float math is the one place
@@ -549,80 +548,40 @@ def semantic_dedup(
     folds evaluate per element, per pair). The d² pair work collapses
     into a d×d matmul with no pair-join shuffle at all — the groupBy
     already co-locates each cluster.
-
-    ``strategy="columnar"``: pure column algebra (unit-normalize each
-    vector once, dot-product-only pair filter) — engine-portable and the
-    cross-check path for the Arrow default.
     """
-    if strategy not in ("arrow", "columnar"):
-        raise ValueError(f"unknown semantic_dedup strategy {strategy!r}")
     cents = ivf_centroids(df, nlist, id_col, vec_col, kmeans_iterations)
     assigned = ivf_assign(df, cents, id_col, vec_col)
-    # The assignment feeds BOTH pair sides and the anti-join base; without
-    # materialization the whole Lloyd chain recomputes 3x. localCheckpoint
-    # truncates the iteration lineage too (same discipline as
-    # dedup_clusters); at cluster scale persist partitioned by `cluster`
-    # instead so the pair join is partition-local.
+    # localCheckpoint truncates the Lloyd iteration lineage (same
+    # discipline as dedup_clusters); at cluster scale persist partitioned
+    # by `cluster` instead so the per-cluster scan is partition-local.
     assigned = assigned.localCheckpoint(eager=False)
 
-    if strategy == "arrow":
-        thr = float(threshold)
+    thr = float(threshold)
 
-        def _drop_cluster_dups(pdf):
-            import numpy as np
+    def _drop_cluster_dups(pdf):
+        import numpy as np
 
-            if len(pdf) <= 1:
-                return pdf
-            ids = pdf[id_col].to_numpy()
-            order = np.argsort(ids, kind="stable")
-            V = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col].iloc[order]]
-            )
-            norms = np.linalg.norm(V, axis=1)
-            # zero vectors have undefined cosine — never near-dups (the
-            # columnar path's NULL-propagating `when` does the same)
-            safe = np.where(norms == 0.0, 1.0, norms)
-            U = V / safe[:, None]
-            U[norms == 0.0] = 0.0
-            gram = U @ U.T
-            # row i < column j ⇒ drop j iff some lower-id row matches it
-            drop = np.triu(gram >= thr, k=1).any(axis=0)
-            keep = set(ids[order][~drop].tolist())
-            return pdf[pdf[id_col].isin(keep)]
+        if len(pdf) <= 1:
+            return pdf
+        ids = pdf[id_col].to_numpy()
+        order = np.argsort(ids, kind="stable")
+        V = np.asarray(
+            [np.asarray(v, dtype=np.float64) for v in pdf[vec_col].iloc[order]]
+        )
+        norms = np.linalg.norm(V, axis=1)
+        # zero vectors have undefined cosine — never near-dups
+        safe = np.where(norms == 0.0, 1.0, norms)
+        U = V / safe[:, None]
+        U[norms == 0.0] = 0.0
+        gram = U @ U.T
+        # row i < column j ⇒ drop j iff some lower-id row matches it
+        drop = np.triu(gram >= thr, k=1).any(axis=0)
+        keep = set(ids[order][~drop].tolist())
+        return pdf[pdf[id_col].isin(keep)]
 
-        return assigned.groupBy("cluster").applyInPandas(
-            _drop_cluster_dups, schema=assigned.schema
-        ).select(id_col, vec_col, "cluster")
-
-    # columnar path: unit-normalize ONCE per row (norm is 2 of the 3
-    # higher-order folds in a naive per-pair cosine), pair filter is then
-    # a single dot-product fold
-    nrm = norm_col(F.col(vec_col))
-    unit = assigned.select(
-        F.col("cluster"),
-        F.col(id_col),
-        F.col(vec_col),
-        F.when(
-            nrm > 0, F.transform(F.col(vec_col), lambda x: x.cast("double") / nrm)
-        ).alias("__unit"),
-    )
-    a = unit.select(
-        F.col("cluster"), F.col(id_col).alias("__ida"), F.col("__unit").alias("__ua")
-    )
-    b = unit.select(
-        F.col("cluster"), F.col(id_col).alias("__idb"), F.col("__unit").alias("__ub")
-    )
-    # ids with a lower-id near-duplicate in their cluster → dropped
-    dropped = (
-        a.join(b, on="cluster")
-        .where(F.col("__ida") < F.col("__idb"))
-        .where(dot_col(F.col("__ua"), F.col("__ub")) >= F.lit(threshold))
-        .select(F.col("__idb").alias(id_col))
-        .distinct()
-    )
-    return assigned.join(dropped, on=id_col, how="left_anti").select(
-        id_col, vec_col, "cluster"
-    )
+    return assigned.groupBy("cluster").applyInPandas(
+        _drop_cluster_dups, schema=assigned.schema
+    ).select(id_col, vec_col, "cluster")
 
 
 # ---------------------------------------------------------------------------

@@ -216,7 +216,7 @@ def test_scratch_dir_process_isolated():
             "from databricks_demo_feature_store_spark.queries import scratch_dir;"
             "import os; print(os.path.dirname(scratch_dir('iso')))",
         ],
-        cwd="/root/repo",
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         text=True,
     ).strip()
     assert other != root  # per-process mkdtemp root

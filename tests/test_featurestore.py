@@ -607,7 +607,7 @@ def test_histogram_state_merge_and_quantiles(spark):
     values in the edge bins; empty keys give NULL quantiles."""
     from databricks_demo_feature_store_spark.featurestore.incremental import (
         histogram_state,
-        merge_histogram_state,
+        merge_aggregate_state,
         quantile_from_hist,
     )
     import pytest as _pytest
@@ -622,10 +622,10 @@ def test_histogram_state_merge_and_quantiles(spark):
     )
     # [0, 8) in 4 bins of width 2
     full = histogram_state(a.unionByName(b), ["k"], "v", 0.0, 8.0, 4)
-    merged = merge_histogram_state(
+    merged = merge_aggregate_state(
         histogram_state(a, ["k"], "v", 0.0, 8.0, 4),
         histogram_state(b, ["k"], "v", 0.0, 8.0, 4),
-        ["k"], 4,
+        ["k"],
     )
     key = lambda r: (r.k, r.hist_0, r.hist_1, r.hist_2, r.hist_3)  # noqa: E731
     assert sorted(map(key, full.collect())) == sorted(map(key, merged.collect()))

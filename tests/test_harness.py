@@ -1,8 +1,10 @@
-"""Harness rules: the driver window, the bench record and the slow-test
-guards. Pure Python; no test here starts a Spark session."""
+"""Harness rules: the driver window, the bench record, the slow-test
+guards and the tools' repo root. Pure Python; no test here starts a
+Spark session."""
 
 from __future__ import annotations
 
+import ast
 import importlib.util
 import json
 import pathlib
@@ -229,3 +231,31 @@ def test_slow_guards_name_real_slow_tests():
             assert re.search(rf"^def {name}\(", source, re.M), test_id
             # gate.py runs guards with -m slow: an unmarked test drops out
             assert name in slow, test_id
+
+
+# ---- repo root -----------------------------------------------------------
+
+
+def test_tools_and_tests_derive_the_repo_root():
+    """Tools and tests find the checkout from ``__file__``. A hard-coded
+    absolute path to a checkout makes a copy of the tree import, run and
+    certify that other checkout's code instead of its own."""
+
+    def is_checkout(text: str) -> bool:
+        path = pathlib.Path(text)
+        return any(
+            p == REPO or (p / "__spark_entry__.py").is_file()
+            for p in (path, *path.parents)
+        )
+
+    offenders = sorted(
+        f"{src.relative_to(REPO)}:{node.lineno}"
+        for folder in ("tools", "tests")
+        for src in (REPO / folder).rglob("*.py")
+        for node in ast.walk(ast.parse(src.read_text()))
+        if isinstance(node, ast.Constant)
+        and isinstance(node.value, str)
+        and re.fullmatch(r"/\S{0,200}", node.value)
+        and is_checkout(node.value)
+    )
+    assert not offenders, offenders

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from databricks_demo_feature_store_spark.streaming import (
@@ -719,14 +720,9 @@ def test_cdc_vacuum_tombstones_and_marker(spark, tmp_path):
         ).awaitTermination(120)
 
     def raw(path):
-        import os as _os
+        from databricks_demo_feature_store_spark.streaming.ops import _read_state
 
-        from databricks_demo_feature_store_spark.streaming.ops import (
-            _latest_version,
-        )
-
-        v = _latest_version(path)
-        return spark.read.parquet(_os.path.join(path, f"v{v}"))
+        return _read_state(spark, path)
 
     # batch 0: delete k=1 (seq 10), delete k=2 (seq 50)
     drop("w0.jsonl", [(1, 10, "D", None), (2, 50, "D", None)])
@@ -818,10 +814,10 @@ def test_cdc_apply_crash_between_commits_is_exactly_once(spark, tmp_path):
 
 
 def test_stream_trailing_state_crash_replay_exactly_once(spark, tmp_path):
-    """Kill the trailing-state stream AFTER the v<batch_id> state commit
-    but BEFORE the checkpoint commit, restart, and assert the served
-    trailing features equal the batch recompute over raw events — the
-    replayed batch must be skipped (already-committed version), not
+    """Kill the trailing-state stream AFTER the state commit but BEFORE
+    the checkpoint commit, restart, and assert the served trailing
+    features equal the batch recompute over raw events — the replayed
+    batch must be skipped (its id is at the applied marker), not
     double-merged."""
     import datetime as dt
     import json as _json
@@ -901,6 +897,134 @@ def test_stream_trailing_state_crash_replay_exactly_once(spark, tmp_path):
     # spot value: user 1 at day 5 sees day1+day3 events = 10+5+1, 3 events
     got = {key(r): (r.spend_7d, r.n_7d) for r in served.collect()}
     assert got[(1, day(5))] == (16.0, 3)
+
+
+def _versioned_fold(spark, kind, root):
+    """(arrive(wave), run(), state_path, read()) for one versioned-state
+    fold over two input waves, rooted at ``root``."""
+    import json as _json
+
+    from databricks_demo_feature_store_spark.streaming import ops
+
+    inbox, state, ckpt = root / "inbox", str(root / "state"), str(root / "ckpt")
+    inbox.mkdir(parents=True)
+
+    def drop(i, records):
+        (inbox / f"w{i}.jsonl").write_text("\n".join(map(_json.dumps, records)))
+
+    if kind == "count_min":
+        waves = [["a", "b", "a"], ["b", "c"]]
+
+        def arrive(i):
+            drop(i, [{"text": t} for t in waves[i]])
+
+        def run():
+            return ops.stream_count_min(spark, str(inbox), state, ckpt, depth=4, width=8)
+
+        read = lambda: ops.read_count_min_sketch(spark, state)  # noqa: E731
+    elif kind == "cdc_apply":
+        waves = [[(1, 10, "U", "a10"), (2, 20, "D", None)], [(1, 7, "U", "a7"), (3, 30, "U", "c")]]
+        ops.init_cdc_table(
+            spark.createDataFrame([(1, "a"), (2, "b")], "k long, name string"), state
+        )
+
+        def arrive(i):
+            drop(i, [dict(zip(("k", "seq", "op", "name"), r)) for r in waves[i]])
+
+        def run():
+            return ops.stream_apply_changes(
+                spark, str(inbox), state, ckpt, keys=["k"], sequence_col="seq",
+                schema="k long, seq long, op string, name string",
+            )
+
+        read = lambda: ops.read_cdc_table(spark, state)  # noqa: E731
+    elif kind == "trailing_state":
+        waves = [[(1, "2024-01-01", 10.0), (2, "2024-01-02", 7.0)],
+                 [(1, "2024-01-01", 1.0), (1, "2024-01-05", 2.0)]]
+
+        def arrive(i):
+            drop(i, [dict(zip(("user_id", "ts", "value"), r)) for r in waves[i]])
+
+        def run():
+            return ops.stream_trailing_state(
+                spark, str(inbox), state, ckpt, keys=["user_id"], event_time="ts",
+                value_col="value", schema="user_id bigint, ts timestamp, value double",
+                hist=(0.0, 16.0, 4),
+            )
+
+        read = lambda: ops.read_trailing_state(spark, state)  # noqa: E731
+    else:  # cdf_agg_view
+        from databricks_demo_feature_store_spark.featurestore.incremental import (
+            aggregate_state,
+        )
+        from databricks_demo_feature_store_spark.sources.versioned import VersionedTable
+
+        fact = lambda rows: spark.createDataFrame(rows, "k int, grp int, amt double")  # noqa: E731
+        vt = VersionedTable(spark, str(root / "fact"))
+        vt.save(fact([(1, 0, 10.0), (2, 0, 20.0), (3, 1, 30.0)]))
+        ops.init_cdf_view(aggregate_state(vt.read(0), ["grp"], "amt"), state, 0)
+        waves = [[(1, 0, 15.0), (3, 1, 30.0)], [(3, 1, 31.0), (4, 1, 5.0)]]
+
+        def arrive(i):
+            vt.save(fact(waves[i]))
+
+        def run():
+            return ops.stream_cdf_agg_ivm(
+                spark, vt, state, ckpt, id_keys=["k"], agg_keys=["grp"], value_col="amt"
+            )
+
+        read = lambda: ops.read_cdf_view(spark, state)  # noqa: E731
+    return arrive, run, state, lambda: {tuple(r) for r in read().collect()}
+
+
+@pytest.mark.parametrize("kind", ["count_min", "cdc_apply", "trailing_state", "cdf_agg_view"])
+def test_versioned_state_ignores_staging_and_survives_post_commit_crash(
+    spark, tmp_path, monkeypatch, kind
+):
+    """The one versioned-state protocol every stateful fold commits
+    through: a leftover ``_tmp_v<N>`` is invisible to readers and
+    overwritten by the next commit, and a crash right after a state
+    commit (before the checkpoint commit) followed by a restart on the
+    same checkpoint skips the replayed batch and lands the same state
+    as an uninterrupted run."""
+    import os
+
+    from databricks_demo_feature_store_spark.streaming import ops
+
+    arrive, run, _, read = _versioned_fold(spark, kind, tmp_path / "ref")
+    for i in range(2):
+        arrive(i)
+        run().awaitTermination(120)
+    want = read()
+
+    arrive, run, state, read = _versioned_fold(spark, kind, tmp_path / "crash")
+    arrive(0)
+    run().awaitTermination(120)
+    after0 = read()
+    version, _ = ops._state_head(state)
+    debris = os.path.join(state, f"_tmp_v{version + 1}")
+    os.makedirs(debris)
+    with open(os.path.join(debris, "part-00000.parquet"), "wb") as fh:
+        fh.write(b"not parquet")
+    assert read() == after0  # staging debris is never read
+
+    real_commit = ops._commit_state
+
+    def commit_then_crash(*args):
+        real_commit(*args)
+        raise RuntimeError("injected crash after state commit")
+
+    arrive(1)
+    monkeypatch.setattr(ops, "_commit_state", commit_then_crash)
+    with pytest.raises(Exception, match="injected crash"):
+        run().awaitTermination(120)
+    monkeypatch.setattr(ops, "_commit_state", real_commit)
+    head = ops._state_head(state)
+    assert head[0] == version + 1  # the crashed batch's state did commit
+    run().awaitTermination(120)  # same checkpoint: the batch replays
+    assert ops._state_head(state) == head  # ... and is skipped
+    assert read() == want
+    assert sorted(os.listdir(state)) == [f"v{version + 1}"]
 
 
 def test_trailing_features_from_state_rejects_misaligned_spine(spark, tmp_path):

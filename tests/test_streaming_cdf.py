@@ -11,8 +11,7 @@ from pyspark.sql import functions as F
 
 from databricks_demo_feature_store_spark.sources.versioned import VersionedTable
 from databricks_demo_feature_store_spark.streaming.ops import (
-    _cdf_view_source_version,
-    _latest_version,
+    _state_head,
     init_cdf_view,
     read_cdf_view,
     stream_cdf_ivm,
@@ -91,8 +90,7 @@ def test_stream_cdf_ivm_backlog_folds_as_one_span(spark, tmp_path):
     )
     q.awaitTermination()
     # one view commit beyond the bootstrap = the whole backlog in one fold
-    assert _latest_version(view_path) == 1
-    assert _cdf_view_source_version(view_path, 1) == 3
+    assert _state_head(view_path) == (1, 3)  # (version, applied source version)
     got = read_cdf_view(spark, view_path)
     want = vt.read().join(dim, "grp")
     assert _rows(got) == _rows(want.select(*got.columns))
@@ -115,7 +113,7 @@ def test_stream_cdf_ivm_replay_skips_applied_versions(spark, tmp_path):
         key="k", other=dim, on="grp",
     )
     q.awaitTermination()
-    before = _latest_version(view_path)
+    before = _state_head(view_path)
     state_before = _rows(read_cdf_view(spark, view_path))
 
     # fresh checkpoint = worst-case full replay of all markers
@@ -124,7 +122,7 @@ def test_stream_cdf_ivm_replay_skips_applied_versions(spark, tmp_path):
         key="k", other=dim, on="grp",
     )
     q.awaitTermination()
-    assert _latest_version(view_path) == before  # no extra commit
+    assert _state_head(view_path) == before  # no extra commit
     assert _rows(read_cdf_view(spark, view_path)) == state_before
 
 
