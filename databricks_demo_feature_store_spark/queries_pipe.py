@@ -2771,6 +2771,8 @@ def q_stream_late_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     import datetime as _dt
 
     from databricks_demo_feature_store_spark.streaming.ops import (
+        drain_batches,
+        scaled_stream_partitions,
         watermark_progress_metrics,
     )
 
@@ -2808,18 +2810,8 @@ def q_stream_late_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         # state partitions sized to the backlog, not the session's batch
         # shuffle partitions (streaming/ops.py scaled_stream_partitions);
         # round 1 pins the count in the checkpoint, later rounds reuse it
-        from databricks_demo_feature_store_spark.streaming.ops import (
-            scaled_stream_partitions,
-        )
-
         with scaled_stream_partitions(spark, inbox):
-            q = (
-                deduped.writeStream.foreachBatch(write_sink)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
+            q = drain_batches(deduped, ckpt, write_sink)
             q.awaitTermination()
         batches = [
             b for b in watermark_progress_metrics(q) if b["input_rows"] > 0

@@ -679,26 +679,26 @@ def save_table(
         _refresh_stats(spark, path, fmt, stats_columns, bloom_columns)
         return
     _write(df, path, fmt, mode, partition_by)
-    compacting = (
-        mode == "append"
-        and auto_compact is not None
-        and _policy_trips(path, auto_compact)
+    # one listing decides the append's compaction
+    sizes = (
+        _tripped_sizes(path, auto_compact)
+        if mode == "append" and auto_compact is not None
+        else None
     )
-    if not compacting:
+    if sizes is None:
         # append adds immutable files — refresh the sidecars incrementally
         # (only new files' footers/pages are read). When the compaction
-        # policy is about to trip, this pass is skipped outright: the
-        # rewrite replaces every file and re-harvests full sidecars
-        # itself, so an incremental refresh here (including the bloom
-        # data-page read of the new files) would be pure waste.
+        # policy trips, this pass is skipped outright: the rewrite
+        # replaces every file and re-harvests full sidecars itself, so an
+        # incremental refresh here (including the bloom data-page read of
+        # the new files) would be pure waste.
         _refresh_stats(
             spark, path, fmt, stats_columns, bloom_columns,
             incremental=(mode == "append"),
         )
-    if auto_compact is not None and mode == "append":
-        maybe_compact(
-            spark, path, fmt, policy=auto_compact,
-            stats_columns=stats_columns, bloom_columns=bloom_columns,
+    else:
+        _compact_by_policy(
+            spark, path, fmt, auto_compact, sizes, stats_columns, bloom_columns
         )
 
 
@@ -932,22 +932,17 @@ class CompactionPolicy:
     zorder_bits: int = 16
 
 
-def _policy_trips(path: str, policy: CompactionPolicy) -> bool:
-    """Driver-side compaction pre-flight: does the live file listing
-    satisfy the policy's small-file trigger? O(files) metadata, no Spark
-    job — cheap enough that ``save_table`` runs it once per append to
-    decide whether the incremental sidecar refresh would be wasted."""
+def _tripped_sizes(path: str, policy: CompactionPolicy) -> list[int] | None:
+    """Driver-side compaction pre-flight: the live data-file sizes when
+    the policy's small-file trigger trips, else None. O(files) metadata,
+    no Spark job."""
     from databricks_demo_feature_store_spark.sources.skipping import (
         _list_part_files,
     )
 
-    files = _list_part_files(path.removeprefix("file:"))
-    if not files:
-        return False
-    small = sum(
-        1 for f in files if os.path.getsize(f) < policy.small_file_bytes
-    )
-    return small >= policy.min_small_files
+    sizes = [os.path.getsize(f) for f in _list_part_files(path.removeprefix("file:"))]
+    small = sum(1 for s in sizes if s < policy.small_file_bytes)
+    return sizes if sizes and small >= policy.min_small_files else None
 
 
 def maybe_compact(
@@ -967,19 +962,26 @@ def maybe_compact(
     like :func:`compact`'s; with ``zorder_by`` it is a
     :func:`cluster_by_zorder` rewrite (one range exchange + local sort)
     instead of a plain coalesce."""
+    sizes = _tripped_sizes(path, policy)
+    if sizes is None:
+        return False
+    _compact_by_policy(spark, path, fmt, policy, sizes, stats_columns, bloom_columns)
+    return True
+
+
+def _compact_by_policy(
+    spark: SparkSession,
+    path: str,
+    fmt: str,
+    policy: CompactionPolicy,
+    sizes: list[int],
+    stats_columns: Sequence[str] | None,
+    bloom_columns: Sequence[str] | None,
+) -> None:
+    """The policy's rewrite of a table whose live files have ``sizes``:
+    ``ceil(total / target_file_bytes)`` output files."""
     import math
 
-    from databricks_demo_feature_store_spark.sources.skipping import (
-        _list_part_files,
-    )
-
-    files = _list_part_files(path.removeprefix("file:"))
-    if not files:
-        return False
-    sizes = [os.path.getsize(f) for f in files]
-    small = sum(1 for s in sizes if s < policy.small_file_bytes)
-    if small < policy.min_small_files:
-        return False
     n = max(1, math.ceil(sum(sizes) / policy.target_file_bytes))
     if policy.zorder_by:
         from databricks_demo_feature_store_spark.operators.layout import (
@@ -999,4 +1001,3 @@ def maybe_compact(
             spark, path, fmt, target_partitions=n,
             stats_columns=stats_columns, bloom_columns=bloom_columns,
         )
-    return True

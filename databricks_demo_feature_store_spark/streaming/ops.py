@@ -24,10 +24,11 @@ store, so key skew maps to state skew; the session/user keys used here
 are high-cardinality and uniform.
 
 Micro-batch folds: every ``foreachBatch`` operator here (and
-``textops/index_store.py upsert_stream``) drains through
-:func:`drain_batches` — empty batches skipped, ``availableNow`` trigger,
-an optional after-batch hook that runs before the checkpoint commit
-(the fault-injection seam of the crash-replay tests).
+``textops/index_store.py upsert_stream``, ``queries_pipe.py
+q_stream_late_metrics``) drains through :func:`drain_batches` — each
+batch's plan executed once, empty batches skipped, ``availableNow``
+trigger, an optional after-batch hook that runs before the checkpoint
+commit (the fault-injection seam of the crash-replay tests).
 
 Versioned state: the folds that keep their own state on disk (the
 count-min sketch, the CDC table, the trailing moment state, the CDF join
@@ -306,12 +307,22 @@ def drain_batches(stream: DataFrame, checkpoint: str, fold, after_batch_hook=Non
     frame supports the full batch API), then ``after_batch_hook(batch_id)``
     when given, before the checkpoint commit. availableNow: drains the
     backlog and stops; returns the StreamingQuery (caller owns its
-    lifecycle)."""
+    lifecycle).
+
+    Each micro-batch's plan executes ONCE: the batch is persisted around
+    the emptiness check and the fold, which read the cached rows.
+    Without it every action re-runs the batch plan, so a stateful
+    operator upstream (a watermarked dedup or aggregation) would run —
+    and count its metrics, e.g. ``numRowsDroppedByWatermark`` — twice."""
 
     def run(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        fold(batch_df, batch_id)
+        batch_df.persist()
+        try:
+            if batch_df.isEmpty():
+                return
+            fold(batch_df, batch_id)
+        finally:
+            batch_df.unpersist()
         if after_batch_hook is not None:
             after_batch_hook(batch_id)
 

@@ -64,13 +64,14 @@ from databricks_demo_feature_store_spark.featurestore.manager import (
 from databricks_demo_feature_store_spark.functions.rounding import dround
 from databricks_demo_feature_store_spark.streaming.ops import drain_batches
 from databricks_demo_feature_store_spark.textops.similarity import (
-    _l2sq,
-    _pq_subvectors,
-    cosine_col,
-    ivf_assign,
+    _adc_topk,
+    _encode,
+    _exact_rerank,
+    _ivfpq_pairs,
+    _probe,
+    _queries,
     ivf_centroids,
     pq_codebooks,
-    pq_encode,
 )
 
 
@@ -164,33 +165,16 @@ class VectorIndexStore:
 
     # -- encode against the FROZEN quantizers ---------------------------
     def _encode(self, vectors: DataFrame) -> DataFrame:
-        """(id, cluster, codes, deleted=false) for a batch — ONE map-side
-        pass: both quantizers collapse to broadcast 1-row arrays
-        (similarity.py `_centroid_array` / `_codebook_map`) and the
-        assignment + PQ codes are computed in a single projection; the
-        previous assign⋈encode join (plus its two upstream shuffles) is
-        gone, so encoding never moves a vector over the network."""
-        from databricks_demo_feature_store_spark.textops.similarity import (
-            _centroid_array,
-            _codebook_map,
-            _nearest_centroid,
-            _pq_codes,
-        )
-
-        out = (
-            vectors.crossJoin(F.broadcast(_centroid_array(self.centroids())))
-            .crossJoin(F.broadcast(_codebook_map(self.codebooks())))
-            .where((F.size("__cents") > 0) & (F.size("__cb") > 0))
-            .select(
-                self.id_col,
-                _nearest_centroid(F.col(self.vec_col))
-                .cast("long")
-                .alias("cluster"),
-                _pq_codes(F.col(self.vec_col), self.m)
-                .cast("array<int>")
-                .alias("codes"),
-                F.lit(False).alias("deleted"),
-            )
+        """(id, cluster, codes, deleted=false) for a batch — the shared
+        one-projection encode (``similarity._encode``) against the
+        stored quantizers."""
+        out = _encode(
+            vectors, self.centroids(), self.codebooks(), self.m, self.id_col, self.vec_col
+        ).select(
+            self.id_col,
+            F.col("cluster").cast("long").alias("cluster"),
+            F.col("codes").cast("array<int>").alias("codes"),
+            F.lit(False).alias("deleted"),
         )
         if self.partition_postings:
             out = out.withColumn(self.PART_COL, self._part_col())
@@ -496,10 +480,13 @@ class VectorIndexStore:
     ) -> DataFrame:
         """IVF-PQ top-k over the MAINTAINED index: pick each query's
         ``nprobe`` nearest stored centroids, ADC-score only the live
-        code bytes in those lists. Identical plan shape to
-        ``similarity.ivfpq_topk`` but reading persisted artifacts —
-        centroids/codebooks/per-query LUTs broadcast, postings touched
-        ~nprobe/nlist and pruned of tombstones at the scan.
+        code bytes in those lists. The probe, LUT and ADC score-and-rank
+        are the shared search kernel of ``similarity.ivfpq_topk``
+        (``_probe`` → ``_ivfpq_pairs`` → ``_adc_topk``), here over the
+        persisted artifacts — centroids/codebooks/per-query LUTs
+        broadcast, postings touched ~nprobe/nlist and pruned of
+        tombstones at the scan. The store adds only partition pruning
+        and the refine tier.
 
         ``refine=r`` (needs ``build(store_vectors=True)``) switches on
         the flat refinement tier: ADC shortlists ``k·r`` candidates per
@@ -508,139 +495,41 @@ class VectorIndexStore:
         ``(query_id, id, cosine, rank ≤ k)`` ordered by true cosine —
         quantization error leaves the final ordering at the cost of
         k·r vector reads per query (never a corpus vector scan)."""
-        from pyspark.sql import Window as W
-
-        qid = query_id_col or self.id_col
-        cents = self.centroids()
-        cb = self.codebooks()
-
-        q = query.select(
-            F.col(qid).alias("query_id"), F.col(self.vec_col).alias("__qv")
-        )
-        qscore = q.crossJoin(F.broadcast(cents)).select(
-            "query_id",
-            "__qv",
-            "centroid_id",
-            cosine_col(F.col("__qv"), F.col("centroid")).alias("__cos"),
-        )
-        wq = W.partitionBy("query_id").orderBy(
-            F.desc("__cos"), F.asc("centroid_id")
-        )
-        probes = (
-            qscore.withColumn("__rn", F.row_number().over(wq))
-            .where(F.col("__rn") <= nprobe)
-            .select("query_id", "__qv", F.col("centroid_id").alias("cluster"))
-        )
+        q = _queries(query, query_id_col or self.id_col, self.vec_col)
+        probes = _probe(q, self.centroids(), nprobe)
         if self.partition_postings:
-            # Checkpoint BEFORE anything derives from probes: the lut
-            # below is built from qsubs ← probes, the partition-pruning
-            # collect reads probes, and the cand join reads probes again —
-            # materializing here makes all three share ONE centroid
-            # assignment instead of recomputing it per consumer (ADVICE
-            # r12: a post-lut checkpoint left the lut on the un-materialized
-            # plan, so the assignment still ran twice).
+            # Checkpoint BEFORE anything derives from probes: the LUT,
+            # the partition-pruning collect and the candidate join all
+            # read probes — materializing here makes the three share ONE
+            # centroid assignment instead of recomputing it per consumer.
             probes = probes.localCheckpoint(eager=True)
-        qsubs = (
-            _pq_subvectors(
-                probes.select("query_id", "__qv").dropDuplicates(["query_id"]),
-                self.m,
-                "query_id",
-                "__qv",
-            )
-            .withColumnRenamed("__id", "query_id")
-            .withColumnRenamed("__sv", "__qs")
-        )
-        lut = (
-            qsubs.join(F.broadcast(cb), on="sub")
-            .select(
-                "query_id", "sub", "code",
-                _l2sq(F.col("__qs"), F.col("centroid")).alias("__d"),
-            )
-            .groupBy("query_id", "sub")
-            .agg(
-                F.map_from_entries(
-                    F.array_sort(F.collect_list(F.struct("code", "__d")))
-                ).alias("__dists")
-            )
-            .groupBy("query_id")
-            .agg(
-                F.map_from_entries(
-                    F.collect_list(F.struct("sub", "__dists"))
-                ).alias("__lut")
-            )
-        )
-        live = self.postings()
-        if self.partition_postings:
             # static partition pruning: the probed cluster set is bounded
             # by nlist (broadcast-sized by construction), so collecting it
             # and pushing an IN filter on the layout column turns the
             # postings read into a scan of ~nprobe directories — the
             # explicit form of what Delta/DPP would do at runtime.
-            # (probes was checkpointed above, before the lut derivation,
-            # so this collect reads the materialized assignment.)
-            probed = sorted(
-                int(r["cluster"])
-                for r in probes.select("cluster").distinct().collect()
-            )
-            live = self.postings(clusters=probed)
-        cand = (
-            live
-            .join(F.broadcast(probes.select("query_id", "cluster")), on="cluster")
-            .join(F.broadcast(lut), on="query_id")
-        )
-        scored = cand.select(
-            "query_id",
-            self.id_col,
-            F.aggregate(
-                F.sequence(F.lit(0), F.lit(self.m - 1)),
-                F.lit(0.0),
-                lambda acc, j: acc
-                + F.element_at(
-                    F.element_at(F.col("__lut"), j),
-                    F.element_at(F.col("codes"), j + 1),
-                ),
-            ).alias("__adc"),
-        )
-        w = W.partitionBy("query_id").orderBy(F.asc("__adc"), F.asc(self.id_col))
-        if refine <= 0:
-            return (
-                scored.withColumn("rank", F.row_number().over(w))
-                .where(F.col("rank") <= k)
-                .select(
-                    "query_id",
-                    self.id_col,
-                    dround(F.col("__adc"), 6).alias("adc_dist"),
-                    "rank",
+            live = self.postings(
+                clusters=sorted(
+                    int(r["cluster"])
+                    for r in probes.select("cluster").distinct().collect()
                 )
             )
+        else:
+            live = self.postings()
+        pairs = _ivfpq_pairs(probes, live, self.codebooks(), self.m)
+        if refine <= 0:
+            return _adc_topk(pairs, k, self.m, self.id_col)
         if not self.manager.exists(self.vectors_table):
             raise ValueError(
                 "search(refine>0) needs the flat refinement tier — "
                 "build(store_vectors=True) first"
             )
-        shortlist = (
-            scored.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") <= int(k) * int(refine))
-            .select("query_id", self.id_col)
-        )
-        qvec = probes.select("query_id", "__qv").dropDuplicates(["query_id"])
-        exact = (
-            self.manager.read(self.vectors_table)
-            .join(shortlist, on=self.id_col)  # k·r rows/query: shortlist side broadcasts
-            .join(F.broadcast(qvec), on="query_id")
-            .select(
-                "query_id",
-                self.id_col,
-                dround(
-                    cosine_col(F.col(self.vec_col), F.col("__qv")), 6
-                ).alias("cosine"),
-            )
-        )
-        wr = W.partitionBy("query_id").orderBy(
-            F.desc("cosine"), F.asc(self.id_col)
-        )
-        return (
-            exact.withColumn("rank", F.row_number().over(wr))
-            .where(F.col("rank") <= k)
-            .select("query_id", self.id_col, "cosine", "rank")
+        shortlist = _adc_topk(pairs, int(k) * int(refine), self.m, self.id_col)
+        return _exact_rerank(
+            self.manager.read(self.vectors_table),
+            shortlist.select("query_id", self.id_col),
+            probes.select("query_id", "__qv").dropDuplicates(["query_id"]),
+            k,
+            self.id_col,
+            self.vec_col,
         )

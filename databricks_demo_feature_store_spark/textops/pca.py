@@ -299,8 +299,9 @@ def pca_two_stage_topk(
     the corpus.
     """
     from databricks_demo_feature_store_spark.textops.similarity import (
+        _exact_rerank,
+        _queries,
         brute_force_topk,
-        cosine_col,
     )
 
     qid = query_id_col or id_col
@@ -317,24 +318,9 @@ def pca_two_stage_topk(
         c_proj, q_proj, k=m, id_col=id_col, vec_col=vec_col,
         query_id_col="query_id",
     ).select("query_id", id_col)
-
-    qv = query.select(F.col(qid).alias("query_id"), F.col(vec_col).alias("__qv"))
-    rerank = (
-        cands.join(corpus.select(id_col, vec_col), on=id_col)
-        .join(F.broadcast(qv), on="query_id")
-        .select(
-            "query_id",
-            id_col,
-            dround(cosine_col(F.col(vec_col), F.col("__qv")), 6).alias("cosine"),
-        )
-    )
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc(id_col))
-    return (
-        rerank.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", id_col, "cosine", "rank")
+    return _exact_rerank(
+        cands, corpus.select(id_col, vec_col), _queries(query, qid, vec_col), k,
+        id_col, vec_col,
     )
 
 

@@ -18,11 +18,26 @@ Two tiers, as a 100 TB pipeline needs:
   1/2^nbits of it.
 - **Embedding-cosine near-dup** — all candidate pairs inside a bucket with
   cosine ≥ threshold; the embedding-space twin of MinHash dedup.
+
+One search kernel: every vector top-k operator here, in
+``textops/pca.py`` and in ``textops/index_store.py`` is a composition of
+the private steps below, one helper per step — candidate generation
+differs per operator, the score-and-rank step does not:
+
+- **encode** (:func:`_encode`): nearest centroid plus PQ codes in one
+  projection;
+- **probe** (:func:`_probe`): each query's ``nprobe`` nearest centroids;
+- **LUT** (:func:`_lut`): the per-query code-keyed subvector distances;
+- **ADC score** (:func:`_adc_topk`): the LUT fold over the ``m``
+  subspaces, ranked ascending;
+- **exact rerank** (:func:`_exact_rerank`): a shortlist joined back to its
+  full vectors and ranked by cosine (:func:`_cosine_topk`);
+- **top-k cut** (:func:`_topk`): the per-query ``row_number() ≤ k``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
 from databricks_demo_feature_store_spark.functions.rounding import dround
 
@@ -57,6 +72,55 @@ def cosine_col(a: Column, b: Column) -> Column:
     return F.when(denom > 0, dot_col(a, b) / denom)
 
 
+def _queries(query: DataFrame, qid: str, vec_col: str) -> DataFrame:
+    """(query_id, __qv): the query side every search step joins against."""
+    return query.select(F.col(qid).alias("query_id"), F.col(vec_col).alias("__qv"))
+
+
+def _topk(
+    scored: DataFrame, k: int, *order: Column, part: str = "query_id", rank: str = "rank"
+) -> DataFrame:
+    """Top-k cut: ``rank`` = ``row_number()`` over ``part`` ordered by
+    ``order``, rows kept while ``rank ≤ k``. Spark plans it as Sort →
+    WindowGroupLimit → Exchange(part) → Sort → WindowGroupLimit → Window →
+    Filter: each input partition keeps ≤ k rows per key before the
+    shuffle, so only those cross it — no TakeOrdered, no global sort."""
+    w = W.partitionBy(part).orderBy(*order)
+    return scored.withColumn(rank, F.row_number().over(w)).where(F.col(rank) <= k)
+
+
+def _cosine_topk(pairs: DataFrame, k: int, id_col: str, vec_col: str) -> DataFrame:
+    """Score and rank (query, row) ``pairs`` carrying ``vec_col`` and the
+    query vector ``__qv``: exact cosine rounded to 6 places, top ``k`` per
+    query (tie → smaller id) as ``(query_id, id, cosine, rank)``."""
+    scored = pairs.select(
+        "query_id",
+        F.col(id_col),
+        dround(cosine_col(F.col(vec_col), F.col("__qv")), 6).alias("cosine"),
+    )
+    return _topk(scored, k, F.desc("cosine"), F.asc(id_col)).select(
+        "query_id", id_col, "cosine", "rank"
+    )
+
+
+def _exact_rerank(
+    left: DataFrame,
+    right: DataFrame,
+    q: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """Exact rerank: join a ``(query_id, id)`` shortlist back to the full
+    ``(id, vector)`` rows and keep the top ``k`` per query by exact
+    cosine — the full vectors are read for the shortlisted rows only.
+    ``left`` and ``right`` are those two frames in either order: the
+    inner join on the id is symmetric, the order fixes only the join's
+    child order in the plan."""
+    pairs = left.join(right, on=id_col).join(F.broadcast(q), on="query_id")
+    return _cosine_topk(pairs, k, id_col, vec_col)
+
+
 def brute_force_topk(
     corpus: DataFrame,
     query: DataFrame,
@@ -67,26 +131,11 @@ def brute_force_topk(
 ) -> DataFrame:
     """Exact cosine top-k of every query row against the corpus.
 
-    ``query`` is broadcast (queries ≪ corpus); per query the top-k is a
-    TakeOrdered — no global sort of the corpus.
+    ``query`` is broadcast (queries ≪ corpus) and the per-query top-k is
+    the shared :func:`_topk` cut — no global sort of the corpus.
     """
-    qid = query_id_col or id_col
-    q = query.select(
-        F.col(qid).alias("query_id"), F.col(vec_col).alias("__qvec")
-    )
-    scored = corpus.crossJoin(F.broadcast(q)).select(
-        "query_id",
-        F.col(id_col),
-        dround(cosine_col(F.col(vec_col), F.col("__qvec")), 6).alias("cosine"),
-    )
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", id_col, "cosine", "rank")
-    )
+    q = _queries(query, query_id_col or id_col, vec_col)
+    return _cosine_topk(corpus.crossJoin(F.broadcast(q)), k, id_col, vec_col)
 
 
 def random_planes(dim: int, nbits: int, seed: int = 42) -> list[list[float]]:
@@ -230,29 +279,17 @@ def lsh_topk(
     )
     q = query.select(
         F.col(qid).alias("query_id"),
-        F.col(vec_col).alias("__qvec"),
+        F.col(vec_col).alias("__qv"),
         sign_bucket_col(F.col(vec_col), nbits, planes).alias("__qbucket"),
     ).select(
         "query_id",
-        "__qvec",
+        "__qv",
         F.explode(multiprobe_buckets(F.col("__qbucket"), nbits, probes)).alias("bucket"),
     )
     # no dedup needed: each corpus vector lives in exactly one bucket and
     # the probe buckets are pairwise-distinct strings, so a (query, corpus)
     # pair can meet at most once
-    scored = c.join(F.broadcast(q), on="bucket").select(
-        "query_id",
-        id_col,
-        dround(cosine_col(F.col(vec_col), F.col("__qvec")), 6).alias("cosine"),
-    )
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", id_col, "cosine", "rank")
-    )
+    return _cosine_topk(c.join(F.broadcast(q), on="bucket"), k, id_col, vec_col)
 
 
 def ann_recall_at_k(
@@ -286,23 +323,25 @@ def ann_recall_at_k(
     approx = lsh_topk(
         corpus, query, k, nbits, id_col, vec_col, query_id_col, planes, probes
     )
+    return _recall(exact, approx, id_col)
+
+
+def _recall(exact: DataFrame, approx: DataFrame, id_col: str) -> DataFrame:
+    """Per query ``(query_id, n_hits, n_exact, recall)``: how many rows of
+    the ``exact`` top-k the ``approx`` top-k also returned."""
     hits = exact.join(
         approx.select("query_id", id_col), on=["query_id", id_col], how="left_semi"
     )
     n_exact = exact.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_exact"))
     n_hits = hits.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_hits"))
-    return (
-        n_exact.join(n_hits, on="query_id", how="left")
-        .select(
-            "query_id",
-            F.coalesce(F.col("n_hits"), F.lit(0)).alias("n_hits"),
-            "n_exact",
-            dround(
-                F.coalesce(F.col("n_hits"), F.lit(0))
-                / F.col("n_exact").cast("double"),
-                6,
-            ).alias("recall"),
-        )
+    return n_exact.join(n_hits, on="query_id", how="left").select(
+        "query_id",
+        F.coalesce(F.col("n_hits"), F.lit(0)).alias("n_hits"),
+        "n_exact",
+        dround(
+            F.coalesce(F.col("n_hits"), F.lit(0)) / F.col("n_exact").cast("double"),
+            6,
+        ).alias("recall"),
     )
 
 
@@ -479,36 +518,47 @@ def ivf_topk(
     persisted partitioned BY cluster, so a probe is a partition-pruned
     scan, not a shuffle. ``kmeans_iterations`` upgrades the sampled
     centroids to Lloyd-refined ones."""
-    from pyspark.sql import Window as W
-
-    qid = query_id_col or id_col
     cents = ivf_centroids(corpus, nlist, id_col, vec_col, kmeans_iterations)
-    assigned = ivf_assign(corpus, cents, id_col, vec_col)
-
-    q = query.select(F.col(qid).alias("query_id"), F.col(vec_col).alias("__qvec"))
-    qscore = q.crossJoin(F.broadcast(cents)).select(
-        "query_id",
-        "__qvec",
-        "centroid_id",
-        cosine_col(F.col("__qvec"), F.col("centroid")).alias("__cos"),
-    )
-    wq = W.partitionBy("query_id").orderBy(F.desc("__cos"), F.asc("centroid_id"))
-    probes = (
-        qscore.withColumn("__rn", F.row_number().over(wq))
-        .filter(F.col("__rn") <= nprobe)
-        .select("query_id", "__qvec", F.col("centroid_id").alias("cluster"))
-    )
-
-    scored = assigned.join(F.broadcast(probes), on="cluster").select(
-        "query_id",
+    return _ivf_search(
+        _queries(query, query_id_col or id_col, vec_col),
+        cents,
+        ivf_assign(corpus, cents, id_col, vec_col),
+        k,
+        nprobe,
         id_col,
-        dround(cosine_col(F.col(vec_col), F.col("__qvec")), 6).alias("cosine"),
+        vec_col,
     )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", id_col, "cosine", "rank")
+
+
+def _probe(q: DataFrame, centroids: DataFrame, nprobe: int) -> DataFrame:
+    """Probe: each query's ``nprobe`` nearest centroids (max cosine, tie
+    → smaller centroid id) as ``(query_id, __qv, cluster)``; the nlist-row
+    quantizer broadcasts."""
+    scored = q.crossJoin(F.broadcast(centroids)).select(
+        "query_id",
+        "__qv",
+        "centroid_id",
+        cosine_col(F.col("__qv"), F.col("centroid")).alias("__cos"),
+    )
+    return _topk(
+        scored, nprobe, F.desc("__cos"), F.asc("centroid_id"), rank="__rn"
+    ).select("query_id", "__qv", F.col("centroid_id").alias("cluster"))
+
+
+def _ivf_search(
+    q: DataFrame,
+    centroids: DataFrame,
+    assigned: DataFrame,
+    k: int,
+    nprobe: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """IVF search: exact-cosine top-k over the rows of ``assigned`` (id,
+    vector, cluster) that sit in each query's probed lists."""
+    probes = _probe(q, centroids, nprobe)
+    return _cosine_topk(
+        assigned.join(F.broadcast(probes), on="cluster"), k, id_col, vec_col
     )
 
 
@@ -658,7 +708,7 @@ def pq_codebooks(
     each subspace a ``k``-entry codebook. Codebook entries are the
     subvectors of the ``k`` corpus rows with the smallest
     ``md5("{sub}:{id}")`` — a reproducible per-subspace pseudo-random
-    sample (TakeOrdered per subspace, no global sort), cross-engine
+    sample (a row_number cut per subspace, no global sort), cross-engine
     checkable like the IVF coarse quantizer; swap in Lloyd-refined
     codebooks via :func:`kmeans_refine` per subspace when recall matters
     more than oracle parity.
@@ -666,8 +716,6 @@ def pq_codebooks(
     Returns ``(sub int, code int, centroid array<double>)`` — m·k rows,
     broadcast-sized for any corpus.
     """
-    from pyspark.sql import Window as W
-
     subs = _pq_subvectors(corpus, m, id_col, vec_col).withColumnRenamed(
         "__sv", "centroid"
     )
@@ -859,25 +907,50 @@ def pq_adc_topk(
     Returns (query_id, id, adc_dist, rank ≤ k), ranked ascending by
     distance (tie → smaller id).
     """
-    from pyspark.sql import Window as W
+    lut = _lut(query, query_id_col or id_col, vec_col, codebooks, m)
+    return _adc_topk(codes.crossJoin(F.broadcast(lut)), k, m, id_col)
 
-    qid = query_id_col or id_col
-    qsubs = (
-        _pq_subvectors(query, m, qid, vec_col)
-        .withColumnRenamed("__id", "query_id")
-        .withColumnRenamed("__sv", "__qs")
-    )
-    # per (query, sub): distances keyed BY CODE (a map, not a dense
-    # positional array — Lloyd-refined codebooks may have dropped empty
-    # codes, leaving non-contiguous code labels; positional indexing
-    # would silently read the wrong entry)
-    lut = (
-        qsubs.join(F.broadcast(codebooks), on="sub")
+
+def _encode(
+    vectors: DataFrame,
+    centroids: DataFrame,
+    codebooks: DataFrame,
+    m: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """Encode: ``(id, cluster, codes)`` — nearest centroid and the ``m``
+    PQ codes of every vector in ONE map-side projection. Both quantizers
+    broadcast as 1-row arrays, so there is no assign⋈encode shuffle join
+    and no vector crosses the network."""
+    return (
+        vectors.crossJoin(F.broadcast(_centroid_array(centroids)))
+        .crossJoin(F.broadcast(_codebook_map(codebooks)))
+        .where((F.size("__cents") > 0) & (F.size("__cb") > 0))
         .select(
-            "query_id",
+            F.col(id_col),
+            _nearest_centroid(F.col(vec_col)).alias("cluster"),
+            _pq_codes(F.col(vec_col), m).alias("codes"),
+        )
+    )
+
+
+def _lut(
+    q: DataFrame, qid: str, vec_col: str, codebooks: DataFrame, m: int
+) -> DataFrame:
+    """LUT: per query of ``q`` (``qid``, ``vec_col``), ``__lut`` = map sub →
+    (map code → squared L2 distance from the query's subvector to that
+    codebook entry). Keyed BY CODE, not positionally: Lloyd-refined
+    codebooks may have dropped empty codes, leaving non-contiguous
+    labels that positional indexing would silently misread."""
+    return (
+        _pq_subvectors(q, m, qid, vec_col)
+        .join(F.broadcast(codebooks), on="sub")
+        .select(
+            F.col("__id").alias("query_id"),
             "sub",
             "code",
-            _l2sq(F.col("__qs"), F.col("centroid")).alias("__d"),
+            _l2sq(F.col("__sv"), F.col("centroid")).alias("__d"),
         )
         .groupBy("query_id", "sub")
         .agg(
@@ -887,12 +960,18 @@ def pq_adc_topk(
         )
         .groupBy("query_id")
         .agg(
-            F.map_from_entries(F.collect_list(F.struct("sub", "__dists"))).alias(
-                "__lut"
-            )  # map sub → (map code → distance); maps need no sort order
+            F.map_from_entries(F.collect_list(F.struct("sub", "__dists"))).alias("__lut")
         )
     )
-    scored = codes.crossJoin(F.broadcast(lut)).select(
+
+
+def _adc_topk(pairs: DataFrame, k: int, m: int, id_col: str) -> DataFrame:
+    """ADC score and rank (query, row) ``pairs`` carrying the row's
+    ``codes`` and the query's ``__lut``: the distance is the LUT lookups
+    summed over the subspaces in order j = 0..m−1 (the order the
+    ``q_ext_pq_adc_topk`` oracle replays); top ``k`` per query ascending
+    (tie → smaller id) as ``(query_id, id, adc_dist, rank)``."""
+    scored = pairs.select(
         "query_id",
         id_col,
         F.aggregate(
@@ -905,12 +984,21 @@ def pq_adc_topk(
             ),
         ).alias("__adc"),
     )
-    w = W.partitionBy("query_id").orderBy(F.asc("__adc"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", id_col, dround(F.col("__adc"), 6).alias("adc_dist"), "rank")
+    return _topk(scored, k, F.asc("__adc"), F.asc(id_col)).select(
+        "query_id", id_col, dround(F.col("__adc"), 6).alias("adc_dist"), "rank"
     )
+
+
+def _ivfpq_pairs(
+    probes: DataFrame, postings: DataFrame, codebooks: DataFrame, m: int
+) -> DataFrame:
+    """IVF-PQ candidates: every posting (id, cluster, codes) in each
+    query's probed lists, paired with that query's LUT (both broadcast)."""
+    q = probes.select("query_id", "__qv").dropDuplicates(["query_id"])
+    lut = _lut(q, "query_id", "__qv", codebooks, m)
+    return postings.join(
+        F.broadcast(probes.select("query_id", "cluster")), on="cluster"
+    ).join(F.broadcast(lut), on="query_id")
 
 
 def ivfpq_topk(
@@ -933,97 +1021,17 @@ def ivfpq_topk(
     touched is bytes — the two cost cuts multiply, which is the entire
     reason FAISS-style indexes scale to 10^11 vectors.
 
-    At 100 TB: persist ``(cluster, codes)`` partitioned BY cluster so a
-    probe is a partition-pruned scan of code bytes; centroids, codebooks
-    and per-query LUTs all broadcast.
+    Train, encode, search: the search is the one
+    ``VectorIndexStore.search`` runs over its persisted postings
+    (``textops/index_store.py``). At 100 TB: persist ``(cluster, codes)``
+    partitioned BY cluster so a probe is a partition-pruned scan of code
+    bytes; centroids, codebooks and per-query LUTs all broadcast.
     """
-    from pyspark.sql import Window as W
-
-    qid = query_id_col or id_col
     cents = ivf_centroids(corpus, nlist, id_col, vec_col)
     cb = pq_codebooks(corpus, m, pq_k, id_col, vec_col)
-    # assignment + encoding in ONE map-side projection (both quantizers
-    # broadcast as 1-row arrays) — no assign⋈encode shuffle join
-    codes = (
-        corpus.crossJoin(F.broadcast(_centroid_array(cents)))
-        .crossJoin(F.broadcast(_codebook_map(cb)))
-        .where((F.size("__cents") > 0) & (F.size("__cb") > 0))
-        .select(
-            F.col(id_col),
-            _pq_codes(F.col(vec_col), m).alias("codes"),
-            _nearest_centroid(F.col(vec_col)).alias("cluster"),
-        )
-    )
-
-    q = query.select(F.col(qid).alias("query_id"), F.col(vec_col).alias("__qv"))
-    qscore = q.crossJoin(F.broadcast(cents)).select(
-        "query_id",
-        "__qv",
-        "centroid_id",
-        cosine_col(F.col("__qv"), F.col("centroid")).alias("__cos"),
-    )
-    wq = W.partitionBy("query_id").orderBy(F.desc("__cos"), F.asc("centroid_id"))
-    probes = (
-        qscore.withColumn("__rn", F.row_number().over(wq))
-        .where(F.col("__rn") <= nprobe)
-        .select("query_id", "__qv", F.col("centroid_id").alias("cluster"))
-    )
-
-    # per-query LUT (m × pq_k squared L2 distances), broadcast with probes
-    qsubs = (
-        _pq_subvectors(
-            probes.select("query_id", "__qv").dropDuplicates(["query_id"]),
-            m,
-            "query_id",
-            "__qv",
-        )
-        .withColumnRenamed("__id", "query_id")
-        .withColumnRenamed("__sv", "__qs")
-    )
-    # code-keyed maps, not dense positional arrays — refined codebooks
-    # may carry non-contiguous code labels after Lloyd drop-out
-    lut = (
-        qsubs.join(F.broadcast(cb), on="sub")
-        .select(
-            "query_id", "sub", "code",
-            _l2sq(F.col("__qs"), F.col("centroid")).alias("__d"),
-        )
-        .groupBy("query_id", "sub")
-        .agg(
-            F.map_from_entries(
-                F.array_sort(F.collect_list(F.struct("code", "__d")))
-            ).alias("__dists")
-        )
-        .groupBy("query_id")
-        .agg(
-            F.map_from_entries(F.collect_list(F.struct("sub", "__dists"))).alias(
-                "__lut"
-            )  # map sub → (map code → distance); maps need no sort order
-        )
-    )
-
-    cand = codes.join(
-        F.broadcast(probes.select("query_id", "cluster")), on="cluster"
-    ).join(F.broadcast(lut), on="query_id")
-    scored = cand.select(
-        "query_id",
-        id_col,
-        F.aggregate(
-            F.sequence(F.lit(0), F.lit(m - 1)),
-            F.lit(0.0),
-            lambda acc, j: acc
-            + F.element_at(
-                F.element_at(F.col("__lut"), j),
-                F.element_at(F.col("codes"), j + 1),
-            ),
-        ).alias("__adc"),
-    )
-    w = W.partitionBy("query_id").orderBy(F.asc("__adc"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", id_col, dround(F.col("__adc"), 6).alias("adc_dist"), "rank")
-    )
+    postings = _encode(corpus, cents, cb, m, id_col, vec_col)
+    probes = _probe(_queries(query, query_id_col or id_col, vec_col), cents, nprobe)
+    return _adc_topk(_ivfpq_pairs(probes, postings, cb, m), k, m, id_col)
 
 
 def mmr_rerank(
@@ -1059,8 +1067,6 @@ def mmr_rerank(
         raise ValueError("mmr_rerank requires k >= 1")
     if not (0.0 <= lam <= 1.0):
         raise ValueError("mmr_rerank requires 0 <= lam <= 1")
-    from pyspark.sql import Window as W
-
     lam = float(lam)
     cand = candidates.select(
         F.col(query_col).alias("__q"),
@@ -1119,12 +1125,8 @@ def mmr_rerank(
                     ).alias("__mmr"),
                 )
             )
-        w = W.partitionBy("__q").orderBy(F.desc("__mmr"), F.asc("__id"))
         pick = (
-            scored.select(
-                "*", F.row_number().over(w).alias("__rn")
-            )
-            .where(F.col("__rn") == 1)
+            _topk(scored, 1, F.desc("__mmr"), F.asc("__id"), part="__q")
             .select("__q", "__id", "__rel", "__mmr", F.lit(step).alias("__step"))
             .localCheckpoint(eager=False)
         )
@@ -1164,28 +1166,19 @@ def truncated_dim_recall_at_k(
     queries, like every recall loop here.
     """
     full = brute_force_topk(corpus, query, k, id_col, vec_col, query_id_col)
-    t_corpus = corpus.select(
-        F.col(id_col), F.slice(F.col(vec_col), 1, int(trunc_dim)).alias(vec_col)
-    )
     qid = query_id_col or id_col
-    t_query = query.select(
-        F.col(qid), F.slice(F.col(vec_col), 1, int(trunc_dim)).alias(vec_col)
+    trunc = brute_force_topk(
+        _prefix(corpus, id_col, vec_col, trunc_dim),
+        _prefix(query, qid, vec_col, trunc_dim),
+        k, id_col, vec_col, query_id_col,
     )
-    trunc = brute_force_topk(t_corpus, t_query, k, id_col, vec_col, query_id_col)
-    hits = full.join(
-        trunc.select("query_id", id_col), on=["query_id", id_col], how="left_semi"
-    )
-    n_exact = full.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_exact"))
-    n_hits = hits.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_hits"))
-    return n_exact.join(n_hits, on="query_id", how="left").select(
-        "query_id",
-        F.coalesce(F.col("n_hits"), F.lit(0)).alias("n_hits"),
-        "n_exact",
-        dround(
-            F.coalesce(F.col("n_hits"), F.lit(0)) / F.col("n_exact").cast("double"),
-            6,
-        ).alias("recall"),
-    )
+    return _recall(full, trunc, id_col)
+
+
+def _prefix(df: DataFrame, key: str, vec_col: str, dim: int) -> DataFrame:
+    """``(key, vec_col)`` with the vector cut to its first ``dim``
+    coordinates (the Matryoshka prefix)."""
+    return df.select(F.col(key), F.slice(F.col(vec_col), 1, int(dim)).alias(vec_col))
 
 
 def two_stage_topk(
@@ -1215,31 +1208,13 @@ def two_stage_topk(
     sub-scan candidate generation).
     """
     qid = query_id_col or id_col
-    t_corpus = corpus.select(
-        F.col(id_col), F.slice(F.col(vec_col), 1, int(trunc_dim)).alias(vec_col)
-    )
-    t_query = query.select(
-        F.col(qid), F.slice(F.col(vec_col), 1, int(trunc_dim)).alias(vec_col)
-    )
     stage1 = brute_force_topk(
-        t_corpus, t_query, int(candidates), id_col, vec_col, query_id_col
+        _prefix(corpus, id_col, vec_col, trunc_dim),
+        _prefix(query, qid, vec_col, trunc_dim),
+        int(candidates), id_col, vec_col, query_id_col,
     ).select("query_id", id_col)
-    q = query.select(F.col(qid).alias("query_id"), F.col(vec_col).alias("__qvec"))
-    cand_vecs = corpus.join(
-        stage1, on=id_col, how="inner"
-    )  # O(q·candidates) rows carry full vectors
-    scored = cand_vecs.join(F.broadcast(q), on="query_id").select(
-        "query_id",
-        F.col(id_col),
-        dround(cosine_col(F.col(vec_col), F.col("__qvec")), 6).alias("cosine"),
-    )
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= int(k))
-        .select("query_id", id_col, "cosine", "rank")
+    return _exact_rerank(
+        corpus, stage1, _queries(query, qid, vec_col), int(k), id_col, vec_col
     )
 
 
@@ -1289,37 +1264,17 @@ def filtered_topk(
         )
     if strategy != "ivf":
         raise ValueError(f"strategy must be exact|ivf, got {strategy!r}")
-    from pyspark.sql import Window as W
-
-    qid = query_id_col or id_col
     # centroids come from the FULL corpus (the index is built once,
     # predicate-agnostic); assignment is row-local, so assigning only the
     # predicate's survivors is identical to assign-then-filter — and at
     # scale it's the predicate-pushed scan of the persisted assignment
     cents = ivf_centroids(corpus, nlist, id_col, vec_col)
-    assigned = ivf_assign(corpus.filter(pred), cents, id_col, vec_col)
-    q = query.select(F.col(qid).alias("query_id"), F.col(vec_col).alias("__qvec"))
-    qscore = q.crossJoin(F.broadcast(cents)).select(
-        "query_id",
-        "__qvec",
-        "centroid_id",
-        cosine_col(F.col("__qvec"), F.col("centroid")).alias("__cos"),
-    )
-    eff_probe = min(nlist, nprobe * max(1, oversample))
-    wq = W.partitionBy("query_id").orderBy(F.desc("__cos"), F.asc("centroid_id"))
-    probes = (
-        qscore.withColumn("__rn", F.row_number().over(wq))
-        .filter(F.col("__rn") <= eff_probe)
-        .select("query_id", "__qvec", F.col("centroid_id").alias("cluster"))
-    )
-    scored = assigned.join(F.broadcast(probes), on="cluster").select(
-        "query_id",
+    return _ivf_search(
+        _queries(query, query_id_col or id_col, vec_col),
+        cents,
+        ivf_assign(corpus.filter(pred), cents, id_col, vec_col),
+        k,
+        min(nlist, nprobe * max(1, oversample)),
         id_col,
-        dround(cosine_col(F.col(vec_col), F.col("__qvec")), 6).alias("cosine"),
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", id_col, "cosine", "rank")
+        vec_col,
     )

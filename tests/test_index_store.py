@@ -405,3 +405,23 @@ def test_partitioned_table_schema_evolution_keeps_layout(spark, tmp_path):
     assert got.count() == 12 and "extra" in got.columns
     dirs = [d for d in os.listdir(mgr.path("pt")) if d.startswith("g=")]
     assert sorted(dirs) == ["g=g0", "g=g1", "g=g2"]
+
+
+def test_ivfpq_topk_equals_persisted_index_search(spark, tmp_path):
+    """One search kernel: the in-memory ``ivfpq_topk`` (train, encode,
+    search) and the persisted ``VectorIndexStore`` built from the same
+    corpus with the same quantizer settings return the same rows."""
+    from databricks_demo_feature_store_spark.featurestore.manager import FeatureStoreManager
+    from databricks_demo_feature_store_spark.textops.index_store import VectorIndexStore
+    from databricks_demo_feature_store_spark.textops.similarity import ivfpq_topk
+
+    emb = _emb(spark)
+    q = emb.filter(F.col("vec_id") < 5)
+    store = VectorIndexStore(
+        FeatureStoreManager(spark, str(tmp_path / "fs")), name="eq", nlist=8, m=8, pq_k=16
+    )
+    store.build(emb)
+    in_memory = ivfpq_topk(emb, q, k=5, nlist=8, nprobe=2, m=8, pq_k=16).collect()
+    persisted = store.search(q, k=5, nprobe=2).collect()
+    assert len(in_memory) == 25
+    assert sorted(map(tuple, in_memory)) == sorted(map(tuple, persisted))

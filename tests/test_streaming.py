@@ -1285,3 +1285,63 @@ def test_watermark_progress_metrics_counts_late_events(spark, tmp_path):
     assert sum(b["input_rows"] for b in b1) == 22
     assert sum(b["late_dropped"] for b in b1) == 10
     assert spark.read.parquet(out).count() == 12 + 22 - 10
+
+
+def test_drain_batches_runs_each_micro_batch_once(spark, tmp_path):
+    """drain_batches executes each micro-batch's plan once: a watermarked
+    dedup drained through it reports the same numRowsDroppedByWatermark
+    as a plain single-action foreachBatch over the same input. An
+    emptiness check plus a fold on the unpersisted batch runs the
+    stateful operator twice and counts its dropped rows twice. The batch
+    is one ordered file read into one state partition, late rows first,
+    so an emptiness check that pulls rows up to the first survivor meets
+    every dropped row."""
+    import datetime as dt
+
+    from databricks_demo_feature_store_spark.streaming.ops import (
+        drain_batches,
+        scaled_stream_partitions,
+        watermark_progress_metrics,
+    )
+
+    inbox = str(tmp_path / "in")
+    schema = "id long, ts timestamp"
+    r0 = [(d, dt.datetime(2024, 1, d, 12, 0, 0, 500000)) for d in range(1, 13)]
+    r1 = [(200 + d, dt.datetime(2024, 1, d, 3, 0, 0, 500000)) for d in range(1, 13)]
+    r1 += [(100 + d, dt.datetime(2024, 1, d, 18, 0, 0, 500000)) for d in range(13, 23)]
+    res = (
+        spark.readStream.schema(schema)
+        .parquet(inbox + "/*.parquet")
+        .withWatermark("ts", "2 days")
+        .dropDuplicatesWithinWatermark(["id"])
+    )
+
+    def sink(name):
+        return lambda df, _: df.write.mode("append").parquet(str(tmp_path / name))
+
+    def plain(ckpt):
+        return (
+            res.writeStream.foreachBatch(sink("plain"))
+            .outputMode("update")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+
+    def drained(ckpt):
+        return drain_batches(res, ckpt, sink("drained"))
+
+    dropped = {"plain": 0, "drained": 0}
+    for rows in (r0, r1):
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(inbox)
+        for name, start in (("plain", plain), ("drained", drained)):
+            with scaled_stream_partitions(spark, nbytes=1) as n:
+                assert n == 1
+                q = start(str(tmp_path / f"ckpt_{name}"))
+                q.awaitTermination()
+            dropped[name] += sum(b["late_dropped"] for b in watermark_progress_metrics(q))
+    # days 1..10 of the late tail fall behind the Jan 10 12:00 watermark
+    assert dropped["plain"] == 10
+    assert dropped["drained"] == dropped["plain"]
+    n_plain = spark.read.parquet(str(tmp_path / "plain")).count()
+    assert spark.read.parquet(str(tmp_path / "drained")).count() == n_plain == 24

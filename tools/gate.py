@@ -171,6 +171,10 @@ SLOW_GUARDS = {
         "tests/test_textops.py::test_kmeans_refine_converges_and_ivf_works",
         "tests/test_textops.py::test_multiprobe_lsh_recall_not_worse",
         "tests/test_pca.py::test_two_stage_exact_when_candidates_cover_corpus",
+        # the shared search kernel backs VectorIndexStore.search
+        "tests/test_index_store.py::test_index_store_with_lloyd_refined_quantizers",
+        "tests/test_index_store.py::test_index_maintenance_merged_equals_rebuilt",
+        "tests/test_index_store.py::test_partitioned_layout_merged_equals_rebuilt",
     ],
     _PKG + "textops/pca.py": [
         "tests/test_pca.py::test_fit_matches_numpy",
