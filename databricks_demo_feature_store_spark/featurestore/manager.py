@@ -24,6 +24,7 @@ lookups scan a compact unfragmented table).
 from __future__ import annotations
 
 import os
+import threading
 from dataclasses import dataclass, field
 from enum import Enum
 
@@ -33,6 +34,7 @@ from databricks_demo_feature_store_spark.sources.writers import (
     METADATA_FILE,
     READ_SCHEMA_KEY,
     merge_upsert,
+    pinned_schema,
     read_sidecar,
     read_table,
     rewrite_table,
@@ -103,6 +105,11 @@ class FeatureStoreManager:
         self.spark = spark
         self.root = root
         self.fmt = fmt
+        # create_training_set's as-of feature state per lookup group
+        # (featurestore/training.py _group_state), and the lock its
+        # check-then-replace runs under
+        self._training_states: dict = {}
+        self._training_lock = threading.Lock()
 
     # -- paths / registry ---------------------------------------------------
     def path(self, name: str) -> str:
@@ -195,11 +202,14 @@ class FeatureStoreManager:
 
     # -- schema validation --------------------------------------------------
     def validate_schema(self, name: str, df: DataFrame) -> SchemaDiff:
-        """Structural diff against the stored table — reference :1510-1599."""
+        """Structural diff against the stored table — reference :1510-1599.
+        While the sidecar's read-schema pin is current
+        (``writers.pinned_schema``) the diff is taken against it and no
+        DataFrame is built; otherwise against the table's read."""
         if not self.exists(name):
             return SchemaDiff([], [], [])
-        existing = self.read(name)
-        old = {f.name: f.dataType.simpleString() for f in existing.schema.fields}
+        existing = pinned_schema(self.path(name), self.fmt) or self.read(name).schema
+        old = {f.name: f.dataType.simpleString() for f in existing.fields}
         new = {f.name: f.dataType.simpleString() for f in df.schema.fields}
         return SchemaDiff(
             new_columns=[c for c in new if c not in old],

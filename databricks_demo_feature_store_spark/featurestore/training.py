@@ -4,10 +4,11 @@ label/spine DataFrame.
 This is the Feature Store capability the reference delegates to the
 Databricks client (``fs.register_table`` / ``create_training_set``; see
 ``notebooks/utils.py:1778-1836``) — here re-expressed on the engine's own
-scalable as-of join (:func:`point_in_time_multi_join`,
-``databricks_demo_feature_store_spark.operators.joins``), which is the union+last_value
-linear-shuffle form rather than the reference's quadratic ``>=`` theta join
-(``src/packages/preprocessing/merge_tables/joins.py:115-238``).
+scalable as-of join (``databricks_demo_feature_store_spark.operators.joins``),
+the union+last_value linear-shuffle form rather than the reference's
+quadratic ``>=`` theta join
+(``src/packages/preprocessing/merge_tables/joins.py:115-238``), run as a
+per-store-version cached feature state plus a per-spine lookup.
 """
 
 from __future__ import annotations
@@ -19,8 +20,10 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from databricks_demo_feature_store_spark.featurestore.manager import FeatureStoreManager
 from databricks_demo_feature_store_spark.operators.joins import (
-    point_in_time_multi_join,
+    asof_feature_state,
+    asof_state_lookup,
 )
+from databricks_demo_feature_store_spark.sources.writers import table_generation
 
 
 @dataclass(frozen=True)
@@ -78,16 +81,41 @@ def create_training_set(
     features (reference PIT semantics, ``joins.py:229-236``).
 
     Scale shape: lookups are grouped by ``lookup_keys`` in order of first
-    appearance and each group is one call of
-    :func:`point_in_time_multi_join`. A group whose spine and feature
-    tables together fit one scan split (the Catalyst estimates summed:
-    on more than one core, at most ``spark.sql.files.openCostInBytes``,
-    4 MB by default) runs as one task with no exchange — less CPU, more wall time, since one
-    core does the work. A bigger group joins in ONE shuffle: the spine
-    moves through one exchange per key group, not one per table (5× less
-    spine shuffle I/O for a 5-table training set on one key). Building
-    the frame launches no job. The output keeps the feature columns in
-    lookup order, after the spine's columns.
+    appearance. Each group is the two stages of the as-of kernel
+    (``operators/joins.py``): the group's feature state
+    (:func:`asof_feature_state`, one row per distinct ``(keys, time)``
+    with every table's latest row as of it) and the spine's lookup
+    against it (:func:`asof_state_lookup`), which sorts only the spine
+    and the state, never the feature tables. A group whose spine and
+    feature tables together fit one scan split (the Catalyst estimates
+    summed: on more than one core, at most
+    ``spark.sql.files.openCostInBytes``, 4 MB by default) runs as one
+    task with no exchange — less CPU, more wall time, since one core
+    does the work. A bigger group joins in ONE shuffle: the spine moves
+    through one exchange per key group, not one per table. The output
+    keeps the feature columns in lookup order, after the spine's columns.
+
+    State cache: ``manager`` keeps each group's state, keyed by the
+    group's lookups (table, keys, feature names; not the tolerance,
+    which the lookup applies) and each table's ``table_generation``
+    token, for at most ``_STATE_SLOTS`` groups per manager (least
+    recently used evicted); a second manager over the same root builds
+    its own. The state is a ``localCheckpoint(eager=False)``: the first
+    build on a store version (cold) plans the table reads and the state
+    and launches no job when the feature tables fit one scan split; the
+    first action over it computes the state once and then looks the spine
+    up, about 1.3 times the CPU of one single-pass as-of join of the
+    group on the benchmark's five-table store. Every later build
+    on that version (warm) reads no registry DataFrame — its columns
+    come from the cached state, whose token vouches for the sidecar —
+    and its plan scans the cached state instead of the tables. A commit
+    into any of the group's tables (a save, or an outside write) changes
+    its token: the next build rebuilds the state and releases the old
+    one. A frame built before a commit reads the version it was built
+    on: it returns that version's rows while that state is cached, and
+    raises (``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``, or a missing data
+    file if its state was never computed) once the next build has
+    released it.
 
     Payload column names must be disjoint across lookups AND from the
     spine's own columns — a collision is validated up front and raises
@@ -97,27 +125,19 @@ def create_training_set(
     window_lookups = [lk for lk in lookups if isinstance(lk, WindowLookup)]
     lookups = [lk for lk in lookups if not isinstance(lk, WindowLookup)]
 
-    def resolve(lk: FeatureLookup) -> tuple[DataFrame, str]:
-        features, meta = manager.read_registered(lk.table)
-        ts_keys = meta.get("timestamp_keys") or []
-        if not ts_keys:
-            raise ValueError(
-                f"Feature table {lk.table!r} has no timestamp_keys in its registry metadata"
-            )
-        return features, ts_keys[0]
-
-    resolved = []
+    groups: dict[tuple[str, ...], list[FeatureLookup]] = {}
     for lk in lookups:
-        features, ftime = resolve(lk)
-        fcols = list(lk.feature_names) or [
-            c for c in features.columns if c not in lk.lookup_keys and c != ftime
-        ]
-        resolved.append((lk, features, ftime, fcols))
+        groups.setdefault(tuple(lk.lookup_keys), []).append(lk)
+    states = {gkeys: _group_state(manager, gkeys, lks) for gkeys, lks in groups.items()}
+
+    # each lookup's payload columns, in lookup order
+    group_cols = {gkeys: iter(state.feature_cols) for gkeys, state in states.items()}
+    resolved = [(lk, next(group_cols[tuple(lk.lookup_keys)])) for lk in lookups]
 
     # validate payload-name disjointness up front: each kernel call sees
     # only its own key group, and window lookups are joined after it
     seen: dict[str, str] = {c: "the spine" for c in spine.columns}
-    for lk, _features, _ftime, fcols in resolved:
+    for lk, fcols in resolved:
         for c in fcols:
             if c in seen:
                 raise ValueError(
@@ -136,46 +156,17 @@ def create_training_set(
                 )
             seen[c] = f"window lookup on table {wl.table!r}"
 
-    def apply_window_lookups(frame: DataFrame) -> DataFrame:
-        from databricks_demo_feature_store_spark.operators.windows import (
-            trailing_multi_window_features,
-        )
-
-        for wl in window_lookups:
-            events, etime = resolve(
-                FeatureLookup(table=wl.table, lookup_keys=wl.lookup_keys)
-            )
-            frame = trailing_multi_window_features(
-                frame,
-                events,
-                keys=list(wl.lookup_keys),
-                spine_time=spine_time,
-                event_time=etime,
-                windows=list(wl.windows),
-                sum_cols=list(wl.sum_cols),
-                count_col=wl.count_col,
-                scale=wl.scale,
-            )
-        return frame
-
-    if not lookups:
-        return apply_window_lookups(spine)
-
-    groups: dict[tuple[str, ...], list[dict]] = {}
-    for lk, features, ftime, fcols in resolved:
-        groups.setdefault(tuple(lk.lookup_keys), []).append(
-            {
-                "features": features,
-                "feature_time": ftime,
-                "feature_cols": fcols,
-                "tolerance_expr": lk.tolerance,
-            }
-        )
-    feature_names = [c for _lk, _f, _t, fcols in resolved for c in fcols]
+    feature_names = [c for _lk, fcols in resolved for c in fcols]
     out, lead = spine, None
-    for gkeys, entries in groups.items():
-        out = point_in_time_multi_join(
-            out, entries, keys=list(gkeys), spine_time=spine_time
+    for gkeys, lks in groups.items():
+        state = states[gkeys]
+        out = asof_state_lookup(
+            out,
+            state.frame,
+            keys=list(gkeys),
+            spine_time=spine_time,
+            tolerances=[lk.tolerance for lk in lks],
+            features_size=state.features_size,
         )
         if lead is None and len(groups) > 1:
             lead = [c for c in out.columns if c not in feature_names]
@@ -183,7 +174,92 @@ def create_training_set(
         # a later group's call carries the earlier groups' features as
         # spine payload; restore the lookup order
         out = out.select(*lead, *feature_names)
-    return apply_window_lookups(out)
+
+    from databricks_demo_feature_store_spark.operators.windows import (
+        trailing_multi_window_features,
+    )
+
+    for wl in window_lookups:
+        events, etime = _resolve(manager, wl.table)
+        out = trailing_multi_window_features(
+            out,
+            events,
+            keys=list(wl.lookup_keys),
+            spine_time=spine_time,
+            event_time=etime,
+            windows=list(wl.windows),
+            sum_cols=list(wl.sum_cols),
+            count_col=wl.count_col,
+            scale=wl.scale,
+        )
+    return out
+
+
+#: key groups whose as-of feature state one manager keeps
+_STATE_SLOTS = 8
+
+
+@dataclass(frozen=True)
+class _GroupState:
+    """A key group's cached as-of state (``create_training_set``)."""
+
+    tokens: tuple  # each table's table_generation when the state was built
+    frame: DataFrame  # asof_feature_state, locally checkpointed
+    features_size: int | None  # the feature frames' summed estimate
+    feature_cols: tuple[tuple[str, ...], ...]  # per lookup
+
+
+def _resolve(manager: FeatureStoreManager, table: str) -> tuple[DataFrame, str]:
+    """The table's live rows and its as-of time (first timestamp key)."""
+    features, meta = manager.read_registered(table)
+    ts_keys = meta.get("timestamp_keys") or []
+    if not ts_keys:
+        raise ValueError(
+            f"Feature table {table!r} has no timestamp_keys in its registry metadata"
+        )
+    return features, ts_keys[0]
+
+
+def _group_state(
+    manager: FeatureStoreManager, gkeys: tuple[str, ...], lks: Sequence[FeatureLookup]
+) -> _GroupState:
+    """The key group's feature state from ``manager``'s cache, rebuilt
+    (and the stale one released) when any table's generation moved."""
+    with manager._training_lock:
+        cache = manager._training_states
+        sig = (gkeys, tuple((lk.table, lk.feature_names) for lk in lks))
+        # taken before any read: a commit racing the build leaves a newer
+        # state under an older token, which the next build replaces
+        tokens = tuple(table_generation(manager.path(lk.table)) for lk in lks)
+        cached = cache.pop(sig, None)
+        if cached is not None and cached.tokens == tokens:
+            cache[sig] = cached  # most recently used last
+            return cached
+        if cached is not None:
+            _release(cached.frame)
+        entries = []
+        for lk in lks:
+            features, ftime = _resolve(manager, lk.table)
+            fcols = list(lk.feature_names) or [
+                c for c in features.columns if c not in gkeys and c != ftime
+            ]
+            entries.append({"features": features, "feature_time": ftime, "feature_cols": fcols})
+        frame, size = asof_feature_state(entries, keys=list(gkeys))
+        state = _GroupState(
+            tokens,
+            frame.localCheckpoint(eager=False),
+            size,
+            tuple(tuple(e["feature_cols"]) for e in entries),
+        )
+        cache[sig] = state
+        while len(cache) > _STATE_SLOTS:
+            _release(cache.pop(next(iter(cache))).frame)
+        return state
+
+
+def _release(frame: DataFrame) -> None:
+    """Drop the blocks of a ``localCheckpoint`` frame."""
+    frame._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 def latest_features(

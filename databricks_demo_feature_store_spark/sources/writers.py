@@ -405,32 +405,41 @@ def _write_sidecar(
         json.dump(meta, fh, indent=2, sort_keys=True)
 
 
+def pinned_schema(path: str, fmt: str, meta: dict | None = None) -> StructType | None:
+    """The read schema pinned in the sidecar (``meta``, or the file under
+    ``path`` when omitted) while the pin still describes the table: a
+    parquet table with no pending deletion vectors whose listing equals
+    the recorded one. Any write outside a rewrite changes the listing
+    (data files carry unique names), so a stale pin is never returned.
+    ``None`` otherwise."""
+    from databricks_demo_feature_store_spark.sources.deletion_vectors import dv_path
+
+    p = path.removeprefix("file:")
+    if fmt != "parquet" or os.path.isdir(dv_path(p)):  # Delta rejects a read schema
+        return None
+    pin = (read_sidecar(p) if meta is None else meta).get(READ_SCHEMA_KEY)
+    if pin and data_file_listing(p) == pin["files"]:
+        return StructType.fromJson(pin["schema"])
+    return None
+
+
 def read_table(spark: SparkSession, path: str, fmt: str, meta: dict | None = None) -> DataFrame:
     """The live rows of the table at ``path``. Pending deletion-vector
     deletes are folded out (``deletion_vectors.read_with_deletes``).
-    Without them the scan uses the read schema pinned in the sidecar
-    (``meta``, or the file under ``path`` when omitted) — no
-    footer-inference job — while the pin still describes the table: a
-    parquet table whose listing equals the recorded one. Any write
-    outside a rewrite changes the listing (data files carry unique
-    names), so a stale pin is never used; otherwise the schema is
-    inferred."""
+    Without them the scan uses :func:`pinned_schema` — no
+    footer-inference job — while the pin still describes the table;
+    otherwise the schema is inferred."""
     from databricks_demo_feature_store_spark.sources.deletion_vectors import (
         dv_path,
         read_with_deletes,
     )
 
-    p = path.removeprefix("file:")
-    if fmt == "parquet" and os.path.isdir(dv_path(p)):
+    if fmt == "parquet" and os.path.isdir(dv_path(path.removeprefix("file:"))):
         return read_with_deletes(spark, path)
     reader = spark.read.format(fmt)
-    pin = (read_sidecar(p) if meta is None else meta).get(READ_SCHEMA_KEY)
-    if (
-        pin
-        and fmt == "parquet"  # Delta rejects a read schema
-        and data_file_listing(p) == pin["files"]
-    ):
-        reader = reader.schema(StructType.fromJson(pin["schema"]))
+    schema = pinned_schema(path, fmt, meta)
+    if schema is not None:
+        reader = reader.schema(schema)
     return reader.load(path)
 
 

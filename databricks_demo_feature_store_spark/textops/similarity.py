@@ -722,10 +722,12 @@ def pq_codebooks(
     w = W.partitionBy("sub").orderBy(
         F.md5(F.concat_ws(":", F.col("sub"), F.col("__id"))).asc(), F.col("__id").asc()
     )
+    # the cut is on row_number itself, so Spark plans a WindowGroupLimit
+    # and at most k subvectors per subspace per partition are shuffled
     return (
-        subs.withColumn("code", F.row_number().over(w) - 1)
-        .where(F.col("code") < k)
-        .select("sub", "code", "centroid")
+        subs.withColumn("__rn", F.row_number().over(w))
+        .where(F.col("__rn") <= k)
+        .select("sub", (F.col("__rn") - 1).alias("code"), "centroid")
     )
 
 

@@ -92,6 +92,7 @@ SLOW_TESTS = {
     "test_shallow_clone_zero_copy_and_independent_writes",
     # fourth tranche: randomized store-level properties
     "test_tiered_merge_matches_bruteforce",
+    "test_cached_training_set_matches_bruteforce",
 }
 
 

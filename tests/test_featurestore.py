@@ -55,6 +55,23 @@ def test_merge_upserts_on_pk(spark, manager):
     assert got == {(1, 1.0), (2, 20.0), (3, 3.0)}
 
 
+def test_validate_schema_uses_a_current_pin(spark, manager, monkeypatch):
+    """While the sidecar's pin is current the schema diff reads no table;
+    after an outside append it reads the table again."""
+    manager.save(_df(spark, [(1, dt.date(2024, 1, 1), 1.0)]), SPEC, mode="overwrite")
+    wide = _df(spark, [(1, dt.date(2024, 1, 1), 9.0)]).withColumn("f2", F.lit(7.0))
+    reads, read = [], manager.read
+    monkeypatch.setattr(manager, "read", lambda name: reads.append(name) or read(name))
+    assert manager.validate_schema("cust_features", wide).new_columns == ["f2"]
+    assert reads == []
+
+    _df(spark, [(2, dt.date(2024, 1, 2), 2.0)]).write.mode("append").parquet(
+        manager.path("cust_features")
+    )
+    assert manager.validate_schema("cust_features", wide).new_columns == ["f2"]
+    assert reads == ["cust_features"]
+
+
 def test_merge_new_column_evolution(spark, manager):
     manager.save(_df(spark, [(1, dt.date(2024, 1, 1), 1.0)]), SPEC, mode="overwrite")
     wide = _df(spark, [(1, dt.date(2024, 1, 1), 99.0)]).withColumn("f2", F.lit(7.0))
@@ -1163,6 +1180,88 @@ def test_one_task_and_shuffle_plans_agree(spark, direction):
     assert len(got) == 60
     assert any(r[3] is not None for r in got)  # a matched
     assert {r[5] is None for r in got} == {True, False}  # b matched and missed
+
+
+def _sorted_rows(df) -> list:
+    return sorted(map(tuple, df.collect()), key=repr)
+
+
+def test_warm_training_set_reads_the_cached_state(spark, manager):
+    """A second build on an unchanged store plans no feature-table scan
+    (it reads the group's cached as-of state), launches no job while
+    being built, runs in one task and returns the first build's rows."""
+    import time
+
+    names, spine = _five_table_store(spark, manager)
+    lookups = [FeatureLookup(table=n, lookup_keys=("pk_customer",)) for n in names]
+    cold = create_training_set(manager, spine, lookups, spine_time="label_ts")
+    want = _sorted_rows(cold)
+
+    before = _jobs(spark)
+    warm = create_training_set(manager, spine, lookups, spine_time="label_ts")
+    time.sleep(0.5)  # job events reach the status tracker asynchronously
+    assert _jobs(spark) - before == set()
+    assert "FileScan" not in _plan(warm)
+    assert _task_count(spark, warm) == 1
+    assert warm.columns == cold.columns
+    assert _sorted_rows(warm) == want
+
+
+def test_training_set_sees_commits(spark, manager):
+    """A merge through the manager into one table and an outside parquet
+    append into another both reach the next build."""
+    names, spine = _five_table_store(spark, manager)
+    lookups = [FeatureLookup(table=n, lookup_keys=("pk_customer",)) for n in names]
+    create_training_set(manager, spine, lookups, spine_time="label_ts").collect()
+
+    # every spine row of key 0 is later than this feature time
+    late = F.timestamp_seconds(F.lit(1_700_000_000 + 30 * 5000 + 1))
+    row = spark.range(1).select(
+        F.lit(0).cast("int").alias("pk_customer"),
+        late.alias("tpk_release_dt"),
+        *[F.lit(-1.0).alias(f"f0_{j}") for j in range(12)],
+    )
+    spec = FeatureTableSpec(
+        name="ft0", primary_keys=("pk_customer", "tpk_release_dt"),
+        timestamp_keys=("tpk_release_dt",),
+    )
+    manager.save(row, spec, mode="merge")
+    outside = row.select(
+        "pk_customer", "tpk_release_dt", *[F.lit(-2.0).alias(f"f1_{j}") for j in range(12)]
+    )
+    outside.write.mode("append").parquet(manager.path("ft1"))
+
+    # a spine row at the late time, so both new rows are its matches
+    probe = spark.range(1).select(
+        F.lit(-1).cast("bigint").alias("label_id"),
+        F.lit(0).cast("int").alias("pk_customer"),
+        late.alias("label_ts"),
+    )
+    got = create_training_set(manager, probe, lookups, spine_time="label_ts").first()
+    assert (got.f0_0, got.f1_0) == (-1.0, -2.0)
+
+
+def test_training_state_cache_is_bounded(spark, manager):
+    """Each commit replaces the group's state and releases the old one:
+    the persisted RDDs do not grow over commit-and-build rounds."""
+    names, spine = _five_table_store(spark, manager)
+    lookups = [FeatureLookup(table=n, lookup_keys=("pk_customer",)) for n in names]
+    spec = FeatureTableSpec(
+        name="ft0", primary_keys=("pk_customer", "tpk_release_dt"),
+        timestamp_keys=("tpk_release_dt",),
+    )
+    sizes = []
+    for r in range(5):
+        row = spark.range(1).select(
+            F.lit(r).cast("int").alias("pk_customer"),
+            F.timestamp_seconds(F.lit(1_800_000_000 + r)).alias("tpk_release_dt"),
+            *[F.lit(float(r)).alias(f"f0_{j}") for j in range(12)],
+        )
+        manager.save(row, spec, mode="merge")
+        assert create_training_set(manager, spine, lookups, spine_time="label_ts").count() == 30
+        sizes.append(spark.sparkContext._jsc.getPersistentRDDs().size())
+    assert max(sizes) <= sizes[0]
+    assert len(manager._training_states) == 1
 
 
 def test_pinned_read_schema_tracks_outside_writes(spark, manager):

@@ -288,3 +288,97 @@ def test_golden_records_matches_bruteforce_union_find(spark, rows):
         ).collect()
     }
     assert got == expected  # ids are unique, so the comparison is total
+
+
+# a store table's rows: unique (k, hour) primary keys, one value each
+_store_rows = st.dictionaries(
+    st.tuples(_keys, _hours), st.integers(min_value=-100, max_value=100), max_size=12
+)
+
+
+@settings(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
+)
+@given(
+    spine=_spine_rows,
+    first=st.tuples(_store_rows, _store_rows),
+    commits=st.lists(
+        st.tuples(st.sampled_from(["merge", "overwrite"]), st.integers(0, 1), _store_rows),
+        min_size=1,
+        max_size=3,
+    ),
+    tolerance=st.sampled_from([None, 10]),
+    spine_parquet=st.booleans(),
+)
+def test_cached_training_set_matches_bruteforce(
+    spark, spine, first, commits, tolerance, spine_parquet
+):
+    """create_training_set over a manager's cached as-of state equals a
+    per-lookup brute-force as-of on random two-table stores, with and
+    without a tolerance, rebuilt after each of a random sequence of
+    merges and overwrites (every build after the first replaces the
+    cached state), and for spines with a size estimate (one task) and
+    without one (the shuffle plan)."""
+    import shutil
+    import tempfile
+
+    from databricks_demo_feature_store_spark.featurestore import (
+        FeatureStoreManager,
+        FeatureTableSpec,
+        create_training_set,
+    )
+    from databricks_demo_feature_store_spark.featurestore.training import FeatureLookup
+
+    root = tempfile.mkdtemp(prefix="cached-pit-")
+    try:
+        manager = FeatureStoreManager(spark, root)
+        cols = ("va", "vb")
+        specs = [
+            FeatureTableSpec(name=f"t_{c}", primary_keys=("k", "fts"), timestamp_keys=("fts",))
+            for c in cols
+        ]
+
+        def save(t, rows, mode):
+            data = [(k, BASE + dt.timedelta(hours=h), v) for (k, h), v in rows.items()]
+            df = spark.createDataFrame(data, f"k long, fts timestamp, {cols[t]} long")
+            manager.save(df, specs[t], mode=mode)
+
+        spine_df = spark.createDataFrame(
+            [(i, k, BASE + dt.timedelta(hours=h)) for i, (k, h) in enumerate(spine)],
+            "row_id long, k long, ts timestamp",
+        )
+        if spine_parquet:
+            spine_df.write.parquet(f"{root}/spine")
+            spine_df = spark.read.parquet(f"{root}/spine")
+        lookups = [
+            FeatureLookup(table="t_va", lookup_keys=("k",)),
+            FeatureLookup(
+                table="t_vb",
+                lookup_keys=("k",),
+                tolerance=None if tolerance is None else f"INTERVAL {tolerance} HOURS",
+            ),
+        ]
+        model = [dict(first[0]), dict(first[1])]
+        for t in (0, 1):
+            save(t, model[t], "overwrite")
+        for mode, t, rows in [(None, None, None), *commits]:
+            if mode == "merge":
+                model[t].update(rows)
+                save(t, rows, "merge")
+            elif mode == "overwrite":
+                model[t] = dict(rows)
+                save(t, rows, "overwrite")
+            got = {
+                r["row_id"]: (r["va"], r["vb"])
+                for r in create_training_set(
+                    manager, spine_df, lookups, spine_time="ts"
+                ).collect()
+            }
+            flat = [[(k, h, 0, v) for (k, h), v in m.items()] for m in model]
+            want_a = _brute_force_lookup(spine, flat[0])
+            want_b = _brute_force_lookup(spine, flat[1], tol_hours=tolerance)
+            assert got == {i: (want_a[i], want_b[i]) for i in range(len(spine))}
+    finally:
+        shutil.rmtree(root, ignore_errors=True)

@@ -913,6 +913,26 @@ def test_duplicated_spans_matches_bruteforce(spark):
     assert got == expected and len(expected) > 5
 
 
+def test_pq_codebooks_limits_before_the_exchange(spark):
+    """The per-subspace sample is a row_number cut Spark turns into a
+    WindowGroupLimit, so at most k subvectors per subspace per partition
+    are shuffled; each subspace keeps codes 0..k-1."""
+    from databricks_demo_feature_store_spark.textops.similarity import pq_codebooks
+
+    emb = spark.range(0, 200, numPartitions=4).select(
+        F.col("id").alias("vec_id"),
+        F.array(*[F.sin(F.col("id") * (j + 1)) for j in range(16)]).alias("embedding"),
+    )
+    cb = pq_codebooks(emb, m=4, k=8)
+    rows = cb.collect()
+    assert "WindowGroupLimit" in cb._jdf.queryExecution().executedPlan().toString()
+    codes = {}
+    for r in rows:
+        codes.setdefault(r["sub"], []).append(r["code"])
+        assert len(r["centroid"]) == 4
+    assert {s: sorted(c) for s, c in codes.items()} == {s: list(range(8)) for s in range(4)}
+
+
 def test_pq_encode_and_adc(spark):
     """PQ codes are m codes in [0, k); ADC self-distance is small but
     nonzero (reconstruction error), and each query's exact nearest

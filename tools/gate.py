@@ -50,6 +50,7 @@ _PIT_SLOW = [
     "tests/test_operators.py::test_point_in_time_join_property_vs_naive",
     "tests/test_operators.py::test_asof_join_directions",
     "tests/test_property_asof.py::test_asof_join_all_directions_match_brute_force",
+    "tests/test_property_pit.py::test_cached_training_set_matches_bruteforce",
 ]
 _WRITERS_SLOW = [
     "tests/test_catalog.py::test_concurrent_staged_swap_raises_no_lost_update",
@@ -74,6 +75,7 @@ SLOW_GUARDS = {
     ],
     _PKG + "featurestore/training.py": _PIT_SLOW,
     _PKG + "featurestore/manager.py": [
+        "tests/test_property_pit.py::test_cached_training_set_matches_bruteforce",
         "tests/test_featurestore.py::test_forget_entities_propagates_and_is_idempotent",
         "tests/test_index_store.py::test_partitioned_layout_merged_equals_rebuilt",
         "tests/test_index_store.py::test_index_maintenance_merged_equals_rebuilt",
