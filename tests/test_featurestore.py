@@ -1050,7 +1050,12 @@ def test_training_set_build_launches_no_job(spark, manager):
 def test_training_set_build_py4j_budget(spark, manager):
     """The build's Py4J round trips grow with the lookups, not with
     lookups² or the payload columns: five 12-column tables stay far
-    under 1,000 calls (the per-column construction took ~5,800 here)."""
+    under 1,000 calls (the per-column construction took ~5,800 here).
+    Only this thread's commands count: Py4J's finalizer thread sends the
+    deletes of every JavaObject freed since it last woke (600-1,600 after
+    the store's saves) whenever its one-second sleep ends."""
+    import threading
+
     import py4j.clientserver as cs
 
     names, spine = _five_table_store(spark, manager)
@@ -1058,9 +1063,10 @@ def test_training_set_build_py4j_budget(spark, manager):
     spine.columns
     calls = [0]
     send = cs.ClientServerConnection.send_command
+    builder = threading.get_ident()
 
     def counting(self, command):
-        calls[0] += 1
+        calls[0] += threading.get_ident() == builder
         return send(self, command)
 
     cs.ClientServerConnection.send_command = counting
