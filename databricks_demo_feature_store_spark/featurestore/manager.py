@@ -24,12 +24,12 @@ lookups scan a compact unfragmented table).
 from __future__ import annotations
 
 import os
-import threading
 from dataclasses import dataclass, field
 from enum import Enum
 
 from pyspark.sql import DataFrame, SparkSession
 
+from databricks_demo_feature_store_spark.featurestore.training import StateCache
 from databricks_demo_feature_store_spark.sources.writers import (
     METADATA_FILE,
     READ_SCHEMA_KEY,
@@ -106,10 +106,13 @@ class FeatureStoreManager:
         self.root = root
         self.fmt = fmt
         # create_training_set's as-of feature state per lookup group
-        # (featurestore/training.py _group_state), and the lock its
-        # check-then-replace runs under
-        self._training_states: dict = {}
-        self._training_lock = threading.Lock()
+        self._training_states = StateCache()
+
+    def release_training_states(self) -> None:
+        """Drop ``create_training_set``'s cached as-of feature states and
+        unpersist their blocks: frames built on them raise afterwards, and
+        each lookup group's next two builds read the feature tables again."""
+        self._training_states.clear()
 
     # -- paths / registry ---------------------------------------------------
     def path(self, name: str) -> str:

@@ -13,17 +13,22 @@ per-store-version cached feature state plus a per-spine lookup.
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Sequence
 from dataclasses import dataclass
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from databricks_demo_feature_store_spark.featurestore.manager import FeatureStoreManager
 from databricks_demo_feature_store_spark.operators.joins import (
     asof_feature_state,
     asof_state_lookup,
+    point_in_time_multi_join,
 )
 from databricks_demo_feature_store_spark.sources.writers import table_generation
+
+if TYPE_CHECKING:
+    from databricks_demo_feature_store_spark.featurestore.manager import FeatureStoreManager
 
 
 @dataclass(frozen=True)
@@ -81,8 +86,9 @@ def create_training_set(
     features (reference PIT semantics, ``joins.py:229-236``).
 
     Scale shape: lookups are grouped by ``lookup_keys`` in order of first
-    appearance. Each group is the two stages of the as-of kernel
-    (``operators/joins.py``): the group's feature state
+    appearance. A group is joined either by one call of the single-pass
+    kernel :func:`point_in_time_multi_join`, or in the kernel's two
+    stages (``operators/joins.py``): the group's feature state
     (:func:`asof_feature_state`, one row per distinct ``(keys, time)``
     with every table's latest row as of it) and the spine's lookup
     against it (:func:`asof_state_lookup`), which sorts only the spine
@@ -92,30 +98,33 @@ def create_training_set(
     ``spark.sql.files.openCostInBytes``, 4 MB by default) runs as one
     task with no exchange — less CPU, more wall time, since one core
     does the work. A bigger group joins in ONE shuffle: the spine moves
-    through one exchange per key group, not one per table. The output
-    keeps the feature columns in lookup order, after the spine's columns.
+    through one exchange per key group, not one per table. Building the
+    frame launches no job. The output keeps the feature columns in
+    lookup order, after the spine's columns.
 
-    State cache: ``manager`` keeps each group's state, keyed by the
-    group's lookups (table, keys, feature names; not the tolerance,
-    which the lookup applies) and each table's ``table_generation``
-    token, for at most ``_STATE_SLOTS`` groups per manager (least
-    recently used evicted); a second manager over the same root builds
-    its own. The state is a ``localCheckpoint(eager=False)``: the first
-    build on a store version (cold) plans the table reads and the state
-    and launches no job when the feature tables fit one scan split; the
-    first action over it computes the state once and then looks the spine
-    up, about 1.3 times the CPU of one single-pass as-of join of the
-    group on the benchmark's five-table store. Every later build
-    on that version (warm) reads no registry DataFrame — its columns
-    come from the cached state, whose token vouches for the sidecar —
-    and its plan scans the cached state instead of the tables. A commit
-    into any of the group's tables (a save, or an outside write) changes
-    its token: the next build rebuilds the state and releases the old
-    one. A frame built before a commit reads the version it was built
-    on: it returns that version's rows while that state is cached, and
-    raises (``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``, or a missing data
-    file if its state was never computed) once the next build has
-    released it.
+    State cache: ``manager`` keeps one slot per lookup-key group
+    (:class:`StateCache`), keyed by the group's lookups (table and
+    feature names; not the tolerance, which the lookup applies) and each
+    table's ``table_generation`` token; a second manager over the same
+    root keeps its own. A build that does not match its group's slot
+    (the first on a store version, or other lookups) takes the slot and
+    runs the single-pass kernel, at the kernel's cost. The second
+    matching build builds the state as a ``localCheckpoint(eager=False)``
+    — the first action over it computes the state once and then looks the
+    spine up, about 1.3 times the CPU of one single-pass join on the
+    benchmark's five-table store. Every later matching build reads no
+    registry DataFrame (its columns come from the slot, whose tokens vouch
+    for the sidecar) and scans the state instead of the tables. A state
+    whose blocks were lost with an executor is rebuilt.
+
+    A commit into any of the group's tables (a save, or an outside write)
+    changes its token, and the next build releases the group's state: a
+    frame built on that state before the commit raises from then on
+    (``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``, or a missing data file if the
+    state was never computed) instead of returning rows. A state whose
+    slot other lookups took is not released, so frames built on it keep
+    working; ``FeatureStoreManager.release_training_states`` releases
+    every state.
 
     Payload column names must be disjoint across lookups AND from the
     spine's own columns — a collision is validated up front and raises
@@ -128,10 +137,13 @@ def create_training_set(
     groups: dict[tuple[str, ...], list[FeatureLookup]] = {}
     for lk in lookups:
         groups.setdefault(tuple(lk.lookup_keys), []).append(lk)
-    states = {gkeys: _group_state(manager, gkeys, lks) for gkeys, lks in groups.items()}
+    states = {
+        gkeys: manager._training_states.resolve(manager, gkeys, lks)
+        for gkeys, lks in groups.items()
+    }
 
     # each lookup's payload columns, in lookup order
-    group_cols = {gkeys: iter(state.feature_cols) for gkeys, state in states.items()}
+    group_cols = {gkeys: iter(state.feature_cols) for gkeys, (state, _e) in states.items()}
     resolved = [(lk, next(group_cols[tuple(lk.lookup_keys)])) for lk in lookups]
 
     # validate payload-name disjointness up front: each kernel call sees
@@ -159,15 +171,20 @@ def create_training_set(
     feature_names = [c for _lk, fcols in resolved for c in fcols]
     out, lead = spine, None
     for gkeys, lks in groups.items():
-        state = states[gkeys]
-        out = asof_state_lookup(
-            out,
-            state.frame,
-            keys=list(gkeys),
-            spine_time=spine_time,
-            tolerances=[lk.tolerance for lk in lks],
-            features_size=state.features_size,
-        )
+        state, entries = states[gkeys]
+        if entries is None:
+            out = asof_state_lookup(
+                out,
+                state.frame,
+                keys=list(gkeys),
+                spine_time=spine_time,
+                tolerances=[lk.tolerance for lk in lks],
+                features_size=state.features_size,
+            )
+        else:
+            for e, lk in zip(entries, lks):
+                e["tolerance_expr"] = lk.tolerance
+            out = point_in_time_multi_join(out, entries, keys=list(gkeys), spine_time=spine_time)
         if lead is None and len(groups) > 1:
             lead = [c for c in out.columns if c not in feature_names]
     if lead is not None:
@@ -195,18 +212,79 @@ def create_training_set(
     return out
 
 
-#: key groups whose as-of feature state one manager keeps
-_STATE_SLOTS = 8
-
-
 @dataclass(frozen=True)
 class _GroupState:
-    """A key group's cached as-of state (``create_training_set``)."""
+    """A key group's lookups at one store version (``StateCache``)."""
 
-    tokens: tuple  # each table's table_generation when the state was built
-    frame: DataFrame  # asof_feature_state, locally checkpointed
-    features_size: int | None  # the feature frames' summed estimate
+    sig: tuple  # each lookup's (table, feature_names)
+    tokens: tuple  # each table's table_generation
     feature_cols: tuple[tuple[str, ...], ...]  # per lookup
+    frame: DataFrame | None = None  # asof_feature_state, locally checkpointed
+    rdd: object = None  # the checkpointed RDD (a Py4J handle)
+    features_size: int | None = None  # the feature frames' summed estimate
+
+
+class StateCache:
+    """``create_training_set``'s as-of feature states for one
+    ``FeatureStoreManager``: one slot per lookup-key group, holding the
+    group's last lookups at the store version they were built on.
+
+    A build whose lookups or tokens differ from the slot's takes the slot
+    and runs the single-pass kernel; a second build of the same lookups
+    at the same tokens builds the state, and later ones look up in it.
+    Only a commit (same lookups, new tokens) or lost blocks unpersist a
+    state; a slot taken by other lookups drops its state unreleased, and
+    Spark's ContextCleaner frees its blocks once no frame refers to it."""
+
+    def __init__(self) -> None:
+        self._lock = threading.Lock()
+        self._slots: dict[tuple[str, ...], _GroupState] = {}
+
+    def resolve(
+        self,
+        manager: FeatureStoreManager,
+        gkeys: tuple[str, ...],
+        lks: Sequence[FeatureLookup],
+    ) -> tuple[_GroupState, list[dict] | None]:
+        """The group's slot, and the kernel entries when this build
+        reads the feature tables (None when it looks up in the state)."""
+        sig = tuple((lk.table, lk.feature_names) for lk in lks)
+        with self._lock:
+            # taken before any read: a commit racing the build leaves newer
+            # rows under an older token, which the next build replaces
+            tokens = tuple(table_generation(manager.path(lk.table)) for lk in lks)
+            slot = self._slots.get(gkeys)
+            again = slot is not None and slot.sig == sig and slot.tokens == tokens
+            if slot is not None and slot.sig == sig and slot.frame is not None:
+                if again and not _blocks_lost(manager.spark._jvm, slot.rdd):
+                    return slot, None
+                slot.rdd.unpersist(False)  # a commit, or lost blocks
+            entries = []
+            for lk in lks:
+                features, ftime = _resolve(manager, lk.table)
+                fcols = list(lk.feature_names) or [
+                    c for c in features.columns if c not in gkeys and c != ftime
+                ]
+                entries.append(
+                    {"features": features, "feature_time": ftime, "feature_cols": fcols}
+                )
+            fcols = tuple(tuple(e["feature_cols"]) for e in entries)
+            if not again:
+                self._slots[gkeys] = _GroupState(sig, tokens, fcols)
+                return self._slots[gkeys], entries
+            frame, size = asof_feature_state(entries, keys=list(gkeys))
+            frame = frame.localCheckpoint(eager=False)
+            rdd = frame._jdf.queryExecution().logical().rdd()
+            self._slots[gkeys] = _GroupState(sig, tokens, fcols, frame, rdd, size)
+            return self._slots[gkeys], None
+
+    def clear(self) -> None:
+        """Unpersist every state and empty every slot."""
+        with self._lock:
+            for slot in self._slots.values():
+                if slot.frame is not None:
+                    slot.rdd.unpersist(False)
+            self._slots.clear()
 
 
 def _resolve(manager: FeatureStoreManager, table: str) -> tuple[DataFrame, str]:
@@ -220,46 +298,15 @@ def _resolve(manager: FeatureStoreManager, table: str) -> tuple[DataFrame, str]:
     return features, ts_keys[0]
 
 
-def _group_state(
-    manager: FeatureStoreManager, gkeys: tuple[str, ...], lks: Sequence[FeatureLookup]
-) -> _GroupState:
-    """The key group's feature state from ``manager``'s cache, rebuilt
-    (and the stale one released) when any table's generation moved."""
-    with manager._training_lock:
-        cache = manager._training_states
-        sig = (gkeys, tuple((lk.table, lk.feature_names) for lk in lks))
-        # taken before any read: a commit racing the build leaves a newer
-        # state under an older token, which the next build replaces
-        tokens = tuple(table_generation(manager.path(lk.table)) for lk in lks)
-        cached = cache.pop(sig, None)
-        if cached is not None and cached.tokens == tokens:
-            cache[sig] = cached  # most recently used last
-            return cached
-        if cached is not None:
-            _release(cached.frame)
-        entries = []
-        for lk in lks:
-            features, ftime = _resolve(manager, lk.table)
-            fcols = list(lk.feature_names) or [
-                c for c in features.columns if c not in gkeys and c != ftime
-            ]
-            entries.append({"features": features, "feature_time": ftime, "feature_cols": fcols})
-        frame, size = asof_feature_state(entries, keys=list(gkeys))
-        state = _GroupState(
-            tokens,
-            frame.localCheckpoint(eager=False),
-            size,
-            tuple(tuple(e["feature_cols"]) for e in entries),
-        )
-        cache[sig] = state
-        while len(cache) > _STATE_SLOTS:
-            _release(cache.pop(next(iter(cache))).frame)
-        return state
-
-
-def _release(frame: DataFrame) -> None:
-    """Drop the blocks of a ``localCheckpoint`` frame."""
-    frame._jdf.queryExecution().logical().rdd().unpersist(False)
+def _blocks_lost(jvm, rdd) -> bool:
+    """True when a computed local checkpoint lost blocks (an executor
+    holding them is gone): it has no lineage to recompute them from.
+    Asks the block manager master, as the checkpoint itself does."""
+    if not rdd.isCheckpointed():
+        return False
+    master = jvm.org.apache.spark.SparkEnv.get().blockManager().master()
+    block, rid = jvm.org.apache.spark.storage.RDDBlockId, rdd.id()
+    return not all(master.contains(block(rid, i)) for i in range(rdd.getNumPartitions()))
 
 
 def latest_features(

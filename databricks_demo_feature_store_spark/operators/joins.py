@@ -273,13 +273,14 @@ def asof_feature_state(
 
     ``create_training_set`` keeps this state per ``FeatureStoreManager``
     as a ``localCheckpoint(eager=False)``, keyed by the group's lookups
-    and each table's ``table_generation`` token. The first action on a
-    new store version computes it once, for about 1.3 times the CPU of
-    one single-pass kernel call on the benchmark's five-table store;
-    every later build on that version sorts only the spine and the
-    state. A commit makes the next build replace the state and release
-    the old one, so a frame built before the commit raises from then on
-    rather than returning rows."""
+    and each table's ``table_generation`` token. The first build on a
+    store version runs the single-pass kernel; the second builds the
+    state, whose first action computes it once, for about 1.3 times the
+    CPU of one single-pass kernel call on the benchmark's five-table
+    store; every later build on that version sorts only the spine and
+    the state. A commit makes the next build release the state, so a
+    frame built on it before the commit raises from then on rather than
+    returning rows."""
     keys, lookups = list(keys), list(lookups)
     size = _estimate([lk["features"] for lk in lookups])
     one_task = size is not None and scan_splits(lookups[0]["features"].sparkSession, size) == 1

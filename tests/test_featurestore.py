@@ -1192,25 +1192,67 @@ def _sorted_rows(df) -> list:
     return sorted(map(tuple, df.collect()), key=repr)
 
 
-def test_warm_training_set_reads_the_cached_state(spark, manager):
-    """A second build on an unchanged store plans no feature-table scan
-    (it reads the group's cached as-of state), launches no job while
-    being built, runs in one task and returns the first build's rows."""
+def test_warm_training_set_reads_the_cached_state(spark, manager, monkeypatch):
+    """The first build on a store version runs the single-pass kernel;
+    the second and later ones plan no feature-table scan (they read the
+    group's cached as-of state), launch no job while being built, run in
+    one task and return the first build's rows. From the third on, a
+    build reads no registry DataFrame."""
     import time
 
     names, spine = _five_table_store(spark, manager)
     lookups = [FeatureLookup(table=n, lookup_keys=("pk_customer",)) for n in names]
     cold = create_training_set(manager, spine, lookups, spine_time="label_ts")
+    assert "FileScan" in _plan(cold)
     want = _sorted_rows(cold)
 
-    before = _jobs(spark)
-    warm = create_training_set(manager, spine, lookups, spine_time="label_ts")
-    time.sleep(0.5)  # job events reach the status tracker asynchronously
-    assert _jobs(spark) - before == set()
-    assert "FileScan" not in _plan(warm)
-    assert _task_count(spark, warm) == 1
-    assert warm.columns == cold.columns
-    assert _sorted_rows(warm) == want
+    reads, read = [], manager.read_registered
+    monkeypatch.setattr(manager, "read_registered", lambda n: reads.append(n) or read(n))
+    for build in (2, 3):
+        reads.clear()
+        before = _jobs(spark)
+        warm = create_training_set(manager, spine, lookups, spine_time="label_ts")
+        time.sleep(0.5)  # job events reach the status tracker asynchronously
+        assert _jobs(spark) - before == set()
+        assert reads == (names if build == 2 else [])
+        assert "FileScan" not in _plan(warm)
+        assert _task_count(spark, warm) == 1
+        assert warm.columns == cold.columns
+        assert _sorted_rows(warm) == want
+
+
+def test_training_state_survives_other_lookups(spark, manager):
+    """Builds of other lookups on the same keys take the group's slot
+    without releasing its state: a frame built on that state still
+    returns its rows."""
+    names, spine = _five_table_store(spark, manager)
+    lookups = [FeatureLookup(table=n, lookup_keys=("pk_customer",)) for n in names]
+    create_training_set(manager, spine, lookups, spine_time="label_ts")
+    first = create_training_set(manager, spine, lookups, spine_time="label_ts")
+    want = _sorted_rows(first)
+    for subset in (lookups[:2], lookups[2:], lookups[1:3]):
+        for _ in range(2):
+            create_training_set(manager, spine, subset, spine_time="label_ts").collect()
+    assert _sorted_rows(first) == want
+
+
+def test_training_state_rebuilt_after_lost_blocks(spark, manager):
+    """A computed state whose blocks are gone (as when the executor
+    holding them is lost) is rebuilt by the next build, and
+    ``release_training_states`` starts every group cold."""
+    names, spine = _five_table_store(spark, manager)
+    lookups = [FeatureLookup(table=n, lookup_keys=("pk_customer",)) for n in names]
+    want = _sorted_rows(create_training_set(manager, spine, lookups, spine_time="label_ts"))
+    assert _sorted_rows(create_training_set(manager, spine, lookups, spine_time="label_ts")) == want
+
+    (slot,) = manager._training_states._slots.values()
+    master = spark.sparkContext._jvm.org.apache.spark.SparkEnv.get().blockManager().master()
+    master.removeRdd(slot.rdd.id(), True)
+    assert _sorted_rows(create_training_set(manager, spine, lookups, spine_time="label_ts")) == want
+
+    manager.release_training_states()
+    assert manager._training_states._slots == {}
+    assert _sorted_rows(create_training_set(manager, spine, lookups, spine_time="label_ts")) == want
 
 
 def test_training_set_sees_commits(spark, manager):
@@ -1218,7 +1260,8 @@ def test_training_set_sees_commits(spark, manager):
     append into another both reach the next build."""
     names, spine = _five_table_store(spark, manager)
     lookups = [FeatureLookup(table=n, lookup_keys=("pk_customer",)) for n in names]
-    create_training_set(manager, spine, lookups, spine_time="label_ts").collect()
+    for _ in range(2):  # the second build computes the group's state
+        create_training_set(manager, spine, lookups, spine_time="label_ts").collect()
 
     # every spine row of key 0 is later than this feature time
     late = F.timestamp_seconds(F.lit(1_700_000_000 + 30 * 5000 + 1))
@@ -1243,8 +1286,9 @@ def test_training_set_sees_commits(spark, manager):
         F.lit(0).cast("int").alias("pk_customer"),
         late.alias("label_ts"),
     )
-    got = create_training_set(manager, probe, lookups, spine_time="label_ts").first()
-    assert (got.f0_0, got.f1_0) == (-1.0, -2.0)
+    for _ in range(2):  # the single-pass build, then a new state
+        got = create_training_set(manager, probe, lookups, spine_time="label_ts").first()
+        assert (got.f0_0, got.f1_0) == (-1.0, -2.0)
 
 
 def test_training_state_cache_is_bounded(spark, manager):
@@ -1264,10 +1308,11 @@ def test_training_state_cache_is_bounded(spark, manager):
             *[F.lit(float(r)).alias(f"f0_{j}") for j in range(12)],
         )
         manager.save(row, spec, mode="merge")
-        assert create_training_set(manager, spine, lookups, spine_time="label_ts").count() == 30
+        for _ in range(2):  # the single-pass build, then a new state
+            assert create_training_set(manager, spine, lookups, spine_time="label_ts").count() == 30
         sizes.append(spark.sparkContext._jsc.getPersistentRDDs().size())
     assert max(sizes) <= sizes[0]
-    assert len(manager._training_states) == 1
+    assert len(manager._training_states._slots) == 1
 
 
 def test_pinned_read_schema_tracks_outside_writes(spark, manager):

@@ -317,10 +317,10 @@ def test_cached_training_set_matches_bruteforce(
 ):
     """create_training_set over a manager's cached as-of state equals a
     per-lookup brute-force as-of on random two-table stores, with and
-    without a tolerance, rebuilt after each of a random sequence of
-    merges and overwrites (every build after the first replaces the
-    cached state), and for spines with a size estimate (one task) and
-    without one (the shuffle plan)."""
+    without a tolerance, after each of a random sequence of merges and
+    overwrites (three builds per store version: the single-pass kernel,
+    then a new state, then the cached one), and for spines with a size
+    estimate (one task) and without one (the shuffle plan)."""
     import shutil
     import tempfile
 
@@ -370,15 +370,17 @@ def test_cached_training_set_matches_bruteforce(
             elif mode == "overwrite":
                 model[t] = dict(rows)
                 save(t, rows, "overwrite")
-            got = {
-                r["row_id"]: (r["va"], r["vb"])
-                for r in create_training_set(
-                    manager, spine_df, lookups, spine_time="ts"
-                ).collect()
-            }
             flat = [[(k, h, 0, v) for (k, h), v in m.items()] for m in model]
             want_a = _brute_force_lookup(spine, flat[0])
             want_b = _brute_force_lookup(spine, flat[1], tol_hours=tolerance)
-            assert got == {i: (want_a[i], want_b[i]) for i in range(len(spine))}
+            want = {i: (want_a[i], want_b[i]) for i in range(len(spine))}
+            for _ in range(3):  # single-pass, state build, state hit
+                got = {
+                    r["row_id"]: (r["va"], r["vb"])
+                    for r in create_training_set(
+                        manager, spine_df, lookups, spine_time="ts"
+                    ).collect()
+                }
+                assert got == want
     finally:
         shutil.rmtree(root, ignore_errors=True)
