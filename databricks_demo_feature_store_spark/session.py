@@ -13,11 +13,54 @@ and shuffle partitions sized to the local core count instead of the
 
 from __future__ import annotations
 
+import json
 import os
+import tempfile
+import weakref
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+# Loading each of these classes registers a Hadoop default resource
+# (mapred-, yarn-, hdfs-default.xml), and every registration reloads all
+# live Configurations from their resources.
+_DEFAULT_RESOURCE_CLASSES = (
+    "org.apache.hadoop.mapred.JobConf",
+    "org.apache.hadoop.yarn.conf.YarnConfiguration",
+    "org.apache.hadoop.hdfs.HdfsConfiguration",
+)
+# contexts whose Hadoop conf no longer carries yarn-default.xml; held
+# weakly, so a context started after a stop is slimmed again
+_SLIM_CONTEXTS: weakref.WeakSet = weakref.WeakSet()
+
+
+def _drop_yarn_defaults(sc: SparkContext) -> None:
+    """Unset every key of ``sc``'s Hadoop configuration whose source is
+    ``yarn-default.xml``: about 520 of its ~1,100 entries, which a local
+    session never reads. Every per-query conf
+    (``sessionState().newHadoopConf()``) copies this one, so each scan,
+    write job and task serializes, ships and deserializes half the
+    entries. The default-resource classes load first, so no later
+    registration reloads the defaults. One ``dumpConfiguration`` call
+    names the keys and their sources; it writes to a file, since its
+    130 KB as a Py4J string answer took about 45 ms more."""
+    jvm = sc._jvm
+    for name in _DEFAULT_RESOURCE_CLASSES:
+        jvm.java.lang.Class.forName(name)
+    conf = sc._jsc.hadoopConfiguration()
+    with tempfile.NamedTemporaryFile("r", suffix=".json") as dump:
+        out = jvm.java.io.FileWriter(dump.name)
+        try:
+            jvm.org.apache.hadoop.conf.Configuration.dumpConfiguration(conf, out)
+        finally:
+            out.close()
+        props = json.load(dump)["properties"]
+    unset = conf.unset
+    for prop in props:
+        if prop["resource"] == "yarn-default.xml":
+            unset(prop["key"])
 
 
 def get_spark(
@@ -30,6 +73,12 @@ def get_spark(
 
     On a real cluster ``master`` comes from the environment; locally we
     default to ``local[N]`` with N = SPARK_GRAFT_CPUS (32 in CI).
+
+    On a ``local…`` master the context's Hadoop configuration drops the
+    keys that come only from ``yarn-default.xml``
+    (:func:`_drop_yarn_defaults`), once per SparkContext: a later call
+    that returns the live session does not redo it. Other masters keep
+    the whole configuration.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
@@ -99,5 +148,9 @@ def get_spark(
         builder = builder.config(key, value)
 
     spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    sc = spark.sparkContext
+    sc.setLogLevel("WARN")
+    if sc.master.startswith("local") and sc not in _SLIM_CONTEXTS:
+        _drop_yarn_defaults(sc)
+        _SLIM_CONTEXTS.add(sc)
     return spark

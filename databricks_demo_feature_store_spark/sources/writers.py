@@ -69,6 +69,12 @@ if HAS_DELTA:  # pragma: no cover - delta not in the test image
     from delta.tables import DeltaTable
 
 
+# No reader looks for a write job's ``_SUCCESS`` marker (a staged write
+# commits by its swap), so no job writes one: that saves a file create,
+# and its forked ``chmod``s, per write job.
+_NO_SUCCESS_MARKER = {"mapreduce.fileoutputcommitter.marksuccessfuljobs": "false"}
+
+
 def _write(df: DataFrame, path: str, fmt: str, mode: str, partition_by: Sequence[str] | None) -> None:
     writer_df = df
     if partition_by:
@@ -79,7 +85,7 @@ def _write(df: DataFrame, path: str, fmt: str, mode: str, partition_by: Sequence
         # partitioned index build in the round-12 100× run). One shuffle
         # on the layout columns → one well-sized file per directory.
         writer_df = df.repartition(*[F.col(c) for c in partition_by])
-    writer = writer_df.write.format(fmt).mode(mode)
+    writer = writer_df.write.format(fmt).mode(mode).options(**_NO_SUCCESS_MARKER)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.save(path)
@@ -285,8 +291,9 @@ def stage_and_swap(
     live table untouched.
 
     ``sized`` (whole-table rewrites) coalesces ``df`` to
-    :func:`split_partitions` — one write task, and one file, per split
-    the next scan of the table would read. Each write task pays a fixed
+    :func:`split_partitions` — one write task, and at most one file
+    (a task that gets no rows writes none), per split the next scan of
+    the table would read. Each write task pays a fixed
     cost (deserializing the job's Hadoop configuration, building a
     Parquet writer and committer) that a small table's rewrite plan,
     partitioned by its inputs, would otherwise pay once per input
@@ -530,7 +537,7 @@ def _write_tiers(df: DataFrame, staging: str, column: str, bound) -> dict:
     below = F.col(column) < _from_bound(bound, df.schema[column].dataType)
     df.withColumn(_HOT_COLUMN, ~F.coalesce(below, F.lit(False))).write.mode(
         "overwrite"
-    ).partitionBy(_HOT_COLUMN).parquet(staging)
+    ).options(**_NO_SUCCESS_MARKER).partitionBy(_HOT_COLUMN).parquet(staging)
     staging = staging.removeprefix("file:")
     hot = []
     for value in ("false", "true"):

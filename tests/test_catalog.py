@@ -787,11 +787,73 @@ def test_merge_rewrite_sized_to_one_split(spark, tmp_path):
     assert got[1995] == 1995.0 and got[10] == 15.0
 
 
+def test_local_session_hadoop_conf_drops_yarn_defaults(spark, tmp_path):
+    """A local session's per-query Hadoop configuration holds no key
+    from ``yarn-default.xml``, still after a write, a read and a merge
+    (a late default-resource registration would reload them), so it
+    serializes to under 64 KB (113 KB with them). Streaming checkpoints
+    still find their ``AbstractFileSystem``, and a second ``get_spark``
+    on the live session does not dump the configuration again."""
+    import json
+    import os
+    import threading
+
+    import py4j.clientserver as cs
+    from pyspark.sql import functions as F
+
+    from databricks_demo_feature_store_spark import get_spark
+    from databricks_demo_feature_store_spark.sources.writers import merge_upsert
+
+    path = str(tmp_path / "tbl")
+    spark.range(0, 100).select(F.col("id").alias("k"), F.col("id").cast("double").alias("v")).write.parquet(path)
+    assert spark.read.parquet(path).count() == 100
+    merge_upsert(spark.range(95, 105).select(F.col("id").alias("k"), F.lit(0.0).alias("v")), path, ["k"])
+    assert spark.read.parquet(path).count() == 105
+    # the staged swap commits a store write; no job writes a marker
+    assert not os.path.exists(os.path.join(path, "_SUCCESS"))
+
+    jvm = spark.sparkContext._jvm
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    out = jvm.java.io.StringWriter()
+    jvm.org.apache.hadoop.conf.Configuration.dumpConfiguration(conf, out)
+    sources = {prop["resource"] for prop in json.loads(out.toString())["properties"]}
+    assert "core-default.xml" in sources and "yarn-default.xml" not in sources
+    buf = jvm.java.io.ByteArrayOutputStream()
+    conf.write(jvm.java.io.DataOutputStream(buf))
+    assert buf.size() < 64 * 1024
+    assert conf.get("fs.AbstractFileSystem.file.impl")
+
+    commands = []
+    send = cs.ClientServerConnection.send_command
+    caller = threading.get_ident()
+
+    def recording(self, command):
+        if threading.get_ident() == caller:
+            commands.append(command)
+        return send(self, command)
+
+    cs.ClientServerConnection.send_command = recording
+    try:
+        again = get_spark(
+            "tests",
+            shuffle_partitions=int(spark.conf.get("spark.sql.shuffle.partitions")),
+            extra_conf={"spark.sql.codegen.wholeStage": spark.conf.get("spark.sql.codegen.wholeStage")},
+        )
+    finally:
+        cs.ClientServerConnection.send_command = send
+    assert again is spark
+    assert commands and not any("dumpConfiguration" in c for c in commands)
+
+
 def test_merge_rewrite_file_count_follows_split_size(spark, tmp_path):
     """With lowered ``spark.sql.files.*`` split settings the rewrite
     writes ceil(bytes / split) files, split = min(maxPartitionBytes,
     max(openCostInBytes, bytes / defaultParallelism)) — the rule is the
-    scan's split size, not "always one file"."""
+    scan's split size, not "always one file". Every input file is
+    smaller than ``openCostInBytes``, the least split, so no scan cuts
+    one and every input partition carries rows at any core count; a cut
+    file's splits without a row group's midpoint read nothing, and the
+    coalesced write would lose one file per empty group."""
     import math
     import os
 
@@ -810,17 +872,17 @@ def test_merge_rewrite_file_count_follows_split_size(spark, tmp_path):
         F.col("id").alias("k"), F.col("id").cast("double").alias("v")
     )
     settings = {
-        "spark.sql.files.maxPartitionBytes": 8192,
-        "spark.sql.files.openCostInBytes": 1024,
+        "spark.sql.files.maxPartitionBytes": 16384,
+        "spark.sql.files.openCostInBytes": 4096,
     }
     saved = {k: spark.conf.get(k) for k in settings}
     try:
         for k, v in settings.items():
             spark.conf.set(k, str(v))
-        size = sum(
-            os.path.getsize(os.path.join(path, f)) for f in _data_files(path)
-        ) + plan_size_estimate(batch)
-        split = min(8192, max(1024, size // spark.sparkContext.defaultParallelism))
+        sizes = [os.path.getsize(os.path.join(path, f)) for f in _data_files(path)]
+        assert max(sizes) < 4096
+        size = sum(sizes) + plan_size_estimate(batch)
+        split = min(16384, max(4096, size // spark.sparkContext.defaultParallelism))
         expected = math.ceil(size / split)
         assert expected > 1
         merge_upsert(batch, path, ["k"])

@@ -4,6 +4,9 @@ oracle_sql() on DuckDB, compares row count, column names, and exact values
 order-insensitive value-hash gate.
 
 Usage: python tools/check_correctness.py [sf_dir] [query ...]
+
+Named queries run alone, and the summary counts the queries that ran. A
+name that is not registered exits 2 before any query runs.
 """
 
 from __future__ import annotations
@@ -111,6 +114,11 @@ def main() -> int:
     import __spark_entry__ as entry_mod
     from databricks_demo_feature_store_spark import get_spark
 
+    queries = entry_mod.queries()
+    unknown = sorted(only - queries.keys())
+    if unknown:
+        print(f"not registered: {', '.join(unknown)}")
+        return 2
     spark = get_spark("correctness-check")
     con = duckdb.connect()
     for t in (
@@ -120,12 +128,12 @@ def main() -> int:
             f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
 
-    queries = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
-    failures = 0
+    failures = ran = 0
     for name, fn in queries.items():
         if only and name not in only:
             continue
+        ran += 1
         t0 = time.time()
         try:
             spark_pdf = fn(spark, sf_dir).toPandas()
@@ -151,7 +159,7 @@ def main() -> int:
                 print(f"   - {p}")
         else:
             print(f"OK   {name}: {len(spark_pdf)} rows [{t_spark:.1f}s]")
-    print(f"\n{'ALL OK' if failures == 0 else f'{failures} FAILURES'} / {len(queries)} queries")
+    print(f"\n{'ALL OK' if failures == 0 else f'{failures} FAILURES'} / {ran} queries")
     return 1 if failures else 0
 
 

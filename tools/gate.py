@@ -86,6 +86,8 @@ SLOW_GUARDS = {
         "tests/test_property_hist_quantile.py::test_quantile_from_hist_matches_python_replay",
     ],
     _PKG + "sources/writers.py": _WRITERS_SLOW,
+    # every staged write runs under the session's Hadoop configuration
+    _PKG + "session.py": _WRITERS_SLOW,
     _PKG + "sources/deletion_vectors.py": _WRITERS_SLOW,
     _PKG + "sources/column_mapping.py": _WRITERS_SLOW,
     _PKG + "pipelines/incremental.py": _WRITERS_SLOW,
