@@ -264,6 +264,22 @@ def cdf_deltas(
     return post, dels
 
 
+def _version_range(versioned, v_from: int | None, v_to: int | None) -> tuple[int, int]:
+    """The ``(v_from, v_to)`` a CDF refresh diffs: ``v_to`` defaults to the
+    latest commit, ``v_from`` to the commit before ``v_to``."""
+    versions = sorted(v.version for v in versioned.history())
+    if v_to is None:
+        if not versions:
+            raise ValueError("versioned table has no commits")
+        v_to = versions[-1]
+    if v_from is None:
+        older = [v for v in versions if v < v_to]
+        if not older:
+            raise ValueError(f"no version before {v_to} to diff against")
+        v_from = older[-1]
+    return v_from, v_to
+
+
 def refresh_join_view_from_cdf(
     view: DataFrame,
     versioned,
@@ -288,16 +304,7 @@ def refresh_join_view_from_cdf(
     recompute of the join on the post-commit table is proven by the
     driver gate (``q_incr_cdf_refresh``), not assumed.
     """
-    versions = sorted(v.version for v in versioned.history())
-    if v_to is None:
-        if not versions:
-            raise ValueError("versioned table has no commits")
-        v_to = versions[-1]
-    if v_from is None:
-        older = [v for v in versions if v < v_to]
-        if not older:
-            raise ValueError(f"no version before {v_to} to diff against")
-        v_from = older[-1]
+    v_from, v_to = _version_range(versioned, v_from, v_to)
     # Pin the change feed before splitting it: cdf_deltas fans `changes`
     # out to THREE plan consumers (delta→touched, deletes→touched,
     # delta→re-join), and without materialization each consumer re-runs
@@ -368,16 +375,7 @@ def refresh_aggregate_state_from_cdf(
     O(changed rows): one version diff + one delta-sized hash agg + one
     state-sized cell-sum — fact history is never rescanned.
     """
-    versions = sorted(v.version for v in versioned.history())
-    if v_to is None:
-        if not versions:
-            raise ValueError("versioned table has no commits")
-        v_to = versions[-1]
-    if v_from is None:
-        older = [v for v in versions if v < v_to]
-        if not older:
-            raise ValueError(f"no version before {v_to} to diff against")
-        v_from = older[-1]
+    v_from, v_to = _version_range(versioned, v_from, v_to)
     changes = versioned.changes_between(v_from, v_to, list(id_keys))
     delta = cdf_aggregate_delta(changes, agg_keys, value_col, scale=scale)
     merged = merge_aggregate_state(state, delta, keys=list(agg_keys))

@@ -34,6 +34,7 @@ from databricks_demo_feature_store_spark.sources.writers import (
     METADATA_FILE,
     READ_SCHEMA_KEY,
     merge_upsert,
+    pin_and_enforce,
     pinned_schema,
     read_sidecar,
     read_table,
@@ -41,6 +42,11 @@ from databricks_demo_feature_store_spark.sources.writers import (
     stage_and_swap,
     table_generation,
 )
+
+
+#: ``save_many``'s saves in flight; 2-3 back-fill the cores one save's
+#: write tail leaves idle
+_SAVE_WORKERS = 3
 
 
 class EvolutionPolicy(str, Enum):
@@ -170,8 +176,7 @@ class FeatureStoreManager:
         """Precise writer-internal match (ADVICE r12: a bare endswith hid a
         legitimately-registered table named e.g. ``prices__old``): strip the
         writer suffix chain (``_swap_dirs`` can stack them, e.g.
-        ``tbl__staging__old``; ``__compact``/``__forget`` are staging
-        names of earlier layouts) plus an optional random tail (every
+        ``tbl__staging__old``) plus an optional random tail (every
         staging directory has one), and call it debris only when a
         suffix WAS stripped and either (a) the remaining
         base is an existing sibling table — the exact name every writer
@@ -181,9 +186,7 @@ class FeatureStoreManager:
 
         base, stripped = name, False
         while True:
-            m = re.match(
-                r"^(.+?)(?:__old|__staging|__compact|__forget)(?:-\w+)?$", base
-            )
+            m = re.match(r"^(.+?)(?:__old|__staging)(?:-\w+)?$", base)
             if not m:
                 break
             base, stripped = m.group(1), True
@@ -252,19 +255,11 @@ class FeatureStoreManager:
         they force a full overwrite (the reference asks interactively —
         :1991-2014 — which a batch engine must not do).
         """
-        if spec.check_constraints:
-            from databricks_demo_feature_store_spark.sources.writers import (
-                enforce_check_constraints,
-            )
-
-            # pin the plan first (the writers.save_table discipline): a
-            # non-deterministic frame must not pass validation on one
-            # evaluation and write a different one
-            df = df.localCheckpoint(eager=True)
-            enforce_check_constraints(df, spec.check_constraints)
         path = self.path(spec.name)
-        # taken before any read of the table, including df's own
+        # taken before any read of the table, df's own and the constraint
+        # check's included
         generation = table_generation(path)
+        df = pin_and_enforce(df, spec.check_constraints)
         diff = self.validate_schema(spec.name, df)
 
         needs_overwrite = mode == "overwrite"
@@ -301,14 +296,13 @@ class FeatureStoreManager:
         items,
         mode: str = "merge",
         policy: EvolutionPolicy = EvolutionPolicy.EVOLVE,
-        max_workers: int = 3,
     ) -> dict:
         """Save several INDEPENDENT feature tables with overlapped jobs
         (guide §2.6: Spark happily runs several jobs at once inside one
         application — actions are only sequential because driver code
         calls them sequentially). Each save's write tail leaves most of
         the cluster idle; submitting the next table's job from a small
-        thread pool back-fills those cores. 2–3 in flight is plenty.
+        thread pool of ``_SAVE_WORKERS`` back-fills those cores.
 
         ``items`` is an iterable of ``(df, spec)`` pairs targeting
         DISTINCT tables (validated — two writers on one table would
@@ -337,9 +331,9 @@ class FeatureStoreManager:
             df, spec = item
             return spec.name, self.save(df, spec, mode=mode, policy=policy)
 
-        if len(items) <= 1 or max_workers <= 1:
+        if len(items) <= 1:
             return dict(map(_one, items))
-        with ThreadPoolExecutor(max_workers=min(max_workers, len(items))) as pool:
+        with ThreadPoolExecutor(max_workers=min(_SAVE_WORKERS, len(items))) as pool:
             return dict(pool.map(_one, items))
 
 

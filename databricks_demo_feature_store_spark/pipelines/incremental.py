@@ -28,7 +28,11 @@ from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
-from databricks_demo_feature_store_spark.sources.writers import _write, rewrite_table
+from databricks_demo_feature_store_spark.sources.writers import (
+    rewrite_table,
+    stage_and_swap,
+    table_generation,
+)
 
 
 def replace_entities(
@@ -48,7 +52,8 @@ def replace_entities(
     Parquet fallback: a ``rewrite_table`` whose build is kept = live
     rows ⟕anti(entity) df, out = kept ∪ df; the table's registry sidecar
     carries over and rows a deletion vector removed stay removed. A
-    missing table is bootstrapped with ``df``.
+    missing table is bootstrapped with ``df`` in one staged swap, which a
+    concurrent creator fails with ``ConcurrentWriteError``.
     """
     touched = df.select(entity_col).distinct()
 
@@ -56,10 +61,12 @@ def replace_entities(
         kept = existing.join(F.broadcast(touched), on=entity_col, how="left_anti")
         return kept.unionByName(df, allowMissingColumns=True)
 
+    generation = table_generation(path)
     if not rewrite_table(
-        df.sparkSession, path, fmt, build, partition_by=partition_by
+        df.sparkSession, path, fmt, build, partition_by=partition_by,
+        _generation=generation,
     ):
-        _write(df, path, fmt, "overwrite", partition_by)
+        stage_and_swap(df, path, fmt, generation, partition_by, sized=False)
 
 
 def incremental_entity_refresh(

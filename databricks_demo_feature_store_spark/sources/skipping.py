@@ -490,22 +490,20 @@ def write_stats_sidecar(
             )
     else:
         stats = harvest_file_stats(spark, table_path, columns)
-    out = stats_sidecar_path(table_path)
-    # writers._swap_dirs promotion (rename old aside, rename staging in,
-    # drop old): a crash mid-swap leaves the old sidecar recoverable in
-    # __old instead of lost, and the no-sidecar window shrinks from
-    # "whole staging write" (the previous rmtree-then-rename) to the gap
-    # between two renames. The swap is scoped to the inner `data` dir so
-    # a sibling bloom sidecar under the same `_stats` survives a
-    # min/max-stats refresh.
-    import uuid
-
-    from databricks_demo_feature_store_spark.sources.writers import _swap_dirs
-
-    staging = out + ".staging-" + uuid.uuid4().hex[:8]
-    stats.write.mode("overwrite").parquet(staging)
-    _swap_dirs(out, staging)
+    # the swap is scoped to the inner `data` dir so a sibling bloom
+    # sidecar under the same `_stats` survives a min/max-stats refresh
+    _stage_sidecar(sidecar_dir, stats)
     return load_file_stats(spark, table_path)
+
+
+def _stage_sidecar(out: str, rows: DataFrame) -> None:
+    """Replace the sidecar directory ``out`` with ``rows`` in one staged
+    swap (``writers._stage``): a failed write leaves the old sidecar and
+    no staging debris, and a crash mid-swap leaves the old sidecar
+    recoverable in ``__old``."""
+    from databricks_demo_feature_store_spark.sources.writers import _stage, _write
+
+    _stage(out, lambda staging: _write(rows, staging, "parquet", "overwrite", None))
 
 
 def load_file_stats(spark: SparkSession, table_path: str) -> DataFrame:
@@ -704,14 +702,7 @@ def _promote_bloom(
 ) -> DataFrame:
     """Stage-and-swap the bloom sidecar (the staging write may READ the
     old sidecar — the swap happens only after it materializes)."""
-    import uuid
-
-    from databricks_demo_feature_store_spark.sources.writers import _swap_dirs
-
-    out = bloom_sidecar_path(table_path)
-    staging = out + ".staging-" + uuid.uuid4().hex[:8]
-    blooms.write.mode("overwrite").parquet(staging)
-    _swap_dirs(out, staging)
+    _stage_sidecar(bloom_sidecar_path(table_path), blooms)
     return load_bloom_stats(spark, table_path)
 
 

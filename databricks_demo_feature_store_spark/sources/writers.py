@@ -28,6 +28,15 @@ Every stored table has ONE read and ONE rewrite:
   Delta table properties (``notebooks/utils.py:1490-1508``), which every
   MERGE and OPTIMIZE commits along with the data.
 
+Every commit that is not an append is one :func:`_stage`: the new
+version is filled into a uniquely named staging sibling, which
+:func:`_swap_dirs` (its only caller) promotes under the generation check.
+That covers rewrites, ``save_table`` overwrites, the bootstrap of a
+missing table and the skipping sidecars (``sources/skipping.py``). A
+failed fill removes the staging directory and leaves the live table as
+it was. Delta's own writes and dynamic partition overwrite are the
+exceptions.
+
 The staged write is sized to the rewrite's bytes: one write task and
 file per split the next scan would read (:func:`split_partitions`),
 instead of one per input partition of the rewrite plan — the stand-in for
@@ -109,8 +118,6 @@ def enforce_check_constraints(df: DataFrame, constraints: Sequence[str]) -> None
     with the per-constraint violation counts if any row fails. NULL
     results PASS (SQL CHECK semantics), so ``x > 0`` does not reject
     NULL x — add ``x IS NOT NULL`` explicitly for that."""
-    from pyspark.sql import functions as F
-
     constraints = list(constraints)
     aggs = [
         F.sum(
@@ -126,6 +133,19 @@ def enforce_check_constraints(df: DataFrame, constraints: Sequence[str]) -> None
     }
     if counts:
         raise CheckConstraintViolation(counts)
+
+
+def pin_and_enforce(df: DataFrame, constraints: Sequence[str]) -> DataFrame:
+    """``df`` pinned by an eager local checkpoint and validated against
+    ``constraints`` (:func:`enforce_check_constraints`); ``df`` itself
+    when there are none. Write the returned frame: validating one
+    evaluation and writing a re-evaluation would let a non-deterministic
+    plan write rows that were never checked."""
+    if not constraints:
+        return df
+    df = df.localCheckpoint(eager=True)
+    enforce_check_constraints(df, constraints)
+    return df
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -204,9 +224,10 @@ def _swap_dirs(live: str, staging: str, expected_generation=_UNCHECKED) -> None:
     if the live table's generation changed between read and swap, another
     writer committed in the window — the swap raises
     :class:`ConcurrentWriteError` and discards ``staging`` instead of
-    silently clobbering that commit. Single-writer callers (bootstrap
-    writes, sidecar refreshes) omit it. Within one process the check and
-    the renames run under one lock; across processes the check→rename
+    silently clobbering that commit. A bootstrap passes ``None``, the
+    token of a missing table, so a concurrent creator fails it; sidecar
+    refreshes omit it. Within one process the check and the renames run
+    under one lock; across processes the check→rename
     race is microseconds wide and loses only to a writer that slipped a
     full commit inside it. The zero-window fix is an atomic log commit
     (Delta), which this emulation stands in for.
@@ -317,7 +338,7 @@ def stage_and_swap(
         if registry is not None:
             _write_sidecar(staging, registry, df.schema, tier)
 
-    _stage(path, generation, fill)
+    _stage(path, fill, generation)
 
 
 def _sized(df: DataFrame) -> DataFrame:
@@ -325,11 +346,11 @@ def _sized(df: DataFrame) -> DataFrame:
     return df if n is None else df.coalesce(n)
 
 
-def _stage(path: str, generation, fill: Callable[[str], None]) -> None:
+def _stage(path: str, fill: Callable[[str], None], generation=_UNCHECKED) -> None:
     """Run ``fill`` on a new uniquely named staging sibling of ``path``,
-    then promote it with :func:`_swap_dirs` under ``generation``. If
-    ``fill`` raises, the staging directory is removed and the live table
-    is untouched."""
+    then promote it with :func:`_swap_dirs` under ``generation`` (no
+    check when omitted). If ``fill`` raises, the staging directory is
+    removed and the live table is untouched."""
     staging = f"{path.rstrip('/')}__staging-{uuid.uuid4().hex[:12]}"
     try:
         fill(staging)
@@ -476,7 +497,8 @@ def rewrite_table(
 
     Returns False, writing nothing, when the table does not exist — the
     read's path-miss ``AnalysisException``; callers with a bootstrap
-    write it themselves. Errors from ``build`` propagate."""
+    stage it with :func:`stage_and_swap` under their token. Errors from
+    ``build`` propagate."""
     from pyspark.errors import AnalysisException
 
     generation = table_generation(path) if _generation is _FRESH else _generation
@@ -615,7 +637,7 @@ def _merge_hot_tier(
                 _move_file(live, name, staging.removeprefix("file:"), name, link=True)
         _write_sidecar(staging, registry, merged.schema, {**tier, "hot": new_hot})
 
-    _stage(path, generation, fill)
+    _stage(path, fill, generation)
 
 
 def save_table(
@@ -634,9 +656,17 @@ def save_table(
 ) -> None:
     """Write a layer table.
 
+    - ``mode="overwrite"`` replaces the table through one staged swap
+      (:func:`stage_and_swap`, unsized: ``df``'s own file boundaries are
+      kept, which clustered and z-ordered layouts prune by). A failed job
+      leaves the old table and its sidecars as they were, ``df`` may read
+      the table it replaces, and another writer's commit after the call
+      began fails it with :class:`ConcurrentWriteError`. Delta tables
+      overwrite through Delta.
     - ``mode="overwrite"`` with ``partition_overwrite=True`` replaces only
       the partitions present in ``df`` (the reference's ``replaceWhere`` /
       dynamic ``partitionOverwriteMode``, ``storage_operations.py:161-199``).
+      Spark's committer writes it in place, outside the staged swap.
     - ``mode="merge"`` upserts on ``merge_keys`` (Delta MERGE when
       available, anti-join emulation otherwise).
     - ``check_constraints`` — SQL boolean expressions enforced BEFORE any
@@ -662,6 +692,8 @@ def save_table(
       trusting callers to derive the column consistently.
     """
     spark = df.sparkSession
+    # taken before any read of the table, the constraint check's included
+    generation = table_generation(path)
     if generated_columns:
         extra_checks: list[str] = []
         for name, expr in generated_columns.items():
@@ -673,16 +705,14 @@ def save_table(
                 df = df.withColumn(name, F.expr(expr))
         if extra_checks:
             check_constraints = list(check_constraints or []) + extra_checks
-    if check_constraints:
-        # pin the plan FIRST: validating one evaluation and writing a
-        # re-evaluation would un-guarantee 'no half-poisoned table' for
-        # non-deterministic plans (and pays a second full computation)
-        df = df.localCheckpoint(eager=True)
-        enforce_check_constraints(df, check_constraints)
+    df = pin_and_enforce(df, check_constraints)
     if mode == "merge":
         if not merge_keys:
             raise ValueError("merge mode requires merge_keys")
-        merge_upsert(df, path, list(merge_keys), fmt=fmt, partition_by=partition_by)
+        merge_upsert(
+            df, path, list(merge_keys), fmt=fmt, partition_by=partition_by,
+            _generation=generation,
+        )
         _refresh_stats(spark, path, fmt, stats_columns, bloom_columns)
         return
     if mode == "overwrite" and partition_overwrite and partition_by:
@@ -694,7 +724,10 @@ def save_table(
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
         _refresh_stats(spark, path, fmt, stats_columns, bloom_columns)
         return
-    _write(df, path, fmt, mode, partition_by)
+    if mode == "overwrite" and fmt != "delta":
+        stage_and_swap(df, path, fmt, generation, partition_by, sized=False)
+    else:
+        _write(df, path, fmt, mode, partition_by)
     # one listing decides the append's compaction
     sizes = (
         _tripped_sizes(path, auto_compact)
@@ -780,7 +813,9 @@ def merge_upsert(
     existing ⟕anti df; out = keep ∪ df. When ``update_columns`` is given,
     matched rows keep their old values except the listed columns
     (reference semantics for schema-evolution merges). A missing table is
-    bootstrapped with ``df``.
+    bootstrapped with ``df`` through one staged swap under the token taken
+    before the read (``None``), so a concurrent creator fails it with
+    :class:`ConcurrentWriteError`.
 
     Tiers (see the module docstring). When the registry's first
     ``timestamp_keys`` column ``t`` is a merge key, the merge touches only
@@ -867,9 +902,9 @@ def merge_upsert(
         spark, path, fmt, build, partition_by=partition_by, registry=registry,
         split=split, _generation=generation,
     ):
-        _write(df, path, fmt, "overwrite", partition_by)
-        if registry is not None:
-            _write_sidecar(path, registry, df.schema)
+        stage_and_swap(
+            df, path, fmt, generation, partition_by, sized=False, registry=registry
+        )
 
 
 def _hot_tier_fits(path: str, pin: dict, column: str, schema: StructType) -> bool:

@@ -852,7 +852,7 @@ def test_list_tables_debris_vs_legit_suffix_names(spark, manager, tmp_path):
         os.makedirs(os.path.join(manager.root, debris), exist_ok=True)
     # an unregistered suffix dir with no sibling base (no metadata file):
     # never a table either
-    os.makedirs(os.path.join(manager.root, "ghost__compact"), exist_ok=True)
+    os.makedirs(os.path.join(manager.root, "ghost__staging-ab12cd"), exist_ok=True)
     assert manager.list_tables() == ["cust_features", "prices__old"]
 
 
@@ -1374,7 +1374,23 @@ def _rows(manager, name: str) -> list:
     return sorted(map(tuple, manager.read(name).collect()))
 
 
-def test_failed_overwrite_keeps_table_and_registry(spark, manager):
+def _manager_overwrite(manager, df) -> None:
+    manager.save(df, SPEC, mode="overwrite")
+
+
+def _save_table_overwrite(manager, df) -> None:
+    from databricks_demo_feature_store_spark.sources.writers import save_table
+
+    save_table(df, manager.path(SPEC.name))
+
+
+_OVERWRITES = pytest.mark.parametrize(
+    "overwrite", [_manager_overwrite, _save_table_overwrite], ids=["save", "save_table"]
+)
+
+
+@_OVERWRITES
+def test_failed_overwrite_keeps_table_and_registry(spark, manager, overwrite):
     """An overwrite whose job fails mid-write leaves the old table, its
     registry and its read-schema pin in place, and no staging debris."""
     import os
@@ -1383,9 +1399,7 @@ def test_failed_overwrite_keeps_table_and_registry(spark, manager):
     manager.save(_df(spark, [(1, day, 1.0), (2, day, 2.0)]), SPEC, mode="overwrite")
     before, meta = _rows(manager, SPEC.name), manager.get_metadata(SPEC.name)
     with pytest.raises(Exception, match="boom"):
-        manager.save(
-            _failing(_df(spark, [(1, day, 5.0), (2, day, 6.0)]), 2), SPEC, mode="overwrite"
-        )
+        overwrite(manager, _failing(_df(spark, [(1, day, 5.0), (2, day, 6.0)]), 2))
     assert _rows(manager, SPEC.name) == before
     assert manager.get_metadata(SPEC.name) == meta
     assert sorted(os.listdir(manager.root)) == [SPEC.name]
@@ -1406,10 +1420,11 @@ def test_overwrite_is_sized_to_one_file(spark, manager):
     assert manager.read(SPEC.name).count() == 25
 
 
-def test_self_overwrite_reads_the_table_it_replaces(spark, manager):
-    """``save(read(t) ..., mode="overwrite")`` — explicit, or forced by a
-    type change under EVOLVE — rewrites the table from its own rows, and
-    the registry pin describes the promoted files."""
+@_OVERWRITES
+def test_self_overwrite_reads_the_table_it_replaces(spark, manager, overwrite):
+    """An overwrite of ``read(t) ...`` — explicit, or forced by a type
+    change under EVOLVE — rewrites the table from its own rows, and the
+    registry pin describes the promoted files."""
     from databricks_demo_feature_store_spark.sources.writers import (
         READ_SCHEMA_KEY,
         data_file_listing,
@@ -1418,7 +1433,7 @@ def test_self_overwrite_reads_the_table_it_replaces(spark, manager):
     day = dt.date(2024, 1, 1)
     manager.save(_df(spark, [(1, day, 1.0), (2, day, 2.0)]), SPEC, mode="overwrite")
     doubled = manager.read(SPEC.name).withColumn("f1", F.col("f1") * 2)
-    manager.save(doubled, SPEC, mode="overwrite")
+    overwrite(manager, doubled)
     assert _rows(manager, SPEC.name) == [(1, day, 2.0), (2, day, 4.0)]
 
     as_text = manager.read(SPEC.name).withColumn("f1", F.col("f1").cast("string"))
@@ -1520,6 +1535,81 @@ def test_rewrites_keep_registry_and_pin(spark, manager, op):
     assert pin["files"] == writers.data_file_listing(path)
     pinned = StructType.fromJson(pin["schema"])
     assert pinned.simpleString() == spark.read.parquet(path).schema.simpleString()
+
+
+def _merge_bootstrap(df, path: str, registry: dict | None = None) -> None:
+    from databricks_demo_feature_store_spark.sources.writers import merge_upsert
+
+    merge_upsert(df, path, list(SPEC.primary_keys), registry=registry)
+
+
+def _replace_bootstrap(df, path: str) -> None:
+    from databricks_demo_feature_store_spark.pipelines.incremental import (
+        replace_entities,
+    )
+
+    replace_entities(df, path, "pk_customer")
+
+
+@pytest.mark.parametrize(
+    "bootstrap", [_merge_bootstrap, _replace_bootstrap], ids=["merge_upsert", "replace_entities"]
+)
+def test_failed_bootstrap_leaves_no_table(spark, tmp_path, bootstrap):
+    """A bootstrap of a missing table whose job fails leaves no live
+    directory and no staging debris, so the next write bootstraps again."""
+    import os
+
+    day = dt.date(2024, 1, 1)
+    path = str(tmp_path / "tbl")
+    with pytest.raises(Exception, match="boom"):
+        bootstrap(_failing(_df(spark, [(1, day, 1.0), (2, day, 2.0)]), 2), path)
+    assert os.listdir(tmp_path) == []
+    bootstrap(_df(spark, [(1, day, 1.0)]), path)
+    assert [tuple(r) for r in spark.read.parquet(path).collect()] == [(1, day, 1.0)]
+
+
+def test_concurrent_bootstraps_one_winner(spark, tmp_path, monkeypatch):
+    """Two threads bootstrap one missing table and both finish their
+    staging writes before either swaps: one raises ConcurrentWriteError,
+    and the table holds exactly the winner's rows and sidecar."""
+    import os
+    import threading
+
+    from databricks_demo_feature_store_spark.sources import writers
+
+    path = str(tmp_path / "tbl")
+    barrier = threading.Barrier(2, timeout=60)
+    real_swap = writers._swap_dirs
+
+    def swap_after_barrier(live, staging, expected_generation=writers._UNCHECKED):
+        barrier.wait()
+        real_swap(live, staging, expected_generation)
+
+    monkeypatch.setattr(writers, "_swap_dirs", swap_after_barrier)
+    day = dt.date(2024, 1, 1)
+    outcome: dict = {}
+
+    def bootstrap(tag, k):
+        batch = _df(spark, [(k, day, float(k))])
+        try:
+            _merge_bootstrap(batch, path, registry={"name": tag})
+            outcome[tag] = "ok"
+        except writers.ConcurrentWriteError:
+            outcome[tag] = "conflict"
+        except Exception as exc:  # reported by the assertion below
+            outcome[tag] = repr(exc)
+
+    threads = [threading.Thread(target=bootstrap, args=a) for a in (("A", 1), ("B", 2))]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert sorted(outcome.values()) == ["conflict", "ok"], outcome
+    winner = next(t for t, o in outcome.items() if o == "ok")
+    k = {"A": 1, "B": 2}[winner]
+    assert [tuple(r) for r in spark.read.parquet(path).collect()] == [(k, day, float(k))]
+    assert writers.read_sidecar(path)["name"] == winner
+    assert os.listdir(tmp_path) == ["tbl"]
 
 
 def test_deleted_rows_stay_deleted_through_reads_and_rewrites(spark, manager):

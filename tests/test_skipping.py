@@ -386,10 +386,35 @@ def test_sidecar_rewrite_leaves_no_debris(spark, tmp_path):
     write_stats_sidecar(spark, path, ["id"])
     write_stats_sidecar(spark, path, ["id"])  # rewrite over an existing sidecar
     leftovers = [
-        d for d in os.listdir(path) if ".staging-" in d or d.endswith("__old")
+        d
+        for _root, dirs, _files in os.walk(path)
+        for d in dirs
+        if "staging" in d or d.endswith("__old")
     ]
     assert leftovers == []
     assert load_file_stats(spark, path).count() > 0
+
+
+def test_failed_sidecar_write_leaves_old_sidecar(spark, tmp_path):
+    """A sidecar write whose job fails leaves the old sidecars as they
+    were and no staging directory beside them."""
+    from databricks_demo_feature_store_spark.sources.skipping import (
+        STATS_DIR,
+        _promote_bloom,
+        load_file_stats,
+        write_stats_sidecar,
+    )
+
+    path = str(tmp_path / "tbl")
+    _write_clustered(spark, path)
+    before = sorted(map(tuple, write_stats_sidecar(spark, path, ["id"]).collect()))
+    failing = spark.range(2).select(
+        F.when(F.col("id") == 1, F.raise_error(F.lit("boom"))).alias("x")
+    )
+    with pytest.raises(Exception, match="boom"):
+        _promote_bloom(spark, path, failing)
+    assert os.listdir(os.path.join(path, STATS_DIR)) == ["data"]
+    assert sorted(map(tuple, load_file_stats(spark, path).collect())) == before
 
 
 def _bloom_setup(spark, tmp_path, n=2000, files=8):

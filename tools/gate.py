@@ -58,6 +58,14 @@ _WRITERS_SLOW = [
     "tests/test_index_store.py::test_partitioned_layout_merged_equals_rebuilt",
     "tests/test_featurestore.py::test_tiered_merge_matches_bruteforce",
 ]
+# the skipping sidecars are promoted by writers._stage
+_SKIPPING_SLOW = [
+    "tests/test_skipping.py::test_save_table_refreshes_bloom_and_stats_coexist",
+    "tests/test_skipping.py::test_harvest_string_and_partition_values",
+    "tests/test_skipping.py::test_incremental_bloom_refresh_equals_rebuild",
+    "tests/test_skipping.py::test_incremental_stats_refresh_equals_rebuild",
+    "tests/test_skipping.py::test_randomized_skipping_always_matches_full_scan",
+]
 # the runner dispatches functions/ and pipelines/ steps by name
 _PIPELINE_SLOW = [
     "tests/test_pipelines.py::test_pipeline_runs_steps_lazily_with_debug",
@@ -85,19 +93,13 @@ SLOW_GUARDS = {
         "tests/test_featurestore.py::test_refresh_join_view_equals_recompute",
         "tests/test_property_hist_quantile.py::test_quantile_from_hist_matches_python_replay",
     ],
-    _PKG + "sources/writers.py": _WRITERS_SLOW,
+    _PKG + "sources/writers.py": _WRITERS_SLOW + _SKIPPING_SLOW,
     # every staged write runs under the session's Hadoop configuration
     _PKG + "session.py": _WRITERS_SLOW,
     _PKG + "sources/deletion_vectors.py": _WRITERS_SLOW,
     _PKG + "sources/column_mapping.py": _WRITERS_SLOW,
     _PKG + "pipelines/incremental.py": _WRITERS_SLOW,
-    _PKG + "sources/skipping.py": [
-        "tests/test_skipping.py::test_save_table_refreshes_bloom_and_stats_coexist",
-        "tests/test_skipping.py::test_harvest_string_and_partition_values",
-        "tests/test_skipping.py::test_incremental_bloom_refresh_equals_rebuild",
-        "tests/test_skipping.py::test_incremental_stats_refresh_equals_rebuild",
-        "tests/test_skipping.py::test_randomized_skipping_always_matches_full_scan",
-    ],
+    _PKG + "sources/skipping.py": _SKIPPING_SLOW,
     _PKG + "sources/versioned.py": [
         "tests/test_versioned.py::test_restore_promotes_old_version_preserving_history",
         "tests/test_versioned.py::test_shallow_clone_zero_copy_and_independent_writes",
