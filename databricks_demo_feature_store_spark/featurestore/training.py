@@ -304,8 +304,10 @@ def _blocks_lost(jvm, rdd) -> bool:
     Asks the block manager master, as the checkpoint itself does."""
     if not rdd.isCheckpointed():
         return False
-    master = jvm.org.apache.spark.SparkEnv.get().blockManager().master()
-    block, rid = jvm.org.apache.spark.storage.RDDBlockId, rdd.id()
+    # one fully qualified lookup each: a package walk is one Py4J
+    # round trip, and a failed class load in the JVM, per name segment
+    master = getattr(jvm, "org.apache.spark.SparkEnv").get().blockManager().master()
+    block, rid = getattr(jvm, "org.apache.spark.storage.RDDBlockId"), rdd.id()
     return not all(master.contains(block(rid, i)) for i in range(rdd.getNumPartitions()))
 
 

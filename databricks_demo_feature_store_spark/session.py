@@ -47,13 +47,14 @@ def _drop_yarn_defaults(sc: SparkContext) -> None:
     names the keys and their sources; it writes to a file, since its
     130 KB as a Py4J string answer took about 45 ms more."""
     jvm = sc._jvm
+    for_name = getattr(jvm, "java.lang.Class").forName
     for name in _DEFAULT_RESOURCE_CLASSES:
-        jvm.java.lang.Class.forName(name)
+        for_name(name)
     conf = sc._jsc.hadoopConfiguration()
     with tempfile.NamedTemporaryFile("r", suffix=".json") as dump:
-        out = jvm.java.io.FileWriter(dump.name)
+        out = getattr(jvm, "java.io.FileWriter")(dump.name)
         try:
-            jvm.org.apache.hadoop.conf.Configuration.dumpConfiguration(conf, out)
+            getattr(jvm, "org.apache.hadoop.conf.Configuration").dumpConfiguration(conf, out)
         finally:
             out.close()
         props = json.load(dump)["properties"]

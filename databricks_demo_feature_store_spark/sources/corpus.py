@@ -37,9 +37,8 @@ def list_basename_collisions(
     to warn when hash-derived ids would collide across same-named files;
     callable directly as a pre-flight check. Listing cost = file count —
     the same metadata pass Spark's reader itself performs."""
-    jvm = spark.sparkContext._jvm
     conf = spark.sparkContext._jsc.hadoopConfiguration()
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    hpath = getattr(spark.sparkContext._jvm, "org.apache.hadoop.fs.Path")(path)
     fs = hpath.getFileSystem(conf)
     statuses = fs.globStatus(hpath)
     if statuses is None:

@@ -62,6 +62,7 @@ cold ones into the new version (:func:`merge_upsert`).
 from __future__ import annotations
 
 import contextlib
+import datetime as dt
 import json
 import os
 import shutil
@@ -69,8 +70,15 @@ import threading
 import uuid
 from collections.abc import Callable, Iterator, Sequence
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
-from pyspark.sql.types import DataType, StructType, TimestampType
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql.types import (
+    DataType,
+    DateType,
+    IntegerType,
+    LongType,
+    StructType,
+    TimestampType,
+)
 
 from databricks_demo_feature_store_spark.sources.catalog import HAS_DELTA
 
@@ -585,6 +593,100 @@ class _BelowHotTier(Exception):
         self.bound = bound
 
 
+_EPOCH = dt.date(1970, 1, 1)
+# Spark writes this footer key when it rebases dates and timestamps to
+# the hybrid Julian calendar: the raw values are then not the bound's
+_LEGACY_DATETIME = b"org.apache.spark.legacyDateTime"
+
+
+def _footer_codec(dtype: DataType):
+    """How a parquet footer's raw integer minimum of a ``dtype`` column
+    maps onto :func:`_to_bound`'s encoding: ``(scales, to_bound,
+    from_bound)``, where ``scales`` maps each exactly readable
+    ``(physical type, converted type)`` to its factor onto the bound's
+    number (epoch microseconds, days since the epoch, the integer), and
+    the two functions turn that number into the bound and back. None for
+    any other type."""
+    if isinstance(dtype, TimestampType):
+        return {("INT64", "TIMESTAMP_MICROS"): 1, ("INT64", "TIMESTAMP_MILLIS"): 1000}, int, int
+    if isinstance(dtype, DateType):
+        return (
+            {("INT32", "DATE"): 1},
+            lambda days: (_EPOCH + dt.timedelta(days=days)).isoformat(),
+            lambda bound: (dt.date.fromisoformat(bound) - _EPOCH).days,
+        )
+    if isinstance(dtype, (IntegerType, LongType)):
+        return {("INT32", "NONE"): 1, ("INT64", "NONE"): 1}, str, int
+    return None
+
+
+_UNREAD = object()
+
+
+def _footer_min(files: list[str], column: str, scales: dict):
+    """The lowest non-NULL ``column`` value in the footers of the parquet
+    ``files``, as the bound's number (None when every value is NULL), or
+    ``_UNREAD`` when a footer cannot tell it exactly: a row group with
+    non-NULL values but no min/max (INT96 timestamps carry none), a
+    column type outside ``scales``, or calendar-rebased values."""
+    import pyarrow.parquet as pq
+
+    low = None
+    for path in files:
+        md = pq.read_metadata(path)
+        if md.metadata and _LEGACY_DATETIME in md.metadata:
+            return _UNREAD
+        leaves = [md.schema.column(i) for i in range(md.num_columns)]
+        i = next((i for i, leaf in enumerate(leaves) if leaf.path == column), None)
+        if i is None:
+            return _UNREAD
+        scale = scales.get((leaves[i].physical_type, leaves[i].converted_type))
+        if scale is None:
+            return _UNREAD
+        for r in range(md.num_row_groups):
+            group = md.row_group(r)
+            st = group.column(i).statistics
+            if st is not None and st.has_min_max:
+                value = st.min_raw * scale
+                low = value if low is None else min(low, value)
+            elif not (st is not None and st.has_null_count and st.null_count == group.num_rows):
+                return _UNREAD
+    return low
+
+
+def _hot_tier_low(spark: SparkSession, files: list[str], schema: StructType, tier: dict):
+    """The lowest time in the newly written hot ``files`` when it is
+    below ``tier["hot_from"]``, as a :func:`_to_bound` value; else None.
+    Every trusted hot row has a time at or after ``hot_from`` or a NULL
+    one, so that minimum is below ``hot_from`` exactly when a batch row
+    is, and it is then the batch's lowest time. Read from the footers on
+    the driver; where they cannot tell it exactly (:func:`_footer_min`),
+    one ``min`` aggregation over ``files`` does."""
+    column = tier["column"]
+    dtype = schema[column].dataType
+    codec = _footer_codec(dtype)
+    if codec is not None:
+        scales, to_bound, from_bound = codec
+        low = _footer_min(files, column, scales)
+        if low is not _UNREAD:
+            try:
+                below = low is not None and low < from_bound(tier["hot_from"])
+                return to_bound(low) if below else None
+            except (OverflowError, ValueError):  # outside Python's date range
+                pass
+    c = F.col(column)
+    row = (
+        spark.read.schema(schema)
+        .parquet(*files)
+        .agg(
+            (F.min(c) < _from_bound(tier["hot_from"], dtype)).alias("below"),
+            F.min(_to_bound(c, dtype)).alias("low"),
+        )
+        .first()
+    )
+    return row["low"] if row["below"] else None
+
+
 def _merge_hot_tier(
     df: DataFrame,
     path: str,
@@ -596,25 +698,19 @@ def _merge_hot_tier(
     """Merge ``df`` into the hot files of the table at ``path`` (tier
     record ``pin["tier"]``): the new hot file is ``(hot ⟕anti df) ∪ df``,
     the cold files are hardlinked beside it, and the staging directory is
-    promoted under ``generation``. The batch's time bound is observed on
-    the batch branch of the same write job; a row below ``hot_from``
-    discards the staging directory and raises :class:`_BelowHotTier`."""
+    promoted under ``generation``. The batch's time bound is read from
+    the staged hot files' footers (:func:`_hot_tier_low`); a row below
+    ``hot_from`` discards the staging directory and raises
+    :class:`_BelowHotTier`."""
     spark = df.sparkSession
     tier = pin["tier"]
     schema = StructType.fromJson(pin["schema"])
-    c, dtype = F.col(tier["column"]), schema[tier["column"]].dataType
     if tier["hot"]:
         hot = spark.read.schema(schema).parquet(*[os.path.join(path, f) for f in tier["hot"]])
     else:
         hot = spark.createDataFrame([], schema)
-    obs = Observation(f"hot-tier-{uuid.uuid4().hex}")
-    batch = df.observe(
-        obs,
-        F.count_if(c < _from_bound(tier["hot_from"], dtype)).alias("below"),
-        F.min(_to_bound(c, dtype)).alias("low"),
-    )
     merged = hot.join(df.select(*keys), on=keys, how="left_anti").unionByName(
-        batch, allowMissingColumns=True
+        df, allowMissingColumns=True
     )
     # sized from the hot files' pinned bytes and the batch's estimate, so
     # Catalyst plans the merge once, in the write
@@ -628,13 +724,16 @@ def _merge_hot_tier(
     def fill(staging: str) -> None:
         # write first: the write's overwrite mode would remove the links
         _write(merged, staging, "parquet", "overwrite", None)
-        seen = obs.get
-        if seen["below"]:
-            raise _BelowHotTier(seen["low"])
+        local = staging.removeprefix("file:")
         new_hot = [name for name, _size in data_file_listing(staging)]
+        low = _hot_tier_low(
+            spark, [os.path.join(local, name) for name in new_hot], merged.schema, tier
+        )
+        if low is not None:
+            raise _BelowHotTier(low)
         for name, _size in pin["files"]:
             if name not in tier["hot"]:
-                _move_file(live, name, staging.removeprefix("file:"), name, link=True)
+                _move_file(live, name, local, name, link=True)
         _write_sidecar(staging, registry, merged.schema, {**tier, "hot": new_hot})
 
     _stage(path, fill, generation)
@@ -822,9 +921,11 @@ def merge_upsert(
     the hot tier: the new hot file is ``(hot ⟕anti df) ∪ df``, read from
     the hot files with the pinned schema, and the cold files are
     hardlinked into the staging directory. The batch's lowest ``t`` is
-    observed on the batch branch of that write job; if a batch row is
-    older than ``hot_from``, the staging directory is discarded and the
-    whole table is rewritten, re-split at that time. The whole table is
+    read from the staged hot files' parquet footers after the write (one
+    ``min`` aggregation over them when a footer has no exact minimum,
+    e.g. INT96 timestamps); if a batch row is older than ``hot_from``,
+    the staging directory is discarded and the whole table is
+    rewritten, re-split at that time. The whole table is
     also rewritten, split at the batch's lowest ``t`` (one aggregation
     job over the batch), when there is no trusted tier record (the first
     merge after an overwrite, or an outside write), when deletion vectors

@@ -138,11 +138,11 @@ def _input_file_size(media: DataFrame) -> int | None:
         if not files:
             return None
         spark = media.sparkSession
-        jvm = spark.sparkContext._jvm
+        path_class = getattr(spark.sparkContext._jvm, "org.apache.hadoop.fs.Path")
         conf = spark.sparkContext._jsc.hadoopConfiguration()
         total = 0
         for f in files:
-            p = jvm.org.apache.hadoop.fs.Path(f)
+            p = path_class(f)
             total += p.getFileSystem(conf).getFileStatus(p).getLen()
         return total
     except Exception:

@@ -1725,14 +1725,38 @@ def _as_model(manager, name) -> dict:
     return {(r[0], r[1]): r[2] for r in rows}
 
 
-def _tiered_store(spark, manager, tmp_path):
+# the first of each month in both time-key types a tier test runs on
+MONTHS = {"date": MONTH, "timestamp": [dt.datetime(2024, m, 1, 6, 30) for m in range(1, 13)]}
+
+
+def _tiered_schema(time_type: str) -> str:
+    return f"pk_customer int, tpk_release_dt {time_type}, f1 double"
+
+
+def _tiered_store(spark, manager, tmp_path, time_type="date"):
     """60 customers × ten months, then the first merge (month 10 restated,
-    month 11 new), which splits the table at month 10."""
-    history = [(k, MONTH[m], float(k * 100 + m)) for k in range(60) for m in range(10)]
-    manager.save(_parquet_frame(spark, tmp_path, history), SPEC, mode="overwrite")
-    batch = [(k, MONTH[9], -1.0) for k in range(5)] + [(k, MONTH[10], 1.0) for k in range(5)]
-    manager.save(_parquet_frame(spark, tmp_path, batch), SPEC)
+    month 11 new), which splits the table at month 10. ``time_type`` is
+    the time key's SQL type (``MONTHS``)."""
+    month, schema = MONTHS[time_type], _tiered_schema(time_type)
+    history = [(k, month[m], float(k * 100 + m)) for k in range(60) for m in range(10)]
+    manager.save(_parquet_frame(spark, tmp_path, history, schema), SPEC, mode="overwrite")
+    batch = [(k, month[9], -1.0) for k in range(5)] + [(k, month[10], 1.0) for k in range(5)]
+    manager.save(_parquet_frame(spark, tmp_path, batch, schema), SPEC)
     return _upsert({(k, t): v for k, t, v in history}, batch)
+
+
+def _tier_bound(spark, value, time_type):
+    """``value`` as a tier record stores a bound, computed by Spark."""
+    from databricks_demo_feature_store_spark.sources.writers import _to_bound
+
+    frame = spark.createDataFrame([(value,)], f"t {time_type}")
+    return frame.select(_to_bound(F.col("t"), frame.schema["t"].dataType)).first()[0]
+
+
+def _inodes(path, names):
+    import os
+
+    return {n: (os.stat(f"{path}/{n}").st_ino, os.stat(f"{path}/{n}").st_mtime_ns) for n in names}
 
 
 def test_tiered_merge_rewrites_only_the_hot_file(spark, manager, tmp_path):
@@ -1742,7 +1766,6 @@ def test_tiered_merge_rewrites_only_the_hot_file(spark, manager, tmp_path):
     inode and mtime, and the merge launches no more jobs than the
     whole-table merge of the same batch into an untiered table."""
     import dataclasses
-    import os
     import time
 
     model = _tiered_store(spark, manager, tmp_path)
@@ -1752,10 +1775,7 @@ def test_tiered_merge_rewrites_only_the_hot_file(spark, manager, tmp_path):
     assert max(_times(spark, path, cold)) < MONTH[9] <= min(_times(spark, path, hot))
     assert _as_model(manager, SPEC.name) == model
 
-    def stat(names):
-        return {n: (os.stat(f"{path}/{n}").st_ino, os.stat(f"{path}/{n}").st_mtime_ns) for n in names}
-
-    cold_before = stat(cold)
+    cold_before = _inodes(path, cold)
     batch = [(k, MONTH[9], -2.0) for k in range(5, 10)] + [(k, MONTH[11], 2.0) for k in range(5)]
     frame = _parquet_frame(spark, tmp_path, batch)
     frame.columns
@@ -1765,7 +1785,7 @@ def test_tiered_merge_rewrites_only_the_hot_file(spark, manager, tmp_path):
     tiered_jobs = len(_jobs(spark) - before)
     new_tier, new_cold, new_hot = _tiers(manager, SPEC.name)
     assert new_tier["hot_from"] == tier["hot_from"]
-    assert stat(new_cold) == cold_before
+    assert _inodes(path, new_cold) == cold_before
     assert len(new_hot) == 1 and new_hot != hot
     assert _as_model(manager, SPEC.name) == _upsert(model, batch)
 
@@ -1781,18 +1801,127 @@ def test_tiered_merge_rewrites_only_the_hot_file(spark, manager, tmp_path):
     assert tiered_jobs <= len(_jobs(spark) - before)
 
 
-def test_tiered_merge_below_hot_from_resplits(spark, manager, tmp_path):
+@pytest.mark.parametrize("time_type", ["date", "timestamp"])
+def test_tiered_merge_below_hot_from_resplits(spark, manager, tmp_path, time_type):
     """A batch row older than ``hot_from`` could match a cold row: the
-    merge falls back to the whole table and re-splits at that row."""
-    model = _tiered_store(spark, manager, tmp_path)
+    merge falls back to the whole table and re-splits at that row, whose
+    bound (read from the staged footers) is exactly Spark's own encoding
+    of it: the date's string form, a timestamp's epoch microseconds."""
+    month = MONTHS[time_type]
+    model = _tiered_store(spark, manager, tmp_path, time_type)
     path = manager.path(SPEC.name)
     _tier, cold, _hot = _tiers(manager, SPEC.name)
-    batch = [(3, MONTH[4], -5.0), (70, MONTH[10], 7.0)]
-    manager.save(_parquet_frame(spark, tmp_path, batch), SPEC)
+    batch = [(3, month[4], -5.0), (70, month[10], 7.0)]
+    manager.save(_parquet_frame(spark, tmp_path, batch, _tiered_schema(time_type)), SPEC)
     tier, new_cold, new_hot = _tiers(manager, SPEC.name)
+    assert tier["hot_from"] == _tier_bound(spark, month[4], time_type)
     assert new_cold and not new_cold & cold
-    assert max(_times(spark, path, new_cold)) < MONTH[4] <= min(_times(spark, path, new_hot))
+    assert max(_times(spark, path, new_cold)) < month[4] <= min(_times(spark, path, new_hot))
     assert _as_model(manager, SPEC.name) == _upsert(model, batch)
+
+
+@pytest.mark.parametrize("time_type", ["date", "timestamp"])
+def test_steady_hot_tier_merge_observes_nothing(spark, manager, tmp_path, monkeypatch, time_type):
+    """A merge at or after ``hot_from`` takes its time bound from the
+    staged hot file's footer: it constructs no ``Observation``, its write
+    plan has no ``CollectMetrics`` node, and it runs no job beyond the
+    key broadcast and the write."""
+    import time
+
+    from pyspark.sql import Observation
+
+    from databricks_demo_feature_store_spark.sources import writers
+
+    month = MONTHS[time_type]
+    model = _tiered_store(spark, manager, tmp_path, time_type)
+    path = manager.path(SPEC.name)
+    tier, cold, _hot = _tiers(manager, SPEC.name)
+    cold_before = _inodes(path, cold)
+    batch = [(k, month[9], -2.0) for k in range(5, 10)] + [(k, month[11], 2.0) for k in range(5)]
+    frame = _parquet_frame(spark, tmp_path, batch, _tiered_schema(time_type))
+    frame.columns
+
+    observations, plans = [], []
+    real_init, real_write = Observation.__init__, writers._write
+
+    def counting_init(self, *args, **kwargs):
+        observations.append(args)
+        real_init(self, *args, **kwargs)
+
+    def planning_write(df, *args):
+        plans.append(df._jdf.queryExecution().analyzed().toString())
+        real_write(df, *args)
+
+    monkeypatch.setattr(Observation, "__init__", counting_init)
+    monkeypatch.setattr(writers, "_write", planning_write)
+    before = _jobs(spark)
+    manager.save(frame, SPEC)
+    time.sleep(0.5)  # job events reach the status tracker asynchronously
+    jobs = len(_jobs(spark) - before)
+
+    assert observations == []
+    assert len(plans) == 1 and "CollectMetrics" not in plans[0]
+    assert jobs <= 2
+    new_tier, new_cold, _new_hot = _tiers(manager, SPEC.name)
+    assert new_tier["hot_from"] == tier["hot_from"]
+    assert _inodes(path, new_cold) == cold_before
+    assert _as_model(manager, SPEC.name) == _upsert(model, batch)
+
+
+def test_tiered_merge_int96_times_fall_back_to_one_aggregation(spark, manager, tmp_path):
+    """INT96 timestamps carry no footer min/max, so the staged files'
+    lowest time comes from one aggregation over them: a merge at or after
+    ``hot_from`` still stays on the hot tier, and a batch row below it
+    still re-splits the table there."""
+    import pyarrow.parquet as pq
+
+    key = "spark.sql.parquet.outputTimestampType"
+    month, schema = MONTHS["timestamp"], _tiered_schema("timestamp")
+    previous = spark.conf.get(key)
+    spark.conf.set(key, "INT96")
+    try:
+        model = _tiered_store(spark, manager, tmp_path, "timestamp")
+        path = manager.path(SPEC.name)
+        tier, cold, hot = _tiers(manager, SPEC.name)
+        md = pq.read_metadata(f"{path}/{next(iter(hot))}")
+        i = next(i for i in range(md.num_columns) if md.schema.column(i).path == "tpk_release_dt")
+        assert md.schema.column(i).physical_type == "INT96"
+        stats = md.row_group(0).column(i).statistics
+        assert stats is None or not stats.has_min_max
+
+        cold_before = _inodes(path, cold)
+        steady = [(k, month[10], 4.0) for k in range(20, 25)]
+        manager.save(_parquet_frame(spark, tmp_path, steady, schema), SPEC)
+        model = _upsert(model, steady)
+        new_tier, new_cold, _new_hot = _tiers(manager, SPEC.name)
+        assert new_tier["hot_from"] == tier["hot_from"]
+        assert _inodes(path, new_cold) == cold_before
+
+        below = [(40, month[6], -6.0), (41, month[11], 6.0)]
+        manager.save(_parquet_frame(spark, tmp_path, below, schema), SPEC)
+        new_tier, new_cold, _new_hot = _tiers(manager, SPEC.name)
+        assert new_tier["hot_from"] == _tier_bound(spark, month[6], "timestamp")
+        assert new_cold and not new_cold & cold
+        assert _as_model(manager, SPEC.name) == _upsert(model, below)
+    finally:
+        spark.conf.set(key, previous)
+
+
+@pytest.mark.parametrize("batch", ["empty", "null_times"])
+def test_tiered_merge_without_batch_times_stays_hot(spark, manager, tmp_path, batch):
+    """A batch with no time below ``hot_from`` because it has no time at
+    all, being empty or NULL-timed, merges into the hot tier alone and
+    keeps the tier record."""
+    model = _tiered_store(spark, manager, tmp_path)
+    path = manager.path(SPEC.name)
+    tier, cold, _hot = _tiers(manager, SPEC.name)
+    cold_before = _inodes(path, cold)
+    rows = [] if batch == "empty" else [(k, None, 8.0) for k in range(3)]
+    manager.save(_parquet_frame(spark, tmp_path, rows), SPEC)
+    new_tier, new_cold, _new_hot = _tiers(manager, SPEC.name)
+    assert new_tier["hot_from"] == tier["hot_from"]
+    assert _inodes(path, new_cold) == cold_before
+    assert _as_model(manager, SPEC.name) == _upsert(model, rows)
 
 
 @pytest.mark.parametrize("outside", ["append", "delete", "new_column"])

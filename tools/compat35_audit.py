@@ -72,7 +72,6 @@ PYSPARK_35_FUNCTIONS_VERIFIED = {
     "percentile_approx", "bit_or",  # bit_or 3.5.0
     "hll_sketch_agg", "hll_sketch_estimate", "hll_union_agg",  # 3.5.0
     "grouping_id", "call_function",  # call_function 3.5.0
-    "count_if",  # added 3.5.0
     # windows / ordering
     "lag", "lead", "rank", "row_number",
     # arrays / higher-order
@@ -114,7 +113,6 @@ PYSPARK_35_METHODS_VERIFIED = {
     "dropna", "exceptAll", "filter", "first", "groupBy", "inputFiles",
     "isEmpty",  # added 3.3.0
     "join", "limit", "localCheckpoint", "mapInPandas",  # mapInPandas 3.0.0
-    "observe",  # added 3.3.0
     "orderBy", "persist", "repartition", "repartitionByRange", "replace",
     "rollup", "select", "selectExpr", "sortWithinPartitions", "stat",
     "transform",  # DataFrame.transform 3.0.0
@@ -137,6 +135,9 @@ PYSPARK_35_METHODS_VERIFIED = {
     # SparkSession / catalog-ish
     "createDataFrame", "range", "read", "sql", "table", "exists",
     "conf",  # JVM SessionState.conf() through py4j; SparkSession.conf is a 2.0 property
+    # JVM LogicalRDD.rdd() and RDD.id() through py4j; RDD.id is 0.7,
+    # DataFrame.rdd a 1.3 property
+    "id", "rdd",
     # Window
     "partitionBy", "rowsBetween",
     "rangeBetween",  # Window/WindowSpec.rangeBetween, 2.1 (hand-verified 3.5 docs)
