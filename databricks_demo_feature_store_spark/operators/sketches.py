@@ -1,11 +1,10 @@
 """Approximate/sketch aggregates: HLL distinct counts, approximate
-quantiles, frequent items.
+quantiles, frequent items, Bloom filters and count-min sketches.
 
 At 100 TB exact NDV / exact percentiles need a full shuffle of the key
-set; sketches are the standard answer: fixed-size state, map-side partial
-aggregation, and (for HLL) MERGEABLE registers — a day's sketch can be
-stored and unioned with other days without rescanning. All built-ins run
-JVM-side (DataSketches HLL, KLL-style quantile digests); no Python.
+set; sketches are the standard answer: fixed-size state and map-side
+partial aggregation. All built-ins run JVM-side (HLL++, quantile
+digests); no Python.
 
 Accuracy is engine-specific (approximate by definition), so raw sketch
 values can't be hash-compared across engines. Two verification layers
@@ -23,53 +22,6 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, functions as F
 
 from databricks_demo_feature_store_spark.functions.rounding import dround
-
-
-def sketch_profile(
-    df: DataFrame,
-    columns: Sequence[str],
-    quantiles: Sequence[float] = (0.25, 0.5, 0.75),
-    rsd: float = 0.02,
-    accuracy: int = 2_000,
-) -> DataFrame:
-    """One row per column: approximate NDV + approximate quantiles.
-
-    ``approx_count_distinct`` (HLL++, relative error ``rsd``) and
-    ``percentile_approx`` — both single-pass, fixed-memory, partial-agg
-    friendly. One global aggregate (a few KB of state per column), then
-    an explode to rows — no second scan.
-
-    ``accuracy`` is the percentile sketch's rank-error knob (error ≈
-    1/accuracy): 2 000 → 0.05 % rank error, far inside this profile's
-    advertised bounds, at ~5× less per-partition summary state to build
-    and merge than Spark's 10 000 default — the merge step is what shows
-    up at wide parallelism.
-    """
-    aggs = []
-    for c in columns:
-        aggs.append(F.approx_count_distinct(c, rsd).alias(f"__ndv_{c}"))
-        aggs.append(
-            F.percentile_approx(
-                F.col(c).cast("double"), list(quantiles), accuracy
-            ).alias(f"__q_{c}")
-        )
-        aggs.append(F.count(F.col(c)).alias(f"__n_{c}"))
-    one = df.agg(*aggs)
-    per_col = F.array(
-        *[
-            F.struct(
-                F.lit(c).alias("column"),
-                F.col(f"__ndv_{c}").alias("approx_ndv"),
-                F.col(f"__n_{c}").alias("n_rows"),
-                *[
-                    dround(F.col(f"__q_{c}")[i], 6).alias(f"q{int(q * 100):02d}")
-                    for i, q in enumerate(quantiles)
-                ],
-            )
-            for c in columns
-        ]
-    )
-    return one.select(F.explode(per_col).alias("s")).select("s.*")
 
 
 def sketch_profile_audit(
@@ -94,8 +46,7 @@ def sketch_profile_audit(
     value-hash-checkable (oracle: exact counts + all-TRUE verdicts).
 
     Two scans by construction (the audit needs the sketch output to count
-    ranks against) — the production profile is :func:`sketch_profile`,
-    single-pass. The second scan's per-column rank counts are plain
+    ranks against). The second scan's per-column rank counts are plain
     conditional aggregates against the broadcast 1-row sketch result.
     """
     tol = float(ndv_tolerance if ndv_tolerance is not None else 4 * rsd)
@@ -168,25 +119,6 @@ def sketch_profile_audit(
         ]
     )
     return ranks.select(F.explode(per_col).alias("s")).select("s.*")
-
-
-def hll_sketch(df: DataFrame, key_cols: Sequence[str], value_col: str) -> DataFrame:
-    """Per-group DataSketches HLL sketch of ``value_col`` — the MERGEABLE
-    form: store the binary sketch per partition/day, union later with
-    :func:`hll_merge` instead of rescanning history."""
-    return df.groupBy(*key_cols).agg(
-        F.hll_sketch_agg(F.col(value_col).cast("string")).alias("hll")
-    )
-
-
-def hll_merge(sketches: DataFrame, key_cols: Sequence[str]) -> DataFrame:
-    """Union pre-computed HLL sketches (e.g. daily) up to ``key_cols`` and
-    estimate the merged distinct count."""
-    return (
-        sketches.groupBy(*key_cols)
-        .agg(F.hll_union_agg("hll").alias("hll"))
-        .select(*key_cols, F.hll_sketch_estimate("hll").alias("approx_ndv"))
-    )
 
 
 def frequent_items(

@@ -23,7 +23,7 @@ the oracle-gated verification transfers.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from databricks_demo_feature_store_spark.operators import month_spine
 from databricks_demo_feature_store_spark.pipelines.payment_behavior_features import (
@@ -378,28 +378,3 @@ def holdings_features_from_productos(productos: DataFrame) -> DataFrame:
         F.col("total_productos").cast("int").alias("products_cnt"),
     )
     return HOLDINGS_PRODUCTOS_PIPELINE.run(base)
-
-
-def run_reference_stack(
-    spark: SparkSession,
-    tables: dict[str, DataFrame],
-    start_date: str,
-    end_date: str,
-) -> dict[str, DataFrame]:
-    """Run every adapter over a dict of reference-native tables
-    (``clientes`` / ``pagos`` / ``transacciones`` / ``buro_credito`` /
-    ``productos``) — the one-call switch-over for a reference deployment,
-    now covering all FIVE feature notebooks."""
-    return {
-        "fs_cus_demographic": demographic_features_from_clientes(
-            tables["clientes"], start_date, end_date
-        ),
-        "fs_cus_payment_behavior": payment_features_from_pagos(tables["pagos"]),
-        "fs_cus_transactions": transaction_features_from_transacciones(
-            tables["transacciones"]
-        ),
-        "fs_cus_credit_risk": credit_features_from_buro(tables["buro_credito"]),
-        "fs_cus_holding_products": holdings_features_from_productos(
-            tables["productos"]
-        ),
-    }

@@ -23,7 +23,7 @@ from __future__ import annotations
 from collections.abc import Callable
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from databricks_demo_feature_store_spark.operators import (
     aggregation_operations,
@@ -35,7 +35,6 @@ from databricks_demo_feature_store_spark.operators import (
     point_in_time_join,
     rolling_numeric_stats,
     rolling_categorical_stats,
-    relative_strength_index,
     generate_lags,
     lag_diff_roc,
     select_distinct,
@@ -51,7 +50,7 @@ from databricks_demo_feature_store_spark.functions import (
 )
 from databricks_demo_feature_store_spark.functions.strings import normalize_string_col
 from databricks_demo_feature_store_spark.functions.quality import standardize_na_values
-from databricks_demo_feature_store_spark.functions.rounding import dround, oracle_dround
+from databricks_demo_feature_store_spark.functions.rounding import oracle_dround
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"

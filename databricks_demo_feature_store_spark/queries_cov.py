@@ -11,7 +11,6 @@ rounded outputs — see ``queries.py`` module docstring).
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -4636,8 +4635,8 @@ def q_row_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     pseudonymize through sha2-256 (equality preserved), segments keep
     only their last 4 characters, nation keys redact to a constant,
     balances nullify with their own type. Pure projection+filter, zero
-    shuffles, zero UDFs; the exempt-reader plan (raw passthrough) and
-    the coverage audit are pinned in tests/test_governance.py."""
+    shuffles, zero UDFs; the exempt-reader plan (raw passthrough) is
+    pinned in tests/test_governance.py."""
     from databricks_demo_feature_store_spark.sources.governance import (
         ColumnMask,
         ReadContext,

@@ -33,7 +33,6 @@ from databricks_demo_feature_store_spark.textops.dedup import (
     minhash_dedup_pairs,
     minhash_signatures,
     ngram_jaccard_pairs,
-    simhash_col,
 )
 from databricks_demo_feature_store_spark.textops.multimodal import (
     decode_features,
@@ -61,7 +60,7 @@ _O_TOKS = r"""
     )
 """
 
-# distinct word 3-shingles of single-space-normalized text (shingles_col)
+# distinct word 3-shingles of single-space-normalized text (with_shingle_hashes)
 _O_SHINGLES = r"""
     normed AS (
       SELECT doc_id,
@@ -440,12 +439,6 @@ def q_ext_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact-ANN baseline (JVM-side zip_with/aggregate dot products)."""
     emb = load(spark, sf_dir, "embeddings")
     return brute_force_topk(emb, emb.filter(F.col("vec_id") < 3), k=5)
-
-
-_O_BUCKET = (
-    "array_to_string(list_transform({v}[1:8], "
-    "x -> CASE WHEN x >= 0 THEN '1' ELSE '0' END), '')"
-)
 
 
 def _o_plane_bucket(v: str, planes: list[list[float]]) -> str:
@@ -1982,8 +1975,6 @@ def q_ext_corpus_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-match the original — proving the ingestion source preserves
     ids, text bytes and metadata exactly."""
     import os
-    import shutil
-    import tempfile
 
     from databricks_demo_feature_store_spark.sources.corpus import read_corpus
 

@@ -141,7 +141,6 @@ def q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 import os  # noqa: E402
-import tempfile  # noqa: E402
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -588,8 +587,6 @@ def q_stream_feature_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts maintained by the streaming engine and MERGE-upserted into a
     FeatureStoreManager table via checkpointed foreachBatch; the stored
     table must equal the batch GROUP BY exactly."""
-    import shutil
-    import tempfile
 
     from databricks_demo_feature_store_spark.featurestore.manager import (
         FeatureStoreManager,
@@ -829,8 +826,6 @@ def q_pipeline_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     and (c) the entity-scoped replace writes exactly the affected rows.
     """
     import os
-    import shutil
-    import tempfile
 
     from databricks_demo_feature_store_spark.pipelines.customer_features import (
         CUSTOMER_TX_PIPELINE,
@@ -1482,7 +1477,6 @@ def q_stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-corpus band join, and appends only novel documents. The oracle
     replays content hashing, both MinHash chains, the witness cap, and
     the final union in SQL."""
-    import shutil
 
     from databricks_demo_feature_store_spark.queries import load
     from databricks_demo_feature_store_spark.streaming.ops import (

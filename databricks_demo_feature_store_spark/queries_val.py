@@ -155,9 +155,6 @@ def q_val_timetravel_crosscheck(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet time travel (the reference does this with Delta VERSION AS OF,
     monitor.py:57-71): v0 = orders through 1996, v1 = all orders; new
     months fail the 5% month-count drift gate, settled months pass."""
-    import os
-    import shutil
-    import tempfile
 
     from databricks_demo_feature_store_spark.sources.versioned import (
         VersionedTable,

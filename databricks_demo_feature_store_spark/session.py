@@ -118,7 +118,8 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.legacy.timeParserPolicy", "CORRECTED")
-        # saveAsTable targets (bucketed tables) land in /tmp, not the cwd
+        # the catalog's CREATE DATABASE directories land in /tmp, not the cwd
+        # (its EXTERNAL tables keep their layer paths)
         .config(
             "spark.sql.warehouse.dir",
             os.environ.get(

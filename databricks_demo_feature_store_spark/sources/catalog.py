@@ -76,13 +76,6 @@ LAYERS = ("source", "ingestion", "preprocessing", "feature")
 DEFAULT_FORMAT = "delta" if HAS_DELTA else "parquet"
 
 
-@dataclass(frozen=True)
-class DatasetRef:
-    name: str
-    layer: str
-    fmt: str = DEFAULT_FORMAT
-
-
 @dataclass
 class Catalog:
     """Resolves (dataset, layer) → storage path and reads/writes through it.

@@ -47,7 +47,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window as W, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 # defaults mirror dummy_data_generation.py:29-31
 TOTAL_CUSTOMERS = 10_000

@@ -28,8 +28,7 @@ an exempt reader's plan simply never contains the mask expression.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -145,31 +144,3 @@ def apply_policies(
         )
     return out
 
-
-@dataclass
-class PolicyRegistry:
-    """In-session registry mapping table name -> :class:`TablePolicy`,
-    the twin of the metadata-sidecar TBLPROPERTIES registry in
-    ``featurestore/manager.py`` for governance rules."""
-
-    _policies: dict[str, TablePolicy] = field(default_factory=dict)
-
-    def set_policy(self, table: str, policy: TablePolicy) -> None:
-        self._policies[table] = policy
-
-    def read(
-        self, df: DataFrame, table: str, context: ReadContext
-    ) -> DataFrame:
-        policy = self._policies.get(table)
-        if policy is None:
-            return df
-        return apply_policies(df, policy, context)
-
-
-def audit_policy_coverage(
-    policy: TablePolicy, pii_columns: Sequence[str]
-) -> list[str]:
-    """Return the declared-PII columns NOT covered by any mask — the
-    governance gap list a deployment check should assert empty."""
-    masked = {m.column for m in policy.column_masks}
-    return [c for c in pii_columns if c not in masked]

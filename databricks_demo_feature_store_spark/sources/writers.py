@@ -69,6 +69,7 @@ import shutil
 import threading
 import uuid
 from collections.abc import Callable, Iterator, Sequence
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
@@ -1056,9 +1057,6 @@ def compact(
         sized=not target_partitions,
     )
     _refresh_stats(spark, path, fmt, stats_columns, bloom_columns)
-
-
-from dataclasses import dataclass  # noqa: E402
 
 
 @dataclass(frozen=True)

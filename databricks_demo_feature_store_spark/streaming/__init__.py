@@ -6,7 +6,6 @@ from databricks_demo_feature_store_spark.streaming.ops import (
     hourly_counts,
     sessionize_stream,
     run_available_now,
-    stream_to_sink,
     stream_features_to_store,
     dedup_stream,
     interval_join_stream,
@@ -22,7 +21,6 @@ __all__ = [
     "hourly_counts",
     "sessionize_stream",
     "run_available_now",
-    "stream_to_sink",
     "stream_features_to_store",
     "dedup_stream",
     "interval_join_stream",

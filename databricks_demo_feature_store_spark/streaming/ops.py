@@ -283,24 +283,6 @@ def run_available_now(result: DataFrame, output_mode: str = "complete") -> DataF
     return spark.table(name)
 
 
-def stream_to_sink(
-    result: DataFrame,
-    path: str,
-    checkpoint: str,
-    output_mode: str = "append",
-    fmt: str = "parquet",
-):
-    """Continuous sink: exactly-once parquet/delta append with checkpoint.
-    Returns the StreamingQuery (caller owns its lifecycle)."""
-    return (
-        result.writeStream.format(fmt)
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode(output_mode)
-        .start()
-    )
-
-
 def drain_batches(stream: DataFrame, checkpoint: str, fold, after_batch_hook=None):
     """Run ``fold(batch_df, batch_id)`` on every non-empty micro-batch of
     ``stream`` (foreachBatch — the streaming↔batch bridge, so the batch
@@ -397,9 +379,9 @@ def dedup_stream(
     evicts it once the event-time watermark passes — the only dedup shape
     that survives an unbounded stream (plain ``dropDuplicates`` grows
     state forever). First row per key is emitted immediately; later
-    duplicates inside the watermark horizon are dropped. This is the
-    streaming twin of ``textops.dedup.exact_dedup`` for ingestion-time
-    dedup (at-least-once sources deliver repeats by design).
+    duplicates inside the watermark horizon are dropped, the
+    ingestion-time dedup that at-least-once sources need (they deliver
+    repeats by design).
     """
     return stream.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
         list(keys)

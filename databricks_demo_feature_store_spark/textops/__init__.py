@@ -2,24 +2,20 @@
 multimodal plumbing."""
 
 from databricks_demo_feature_store_spark.textops.analysis import (
-    text_profile,
     lang_id_col,
     quality_score_col,
     token_count_col,
     fingerprint_col,
 )
 from databricks_demo_feature_store_spark.textops.dedup import (
-    exact_dedup,
     duplicate_groups,
     ngram_jaccard_pairs,
     minhash_signatures,
     minhash_lsh_candidates,
     minhash_dedup_pairs,
-    simhash_col,
     simhash_near_dup_pairs,
     portable_hash_col,
     portable_hash64_col,
-    shingles_col,
 )
 from databricks_demo_feature_store_spark.textops.similarity import (
     brute_force_topk,
@@ -30,18 +26,15 @@ from databricks_demo_feature_store_spark.textops.similarity import (
 )
 from databricks_demo_feature_store_spark.textops.multimodal import (
     decode_features,
-    media_repartition,
     synthesize_media_from_documents,
 )
 
 __all__ = [
-    "text_profile", "lang_id_col", "quality_score_col", "token_count_col",
-    "fingerprint_col",
-    "exact_dedup", "duplicate_groups", "ngram_jaccard_pairs",
+    "lang_id_col", "quality_score_col", "token_count_col", "fingerprint_col",
+    "duplicate_groups", "ngram_jaccard_pairs",
     "minhash_signatures", "minhash_lsh_candidates", "minhash_dedup_pairs",
-    "simhash_col", "simhash_near_dup_pairs", "portable_hash_col",
-    "portable_hash64_col", "shingles_col",
+    "simhash_near_dup_pairs", "portable_hash_col", "portable_hash64_col",
     "brute_force_topk", "lsh_topk", "embedding_near_dup_pairs", "cosine_col",
     "sign_bucket_col",
-    "decode_features", "media_repartition", "synthesize_media_from_documents",
+    "decode_features", "synthesize_media_from_documents",
 ]

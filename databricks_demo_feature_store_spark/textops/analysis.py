@@ -110,55 +110,6 @@ def fingerprint_col(text: Column) -> Column:
     return F.md5(normalized)
 
 
-def text_profile(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach the full text-analysis profile.
-
-    The token array is staged in its own projection and every signal is
-    derived from the staged column — inlining ``tokens_col`` into all
-    eight signals re-ran the split per signal (measured ~7× slower at
-    sf0.1). Signal semantics are identical to the individual ``*_col``
-    functions (which stay single-expression for SQL-oracle parity).
-    """
-    t = F.col(text_col)
-    staged = df.select("*", tokens_col(t).alias("__toks"))
-    toks = F.col("__toks")
-    ntok = F.size(toks)
-
-    stop_hits = F.size(F.filter(toks, lambda x: x.isin(*LANG_MARKERS["en"])))
-    stop_ratio = F.when(ntok > 0, dround(stop_hits / ntok, 6))
-    punct = punct_ratio_col(t)
-
-    length_score = F.least(ntok.cast("double") / F.lit(200.0), F.lit(1.0))
-    punct_score = F.greatest(
-        F.lit(0.0), F.lit(1.0) - F.coalesce(punct, F.lit(0.0)) * 4.0
-    )
-    stop_score = F.least(F.coalesce(stop_ratio, F.lit(0.0)) * 5.0, F.lit(1.0))
-    quality = dround(0.4 * length_score + 0.3 * punct_score + 0.3 * stop_score, 6)
-
-    scores = {
-        lang: F.size(F.array_intersect(toks, F.array(*[F.lit(m) for m in markers])))
-        for lang, markers in LANG_MARKERS.items()
-    }
-    best = F.greatest(*scores.values())
-    lang_pred = F.when(t.rlike(CJK_PATTERN), F.lit("zh")).when(
-        best <= 0, F.lit("und")
-    )
-    for lang in LANG_MARKERS:
-        lang_pred = lang_pred.when(scores[lang] == best, F.lit(lang))
-
-    return staged.select(
-        "*",
-        ntok.alias("n_tokens"),
-        bpe_ish_token_count_col(t).alias("n_pieces"),
-        F.length(t).alias("n_chars_utf8"),
-        punct.alias("punct_ratio"),
-        stop_ratio.alias("stopword_ratio"),
-        quality.alias("quality_score"),
-        lang_pred.alias("lang_pred"),
-        fingerprint_col(t).alias("fingerprint"),
-    ).drop("__toks")
-
-
 def word_ngrams_col(toks: Column, n: int) -> Column:
     """All (non-distinct) word n-grams of a token array; empty when the
     doc has fewer than ``n`` tokens."""

@@ -59,23 +59,6 @@ def minhash_component_col(base_hash: Column, a: int, b: int) -> Column:
     return (F.lit(a) * (base_hash % MINHASH_P) + F.lit(b)) % MINHASH_P
 
 
-def shingles_col(text: Column, k: int = 3) -> Column:
-    """Distinct word k-shingles of normalized text.
-
-    ``transform`` over a token-index sequence keeps this a pure column
-    expression (no explode needed until the caller wants one).
-
-    NOTE: as a single Column expression the token split is inlined into
-    every per-shingle slice (O(n²) re-splitting per row) — DataFrame
-    call sites should go through :func:`with_shingle_hashes`, which
-    stages tokens → shingles → hashes in separate projections so each
-    is materialized once (measured ~5× on the corpus scan).
-    """
-    norm = F.regexp_replace(F.trim(F.lower(text)), r"\s+", " ")
-    toks = F.split(norm, " ")
-    return _shingles_from_tokens(toks, k)
-
-
 def _shingles_from_tokens(toks: Column, k: int) -> Column:
     """Distinct word k-shingles from an (already materialized) token
     array; docs shorter than ``k`` tokens fall back to one whole-text
@@ -119,17 +102,6 @@ def with_shingle_hashes(
 # ---------------------------------------------------------------------------
 # Exact dedup
 # ---------------------------------------------------------------------------
-
-
-def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Keep one representative (min id) per exact-duplicate group.
-
-    Hash-groupBy on the md5 fingerprint of normalized text — the shuffle
-    carries (fingerprint, id) only.
-    """
-    fp = df.select(F.col(id_col), fingerprint_col(F.col(text_col)).alias("fingerprint"))
-    keep = fp.groupBy("fingerprint").agg(F.min(id_col).alias(id_col))
-    return df.join(keep, on=id_col, how="left_semi")
 
 
 def duplicate_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -769,26 +741,6 @@ def minhash_dedup_pairs(
 # ---------------------------------------------------------------------------
 
 
-def simhash_col(text: Column, bits: int = 64) -> Column:
-    """SimHash over word tokens (Charikar 2002): per bit, sum ±1 votes of
-    each token's hash bit; bit set iff the vote is positive. Default 64
-    bits (Manku/Jain/Das Sarma, WWW'07 — the production geometry: 16-bit
-    corpora collide unrelated docs within small Hamming distances at any
-    real corpus size); bit 63 is carried in the long's sign bit (two's
-    complement), which XOR/bit_count handle transparently.
-
-    NOTE: as a single Column expression the token-hash array is inlined
-    into every bit vote (bits× md5 passes) — prefer :func:`with_simhash`
-    on DataFrames, which stages the hash array and the vote vector in
-    their own projections so each is computed once.
-    """
-    norm = F.regexp_replace(F.trim(F.lower(text)), r"\s+", " ")
-    toks = F.array_distinct(F.split(norm, " "))
-    hashes = F.transform(toks, lambda t: portable_hash64_col(t, seed="simhash"))
-    votes = _vote_vector(hashes, bits)
-    return _fold_votes(votes, bits)
-
-
 def portable_hash64_col(col: Column, seed: int | str = 0) -> Column:
     """Deterministic 64-bit integer hash portable across engines: low 60
     bits from md5 hex chars 1-15 (identical to :func:`portable_hash_col`,
@@ -845,10 +797,18 @@ def _fold_votes(votes: Column, bits: int) -> Column:
 def with_simhash(
     df: DataFrame, text_col: str = "text", out_col: str = "simhash", bits: int = 64
 ) -> DataFrame:
-    """Attach a SimHash column with staged projections: hash array → vote
-    vector → folded hash, each computed exactly once per row. The 64-bit
-    token hash's low 60 bits equal the classic portable hash, so results
-    for any ``bits <= 60`` are identical to the narrow-hash form."""
+    """Attach a SimHash column over word tokens (Charikar 2002): per bit,
+    sum ±1 votes of each token's hash bit; bit set iff the vote is
+    positive. Default 64 bits (Manku/Jain/Das Sarma, WWW'07 — the
+    production geometry: 16-bit corpora collide unrelated docs within
+    small Hamming distances at any real corpus size); bit 63 is carried
+    in the long's sign bit (two's complement), which XOR/bit_count handle
+    transparently.
+
+    Staged projections: hash array → vote vector → folded hash, each
+    computed exactly once per row. The 64-bit token hash's low 60 bits
+    equal the classic portable hash, so results for any ``bits <= 60``
+    are identical to the narrow-hash form."""
     norm = F.regexp_replace(F.trim(F.lower(F.col(text_col))), r"\s+", " ")
     toks = F.array_distinct(F.split(norm, " "))
     hashed = df.select(
@@ -917,9 +877,9 @@ def simhash_near_dup_pairs(
             base = base.repartition(default_par)
     except Exception:
         pass  # Connect sessions: no sparkContext; keep the scan layout
-    # staged projections (hash array → votes → fold), NOT the inline
-    # simhash_col form: staging stops CollapseProject from duplicating
-    # the whole hash pipeline into every downstream block expression
+    # staged projections (hash array → votes → fold): staging stops
+    # CollapseProject from duplicating the whole hash pipeline into every
+    # downstream block expression
     h = with_simhash(base, "__t", "sh", bits).select("id", "sh")
     mask = (1 << block_bits) - 1
     blocked = h.select(

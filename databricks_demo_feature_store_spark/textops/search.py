@@ -29,7 +29,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window as W, functions as F
+from pyspark.sql import DataFrame, Window as W, functions as F
 
 from databricks_demo_feature_store_spark.functions.rounding import dround
 from databricks_demo_feature_store_spark.textops.analysis import tokens_col

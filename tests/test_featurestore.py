@@ -124,39 +124,6 @@ def test_create_training_set_pit(spark, manager):
     }
 
 
-def test_bucketed_join_has_no_exchange(spark):
-    from pyspark.sql import functions as F
-
-    from databricks_demo_feature_store_spark.sources.bucketing import (
-        bucketed_join,
-        save_bucketed,
-    )
-
-    orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-    customer = spark.read.parquet("/root/testdata/sf0.001/customer.parquet").select(
-        F.col("c_custkey").alias("o_custkey"), "c_name", "c_acctbal"
-    )
-    save_bucketed(orders, "b_orders", ["o_custkey"], num_buckets=8)
-    save_bucketed(customer, "b_customer", ["o_custkey"], num_buckets=8)
-    try:
-        joined = bucketed_join(spark, "b_orders", "b_customer", on=["o_custkey"])
-        # disable broadcast so the co-located SortMergeJoin is observable
-        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            plan = joined._jdf.queryExecution().executedPlan().toString()
-            assert "SortMergeJoin" in plan
-            assert "Exchange" not in plan  # both sides pre-bucketed: no shuffle
-            n = joined.count()
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        plain = orders.join(customer, on="o_custkey").count()
-        assert n == plain
-    finally:
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_customer")
-
-
 def test_manager_recovers_from_empty_table_dir(spark, tmp_path):
     """A bare table directory (crashed writer debris / metadata-before-data)
     must read as absent so the next save recreates it instead of dying in

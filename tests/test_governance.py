@@ -8,12 +8,10 @@ import pytest
 
 from databricks_demo_feature_store_spark.sources.governance import (
     ColumnMask,
-    PolicyRegistry,
     ReadContext,
     RowFilter,
     TablePolicy,
     apply_policies,
-    audit_policy_coverage,
 )
 
 
@@ -88,20 +86,6 @@ def test_missing_mask_column_raises(spark):
 def test_mask_kind_allowlist():
     with pytest.raises(ValueError, match="allowlist"):
         ColumnMask("name", kind="rot13")
-
-
-def test_registry_roundtrip_and_passthrough(spark):
-    reg = PolicyRegistry()
-    reg.set_policy("people", POLICY)
-    df = _people(spark)
-    assert reg.read(df, "people", ReadContext()).count() == 1
-    # unregistered table passes through raw
-    assert reg.read(df, "other", ReadContext()).count() == 3
-
-
-def test_audit_coverage_gap():
-    gaps = audit_policy_coverage(POLICY, ["name", "phone", "email"])
-    assert gaps == ["email"]
 
 
 def test_filters_see_raw_values_not_masked(spark):

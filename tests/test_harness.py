@@ -1,6 +1,6 @@
 """Harness rules: the driver window, the bench record, the slow-test
-guards and the tools' repo root. Pure Python; no test here starts a
-Spark session."""
+guards, the tools' repo root and the package's callers. Pure Python; no
+test here starts a Spark session."""
 
 from __future__ import annotations
 
@@ -259,3 +259,87 @@ def test_tools_and_tests_derive_the_repo_root():
         and is_checkout(node.value)
     )
     assert not offenders, offenders
+
+
+# ---- every public def has a caller ---------------------------------------
+
+# Top-level public defs that nothing outside tests calls, each kept for a
+# stated reason. A new caller-less def fails the test below, and so does a
+# kept name that gains a caller (drop it from here then).
+KEPT_WITHOUT_CALLER = {
+    "difference_between_dates": "reference parity: functions/dates.py",
+    "subtract_from_date": "reference parity: functions/dates.py",
+    "format_date_to_yyyymm": "reference parity: functions/dates.py",
+    "yearmonth_from_columns": "reference parity: functions/dates.py",
+    "clean_accents": "reference parity: functions/strings.py",
+    "standardize_column_names": "reference parity: functions/strings.py",
+    "apply_schema": "reference parity: functions/types.py",
+    "select_columns": "reference parity: operators/selection.py",
+    "outdateness": "reference parity: the monitor's freshness check",
+    "ValidationLog": "reference parity (register_validation); the run-log sink candidate",
+    "feature_output_standardize": "reference parity: the notebooks' output standardizer",
+    "default_orchestrator": "reference parity: the reference orchestrator's DAG",
+    "resolve_parameters": "reference parity: the orchestrator's get_actual_date",
+    "histogram_state": "join-form reference the fused moment/histogram state is tested against",
+    "retry_on_conflict": "user entry point: optimistic-concurrency retry around a commit",
+    "maybe_compact": "user entry point: policy-driven compaction after a write",
+    "vacuum_cdc_table": "user entry point: drop superseded CDC state versions",
+    "decode_image_features": "user entry point: the real PNG decoder",
+    "decode_audio_features": "user entry point: the real WAV decoder",
+}
+
+
+def _defs_without_caller() -> set[str]:
+    """Public top-level defs of the package that no non-test source
+    references outside the def's own body. A reference is a ``Name``, an
+    ``Attribute`` or a string constant equal to the name (registries look
+    defs up by string); re-exports in ``__init__.py`` do not count, and a
+    docstring that mentions a name is never equal to it."""
+    pkg = REPO / "databricks_demo_feature_store_spark"
+    sources = [
+        *pkg.rglob("*.py"),
+        REPO / "bench.py",
+        REPO / "__spark_entry__.py",
+        *(REPO / "perfbench").glob("*.py"),
+        *(REPO / "tools").glob("*.py"),
+    ]
+
+    def names(node: ast.AST):
+        for n in ast.walk(node):
+            if isinstance(n, ast.Name):
+                yield n.id
+            elif isinstance(n, ast.Attribute):
+                yield n.attr
+            elif isinstance(n, ast.Constant) and isinstance(n.value, str):
+                yield n.value
+
+    defs: set[tuple[pathlib.Path, str]] = set()
+    owners: dict[str, set] = {}  # name -> the defs (None: module level) it occurs in
+    for src in sources:
+        for stmt in ast.parse(src.read_text()).body:
+            if src.name == "__init__.py" and isinstance(stmt, ast.Assign) and any(
+                getattr(t, "id", None) == "__all__" for t in stmt.targets
+            ):
+                continue
+            owner = None
+            if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                owner = (src, stmt.name)
+                if src.is_relative_to(pkg) and not stmt.name.startswith("_"):
+                    defs.add(owner)
+                # a decorator (e.g. a query registration) sits outside the body
+                for deco in stmt.decorator_list:
+                    for name in names(deco):
+                        owners.setdefault(name, set()).add(None)
+            for name in names(stmt):
+                owners.setdefault(name, set()).add(owner)
+    return {name for src, name in defs if not owners.get(name, set()) - {(src, name)}}
+
+
+def test_every_public_def_has_a_caller():
+    found = _defs_without_caller()
+    new = sorted(found - KEPT_WITHOUT_CALLER.keys())
+    called = sorted(KEPT_WITHOUT_CALLER.keys() - found)
+    assert not new, f"public defs with no caller outside tests: {new}"
+    assert not called, (
+        f"kept names have a caller now; drop them from KEPT_WITHOUT_CALLER: {called}"
+    )

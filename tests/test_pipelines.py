@@ -185,9 +185,7 @@ def test_reference_native_stack(spark):
     FIVE adapters — every reference feature notebook has a drop-in."""
     from pyspark.sql import functions as F
 
-    from databricks_demo_feature_store_spark.pipelines.reference_sources import (
-        run_reference_stack,
-    )
+    from databricks_demo_feature_store_spark.pipelines import reference_sources as rs
     from databricks_demo_feature_store_spark.sources.datagen import (
         gen_buro,
         gen_clientes,
@@ -197,26 +195,21 @@ def test_reference_native_stack(spark):
     )
 
     pagos = gen_pagos(spark, n=80, months=12)
-    tables = {
-        "clientes": gen_clientes(spark, n=80),
-        "pagos": pagos,
-        "transacciones": gen_transacciones(spark, n=80, months=12),
-        "buro_credito": gen_buro(pagos),
-        "productos": gen_productos(spark, n=80, months=12),
-    }
-    out = run_reference_stack(spark, tables, "2023-02-01", "2024-01-01")
-
-    demo = out["fs_cus_demographic"]
+    demo = rs.demographic_features_from_clientes(
+        gen_clientes(spark, n=80), "2023-02-01", "2024-01-01"
+    )
     assert demo.columns[:2] == ["pk_customer", "tpk_release_dt"]
     assert "cdmg_segment_group" in demo.columns and demo.count() > 0
     groups = {r[0] for r in demo.select("cdmg_segment_group").distinct().collect()}
     assert groups <= {"affluent", "mass", "other"}
 
-    pay = out["fs_cus_payment_behavior"]
+    pay = rs.payment_features_from_pagos(pagos)
     assert pay.count() == gen_pagos(spark, n=80, months=12).count()
     assert "cpym_amt_paid_sum" in pay.columns
 
-    tx = out["fs_cus_transactions"]
+    tx = rs.transaction_features_from_transacciones(
+        gen_transacciones(spark, n=80, months=12)
+    )
     assert tx.count() == 80 * 12
     types = dict(tx.dtypes)
     assert types["ctrx_monto_total_transacciones_ravg_3m"] == "double"
@@ -225,7 +218,7 @@ def test_reference_native_stack(spark):
     first = tx.orderBy("pk_customer", "tpk_release_dt").first()
     assert first["ctrx_monto_total_transacciones_lag_1m"] is None
 
-    credit = out["fs_cus_credit_risk"]
+    credit = rs.credit_features_from_buro(gen_buro(pagos))
     assert credit.columns[:2] == ["pk_customer", "tpk_release_dt"]
     # exact 24-column reference output surface (fs_cus_credit_risk.py:630-655)
     assert len(credit.columns) == 24 and credit.count() > 0
@@ -244,7 +237,9 @@ def test_reference_native_stack(spark):
         == 0
     )
 
-    hold = out["fs_cus_holding_products"]
+    hold = rs.holdings_features_from_productos(
+        gen_productos(spark, n=80, months=12)
+    )
     # exact 67-column reference surface (fs_cus_holding_products.py:726-791)
     assert len(hold.columns) == 67 and hold.count() > 0
     htypes = dict(hold.dtypes)

@@ -8,12 +8,7 @@ import pytest
 from pyspark.sql import Row, functions as F
 
 from databricks_demo_feature_store_spark.functions.scaling import scale_features
-from databricks_demo_feature_store_spark.operators.sketches import (
-    frequent_items,
-    hll_merge,
-    hll_sketch,
-    sketch_profile,
-)
+from databricks_demo_feature_store_spark.operators.sketches import frequent_items
 from databricks_demo_feature_store_spark.textops.similarity import (
     cosine_col,
     semantic_dedup,
@@ -23,29 +18,6 @@ from databricks_demo_feature_store_spark.textops.similarity import (
 # ---------------------------------------------------------------------------
 # sketches
 # ---------------------------------------------------------------------------
-
-
-def test_sketch_profile_error_bounds(spark):
-    df = spark.range(0, 10_000).select(
-        (F.col("id") % 1000).alias("k"), (F.col("id") * 2).cast("double").alias("v")
-    )
-    rows = {r["column"]: r for r in sketch_profile(df, ["k", "v"]).collect()}
-    assert rows["k"]["n_rows"] == 10_000
-    # HLL++ at rsd=0.02: allow 5x the nominal relative error
-    assert abs(rows["k"]["approx_ndv"] - 1000) / 1000 < 0.10
-    assert abs(rows["v"]["approx_ndv"] - 10_000) / 10_000 < 0.10
-    # quantiles of v = 2*id over 0..9999: q50 ≈ 9999, within 1%
-    assert abs(rows["v"]["q50"] - 9999.0) / 9999.0 < 0.01
-    assert abs(rows["v"]["q25"] - 4999.5) / 4999.5 < 0.01
-
-
-def test_hll_sketch_merge_matches_union(spark):
-    a = spark.range(0, 5000).select(F.lit("d1").alias("day"), F.col("id").alias("u"))
-    b = spark.range(2500, 7500).select(F.lit("d2").alias("day"), F.col("id").alias("u"))
-    sk = hll_sketch(a.union(b), ["day"], "u")
-    merged = hll_merge(sk.select(F.lit("all").alias("g"), "hll"), ["g"]).collect()[0]
-    # true distinct union = 7500
-    assert abs(merged["approx_ndv"] - 7500) / 7500 < 0.05
 
 
 def test_frequent_items_exact(spark):

@@ -10,7 +10,6 @@ from databricks_demo_feature_store_spark.streaming import (
     read_events_stream,
     run_available_now,
     sessionize_stream,
-    stream_to_sink,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -50,21 +49,6 @@ def test_stream_sessionize_gap_semantics(spark):
         & (F.col("b_session_start") < F.col("session_end")),
     )
     assert overlap.count() == 0
-
-
-def test_stream_file_sink_roundtrip(spark, tmp_path):
-    result = hourly_counts(read_events_stream(spark, SF))
-    q = stream_to_sink(
-        result.withColumn("sum_value", F.col("sum_value")),
-        path=str(tmp_path / "out"),
-        checkpoint=str(tmp_path / "ckpt"),
-        output_mode="append",
-    )
-    # append mode only emits watermark-closed windows; for a bounded replay
-    # we just assert the query runs and terminates cleanly
-    q.processAllAvailable()
-    q.stop()
-    assert (tmp_path / "ckpt").exists()
 
 
 def test_stateful_user_stats_matches_batch(spark):

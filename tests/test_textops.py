@@ -13,16 +13,13 @@ from databricks_demo_feature_store_spark.textops import (
     decode_features,
     duplicate_groups,
     embedding_near_dup_pairs,
-    exact_dedup,
     lsh_topk,
     minhash_dedup_pairs,
     ngram_jaccard_pairs,
     simhash_near_dup_pairs,
     synthesize_media_from_documents,
-    text_profile,
 )
-from databricks_demo_feature_store_spark.textops.dedup import shingles_col, simhash_col
-from databricks_demo_feature_store_spark.textops.multimodal import real_decode_unavailable
+from databricks_demo_feature_store_spark.textops.dedup import with_shingle_hashes, with_simhash
 
 
 @pytest.fixture()
@@ -38,20 +35,7 @@ def docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string, lang string")
 
 
-def test_text_profile(docs):
-    out = {r.doc_id: r for r in text_profile(docs).collect()}
-    assert out[1].n_tokens == 9
-    assert out[1].lang_pred == "en"
-    assert out[3].lang_pred == "es"
-    assert out[5].lang_pred == "zh"
-    assert out[1].fingerprint == out[4].fingerprint
-    assert 0.0 <= out[1].quality_score <= 1.0
-
-
-def test_exact_dedup(docs):
-    kept = exact_dedup(docs)
-    ids = {r.doc_id for r in kept.select("doc_id").collect()}
-    assert 4 not in ids and 1 in ids  # representative = min id
+def test_duplicate_groups(docs):
     groups = duplicate_groups(docs)
     dup = groups.filter(F.col("n_docs") > 1).first()
     assert dup.n_docs == 2 and dup.representative_id == 1
@@ -59,9 +43,13 @@ def test_exact_dedup(docs):
 
 def test_shingles(spark):
     df = spark.createDataFrame([("a b c d",), ("x y",)], "text string")
-    got = [r[0] for r in df.select(shingles_col(F.col("text"), 3)).collect()]
-    assert sorted(got[0]) == ["a b c", "b c d"]
-    assert got[1] == ["x y"]  # shorter than k → whole text
+    got = [r.hs for r in with_shingle_hashes(df, "text", k=3).collect()]
+
+    def h(shingle: str) -> int:  # portable_hash_col, seed 0
+        return int(hashlib.md5(f"0:{shingle}".encode()).hexdigest()[:15], 16)
+
+    assert sorted(got[0]) == sorted([h("a b c"), h("b c d")])
+    assert got[1] == [h("x y")]  # shorter than k → whole text
 
 
 def test_ngram_jaccard_pairs(docs):
@@ -198,7 +186,7 @@ def test_hot_bucket_cap_preserves_components_vs_exact(spark):
 def test_simhash_identical_and_pairs(docs):
     h = {
         r.doc_id: r.sh
-        for r in docs.select("doc_id", simhash_col(F.col("text")).alias("sh")).collect()
+        for r in with_simhash(docs, "text", "sh").select("doc_id", "sh").collect()
     }
     assert h[1] == h[4]
     pairs = {
@@ -245,68 +233,6 @@ def test_multimodal_stub_roundtrip(docs):
         "the quick brown fox jumps over the lazy dog".encode()
     ).hexdigest()
     assert feats[1].decode_ok == "stub"
-    with pytest.raises(NotImplementedError):
-        real_decode_unavailable()
-
-
-def test_resize_images_byte_exact(spark):
-    from databricks_demo_feature_store_spark.textops.multimodal import (
-        resize_images,
-        synthesize_media_from_documents,
-    )
-    from databricks_demo_feature_store_spark.queries import load
-
-    media = synthesize_media_from_documents(load(spark, "/root/testdata/sf0.001", "documents"))
-    out = resize_images(media, width=8, height=4)
-    rows = out.limit(10).collect()
-    assert rows
-    for r in rows:
-        assert (r["width"], r["height"], r["resize_ok"]) == (8, 4, "stub")
-        assert len(r["payload"]) == 32  # truncated/padded to width*height
-    # fan-in check: only image rows survive
-    n_images = media.filter("media_type = 'image'").count()
-    assert out.count() == n_images
-
-
-def test_media_repartition_metadata_sizing(spark, tmp_path):
-    """The round-7 re-plan: partition count comes from METADATA (plan
-    stats / file lengths), not from a pre-scan of the payloads."""
-    from databricks_demo_feature_store_spark.sources.writers import (
-        plan_size_estimate,
-    )
-    from databricks_demo_feature_store_spark.textops.multimodal import (
-        _input_file_size,
-        media_repartition,
-        synthesize_media_from_documents,
-    )
-    from databricks_demo_feature_store_spark.queries import load
-
-    media = synthesize_media_from_documents(
-        load(spark, "/root/testdata/sf0.001", "documents")
-    )
-    path = str(tmp_path / "media")
-    media.write.mode("overwrite").parquet(path)
-    on_disk = spark.read.parquet(path)
-
-    # file-scan path: both metadata probes agree with the actual file bytes
-    file_bytes = sum(
-        f.stat().st_size for f in (tmp_path / "media").glob("*.parquet")
-    )
-    assert _input_file_size(on_disk) == file_bytes
-    est = plan_size_estimate(on_disk)
-    assert est is not None and est >= file_bytes  # stats may pad, never undercount
-
-    # target = half the table → 2..3 partitions, derived without scanning
-    out = media_repartition(on_disk, target_bytes=max(1, file_bytes // 2),
-                            method="metadata")
-    assert 2 <= out.rdd.getNumPartitions() <= 3
-
-    # derived in-memory frame: metadata-only raises loudly, scan still works
-    derived = on_disk.limit(5).localCheckpoint()
-    if plan_size_estimate(derived) is None:
-        with pytest.raises(ValueError, match="no plan statistics"):
-            media_repartition(derived, method="metadata")
-    assert media_repartition(derived, target_bytes=10, method="scan").count() == 5
 
 
 def test_ngram_jaccard_matches_bruteforce(spark):

@@ -70,7 +70,6 @@ PYSPARK_35_FUNCTIONS_VERIFIED = {
     "stddev_samp", "corr", "max_by", "min_by",  # max_by/min_by 3.3.0
     "percentile",  # added 3.5.0
     "percentile_approx", "bit_or",  # bit_or 3.5.0
-    "hll_sketch_agg", "hll_sketch_estimate", "hll_union_agg",  # 3.5.0
     "grouping_id", "call_function",  # call_function 3.5.0
     # windows / ordering
     "lag", "lead", "rank", "row_number",
@@ -110,7 +109,7 @@ PYSPARK_35_METHODS_VERIFIED = {
     "agg", "alias", "coalesce", "collect", "count", "createOrReplaceTempView",
     "crossJoin", "distinct", "drop", "dropDuplicates",
     "dropDuplicatesWithinWatermark",  # added 3.5.0
-    "dropna", "exceptAll", "filter", "first", "groupBy", "inputFiles",
+    "dropna", "exceptAll", "filter", "first", "groupBy",
     "isEmpty",  # added 3.3.0
     "join", "limit", "localCheckpoint", "mapInPandas",  # mapInPandas 3.0.0
     "orderBy", "persist", "repartition", "repartitionByRange", "replace",
@@ -142,8 +141,8 @@ PYSPARK_35_METHODS_VERIFIED = {
     "partitionBy", "rowsBetween",
     "rangeBetween",  # Window/WindowSpec.rangeBetween, 2.1 (hand-verified 3.5 docs)
     # reader / writer
-    "bucketBy", "csv", "format", "json", "load", "mode", "option",
-    "options", "parquet", "save", "saveAsTable", "schema", "sortBy", "text",
+    "csv", "format", "json", "load", "mode", "option", "options",
+    "parquet", "save", "schema", "text",
     # structured streaming
     "awaitTermination", "foreachBatch", "outputMode", "queryName", "start",
     "trigger",

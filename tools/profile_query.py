@@ -16,7 +16,6 @@ come from bench.py.
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 import sys
